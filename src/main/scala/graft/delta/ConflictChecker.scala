@@ -50,8 +50,8 @@ object ConflictChecker {
   }
 
   /** Resolve a DML condition Column against a snapshot's scan schema into
-    * a Catalyst expression usable for stats pruning; None when analysis
-    * fails (callers degrade to conservative conflict). */
+    * a Catalyst expression over LOGICAL names; None when analysis fails
+    * (callers degrade to conservative conflict). */
   def resolve(snap: Snapshot, cond: Column): Option[Expression] =
     try {
       import org.apache.spark.sql.catalyst.plans.logical.Filter
@@ -152,7 +152,8 @@ object ConflictChecker {
         val mayMatch = cond match {
           case None => dataAdds
           case Some(p) =>
-            FileSkipping.prune(dataAdds, base.metadata.dataSchema, Seq(p))
+            FileSkipping.prune(dataAdds, base.physicalDataSchema,
+              Seq(base.physicalFilter(p)))
         }
         if (mayMatch.nonEmpty)
           fail("appended rows that may match this operation's predicate " +

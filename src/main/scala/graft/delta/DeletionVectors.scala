@@ -2,8 +2,7 @@ package graft.delta
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.GraftColumnBridge
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Not}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, DataType}
@@ -12,12 +11,12 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.delta.DvCodec.Bitmap64
 
 /**
- * Deletion-vector application on read — the Spark equivalent of the
- * reference's in-scan `DeltaDeleteFilter`
- * (src/functions/delta_scan/delta_multi_file_reader.cpp:24-48): a scan-local
- * FILTER on `_metadata.row_index` against the decoded per-file bitmap.
+ * Deletion-vector registry for reads — the input of the Spark equivalent
+ * of the reference's in-scan `DeltaDeleteFilter`
+ * (src/functions/delta_scan/delta_multi_file_reader.cpp:24-48), which
+ * [[GraftParquetFileFormat]] applies inside the reader.
  *
- * Scale design: no join, no shuffle — the bitmap map ships once per
+ * Scale design: no join, no shuffle — the registry ships once per
  * executor via a Broadcast and each row does an O(1) bitmap probe. This
  * preserves the scan's partitioning exactly like the reference's
  * selection-vector approach preserves DuckDB's pipelines.
@@ -49,17 +48,6 @@ object DeletionVectors {
       val p = Snapshot.absolutePathOf(tablePath, decodedPath)
       Seq(p.toString -> slot, p.toUri.getPath -> slot, p.toUri.toString -> slot)
     }.toMap
-  }
-
-  /** filter: rows whose (file, row_index) is in a DV are dropped. */
-  def filterDeleted(spark: SparkSession, snapshot: Snapshot, df: DataFrame): DataFrame = {
-    val bc = snapshot.dvRegistryBroadcast.getOrElse(
-      spark.sparkContext.broadcast(registry(snapshot)))
-    val deleted = DvRowDeleted(
-      GraftColumnBridge.expression(col("_metadata.file_path")),
-      GraftColumnBridge.expression(col("_metadata.row_index")),
-      bc)
-    df.where(GraftColumnBridge.column(Not(deleted)))
   }
 }
 
@@ -425,9 +413,8 @@ object DeltaDelete {
   def delete(spark: SparkSession, log: DeltaLog, condition: Column): Long = {
     val snap = log.update()
     ProtocolGate.validateWrite(snap, "DELETE")
-    val raw = snap.dmlDF
-    // raw (un-DV-filtered) relation: already-deleted rows union away
-    val hitRows = raw.where(condition)
+    // deleted rows kept: already-deleted matches union away
+    val hitRows = snap.relationDF(dropDeleted = false).where(condition)
       .select(col("_metadata.file_path").as("p"), col("_metadata.row_index").as("i"))
     val moved = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.Path]
     try {
@@ -435,14 +422,9 @@ object DeltaDelete {
       // rows union into the bitmap as no-ops and must not re-emit)
       val cdcLines =
         if (!Cdc.enabled(snap)) Nil
-        else {
-          val live =
-            if (snap.hasDeletionVectors) DeletionVectors.filterDeleted(spark, snap, raw)
-            else raw
-          Cdc.writeChangeData(spark, log, snap,
-            Cdc.typed(live.where(condition), "delete"),
-            snap.metadata.partitionColumns, moved)
-        }
+        else Cdc.writeChangeData(spark, log, snap,
+          Cdc.typed(snap.relationDF().where(condition), "delete"),
+          snap.metadata.partitionColumns, moved)
       val (actions, deletedRows) = dvActions(log, snap, hitRows, moved)
       if (actions.isEmpty) {
         moved.foreach(p => try log.fs.delete(p, false) catch { case _: Exception => () })
@@ -509,10 +491,7 @@ object DeltaMerge {
       s"source schema must match table: ${schemaCols.sorted}")
     val aligned0 = genFilled.select(schemaCols.map(c => col(s"`$c`")): _*)
 
-    val raw = snap.dmlDF
-    val live =
-      if (snap.hasDeletionVectors) DeletionVectors.filterDeleted(spark, snap, raw)
-      else raw
+    val live = snap.relationDF()
     // update-only MERGE (no WHEN NOT MATCHED clause): write only source
     // rows whose key exists in the target — a semi join, not a collect
     val alignedKeyed =
@@ -699,10 +678,7 @@ object DeltaMerge {
     val extraCols = matNames.toSeq.map { case (mid, _) =>
       org.apache.spark.sql.types.StructField(mid,
         org.apache.spark.sql.types.LongType, nullable = true) }
-    val raw = snap.dmlDF(extraCols)
-    val live =
-      if (snap.hasDeletionVectors) DeletionVectors.filterDeleted(spark, snap, raw)
-      else raw
+    val live = snap.relationDF(extraDataCols = extraCols)
     val tPref = live.select((schemaCols.map(c => col(s"`$c`").as(s"__t_$c")) ++ Seq(
       col("_metadata.file_path").as("__file"),
       col("_metadata.row_index").as("__row")) ++
@@ -935,10 +911,7 @@ object DeltaMerge {
       source.columns.exists(_.equalsIgnoreCase(k)))
     require(missing.isEmpty, s"source lacks merge key(s): ${missing.mkString(", ")}")
 
-    val raw = snap.dmlDF
-    val live =
-      if (snap.hasDeletionVectors) DeletionVectors.filterDeleted(spark, snap, raw)
-      else raw
+    val live = snap.relationDF()
     val keys = source.select(keyCols.map(c => col(s"`$c`")): _*).distinct()
     val matchedLive = live
       .join(keys, keyCols.map(c => live(s"`$c`") === keys(s"`$c`")).reduce(_ && _),
@@ -1019,11 +992,8 @@ object DeltaUpdate {
       org.apache.spark.sql.types.StructField(mid,
         org.apache.spark.sql.types.LongType, nullable = true) }
 
-    val raw = snap.dmlDF(extraCols)
     // live rows only: resurrecting already-deleted rows would be corruption
-    val live =
-      if (snap.hasDeletionVectors) DeletionVectors.filterDeleted(spark, snap, raw)
-      else raw
+    val live = snap.relationDF(extraDataCols = extraCols)
     val matched = live.where(condition)
 
     // new row images, in logical column order. Generated columns NOT

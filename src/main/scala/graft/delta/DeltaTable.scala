@@ -55,16 +55,13 @@ class DeltaTable private (val spark: SparkSession, val log: DeltaLog,
     // materialized row-id columns (written by id-stable rewrites) join the
     // read schema when configured; files lacking them read null
     val matNames = RowTracking.materializedNames(snap.metadata)
-    val base0 = snap.relationDF(ScanOptions(),
+    val base = snap.relationDF(extraDataCols =
       matNames.toSeq.flatMap { case (mid, mver) =>
         Seq(org.apache.spark.sql.types.StructField(mid,
               org.apache.spark.sql.types.LongType, nullable = true),
             org.apache.spark.sql.types.StructField(mver,
               org.apache.spark.sql.types.LongType, nullable = true))
       })
-    val base =
-      if (snap.hasDeletionVectors) DeletionVectors.filterDeleted(spark, snap, base0)
-      else base0
     // row tracking: row id = materialized value if present, else fresh id
     // baseRowId + i — path→literal maps (codegen'd element_at), no join
     val rowIdCols =

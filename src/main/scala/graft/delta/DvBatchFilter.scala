@@ -1,6 +1,6 @@
 package graft.delta
 
-import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
+import org.apache.spark.sql.execution.vectorized.{ConstantColumnVector, OnHeapColumnVector}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
 
@@ -17,7 +17,8 @@ import graft.delta.DvCodec.Bitmap64
  *     column) — zero copy;
  *  2. batch's row-index range misses the bitmap → same zero-copy re-wrap;
  *  3. batch contains deleted rows → copy the survivors into fresh on-heap
- *     vectors (bounded by batch size, typically 4096 rows).
+ *     vectors (bounded by batch size, typically 4096 rows); constant
+ *     partition-value vectors pass through as they are.
  *
  * At scale this is the difference between "one DV'd file among 10k" costing
  * one batch copy vs. the entire table scanning row-at-a-time.
@@ -62,9 +63,15 @@ private[delta] object DvBatchFilter {
       val nOut = n - deleted
       var c = 0
       while (c < keep.length) {
-        val dst = new OnHeapColumnVector(math.max(nOut, 1), outTypes(c))
-        copySurvivors(batch.column(keep(c)), outTypes(c), idxCol, bm, n, dst)
-        out(c) = dst
+        out(c) = batch.column(keep(c)) match {
+          // a partition value holds for every row, and the scan's generated
+          // code casts partition columns to this class
+          case k: ConstantColumnVector => k
+          case src =>
+            val dst = new OnHeapColumnVector(math.max(nOut, 1), outTypes(c))
+            copySurvivors(src, outTypes(c), idxCol, bm, n, dst)
+            dst
+        }
         c += 1
       }
       new ColumnarBatch(out, nOut)

@@ -38,10 +38,9 @@ object GeneratedPruning {
       partName: String, partType: DataType,
       evalBase: (Any, DataType) => Option[Any])
 
-  /** Build derivation rules for `snapshot`'s generated partition columns.
-    * `partName` is the name [[GraftFileIndex]]'s partition schema exposes. */
-  private def rules(spark: SparkSession, snapshot: Snapshot,
-      logicalNames: Boolean): Seq[(String, GenRule)] =
+  /** Build derivation rules for `snapshot`'s generated partition columns,
+    * keyed by the (lower-cased, logical) base column name. */
+  private def rules(spark: SparkSession, snapshot: Snapshot): Seq[(String, GenRule)] =
     snapshot.partitionSchema.fields.toSeq.flatMap { pf =>
       if (!pf.metadata.contains("delta.generationExpression")) None
       else try {
@@ -64,9 +63,6 @@ object GeneratedPruning {
             (!isIdentityExpr && !temporalBase)) None
         else {
           val base = bases.head
-          val exposed =
-            if (logicalNames) pf.name
-            else snapshot.physicalName(pf)
           def evalAt(v: Any, vt: DataType): Option[Any] = try {
             val substituted = parsed.transformUp {
               case _: UnresolvedAttribute => Literal(v, vt)
@@ -82,7 +78,7 @@ object GeneratedPruning {
             if (e.dataType != pf.dataType) None
             else Option(e.eval(null)) // null result ⇒ no derivation
           } catch { case scala.util.control.NonFatal(_) => None }
-          Some(base.toLowerCase -> GenRule(exposed, pf.dataType, evalAt))
+          Some(base.toLowerCase -> GenRule(pf.name, pf.dataType, evalAt))
         }
       } catch { case scala.util.control.NonFatal(_) => None }
     }
@@ -111,22 +107,13 @@ object GeneratedPruning {
     case _ => false
   }
 
-  /**
-   * Derived partition filters for `dataFilters`. `physToLogical` maps the
-   * filters' attribute names back to logical base-column names (identity
-   * for unmapped tables).
-   */
-  def derive(spark: SparkSession, snapshot: Snapshot, logicalNames: Boolean,
+  /** Derived partition filters for `dataFilters` (logical names). */
+  def derive(spark: SparkSession, snapshot: Snapshot,
       dataFilters: Seq[Expression]): Seq[Expression] = {
-    val ruleMap = rules(spark, snapshot, logicalNames)
+    val ruleMap = rules(spark, snapshot)
     if (ruleMap.isEmpty) return Nil
-    val physToLogical = snapshot.dataSchema.fields
-      .map(f => snapshot.physicalName(f).toLowerCase -> f.name.toLowerCase).toMap
 
-    def logicalName(a: AttributeReference): String = {
-      val n = a.name.toLowerCase
-      if (logicalNames) n else physToLogical.getOrElse(n, n)
-    }
+    def logicalName(a: AttributeReference): String = a.name.toLowerCase
     def part(r: GenRule): AttributeReference =
       AttributeReference(r.partName, r.partType, nullable = true)()
     def evalLit(r: GenRule, l: Literal): Option[Literal] =

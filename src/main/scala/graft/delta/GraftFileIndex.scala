@@ -1,7 +1,5 @@
 package graft.delta
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileStatus, Path}
@@ -66,7 +64,6 @@ object ScanOptions {
 
 class GraftFileIndex(spark: SparkSession, snapshot: Snapshot,
     options: ScanOptions = ScanOptions(),
-    logicalNames: Boolean = false,
     /** Runtime (join-derived) filter thunks, evaluated lazily at the first
       * listFiles call — by then subordinate jobs are legal, making this the
       * Spark analog of the reference's dynamic filter re-prune
@@ -74,18 +71,14 @@ class GraftFileIndex(spark: SparkSession, snapshot: Snapshot,
     dynamicThunks: Seq[() => Seq[Expression]] = Nil) extends FileIndex {
 
   def withDynamicThunk(t: () => Seq[Expression]): GraftFileIndex =
-    new GraftFileIndex(spark, snapshot, options, logicalNames, dynamicThunks :+ t)
+    new GraftFileIndex(spark, snapshot, options, dynamicThunks :+ t)
 
   /** Exact live row count from log metadata (DV-aware) — the
     * [[MetadataOnlyCount]] rewrite's input; None bails to a real scan. */
   def snapshotExactRowCount: Option[Long] = snapshot.exactRowCount
 
-  /** For the metadata-only MIN/MAX/COUNT(col) rewrite: the snapshot, and
-    * whether this relation's column names are LOGICAL (mapped-table
-    * format) or the log's physical names — the rewrite must resolve its
-    * attributes in the same namespace the relation exposes. */
+  /** The snapshot, for the metadata-only MIN/MAX/COUNT(col) rewrite. */
   private[delta] def snapshotRef: Snapshot = snapshot
-  private[delta] def exposesLogicalNames: Boolean = logicalNames
 
   /** Evaluated once; a failing thunk degrades to no dynamic pruning. */
   @transient private lazy val dynamicFilters: Seq[Expression] =
@@ -93,11 +86,9 @@ class GraftFileIndex(spark: SparkSession, snapshot: Snapshot,
       try t() catch { case scala.util.control.NonFatal(_) => Nil })
 
   override def rootPaths: Seq[Path] = Seq(snapshot.log.tablePath)
-  // the log's partitionValues and stats keys are PHYSICAL; `logicalNames`
-  // relations (GraftParquetFileFormat) expose logical names instead and
-  // incoming filters are rewritten physical before stats lookups
-  override def partitionSchema: StructType =
-    if (logicalNames) snapshot.partitionSchema else snapshot.physicalPartitionSchema
+  // the relation exposes LOGICAL names; the log's partitionValues and
+  // stats keys are PHYSICAL, so filters are renamed before stats lookups
+  override def partitionSchema: StructType = snapshot.partitionSchema
   override def refresh(): Unit = ()
   override def sizeInBytes: Long = snapshot.sizeInBytes
   override def inputFiles: Array[String] =
@@ -106,23 +97,11 @@ class GraftFileIndex(spark: SparkSession, snapshot: Snapshot,
   override def listFiles(
       partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    if (sys.env.contains("GRAFT_DEBUG_FILTERS"))
-      dataFilters.foreach(f => System.err.println("[graft-debug] dataFilter:\n" + f.treeString))
-    // 1. stats-based skipping on data filters (physical attr/stats names;
-    //    logical-name relations get their attributes rewritten first)
-    val statsFilters =
-      if (!logicalNames) dataFilters
-      else {
-        val phys = snapshot.dataSchema.fields
-          .map(f => f.name -> snapshot.physicalName(f)).toMap
-        dataFilters.map(_.transform {
-          case a: AttributeReference if phys.contains(a.name) =>
-            a.withName(phys(a.name))
-        })
-      }
+    // 1. stats-based skipping on data filters (physical stats names)
     val statsKeeper =
       if (options.constantEnabled)
-        FileSkipping.keeper(snapshot.physicalDataSchema, statsFilters)
+        FileSkipping.keeper(snapshot.physicalDataSchema,
+          dataFilters.map(snapshot.physicalFilter))
       else None
     // 1b. generated-column partition pruning: filters on the BASE column
     //     of a monotonic generation expression imply partition filters
@@ -131,7 +110,7 @@ class GraftFileIndex(spark: SparkSession, snapshot: Snapshot,
     //     CONSTANT filters, so it follows the constant toggle.
     val derivedPartFilters =
       if (!options.constantEnabled) Nil
-      else GeneratedPruning.derive(spark, snapshot, logicalNames, dataFilters)
+      else GeneratedPruning.derive(spark, snapshot, dataFilters)
     if (derivedPartFilters.nonEmpty)
       GraftMetrics.record(PushdownEvent(
         snapshot.log.tablePath.toString, "generated",
@@ -171,16 +150,7 @@ class GraftFileIndex(spark: SparkSession, snapshot: Snapshot,
     val afterDynamic =
       if (dynamicThunks.isEmpty || !options.dynamicEnabled) afterPartition
       else {
-        val dyn =
-          if (!logicalNames) dynamicFilters
-          else {
-            val phys = snapshot.dataSchema.fields
-              .map(f => f.name -> snapshot.physicalName(f)).toMap
-            dynamicFilters.map(_.transform {
-              case a: AttributeReference if phys.contains(a.name) =>
-                a.withName(phys(a.name))
-            })
-          }
+        val dyn = dynamicFilters.map(snapshot.physicalFilter)
         if (dyn.isEmpty) afterPartition
         else {
           val pruned = FileSkipping.prune(afterPartition, snapshot.physicalDataSchema, dyn)
@@ -214,13 +184,19 @@ final case class PushdownEvent(
     filesBefore: Int, filesAfter: Int)
 
 /** Process-wide pushdown observability, queryable as a DataFrame — the
-  * Spark analog of `delta_filter_pushdown_log()` (src/delta_macros.cpp:14-97). */
+  * Spark analog of `delta_filter_pushdown_log()` (src/delta_macros.cpp:14-97).
+  * Holds the newest [[Capacity]] events: every listing records one, so an
+  * unbounded log would grow for the life of the session. */
 object GraftMetrics {
-  private val events = new ConcurrentLinkedQueue[PushdownEvent]()
-  def record(e: PushdownEvent): Unit = events.add(e)
-  def clear(): Unit = events.clear()
+  val Capacity = 10000
+  private val events = new java.util.ArrayDeque[PushdownEvent]()
+  def record(e: PushdownEvent): Unit = events.synchronized {
+    if (events.size == Capacity) events.removeFirst()
+    events.addLast(e)
+  }
+  def clear(): Unit = events.synchronized(events.clear())
   def pushdownLog(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    events.asScala.toSeq.toDF()
+    events.synchronized(events.asScala.toVector).toDF()
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
-import org.apache.spark.sql.execution.datasources.PartitionedFile
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.Filter
@@ -14,8 +14,8 @@ import org.apache.spark.sql.types._
 import graft.delta.DvCodec.Bitmap64
 
 /**
- * Delta-aware parquet FileFormat: the full-fidelity scan core behind
- * `spark.read.format("graftdelta")`, doing inside the reader what the
+ * Delta-aware parquet FileFormat: the scan core behind every snapshot read
+ * ([[Snapshot.relation]]), doing inside the reader what the
  * reference's multi-file reader does inside its scan
  * (src/functions/delta_scan/delta_multi_file_reader.cpp:24-48 applies the
  * deletion-vector row filter; :162-230 maps physical parquet columns back
@@ -44,6 +44,10 @@ class GraftParquetFileFormat(
     dvRegistry: Option[Broadcast[Map[String, DvHandle]]],
     fieldIdMode: Boolean) extends ParquetFileFormat {
 
+  /** Whether this reader drops DV-deleted rows ([[Snapshot.relation]]
+    * hands it the registry of the snapshot its file index lists). */
+  def dropsDeletedRows: Boolean = dvRegistry.isDefined
+
   private def isMapped: Boolean = logicalToPhysical.exists {
     case (l, p) => l != p.name || fieldIdMode
   }
@@ -52,10 +56,13 @@ class GraftParquetFileFormat(
   // table when ANY file carried a DV — a 10k-file table with one DV'd file
   // read everything row-at-a-time): batches from DV-less files pass
   // through untouched, and only batches that actually contain deleted rows
-  // are compacted (survivor copy). Falls back to rows only for non-atomic
-  // schemas the compactor can't copy.
+  // are compacted (survivor copy). Falls back to rows for non-atomic
+  // schemas the compactor can't copy, and under off-heap vectors: the
+  // scan's generated code casts data columns to the off-heap class, and
+  // the compactor copies on-heap.
   override def supportBatch(sparkSession: SparkSession, schema: StructType): Boolean =
-    (dvRegistry.isEmpty || DvBatchFilter.allAtomic(schema)) &&
+    (dvRegistry.isEmpty || (DvBatchFilter.allAtomic(schema) &&
+      !sparkSession.sessionState.conf.offHeapColumnVectorEnabled)) &&
       super.supportBatch(sparkSession, schema)
 
   // Distinct formats must not compare equal (ParquetFileFormat.equals is
@@ -199,10 +206,11 @@ class GraftParquetFileFormat(
         val nOut = requiredSchema.length + partitionSchema.length
         // delegate row layout: withIdx ++ partition values
         val inFields = withIdx.fields ++ partitionSchema.fields
-        // whether the delegate hands out ColumnarBatches (virtual dispatch:
-        // same decision super made internally, incl. our atomic-only guard)
-        val returningBatch = supportBatch(sparkSession,
-          StructType(withIdx.fields ++ partitionSchema.fields))
+        // whether the delegate hands out ColumnarBatches: the scan node
+        // decided it over its whole output (incl. `_metadata`) and super
+        // obeys that option, not a recomputation over this reader's schema
+        val returningBatch =
+          options.get(FileFormat.OPTION_RETURNING_BATCH).contains("true")
 
         (pf: PartitionedFile) => {
           val bm = bitmapFor(bc.value, pf)

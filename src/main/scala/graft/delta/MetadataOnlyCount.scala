@@ -47,19 +47,23 @@ import org.apache.spark.sql.types._
  *
  * The child must be a bare (possibly column-pruned) scan of a
  * [[GraftFileIndex]]-backed relation with no filters. `count(*)` equals
- * the metadata live count only when the scan excludes DV-deleted rows:
- * mapped-format relations (reader-applied DVs), a plan carrying the DV
- * row filter, or a DV-free table — the RAW physical relation on a DV
- * table keeps its real scan. Anything else keeps the real scan.
+ * the metadata live count only when the scan yields live rows alone: its
+ * format drops this snapshot's DV-deleted rows, or the table has no DVs —
+ * a relation that keeps deleted rows (the DML's raw scan) on a DV table
+ * keeps its real scan. Anything else keeps the real scan.
  */
 class MetadataOnlyCount(spark: SparkSession) extends Rule[LogicalPlan] {
 
-  /** The scan under projections, plus whether a DV row filter was seen. */
-  private def unwrap(plan: LogicalPlan, dvSeen: Boolean = false)
-      : Option[(GraftFileIndex, Boolean)] = plan match {
+  /** The scan under projections, plus whether it yields live rows only. */
+  private def unwrap(plan: LogicalPlan): Option[(GraftFileIndex, Boolean)] = plan match {
     case lr: LogicalRelation => lr.relation match {
       case fs: HadoopFsRelation => fs.location match {
-        case g: GraftFileIndex => Some((g, dvSeen))
+        case g: GraftFileIndex =>
+          val live = !g.snapshotRef.hasDeletionVectors || (fs.fileFormat match {
+            case f: GraftParquetFileFormat => f.dropsDeletedRows
+            case _ => false
+          })
+          Some((g, live))
         case _ => None
       }
       case _ => None
@@ -67,13 +71,7 @@ class MetadataOnlyCount(spark: SparkSession) extends Rule[LogicalPlan] {
     // column pruning projects the scan down to the aggregated columns
     // (or to nothing, for count(*)); attributes keep identity through it
     case p: Project if p.projectList.forall(_.isInstanceOf[AttributeReference]) =>
-      unwrap(p.child, dvSeen)
-    case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-      f.condition match {
-        case org.apache.spark.sql.catalyst.expressions.Not(_: DvRowDeleted) =>
-          unwrap(f.child, dvSeen = true)
-        case _ => None
-      }
+      unwrap(p.child)
     case _ => None
   }
 
@@ -118,15 +116,14 @@ class MetadataOnlyCount(spark: SparkSession) extends Rule[LogicalPlan] {
     * the real scan. `SELECT DISTINCT pc` and `GROUP BY pc` count/min/max
     * over a 100 TB table become one metadata pass, O(#partitions). */
   private def rewriteGrouped(a: Aggregate, child: LogicalPlan): Option[LogicalPlan] = {
-    val (index, dvFilterSeen) = unwrap(child).getOrElse(return None)
+    val (index, live) = unwrap(child).getOrElse(return None)
     val snap = index.snapshotRef
-    // the answer is the LIVE grouping; the raw physical relation on a DV
-    // table includes deleted rows — bail exactly like the global count
-    if (!(index.exposesLogicalNames || dvFilterSeen || !snap.hasDeletionVectors))
-      return None
+    // the answer is the LIVE grouping; a scan that keeps DV-deleted rows
+    // includes them — bail exactly like the global count
+    if (!live) return None
     val groupAttrs = a.groupingExpressions.map(_.asInstanceOf[AttributeReference])
     def partCol(attr: AttributeReference): Option[(String, DataType)] =
-      ColumnFacts.resolve(snap, index.exposesLogicalNames, attr.name) match {
+      ColumnFacts.resolve(snap, attr.name) match {
         case Some((key, true, dt)) if dt == attr.dataType &&
             ColumnFacts.supported(dt, isPartition = true) => Some((key, dt))
         case _ => None
@@ -205,7 +202,7 @@ class MetadataOnlyCount(spark: SparkSession) extends Rule[LogicalPlan] {
   }
 
   private def rewrite(a: Aggregate, child: LogicalPlan): Option[LogicalPlan] = {
-    val (index, dvFilterSeen) = unwrap(child).getOrElse(return None)
+    val (index, live) = unwrap(child).getOrElse(return None)
     val snap = index.snapshotRef
     // Which columns need EXACT extremes (min/max) vs only nullCount
     // arithmetic (count(col))? count(col) is answerable for ANY type —
@@ -218,7 +215,7 @@ class MetadataOnlyCount(spark: SparkSession) extends Rule[LogicalPlan] {
     val factsCache = scala.collection.mutable.Map.empty[String, Option[(Long, Any, Any)]]
     def factsFor(attr: AttributeReference): Option[(Long, Any, Any)] =
       factsCache.getOrElseUpdate(attr.name, {
-        ColumnFacts.resolve(snap, index.exposesLogicalNames, attr.name).flatMap {
+        ColumnFacts.resolve(snap, attr.name).flatMap {
           case (key, isPartition, dt) =>
             val extremes = needsExtremes(attr.name)
             if (dt != attr.dataType) None
@@ -226,16 +223,10 @@ class MetadataOnlyCount(spark: SparkSession) extends Rule[LogicalPlan] {
             else snap.exactColumnFacts(key, isPartition, dt, extremes)
         }
       })
-    // count(*) from Σ numRecords − Σ DV cardinality is the LIVE count.
-    // That is what this relation scans only when the reader applies DVs
-    // itself (mapped-format relations), when the plan carries the DV row
-    // filter, or when the table has no DVs at all — the RAW physical
-    // relation (Snapshot.relationDF) without the filter counts deleted
-    // rows too and must not be rewritten.
+    // count(*) from Σ numRecords − Σ DV cardinality is the LIVE count —
+    // a scan that keeps DV-deleted rows counts them too
     def countStar: Option[Long] =
-      if (index.exposesLogicalNames || dvFilterSeen || !snap.hasDeletionVectors)
-        index.snapshotExactRowCount
-      else None
+      if (live) index.snapshotExactRowCount else None
     val values: Seq[Any] = a.aggregateExpressions.map {
       case Alias(AggregateExpression(f, Complete, false, None, _), _) => f match {
         case Count(Seq(Literal(1, _))) =>
@@ -260,22 +251,14 @@ class MetadataOnlyCount(spark: SparkSession) extends Rule[LogicalPlan] {
   * LazySnapshot can fold them on executors. */
 private[delta] object ColumnFacts {
 
-  /** Resolve an aggregate's attribute name to (statsKey, isPartitionCol,
-    * dataType). The namespace the relation exposes decides which schema
-    * the NAME matches (logical for mapped-format relations, physical
-    * otherwise) — matching the wrong one on a mapped table would read
-    * another column's stats. */
-  def resolve(snap: Snapshot, logicalNames: Boolean, name: String)
-      : Option[(String, Boolean, DataType)] = {
-    val dataNames =
-      if (logicalNames) snap.dataSchema else snap.physicalDataSchema
-    val partNames =
-      if (logicalNames) snap.partitionSchema else snap.physicalPartitionSchema
-    val di = dataNames.indexWhere(_.name == name)
+  /** Resolve an aggregate's (logical) attribute name to (statsKey,
+    * isPartitionCol, dataType); stats keys are the log's physical names. */
+  def resolve(snap: Snapshot, name: String): Option[(String, Boolean, DataType)] = {
+    val di = snap.dataSchema.indexWhere(_.name == name)
     if (di >= 0)
       Some((snap.physicalDataSchema(di).name, false, snap.dataSchema(di).dataType))
     else {
-      val pi = partNames.indexWhere(_.name == name)
+      val pi = snap.partitionSchema.indexWhere(_.name == name)
       if (pi < 0) None
       else Some((snap.physicalPartitionSchema(pi).name, true,
         snap.partitionSchema(pi).dataType))

@@ -313,7 +313,7 @@ object Optimize {
         (if (minted) Some(md) else None, Some(names))
       }
     val rows = matNames match {
-      case Some((mid, mver)) => RowTracking.preservedRowsDF(spark, scoped, mid, mver)
+      case Some((mid, mver)) => RowTracking.preservedRowsDF(scoped, mid, mver)
       case None => scoped.toDF
     }
     // delta.targetFileSize (bytes) takes precedence over the row cap when
@@ -438,7 +438,7 @@ object Optimize {
         (if (minted) Some(md) else None, Some(names))
       }
     val rows = matNames match {
-      case Some((mid, mver)) => RowTracking.preservedRowsDF(spark, snap, mid, mver)
+      case Some((mid, mver)) => RowTracking.preservedRowsDF(snap, mid, mver)
       case None => snap.toDF
     }
     // 16-bit bucket code per column: min/max-scaled rank for orderable

@@ -1,6 +1,6 @@
 package graft.delta
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField}
 
@@ -76,18 +76,14 @@ object RowTracking {
     * previously-materialized value wins, else baseRowId + row_index.
     * DV-deleted rows are dropped. This is the frame a rewrite
     * (OPTIMIZE/ZORDER) writes back, id-stable by construction. */
-  def preservedRowsDF(spark: SparkSession, scoped: Snapshot,
-      matId: String, matVer: String): DataFrame = {
+  def preservedRowsDF(scoped: Snapshot, matId: String, matVer: String): DataFrame = {
     val extra = Seq(
       StructField(matId, LongType, nullable = true),
       StructField(matVer, LongType, nullable = true))
-    val raw = scoped.relationDF(ScanOptions(), extra)
-    val visible =
-      if (scoped.hasDeletionVectors) DeletionVectors.filterDeleted(spark, scoped, raw)
-      else raw
     val freshId = pathMapCol(scoped, _.baseRowId) + col("_metadata.row_index")
     val freshVer = pathMapCol(scoped, _.defaultRowCommitVersion)
-    visible.select((scoped.schema.fields.map(scoped.logicalColumn) ++ Seq(
+    scoped.relationDF(extraDataCols = extra).select((
+      scoped.schema.fieldNames.map(n => col(s"`$n`")) ++ Seq(
       coalesce(col(s"`$matId`"), freshId).as(matId),
       coalesce(col(s"`$matVer`"), freshVer).as(matVer))).toIndexedSeq: _*)
   }

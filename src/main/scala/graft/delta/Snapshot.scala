@@ -3,7 +3,6 @@ package graft.delta
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.HadoopFsRelation
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
@@ -170,6 +169,19 @@ class Snapshot(
     restored.as(f.name)
   }
 
+  @transient private lazy val physicalNames: Map[String, String] =
+    dataSchema.fields.map(f => f.name -> physicalName(f)).toMap
+
+  /** A filter over LOGICAL data columns with its attributes renamed to the
+    * log's physical names, the keys of per-file stats. */
+  private[delta] def physicalFilter(
+      e: org.apache.spark.sql.catalyst.expressions.Expression)
+      : org.apache.spark.sql.catalyst.expressions.Expression = e.transform {
+    case a: org.apache.spark.sql.catalyst.expressions.AttributeReference
+        if physicalNames.contains(a.name) =>
+      a.withName(physicalNames(a.name))
+  }
+
   /** Data/partition schemas under physical names (what parquet + the log's
     * partitionValues/stats are keyed by). */
   private[delta] def physicalDataSchema: StructType =
@@ -252,89 +264,55 @@ class Snapshot(
    * The scan surface: a DataFrame over a custom FileIndex, so Catalyst gets
    * predicate/projection pushdown, partition pruning, and our stats-based
    * file skipping for free (the Spark-side equivalent of delta_scan's
-   * injected MultiFileReader, reference delta_scan.cpp:83-121).
+   * injected MultiFileReader, reference delta_scan.cpp:83-121). Only the
+   * column ORDER is restored on top of [[relation]]: a HadoopFsRelation
+   * puts partition columns last.
    */
   def toDF: DataFrame = toDF(ScanOptions())
 
   def toDF(options: ScanOptions): DataFrame = {
-    val spark = log.spark
     val df = relationDF(options)
-    val base =
-      if (hasDeletionVectors) DeletionVectors.filterDeleted(spark, this, df)
-      else df
-    // restore logical column order; alias physical → logical names
-    // (incl. nested struct fields via logicalColumn's positional cast)
-    base.select(schema.fields.map(logicalColumn).toIndexedSeq: _*)
+    if (df.columns.sameElements(schema.fieldNames)) df
+    else df.select(schema.fieldNames.map(n => col(s"`$n`")).toIndexedSeq: _*)
   }
 
-  /** V1 BaseRelation for `spark.read.format("graftdelta")`, full-fidelity:
-    * LOGICAL column names are exposed; deletion vectors and column mapping
-    * (name + id mode) are applied INSIDE the reader by
-    * [[GraftParquetFileFormat]], mirroring the reference's in-scan
-    * multi-file reader (delta_multi_file_reader.cpp:24-48,162-230). Column
-    * order is data-columns-then-partition-columns, per HadoopFsRelation
-    * convention. */
+  /** V1 BaseRelation for `spark.read.format("graftdelta")`: [[relation]]
+    * as is (data columns, then partition columns). */
   def asRelation: org.apache.spark.sql.sources.BaseRelation = asRelation(ScanOptions())
 
-  def asRelation(options: ScanOptions): org.apache.spark.sql.sources.BaseRelation = {
+  def asRelation(options: ScanOptions): org.apache.spark.sql.sources.BaseRelation =
+    relation(options, dropDeleted = true, Nil)
+
+  /** THE read path of every snapshot scan: LOGICAL column names, with
+    * deletion vectors and column mapping (name + id mode) applied INSIDE
+    * the reader by [[GraftParquetFileFormat]], mirroring the reference's
+    * in-scan multi-file reader (delta_multi_file_reader.cpp:24-48,162-230).
+    * `_metadata` stays reachable (the DML paths locate rows by
+    * file_path/row_index).
+    *
+    * @param dropDeleted   false keeps DV-deleted rows (a DML that unions
+    *                      new deletes into existing bitmaps)
+    * @param extraDataCols extra physical pass-through columns (nullable;
+    *                      files lacking them read null) — the materialized
+    *                      row-id columns a row-tracked rewrite preserves */
+  private[delta] def relation(options: ScanOptions, dropDeleted: Boolean,
+      extraDataCols: Seq[org.apache.spark.sql.types.StructField]): HadoopFsRelation = {
     val spark = log.spark
     val logicalToPhysical = dataSchema.fields.map(f => f.name -> physicalField(f)).toMap
-    val dvBc = dvRegistryBroadcast
     HadoopFsRelation(
-      location = new GraftFileIndex(spark, this, options, logicalNames = true),
+      location = new GraftFileIndex(spark, this, options),
       partitionSchema = partitionSchema,
-      dataSchema = dataSchema,
+      dataSchema = StructType(dataSchema.fields ++ extraDataCols),
       bucketSpec = None,
-      fileFormat = new GraftParquetFileFormat(logicalToPhysical, dvBc,
+      fileFormat = new GraftParquetFileFormat(logicalToPhysical,
+        if (dropDeleted) dvRegistryBroadcast else None,
         fieldIdMode = columnMappingMode == "id"),
       options = Map.empty)(spark)
   }
 
-  /** Raw relation DataFrame: no DV filtering, `_metadata` still reachable.
-    * Used by the DV write path to locate physical rows. */
-  private[delta] def relationDF: DataFrame = relationDF(ScanOptions())
-
-  /** [[relationDF]] under LOGICAL column names (plus `_metadata` carried
-    * through explicitly): the row-level DML surface — user predicates and
-    * assignments are logical, files are physical. */
-  private[delta] def dmlDF: DataFrame = dmlDF(Nil)
-
-  /** [[dmlDF]] widened with extra physical pass-through columns (the
-    * materialized row-id columns a row-tracked DML must preserve). */
-  private[delta] def dmlDF(
-      extraDataCols: Seq[org.apache.spark.sql.types.StructField]): DataFrame = {
-    val df = relationDF(ScanOptions(), extraDataCols)
-    if (columnMappingMode == "none") df
-    else df.select((schema.fields.map(logicalColumn) ++
-      extraDataCols.map(f => org.apache.spark.sql.functions.col(s"`${f.name}`")) :+
-      org.apache.spark.sql.functions.col("_metadata")).toIndexedSeq: _*)
-  }
-
-  private[delta] def relationDF(options: ScanOptions): DataFrame =
-    relationDF(options, Nil)
-
-  /** As [[relationDF]], optionally widening the read schema with extra
-    * physical columns (nullable; files lacking them read as null) — the
-    * row-tracking rewrite path reads previously-materialized row ids
-    * this way. */
-  private[delta] def relationDF(options: ScanOptions,
-      extraDataCols: Seq[org.apache.spark.sql.types.StructField]): DataFrame = {
-    val spark = log.spark
-    // id-mode physical schemas carry `parquet.field.id` metadata; field-id
-    // resolution is enabled per-scan in the reader's hadoopConf (no
-    // session-wide conf mutation) by GraftParquetFileFormat
-    val format =
-      if (columnMappingMode == "id")
-        new GraftParquetFileFormat(Map.empty, None, fieldIdMode = true)
-      else new ParquetFileFormat()
-    val index = new GraftFileIndex(spark, this, options)
-    val relation = HadoopFsRelation(
-      location = index,
-      partitionSchema = physicalPartitionSchema,
-      dataSchema = StructType(physicalDataSchema.fields ++ extraDataCols),
-      bucketSpec = None,
-      fileFormat = format,
-      options = Map.empty)(spark)
-    spark.baseRelationToDataFrame(relation)
-  }
+  /** [[relation]] as a DataFrame (data columns, then partition columns). */
+  private[delta] def relationDF(options: ScanOptions = ScanOptions(),
+      dropDeleted: Boolean = true,
+      extraDataCols: Seq[org.apache.spark.sql.types.StructField] = Nil): DataFrame =
+    log.spark.baseRelationToDataFrame(relation(options, dropDeleted, extraDataCols))
 }

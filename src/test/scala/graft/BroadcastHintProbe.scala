@@ -7,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * customer⋈orders (a FILTERED FACT join that grows with SF), and the
   * BroadcastExchange collect+build runs single-threaded on the driver
   * (~8 s of the 10.7 s wall at x300; 8-vs-32-core ratios 1.25 / 1.03
-  * where真 scalers read 2.1-3.7). A/B: hint vs no-hint (AQE decides) at
+  * where true scalers read 2.1-3.7). A/B: hint vs no-hint (AQE decides) at
   * x10 (the scale the hint was tuned at, r17) and x300.
   * Run: sbt "Test/runMain graft.BroadcastHintProbe <dirA> [dirB ...]"
   */

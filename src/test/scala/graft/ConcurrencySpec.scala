@@ -72,6 +72,34 @@ class ConcurrencySpec extends AnyFunSuite {
   private def noopContent(op: String): String =
     ActionJson.toJson(Action(CommitInfo(System.currentTimeMillis(), op))) + "\n"
 
+  test("ConflictChecker prunes a column-mapped table's winners by physical stats") {
+    // fresh copy of the mapped fixture: the predicate resolves under
+    // logical names, the winners' stats are keyed by physical names
+    val fixture = Fixtures.delta(spark, sfDir, "nation", Fixtures.Mapped)
+    val path = java.nio.file.Files.createTempDirectory("confchk-mapped").toString + "/t"
+    org.apache.commons.io.FileUtils.copyDirectory(
+      new java.io.File(fixture), new java.io.File(path))
+    DeltaLog.clearCache()
+    val log = DeltaLog.forPath(spark, path)
+    val rows = DeltaTable.forPath(spark, path).toDF
+    val base = log.update()
+    val pred = ConflictChecker.resolve(base, col("n_nationkey") < 5)
+    // disjoint winner → rebase
+    DeltaWriter.append(spark,
+      rows.limit(3).withColumn("n_nationkey", col("n_nationkey") + 1000), path)
+    val v = ConflictChecker.commitWithRebase(log, base, noopContent("DELETE"),
+      Set.empty, ConflictChecker.ReadScope.Predicate(pred))
+    assert(v == base.version + 2, s"expected rebase past the winner, got $v")
+    // winner inside the predicate range → conflict
+    val base2 = log.update()
+    DeltaWriter.append(spark, rows.where(col("n_nationkey") < 2), path)
+    val e = intercept[CommitConflictException] {
+      ConflictChecker.commitWithRebase(log, base2, noopContent("DELETE"),
+        Set.empty, ConflictChecker.ReadScope.Predicate(pred))
+    }
+    assert(e.getMessage.contains("may match"))
+  }
+
   test("ConflictChecker rebases over stats-disjoint winners, fails on overlap") {
     val src = Fixtures.readParquet(spark, sfDir, "supplier")
     val (path, log) = twoFileTable()

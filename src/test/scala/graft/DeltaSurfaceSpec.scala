@@ -25,13 +25,15 @@ class DeltaSurfaceSpec extends AnyFunSuite {
     assert(v0.count() == src.filter(col("n_nationkey") < 10).count())
     // pushdown still works through the registered source
     assert(full.where(col("n_nationkey") === 3).count() == 1)
-    // DV tables read through the registered source with deleted rows filtered
-    // (round-2 contract; equals the full-featured API row-for-row)
+    // DV tables read through the registered source with deleted rows
+    // filtered: row-for-row the live rows of the plain parquet (the
+    // fixture deletes l_orderkey % 10 = 7)
     val dvPath = Fixtures.delta(spark, sfDir, "lineitem", Fixtures.Dv)
     val viaSource = spark.read.format("graftdelta").load(dvPath)
-    val viaApi = DeltaTable.forPath(spark, dvPath).toDF
-    assert(viaSource.count() == viaApi.count() && viaSource.count() > 0)
-    assert(viaSource.exceptAll(viaApi).isEmpty && viaApi.exceptAll(viaSource).isEmpty)
+    val live = Fixtures.readParquet(spark, sfDir, "lineitem")
+      .filter(!(col("l_orderkey") % 10 === 7))
+    assert(viaSource.count() == live.count() && viaSource.count() > 0)
+    assert(viaSource.exceptAll(live).isEmpty && live.exceptAll(viaSource).isEmpty)
   }
 
   test("graft catalog: SQL-only access, path idents, VERSION AS OF, pushdown") {
@@ -897,6 +899,29 @@ class DeltaSurfaceSpec extends AnyFunSuite {
     t.delete(col("s_suppkey") % 2 === 0)
     val after = t.toDFWithVirtualColumns
     assert(after.count() == src.filter(col("s_suppkey") % 2 === 1).count())
+  }
+
+  test("virtual columns on a DV table: survivors keep (filename, file_row_number)") {
+    val src = Fixtures.readParquet(spark, sfDir, "supplier")
+    val path = tmpTable()
+    DeltaWriter.append(spark, src.repartition(3), path)
+    val t = DeltaTable.forPath(spark, path)
+    def positions(df: org.apache.spark.sql.DataFrame): Map[Long, (String, Long)] =
+      df.select(col("s_suppkey"), col("filename"), col("file_row_number")).collect()
+        .map(r => r.getAs[Number](0).longValue -> (r.getString(1), r.getLong(2))).toMap
+    val before = positions(t.toDFWithVirtualColumns)
+    // two deletes: the second reads `_metadata.row_index` through a scan
+    // that already drops the first one's rows inside the reader
+    t.delete(col("s_suppkey") % 3 === 0)
+    t.delete(col("s_suppkey") % 5 === 0)
+    assert(t.snapshot.hasDeletionVectors)
+    val afterDf = t.toDFWithVirtualColumns
+    val after = positions(afterDf)
+    val survivors = before.filter { case (k, _) => k % 3 != 0 && k % 5 != 0 }
+    assert(after == survivors)
+    // a narrow projection (row index alone) reads the same positions
+    assert(afterDf.select(col("file_row_number")).collect().map(_.getLong(0)).sorted.toSeq ==
+      survivors.values.map(_._2).toSeq.sorted)
   }
 
   test("pushdown_filters toggle: identical results, skipping disabled") {

@@ -230,6 +230,23 @@ class GraftSourceSpec extends AnyFunSuite {
     assert(df.select(lit(1)).count() == live.count())
   }
 
+  test("DV reads keep partition columns and follow the scan's batch/row choice") {
+    val path = java.nio.file.Files.createTempDirectory("graft-dvpart").toString + "/t"
+    val src = Fixtures.readParquet(spark, sfDir, "customer")
+    DeltaWriter.append(spark, src.repartition(3), path, partitionBy = Seq("c_mktsegment"))
+    DeltaTable.forPath(spark, path).delete(col("c_custkey") % 10 === 7)
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.select(col("c_custkey"), col("c_mktsegment")).collect().toSet
+    val want = rows(src.filter(!(col("c_custkey") % 10 === 7)))
+    // batches compacted by the DV filter, with constant partition vectors
+    assert(rows(DeltaTable.forPath(spark, path).toDF) == want)
+    assert(rows(spark.read.format("graftdelta").load(path)) == want)
+    // without whole-stage codegen the scan asks the reader for rows
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    try assert(rows(DeltaTable.forPath(spark, path).toDF) == want)
+    finally spark.conf.unset("spark.sql.codegen.wholeStage")
+  }
+
   test("graftdelta on a DV table at a pre-delete version sees all rows") {
     val path = Fixtures.delta(spark, sfDir, "lineitem", Fixtures.Dv)
     val src = Fixtures.readParquet(spark, sfDir, "lineitem")

@@ -216,24 +216,87 @@ class PlanHygieneSpec extends AnyFunSuite {
     assert(plan.contains("BroadcastHashJoin"), plan.take(2000))
   }
 
+  /** Live rows of the DV fixture from plain parquet: the fixture deletes
+    * `l_orderkey % 10 = 7`. */
+  private def dvOracle = Fixtures.readParquet(spark, sfDir, "lineitem")
+    .filter(!(col("l_orderkey") % 10 === 7))
+
   test("DV scan keeps a single stage up to the aggregate (no extra shuffle)") {
     val p = Fixtures.delta(spark, sfDir, "lineitem", Fixtures.Dv)
-    // a column aggregate, NOT count(*): the metadata-only count rewrite
-    // would otherwise answer from the log and skip the DV filter entirely
-    val df = DeltaTable.forPath(spark, p).toDF
-      .agg(sum(col("l_quantity")))
+    // column aggregates, NOT count(*) alone: the metadata-only count
+    // rewrite would otherwise answer from the log and skip the scan
+    def agg(d: org.apache.spark.sql.DataFrame) =
+      d.agg(round(sum(col("l_quantity")), 2), count(col("l_quantity")))
+    val df = agg(DeltaTable.forPath(spark, p).toDF)
     val plan = executedPlan(df).toString
     // the dv filter must not introduce a join
     assert(!plan.contains("Join"), plan.take(2000))
-    assert(plan.contains("dv_row_deleted"), plan.take(2000))
+    // deleted rows are dropped inside the reader: the scan's format
+    // carries the snapshot's DV registry
+    val formats = df.queryExecution.optimizedPlan.collect {
+      case r: org.apache.spark.sql.execution.datasources.LogicalRelation => r.relation
+    }
+    assert(formats.nonEmpty && formats.forall {
+      case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+        h.fileFormat match {
+          case f: GraftParquetFileFormat => f.dropsDeletedRows
+          case _ => false
+        }
+      case _ => false
+    }, df.queryExecution.optimizedPlan.toString)
+    assert(df.collect()(0) == agg(dvOracle).collect()(0))
+  }
+
+  test("every read surface plans one reader-applied relation, no DV filter or renaming project") {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference}
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project}
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    spark.conf.set("spark.sql.catalog.graft", "graft.delta.GraftCatalog")
+    Seq(("lineitem", Fixtures.Dv), ("nation", Fixtures.Part),
+        ("nation", Fixtures.Mapped)).foreach { case (table, variant) =>
+      val p = Fixtures.delta(spark, sfDir, table, variant)
+      val t = DeltaTable.forPath(spark, p)
+      val schema = t.snapshot.schema.fieldNames.toSeq
+      val view = s"surface_${variant.name}"
+      GraftCatalog.attach(view, p)
+      val surfaces = Seq(
+        "toDF" -> t.toDF,
+        "toDF(version)" -> t.toDF(t.version),
+        "toDFAtTimestamp" -> t.toDFAtTimestamp(System.currentTimeMillis()),
+        "delta_scan" -> spark.sql(s"SELECT * FROM delta_scan('$p')"),
+        "catalog" -> spark.sql(s"SELECT * FROM graft.$view"),
+        "format" -> spark.read.format("graftdelta").load(p))
+      surfaces.foreach { case (name, df) =>
+        val plan = df.queryExecution.analyzed
+        val what = s"$name over ${variant.name} $table:\n$plan"
+        val relations = plan.collect { case r: LogicalRelation => r.relation }
+        assert(relations.length == 1 && (relations.head match {
+          case h: HadoopFsRelation => h.location.isInstanceOf[GraftFileIndex] &&
+            h.fileFormat.isInstanceOf[GraftParquetFileFormat]
+          case _ => false
+        }), what)
+        assert(plan.collect { case f: Filter => f }.isEmpty, what)
+        // only attribute pass-through (and the catalog's same-name
+        // re-aliasing onto its own exprIds): no rename, no cast
+        assert(plan.collect { case pr: Project => pr }.forall(_.projectList.forall {
+          case _: AttributeReference => true
+          case Alias(a: AttributeReference, n) => a.name == n
+          case _ => false
+        }), what)
+        // HadoopFsRelation order (partition columns last) for the format;
+        // the table's schema order everywhere else
+        if (name == "format") assert(df.columns.toSeq.sorted == schema.sorted, what)
+        else assert(df.columns.toSeq == schema, what)
+      }
+      GraftCatalog.detach(view)
+    }
   }
 
   test("registered-source DV scan keeps columnar batches (atomic schema)") {
     val p = Fixtures.delta(spark, sfDir, "lineitem", Fixtures.Dv)
     val df = spark.read.format("graftdelta").load(p)
-    // correctness: matches the full-featured API row-for-row
-    val api = DeltaTable.forPath(spark, p).toDF
-    assert(df.count() == api.count() && df.count() > 0)
+    // correctness: the live rows of the plain parquet
+    assert(df.count() == dvOracle.count() && df.count() > 0)
     // plan: the scan emits batches — a ColumnarToRow (or a columnar scan
     // node) must be present; r2 regressed to row-at-a-time for the whole
     // table whenever any file carried a DV

@@ -97,4 +97,15 @@ class PushdownModeSpec extends AnyFunSuite {
         assert(n == expected, s"mode $m changed results: $n vs $expected")
       }
   }
+
+  test("pushdown log keeps only the newest Capacity events") {
+    GraftMetrics.clear()
+    val extra = 5
+    (0 until GraftMetrics.Capacity + extra).foreach { i =>
+      GraftMetrics.record(PushdownEvent("cap-test", "none", "", i, i))
+    }
+    val kept = GraftMetrics.pushdownLog(spark).collect().map(_.getAs[Int]("filesBefore"))
+    GraftMetrics.clear()
+    assert(kept.toSeq == (extra until GraftMetrics.Capacity + extra))
+  }
 }

@@ -20,17 +20,27 @@ def run_one(dir_, cpus):
     env = dict(os.environ, SPARK_GRAFT_CPUS=str(cpus))
     cmd = ["sbt", "-batch",
            "runMain graft.Bench --one %s %s" % (dir_, " ".join(QUERIES))]
+    """Returns (per-query seconds, None) or ({}, reason) for a failed run:
+    a non-zero exit, a timeout, or no timed rows."""
     t0 = time.time()
-    p = subprocess.run(cmd, env=env, capture_output=True, text=True,
-                       timeout=3600)
+    try:
+        p = subprocess.run(cmd, env=env, capture_output=True, text=True,
+                           timeout=3600)
+    except subprocess.TimeoutExpired:
+        print(f"  cpus={cpus}: timed out after {time.time()-t0:.0f}s",
+              flush=True)
+        return {}, "timeout"
     out = p.stdout + p.stderr
     times = {m.group(1): float(m.group(2))
              for m in re.finditer(r"\[one\] (\S+) ([0-9.]+)", out)}
     print(f"  cpus={cpus}: {len(times)} rows in {time.time()-t0:.0f}s",
           flush=True)
-    if not times:
+    err = (f"exit {p.returncode}" if p.returncode != 0
+           else None if times else "no timed rows")
+    if err:
         print(out[-3000:])
-    return times
+        return {}, err
+    return times, None
 
 def main():
     dir_ = sys.argv[1]
@@ -40,8 +50,9 @@ def main():
     for r in range(rounds):
         for cpus in (32, 8):
             print(f"round {r+1} cpus={cpus}", flush=True)
-            t = run_one(dir_, cpus)
-            seq.append({"round": r + 1, "cpus": cpus, "queries": t})
+            t, err = run_one(dir_, cpus)
+            seq.append({"round": r + 1, "cpus": cpus, "queries": t,
+                        "failed": err})
             for k, v in t.items():
                 if k not in best[cpus] or v < best[cpus][k]:
                     best[cpus][k] = v

@@ -495,18 +495,10 @@ object Alter {
   }
 
   private def commitMetadata(log: DeltaLog, snap: Snapshot, op: String,
-      md: Metadata, protocol: Option[Protocol] = None): Long = {
-    val actions =
-      Seq(Action(CommitInfo(System.currentTimeMillis(), op,
-        // the NEW configuration: the commit that ENABLES ICT already
-        // carries one, per protocol
-        inCommitTimestamp =
-          log.nextInCommitTimestamp(md.configuration, snap.version + 1)))) ++
-      protocol.map(Action(_)) ++ Seq(Action(md))
-    // metadata changes read current state: conflicts are errors, no retry
-    LogStore.write(log.fs, log.commitFile(snap.version + 1),
-      actions.map(ActionJson.toJson).mkString("", "\n", "\n"))
-    log.invalidateCache()
-    snap.version + 1
-  }
+      md: Metadata, protocol: Option[Protocol] = None): Long =
+    // metadata changes read current state: conflicts are errors, no retry.
+    // `md` is the commit's own metaData, so the commit that ENABLES ICT
+    // already carries one, per protocol
+    ConflictChecker.commit(log, Some(snap), op,
+      protocol.map(Action(_)).toSeq :+ Action(md), maxAttempts = 1)
 }

@@ -64,17 +64,11 @@ object Clustering {
     val config = ActionJson.mapper.writeValueAsString(root)
     val p = snap.protocol
     val upgraded = Alter.featureUpgrade(p, Seq("clustering", "domainMetadata"))
-    val actions =
-      Seq(Action(CommitInfo(System.currentTimeMillis(), "CLUSTER BY",
-        Map("clusteringColumns" -> cols.mkString(",")),
-        inCommitTimestamp = log.nextInCommitTimestamp(
-          snap.metadata.configuration, snap.version + 1)))) ++
-      upgraded.map(Action(_)).toSeq ++
-      Seq(Action(DomainMetadata(DomainName, config, removed = false)))
-    LogStore.write(log.fs, log.commitFile(snap.version + 1),
-      actions.map(ActionJson.toJson).mkString("", "\n", "\n"))
-    log.invalidateCache()
-    snap.version + 1
+    ConflictChecker.commit(log, Some(snap), "CLUSTER BY",
+      upgraded.map(Action(_)).toSeq :+
+        Action(DomainMetadata(DomainName, config, removed = false)),
+      params = Map("clusteringColumns" -> cols.mkString(",")),
+      maxAttempts = 1)
   }
 
   /** OPTIMIZE on a clustered table: rewrite the data files clustered on

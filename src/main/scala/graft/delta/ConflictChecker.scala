@@ -1,18 +1,23 @@
 package graft.delta
 
+import scala.collection.mutable.ArrayBuffer
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /**
- * Optimistic-concurrency conflict resolution for non-blind commits —
- * the delta-spark ConflictChecker analog. The reference surfaces every
- * version collision as a hard error (its commit path,
- * src/storage/delta_transaction.cpp:464-488); blind appends here already
- * rebase-and-retry, and this extends the same liveness to row-level DML
- * and compaction: a commit built against snapshot S that loses the race
- * for version S+1 is only WRONG if the winner changed something this
- * commit read or touched. Otherwise it re-attempts at the next version
- * unchanged (the action list is position-independent).
+ * The commit path — every Delta write lands through [[commit]], the
+ * analog of the reference's DeltaTransaction::Commit/Rollback
+ * (src/storage/delta_transaction.cpp:411-573) — and its optimistic-
+ * concurrency conflict resolution, the delta-spark ConflictChecker
+ * analog. The reference surfaces every version collision as a hard
+ * error (delta_transaction.cpp:464-488); here a commit built against
+ * snapshot S that loses the race for version S+1 is only WRONG if the
+ * winner changed something this commit read or touched. Otherwise it
+ * re-attempts at the next version with the same actions, re-stamped for
+ * that version (in-commit timestamp, row ids).
  *
  * Rules (delta-spark semantics):
  *  - winner wrote metaData or protocol → fail (everything may have moved)
@@ -64,56 +69,89 @@ object ConflictChecker {
     } catch { case _: Exception => None }
 
   /**
-   * Write `content` as the next commit, rebasing over logically-disjoint
-   * concurrent winners. `base` is the snapshot the actions were computed
-   * from; `touchedFiles` the log-form paths of every file this commit
-   * removes or re-adds (DV rewrites included).
+   * Write a commit — the only code that does. Each attempt at version `v`
+   * prepends the `commitInfo` (in-commit timestamp computed for `v`),
+   * assigns `adds` their row ids for `v` on row-tracked tables (plus the
+   * high-water-mark domain action), writes the JSON PUT-if-absent, then
+   * invalidates the cache and auto-checkpoints. A lost race rebases over
+   * winners disjoint under `scope`, up to `maxAttempts`.
    *
+   * The table configuration the commit lands under — the one in its own
+   * metaData action (create, clone, ALTER, RESTORE's reset), else
+   * `base`'s — decides the in-commit timestamp; the checkpoint interval
+   * is `base`'s.
+   *
+   * @param base the snapshot the actions were computed from; None for a
+   *   create or clone, which never rebases
+   * @param actions every action except commitInfo, the row-id domain and
+   *   `adds`; their removes are the files this commit touches
+   * @param adds the commit's fresh data files
+   * @param cdc pre-rendered `cdc` action lines
+   * @param staged the write's staged files: emptied once the commit lands,
+   *   since the log owns them from then on (see [[staging]])
    * @return the committed version
    */
-  def commitWithRebase(
+  def commit(
       log: DeltaLog,
-      base: Snapshot,
-      content: String,
-      touchedFiles: Set[String],
-      scope: => ReadScope,
-      maxAttempts: Int = 10): Long =
-    commitWithRebaseAt(log, base, _ => content, touchedFiles, scope, maxAttempts)
-
-  /** As [[commitWithRebase]], but the commit content is a function of the
-    * version it actually lands at — required whenever the staged actions
-    * embed the commit version itself (row tracking's
-    * defaultRowCommitVersion), which a rebase over disjoint winners
-    * would otherwise misreport. */
-  def commitWithRebaseAt(
-      log: DeltaLog,
-      base: Snapshot,
-      contentAt: Long => String,
-      touchedFiles: Set[String],
-      scope: => ReadScope,
-      maxAttempts: Int = 10): Long = {
+      base: Option[Snapshot],
+      op: String,
+      actions: Seq[Action],
+      params: Map[String, String] = Map.empty,
+      metrics: Map[String, String] = Map.empty,
+      adds: Seq[AddFile] = Nil,
+      cdc: Seq[String] = Nil,
+      scope: => ReadScope = ReadScope.WholeTable,
+      maxAttempts: Int = 10,
+      staged: ArrayBuffer[Path] = ArrayBuffer.empty): Long = {
     lazy val resolvedScope = scope // predicate resolution only on conflict
-    var attemptVersion = base.version + 1
+    val baseConf = base.fold(Map.empty[String, String])(_.metadata.configuration)
+    val conf = actions.flatMap(_.metaData).lastOption.fold(baseConf)(_.configuration)
+    val rowTracked = adds.nonEmpty &&
+      base.fold(RowTracking.enabledAtCreate(conf))(RowTracking.enabled)
+    val touched = actions.flatMap(_.remove).map(_.path).toSet
+    var v = base.fold(0L)(_.version + 1)
     var attempts = 0
     while (true) {
       attempts += 1
+      val (stamped, rowIdDomain) =
+        if (!rowTracked) (adds, Nil)
+        else {
+          val (as, dm) = RowTracking.assign(adds,
+            base.fold(-1L)(RowTracking.highWaterMark), v)
+          (as, Seq(Action(dm)))
+        }
+      val info = CommitInfo(System.currentTimeMillis(), op, params,
+        inCommitTimestamp = log.nextInCommitTimestamp(conf, v),
+        operationMetrics = metrics)
+      val lines = ((Action(info) +: actions) ++ rowIdDomain ++
+        stamped.map(Action(_))).map(ActionJson.toJson) ++ cdc
       try {
-        LogStore.write(log.fs, log.commitFile(attemptVersion), contentAt(attemptVersion))
+        LogStore.write(log.fs, log.commitFile(v), lines.mkString("", "\n", "\n"))
+        staged.clear()
         log.invalidateCache()
-        log.maybeAutoCheckpoint(attemptVersion, base.metadata.configuration)
-        return attemptVersion
+        log.maybeAutoCheckpoint(v, baseConf)
+        return v
       } catch {
         case e: CommitConflictException =>
           log.invalidateCache()
+          val b = base.filter(_ => attempts < maxAttempts).getOrElse(throw e)
           val latestVersion = log.update().version
-          if (attempts >= maxAttempts || latestVersion < attemptVersion) throw e
-          (attemptVersion to latestVersion).foreach { v =>
-            checkWinner(log, v, touchedFiles, resolvedScope, base)
-          }
-          attemptVersion = latestVersion + 1
+          if (latestVersion < v) throw e
+          (v to latestVersion).foreach(checkWinner(log, _, touched, resolvedScope, b))
+          v = latestVersion + 1
       }
     }
     -1L // unreachable
+  }
+
+  /** Run a write that stages files (data, deletion vectors, change data)
+    * into the buffer it is handed and passes that buffer to [[commit]].
+    * Whatever is still staged when `body` ends — no commit landed — is
+    * deleted again (the reference's rollback, delta_transaction.cpp:475-488). */
+  def staging[T](log: DeltaLog)(body: ArrayBuffer[Path] => T): T = {
+    val staged = ArrayBuffer.empty[Path]
+    try body(staged)
+    finally staged.foreach(p => try log.fs.delete(p, false) catch { case NonFatal(_) => () })
   }
 
   private def checkWinner(log: DeltaLog, v: Long,

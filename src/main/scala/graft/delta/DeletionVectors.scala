@@ -416,43 +416,29 @@ object DeltaDelete {
     // deleted rows kept: already-deleted matches union away
     val hitRows = snap.relationDF(dropDeleted = false).where(condition)
       .select(col("_metadata.file_path").as("p"), col("_metadata.row_index").as("i"))
-    val moved = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.Path]
-    try {
+    ConflictChecker.staging(log) { staged =>
       // CDF: the newly deleted rows are the LIVE matches (already-deleted
       // rows union into the bitmap as no-ops and must not re-emit)
       val cdcLines =
         if (!Cdc.enabled(snap)) Nil
         else Cdc.writeChangeData(spark, log, snap,
           Cdc.typed(snap.relationDF().where(condition), "delete"),
-          snap.metadata.partitionColumns, moved)
-      val (actions, deletedRows) = dvActions(log, snap, hitRows, moved)
-      if (actions.isEmpty) {
-        moved.foreach(p => try log.fs.delete(p, false) catch { case _: Exception => () })
-        return 0L
-      }
-      def commitActionsAt(v: Long) =
-        Seq(Action(CommitInfo(System.currentTimeMillis(), "DELETE",
-          Map("predicate" -> condition.toString),
-          inCommitTimestamp =
-            log.nextInCommitTimestamp(snap.metadata.configuration, v),
-          operationMetrics = Map(
-            "numDeletedRows" -> deletedRows.toString,
-            "numDeletionVectorsAdded" ->
-              actions.count(_.add.exists(_.deletionVector.isDefined)).toString)))) ++
-        protocolUpgradeActions(snap) ++ actions
-      val commitActions = commitActionsAt(snap.version + 1)
+          snap.metadata.partitionColumns, staged)
+      val (actions, deletedRows) = dvActions(log, snap, hitRows, staged)
       // optimistic concurrency: rebase over logically-disjoint winners
       // (see ConflictChecker) — conflicts remain loud errors
-      ConflictChecker.commitWithRebaseAt(log, snap,
-        v => (commitActionsAt(v).map(ActionJson.toJson) ++ cdcLines)
-          .mkString("", "\n", "\n"),
-        commitActions.flatMap(_.remove).map(_.path).toSet,
-        ConflictChecker.ReadScope.Predicate(ConflictChecker.resolve(snap, condition)))
+      if (actions.nonEmpty)
+        ConflictChecker.commit(log, Some(snap), "DELETE",
+          protocolUpgradeActions(snap) ++ actions,
+          params = Map("predicate" -> condition.toString),
+          metrics = Map(
+            "numDeletedRows" -> deletedRows.toString,
+            "numDeletionVectorsAdded" ->
+              actions.count(_.add.exists(_.deletionVector.isDefined)).toString),
+          cdc = cdcLines, staged = staged,
+          scope = ConflictChecker.ReadScope.Predicate(
+            ConflictChecker.resolve(snap, condition)))
       deletedRows
-    } catch {
-      case t: Throwable =>
-        moved.foreach(p => try log.fs.delete(p, false) catch { case _: Exception => () })
-        throw t
     }
   }
 }
@@ -530,12 +516,11 @@ object DeltaMerge {
         "left_semi")
       .select(col("_metadata.file_path").as("p"), col("_metadata.row_index").as("i"))
 
-    val moved = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.Path]
-    try {
+    ConflictChecker.staging(log) { staged =>
       val (stage, stageSchema, stagePartCols, stageOpts) =
         DeltaWriter.toPhysical(spark, snap, aligned, snap.metadata.partitionColumns)
       val adds = DeltaWriter.writeFiles(spark, log, stage, stageSchema,
-        stagePartCols, moved, stageOpts, configuration = snap.metadata.configuration)
+        stagePartCols, staged, stageOpts, configuration = snap.metadata.configuration)
       // CDF: replaced target rows (preimage), their source replacements
       // (postimage), and non-matching source rows (insert) — one stage
       val cdcLines =
@@ -552,9 +537,9 @@ object DeltaMerge {
               "left_semi").select(cols: _*), "update_preimage")
           Cdc.writeChangeData(spark, log, snap,
             pre.unionByName(srcJoin("left_semi")).unionByName(srcJoin("left_anti")),
-            snap.metadata.partitionColumns, moved)
+            snap.metadata.partitionColumns, staged)
         }
-      val (dvActs, replacedRows) = DeltaDelete.dvActions(log, snap, hitRows, moved)
+      val (dvActs, replacedRows) = DeltaDelete.dvActions(log, snap, hitRows, staged)
       // source row count from the write's own per-file stats — recomputing
       // the source (a second full pass) doubled MERGE's source cost
       val perFile = adds.map(_.parsedStats.flatMap(_.numRecords))
@@ -563,39 +548,14 @@ object DeltaMerge {
         else aligned.count()
       val txnActs = for (app <- txnAppId.toSeq; v <- txnVersion.toSeq)
         yield Action(SetTransaction(app, v, Some(System.currentTimeMillis())))
-      def commitActionsAt(cv: Long) = {
-        // row-tracked tables: upsert's adds need baseRowId/commit-version
-        // assignment + the high-water-mark domain update like every other
-        // write path — committing bare adds is a rowTracking protocol
-        // violation (readers would compute null row ids for these files)
-        val (addsV, rtDomain) =
-          if (!RowTracking.enabled(snap)) (adds, None)
-          else {
-            val (as, _, dm) = RowTracking.assign(adds,
-              RowTracking.highWaterMark(snap), cv)
-            (as, dm)
-          }
-        Seq(Action(CommitInfo(System.currentTimeMillis(), "MERGE",
-          Map("keys" -> keyCols.mkString(",")),
-          inCommitTimestamp =
-            log.nextInCommitTimestamp(snap.metadata.configuration, cv)))) ++
-        rtDomain.map(Action(_)).toSeq ++
-        (if (dvActs.nonEmpty) DeltaDelete.protocolUpgradeActions(snap) else Nil) ++
-        txnActs ++ dvActs ++ addsV.map(Action(_))
-      }
-      val commitActions = commitActionsAt(snap.version + 1)
       // MERGE reads the whole target key set: any concurrent data change
       // conflicts; disjoint winners (txn markers, compactions) rebase
-      ConflictChecker.commitWithRebaseAt(log, snap,
-        v => (commitActionsAt(v).map(ActionJson.toJson) ++ cdcLines)
-          .mkString("", "\n", "\n"),
-        commitActions.flatMap(_.remove).map(_.path).toSet,
-        ConflictChecker.ReadScope.WholeTable)
+      ConflictChecker.commit(log, Some(snap), "MERGE",
+        (if (dvActs.nonEmpty) DeltaDelete.protocolUpgradeActions(snap) else Nil) ++
+          txnActs ++ dvActs,
+        params = Map("keys" -> keyCols.mkString(",")),
+        adds = adds, cdc = cdcLines, staged = staged)
       (replacedRows, sourceRows - replacedRows)
-    } catch {
-      case t: Throwable =>
-        moved.foreach(p => try log.fs.delete(p, false) catch { case _: Exception => () })
-        throw t
     }
   }
 
@@ -802,15 +762,14 @@ object DeltaMerge {
         .select(col("__file").as("p"), col("__row").as("i"))))
       .reduce(_ union _)
 
-    val moved = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.Path]
-    try {
+    ConflictChecker.staging(log) { staged =>
       val adds = toWrite match {
         case Some(w) =>
           val (stage, stageSchema, stagePartCols, stageOpts) =
             DeltaWriter.toPhysical(spark, snap, w,
               snap.metadata.partitionColumns, extraCols)
           DeltaWriter.writeFiles(spark, log, stage, stageSchema,
-            stagePartCols, moved, stageOpts, configuration = snap.metadata.configuration)
+            stagePartCols, staged, stageOpts, configuration = snap.metadata.configuration)
         case None => Nil
       }
       val cdcLines =
@@ -850,50 +809,29 @@ object DeltaMerge {
           }
           if (parts.isEmpty) Nil
           else Cdc.writeChangeData(spark, log, snap,
-            parts.reduce(_ unionByName _), snap.metadata.partitionColumns, moved)
+            parts.reduce(_ unionByName _), snap.metadata.partitionColumns, staged)
         }
-      val (dvActs, _) = DeltaDelete.dvActions(log, snap, hitRows, moved)
-      if (dvActs.isEmpty && adds.isEmpty) {
-        moved.foreach(p => try log.fs.delete(p, false) catch { case _: Exception => () })
-        return (0L, 0L, 0L)
-      }
-      val perFile = adds.map(_.parsedStats.flatMap(_.numRecords))
-      val writtenRows =
-        if (perFile.forall(_.isDefined)) perFile.flatten.sum
-        else toWrite.map(_.count()).getOrElse(0L)
-      val insertedRows = writtenRows - updatedRows
-      def commitActionsAt(commitVersion: Long): Seq[Action] = {
-        val (addsV, rtDomain) =
-          if (!rtEnabled) (adds, None)
-          else {
-            val (as, _, dm) = RowTracking.assign(adds,
-              RowTracking.highWaterMark(snap), commitVersion)
-            (as, dm)
-          }
-        Seq(Action(CommitInfo(System.currentTimeMillis(), "MERGE",
-          Map("keys" -> keyCols.mkString(","),
+      val (dvActs, _) = DeltaDelete.dvActions(log, snap, hitRows, staged)
+      if (dvActs.isEmpty && adds.isEmpty) (0L, 0L, 0L)
+      else {
+        val perFile = adds.map(_.parsedStats.flatMap(_.numRecords))
+        val writtenRows =
+          if (perFile.forall(_.isDefined)) perFile.flatten.sum
+          else toWrite.map(_.count()).getOrElse(0L)
+        val insertedRows = writtenRows - updatedRows
+        ConflictChecker.commit(log, Some(snap), "MERGE",
+          mdAction.map(Action(_)).toSeq ++
+            (if (dvActs.nonEmpty) DeltaDelete.protocolUpgradeActions(snap) else Nil) ++
+            dvActs,
+          params = Map("keys" -> keyCols.mkString(","),
             "matchedClauses" -> matched.length.toString),
-          inCommitTimestamp = log.nextInCommitTimestamp(
-            snap.metadata.configuration, commitVersion),
-          operationMetrics = Map(
+          metrics = Map(
             "numTargetRowsUpdated" -> updatedRows.toString,
             "numTargetRowsDeleted" -> deletedRows.toString,
-            "numTargetRowsInserted" -> insertedRows.toString)))) ++
-        mdAction.map(Action(_)).toSeq ++
-        rtDomain.map(Action(_)).toSeq ++
-        (if (dvActs.nonEmpty) DeltaDelete.protocolUpgradeActions(snap) else Nil) ++
-        dvActs ++ addsV.map(Action(_))
+            "numTargetRowsInserted" -> insertedRows.toString),
+          adds = adds, cdc = cdcLines, staged = staged)
+        (updatedRows, deletedRows, insertedRows)
       }
-      ConflictChecker.commitWithRebaseAt(log, snap,
-        v => (commitActionsAt(v).map(ActionJson.toJson) ++ cdcLines)
-          .mkString("", "\n", "\n"),
-        dvActs.flatMap(_.remove).map(_.path).toSet,
-        ConflictChecker.ReadScope.WholeTable)
-      (updatedRows, deletedRows, insertedRows)
-    } catch {
-      case t: Throwable =>
-        moved.foreach(p => try log.fs.delete(p, false) catch { case _: Exception => () })
-        throw t
     }
   }
 
@@ -918,38 +856,22 @@ object DeltaMerge {
         "left_semi")
     val hitRows = matchedLive
       .select(col("_metadata.file_path").as("p"), col("_metadata.row_index").as("i"))
-    val moved = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.Path]
-    try {
+    ConflictChecker.staging(log) { staged =>
       val cdcLines =
         if (!Cdc.enabled(snap)) Nil
         else {
           val cols = snap.schema.fieldNames.map(c => col(s"`$c`")).toIndexedSeq
           Cdc.writeChangeData(spark, log, snap,
             Cdc.typed(matchedLive.select(cols: _*), "delete"),
-            snap.metadata.partitionColumns, moved)
+            snap.metadata.partitionColumns, staged)
         }
-      val (dvActs, deletedRows) = DeltaDelete.dvActions(log, snap, hitRows, moved)
-      if (dvActs.isEmpty) {
-        moved.foreach(p => try log.fs.delete(p, false) catch { case _: Exception => () })
-        return 0L
-      }
-      def commitActionsAt(v: Long) =
-        Seq(Action(CommitInfo(System.currentTimeMillis(), "MERGE",
-          Map("keys" -> keyCols.mkString(","), "matched" -> "delete"),
-          inCommitTimestamp =
-            log.nextInCommitTimestamp(snap.metadata.configuration, v)))) ++
-        DeltaDelete.protocolUpgradeActions(snap) ++ dvActs
-      val commitActions = commitActionsAt(snap.version + 1)
-      ConflictChecker.commitWithRebaseAt(log, snap,
-        v => (commitActionsAt(v).map(ActionJson.toJson) ++ cdcLines)
-          .mkString("", "\n", "\n"),
-        commitActions.flatMap(_.remove).map(_.path).toSet,
-        ConflictChecker.ReadScope.WholeTable)
+      val (dvActs, deletedRows) = DeltaDelete.dvActions(log, snap, hitRows, staged)
+      if (dvActs.nonEmpty)
+        ConflictChecker.commit(log, Some(snap), "MERGE",
+          DeltaDelete.protocolUpgradeActions(snap) ++ dvActs,
+          params = Map("keys" -> keyCols.mkString(","), "matched" -> "delete"),
+          cdc = cdcLines, staged = staged)
       deletedRows
-    } catch {
-      case t: Throwable =>
-        moved.foreach(p => try log.fs.delete(p, false) catch { case _: Exception => () })
-        throw t
     }
   }
 }
@@ -1017,13 +939,12 @@ object DeltaUpdate {
     val newRows = DeltaWriter.withWriteChecks(newRows0, snap.schema,
       snap.metadata.configuration, log.tablePath.toString)
 
-    val moved = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.Path]
-    try {
+    ConflictChecker.staging(log) { staged =>
       val (stage, stageSchema, stagePartCols, stageOpts) =
         DeltaWriter.toPhysical(spark, snap, newRows,
           snap.metadata.partitionColumns, extraCols)
       val adds = DeltaWriter.writeFiles(spark, log, stage, stageSchema,
-        stagePartCols, moved, stageOpts,
+        stagePartCols, staged, stageOpts,
             // post-mint config: the FIRST id-materializing rewrite must
             // already exempt the minted columns from stats
             configuration = mdAction.map(_.configuration)
@@ -1036,46 +957,25 @@ object DeltaUpdate {
           Cdc.writeChangeData(spark, log, snap,
             Cdc.typed(matched.select(cols: _*), "update_preimage")
               .unionByName(Cdc.typed(newRows.select(cols: _*), "update_postimage")),
-            snap.metadata.partitionColumns, moved)
+            snap.metadata.partitionColumns, staged)
         }
       val hitRows = matched.select(
         col("_metadata.file_path").as("p"), col("_metadata.row_index").as("i"))
-      val (dvActs, updatedRows) = DeltaDelete.dvActions(log, snap, hitRows, moved)
-      if (updatedRows == 0L) {
-        moved.foreach(p => try log.fs.delete(p, false) catch { case _: Exception => () })
-        return 0L
-      }
-      def commitActionsAt(commitVersion: Long): Seq[Action] = {
-        val (addsV, rtDomain) =
-          if (!rtEnabled) (adds, None)
-          else {
-            val (as, _, dm) = RowTracking.assign(adds,
-              RowTracking.highWaterMark(snap), commitVersion)
-            (as, dm)
-          }
-        Seq(Action(CommitInfo(System.currentTimeMillis(), "UPDATE",
-          Map("predicate" -> condition.toString),
-          inCommitTimestamp = log.nextInCommitTimestamp(
-            snap.metadata.configuration, commitVersion),
-          operationMetrics = Map("numUpdatedRows" -> updatedRows.toString)))) ++
-        mdAction.map(Action(_)).toSeq ++
-        rtDomain.map(Action(_)).toSeq ++
-        DeltaDelete.protocolUpgradeActions(snap) ++
-        dvActs ++ addsV.map(Action(_))
-      }
-      ConflictChecker.commitWithRebaseAt(log, snap,
-        v => (commitActionsAt(v).map(ActionJson.toJson) ++ cdcLines)
-          .mkString("", "\n", "\n"),
-        (dvActs.flatMap(_.remove)).map(_.path).toSet,
-        // row-tracked: any concurrent commit may have assigned ids from
-        // the same high-water mark — conflict instead of rebasing
-        if (rtEnabled) ConflictChecker.ReadScope.WholeTable
-        else ConflictChecker.ReadScope.Predicate(ConflictChecker.resolve(snap, condition)))
+      val (dvActs, updatedRows) = DeltaDelete.dvActions(log, snap, hitRows, staged)
+      if (updatedRows > 0L)
+        ConflictChecker.commit(log, Some(snap), "UPDATE",
+          mdAction.map(Action(_)).toSeq ++
+            DeltaDelete.protocolUpgradeActions(snap) ++ dvActs,
+          params = Map("predicate" -> condition.toString),
+          metrics = Map("numUpdatedRows" -> updatedRows.toString),
+          adds = adds, cdc = cdcLines, staged = staged,
+          // row-tracked: any concurrent commit may have assigned ids from
+          // the same high-water mark — conflict instead of rebasing
+          scope =
+            if (rtEnabled) ConflictChecker.ReadScope.WholeTable
+            else ConflictChecker.ReadScope.Predicate(
+              ConflictChecker.resolve(snap, condition)))
       updatedRows
-    } catch {
-      case t: Throwable =>
-        moved.foreach(p => try log.fs.delete(p, false) catch { case _: Exception => () })
-        throw t
     }
   }
 }

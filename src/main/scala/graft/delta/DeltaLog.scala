@@ -222,9 +222,9 @@ class DeltaLog private (@transient val spark: SparkSession, val tablePath: Path)
     * whose configuration enables `delta.enableInCommitTimestamps`:
     * max(now, previous commit's ICT + 1) — the protocol's monotonicity
     * rule (clock skew between writers must never make history go
-    * backwards). None when the table doesn't enable ICT. Callers inside a
-    * rebase loop must re-invoke per attempt with the actual target
-    * version, so the previous-commit read always sees the latest winner. */
+    * backwards). None when the table doesn't enable ICT.
+    * [[ConflictChecker.commit]] re-invokes it per attempt with the actual
+    * target version, so the previous-commit read sees the latest winner. */
   def nextInCommitTimestamp(conf: Map[String, String], version: Long): Option[Long] =
     if (!DeltaLog.ictEnabled(conf)) None
     else {

@@ -154,25 +154,13 @@ class DeltaTable private (val spark: SparkSession, val log: DeltaLog,
             s"${e.map(_.toString).getOrElse("<none>")} but table records " +
             s"${cur.map(_.toString).getOrElse("<none>")} (lost update?)")
       }
-      val now = System.currentTimeMillis()
-      val actions = Seq(
-        Action(CommitInfo(now, "SET TRANSACTION", Map("appId" -> appId),
-          inCommitTimestamp =
-            log.nextInCommitTimestamp(snap.metadata.configuration, snap.version + 1))),
-        Action(SetTransaction(appId, newVersion, Some(now))))
       try {
-        LogStore.write(log.fs, log.commitFile(snap.version + 1),
-          actions.map(ActionJson.toJson).mkString("", "\n", "\n"))
-        log.invalidateCache()
-        // same contract as every other commit loop: a table updated
-        // predominantly through this path (a streaming writer recording
-        // progress) must not grow an unbounded JSON tail
-        log.maybeAutoCheckpoint(snap.version + 1, snap.metadata.configuration)
-        return snap.version + 1
+        return ConflictChecker.commit(log, Some(snap), "SET TRANSACTION",
+          Seq(Action(SetTransaction(appId, newVersion,
+            Some(System.currentTimeMillis())))),
+          params = Map("appId" -> appId), maxAttempts = 1)
       } catch {
-        case _: CommitConflictException if attempt < 10 =>
-          attempt += 1
-          log.invalidateCache()
+        case _: CommitConflictException if attempt < 10 => attempt += 1
       }
     }
     -1L // unreachable
@@ -533,20 +521,16 @@ class DeltaTable private (val spark: SparkSession, val log: DeltaLog,
     DeltaMerge.upsert(spark, log, source, keyCols)
 
   /** Record/overwrite a domainMetadata entry (write side of
-    * `delta_domain_metadata`). */
+    * `delta_domain_metadata`). The commit declares the `domainMetadata`
+    * writer feature when the table does not yet. */
   def setDomainMetadata(domain: String, configuration: String,
       removed: Boolean = false): Long = {
     val snap = log.update()
-    val actions = Seq(
-      Action(CommitInfo(System.currentTimeMillis(), "SET DOMAIN METADATA",
-        Map("domain" -> domain),
-        inCommitTimestamp = log.nextInCommitTimestamp(
-          snap.metadata.configuration, snap.version + 1))),
-      Action(DomainMetadata(domain, configuration, removed)))
-    LogStore.write(log.fs, log.commitFile(snap.version + 1),
-      actions.map(ActionJson.toJson).mkString("", "\n", "\n"))
-    log.invalidateCache()
-    snap.version + 1
+    ProtocolGate.validateWrite(snap, "SET DOMAIN METADATA")
+    ConflictChecker.commit(log, Some(snap), "SET DOMAIN METADATA",
+      Alter.featureUpgrade(snap.protocol, Seq("domainMetadata")).map(Action(_)).toSeq :+
+        Action(DomainMetadata(domain, configuration, removed)),
+      params = Map("domain" -> domain), maxAttempts = 1)
   }
 }
 

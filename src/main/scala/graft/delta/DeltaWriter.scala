@@ -48,7 +48,6 @@ object DeltaWriter {
       mergeSchema: Boolean = false): Long = {
 
     val log = DeltaLog.forPath(spark, path)
-    val fs = log.fs
     val exists = log.tableExists
     val snapshot = if (exists) Some(log.update()) else None
 
@@ -158,7 +157,7 @@ object DeltaWriter {
     // equality: enforced IN the write pass itself via assert_true — one
     // codegen'd predicate riding the existing write scan, never a second
     // validation job over the data (the 100 TB-sound shape); a violation
-    // fails the job and the rollback below removes staged files
+    // fails the job and the staging scope removes staged files
     val enforced = withWriteChecks(aligned, tableSchema,
       snapshot.map(_.metadata.configuration).getOrElse(configuration), path)
 
@@ -171,19 +170,12 @@ object DeltaWriter {
         toPhysical(spark, s, enforced, partCols)
       case _ => (enforced, tableSchema, partCols, Map.empty[String, String])
     }
-    val moved = ArrayBuffer.empty[Path]
-    try {
+    ConflictChecker.staging(log) { staged =>
       val adds = writeFiles(spark, log, toStage, stageSchema, stagePartCols,
-        moved, stageOpts,
+        staged, stageOpts,
         snapshot.map(_.metadata.configuration).getOrElse(configuration))
-      commitAppend(log, snapshot, adds, tableSchema, partCols,
+      commitAppend(log, snapshot, adds, staged, tableSchema, partCols,
         configuration, txnAppId, txnVersion, operation)
-    } catch {
-      case t: Throwable =>
-        // rollback: delete everything we moved (reference rollback deletes
-        // orphaned files, delta_transaction.cpp:475-488)
-        moved.foreach(p => try fs.delete(p, false) catch { case _: Exception => () })
-        throw t
     }
   }
 
@@ -330,23 +322,11 @@ object DeltaWriter {
 
     val (toStage, stageSchema, stagePartCols, stageOpts) =
       toPhysical(spark, snap, enforced, partCols)
-    val moved = ArrayBuffer.empty[Path]
-    try {
-      val adds0 = writeFiles(spark, log, toStage, stageSchema, stagePartCols, moved, stageOpts)
+    ConflictChecker.staging(log) { staged =>
+      // overwritten data is NEW data: on row-tracked tables [[commit]]
+      // assigns fresh ids past the mark
+      val adds = writeFiles(spark, log, toStage, stageSchema, stagePartCols, staged, stageOpts)
       val now = System.currentTimeMillis()
-      // row tracking: overwritten data is NEW data — fresh ids past the
-      // mark. defaultRowCommitVersion must name the version the commit
-      // ACTUALLY lands at, so assignment is deferred into the rebase loop
-      // (a rebase over disjoint winners — SetTransaction-only,
-      // dataChange=false — moves the target version).
-      def assignAt(commitVersion: Long): (Seq[AddFile], Option[DomainMetadata]) =
-        if (!RowTracking.enabled(snap)) (adds0, None)
-        else {
-          val (as, _, dm) = RowTracking.assign(adds0,
-            RowTracking.highWaterMark(snap), commitVersion)
-          (as, dm)
-        }
-      val adds = assignAt(snap.version + 1)._1
       val (removeActs, upgradeActs) = replaceWhere match {
         case None if dynamicPartitions =>
           // dynamic mode: replace exactly the partitions the incoming data
@@ -364,34 +344,27 @@ object DeltaWriter {
           val hitRows = snap.relationDF(dropDeleted = false).where(cond)
             .select(col("_metadata.file_path").as("p"),
               col("_metadata.row_index").as("i"))
-          val (dvActs, _) = DeltaDelete.dvActions(log, snap, hitRows, moved)
+          val (dvActs, _) = DeltaDelete.dvActions(log, snap, hitRows, staged)
           (dvActs, DeltaDelete.protocolUpgradeActions(snap))
       }
       val op =
         if (dynamicPartitions) "OVERWRITE PARTITIONS"
         else if (replaceWhere.isDefined) "REPLACE WHERE" else "OVERWRITE"
-      def actionsAt(commitVersion: Long): Seq[Action] = {
-        val (addsV, rtDomain) = assignAt(commitVersion)
-        Seq(Action(CommitInfo(now, op, Map(
-          "filesAdded" -> addsV.size.toString,
-          "filesRemoved" -> removeActs.size.toString) ++
-          replaceWhere.map(p => "predicate" -> p.toString),
-          inCommitTimestamp = log.nextInCommitTimestamp(
-            snap.metadata.configuration, commitVersion)))) ++
+      ConflictChecker.commit(log, Some(snap), op,
         (if (identityMarks.nonEmpty)
            Seq(Action(snap.metadata.copy(schemaString =
              Identity.withMarks(snap.schema, identityMarks).json)))
-         else Nil) ++
-        rtDomain.map(Action(_)).toSeq ++
-        upgradeActs ++ removeActs ++ addsV.map(Action(_))
-      }
-      // full overwrite replaces EVERY live row its base snapshot listed —
-      // any concurrent data change invalidates the remove set; replaceWhere
-      // conflicts only with winners inside (or overlapping) the predicate
-      ConflictChecker.commitWithRebaseAt(log, snap,
-        v => actionsAt(v).map(ActionJson.toJson).mkString("", "\n", "\n"),
-        (removeActs.flatMap(_.remove) ++ upgradeActs.flatMap(_.remove)).map(_.path).toSet,
-        replaceWhere match {
+         else Nil) ++ upgradeActs ++ removeActs,
+        params = Map(
+          "filesAdded" -> adds.size.toString,
+          "filesRemoved" -> removeActs.size.toString) ++
+          replaceWhere.map(p => "predicate" -> p.toString),
+        adds = adds, staged = staged,
+        // full overwrite replaces EVERY live row its base snapshot listed —
+        // any concurrent data change invalidates the remove set;
+        // replaceWhere conflicts only with winners inside (or overlapping)
+        // the predicate
+        scope = replaceWhere match {
           // row-tracked/identity tables: the staged ids/marks were
           // computed against this snapshot, so ANY concurrent commit
           // (which may itself have assigned) must abort the rebase
@@ -399,10 +372,6 @@ object DeltaWriter {
             ConflictChecker.ReadScope.Predicate(ConflictChecker.resolve(snap, cond))
           case _ => ConflictChecker.ReadScope.WholeTable
         })
-    } catch {
-      case t: Throwable =>
-        moved.foreach(p => try log.fs.delete(p, false) catch { case _: Exception => () })
-        throw t
     }
   }
 
@@ -436,8 +405,9 @@ object DeltaWriter {
   /**
    * Stage `aligned` as parquet under the table root, collect per-file
    * stats distributed, enforce NOT NULL, move files into place, and
-   * return the (uncommitted) add actions. The caller commits; on failure
-   * it must delete the `moved` files.
+   * return the (uncommitted) add actions. The caller commits; `moved`
+   * is the buffer of a [[ConflictChecker.staging]] scope, which deletes
+   * the files again unless the commit lands.
    */
   private[delta] def shreddingEnabled(conf: Map[String, String]): Boolean =
     conf.get("delta.enableVariantShredding").exists(_.equalsIgnoreCase("true"))
@@ -879,12 +849,14 @@ object DeltaWriter {
 
   // -------------------------------------------------------------------------
 
-  /** Build + atomically write the commit JSON; retry blind appends on
-    * version conflict (up to 10 attempts). */
+  /** Build the append's actions against the latest snapshot and commit
+    * them, re-planning on a version conflict (up to 10 attempts): the
+    * idempotent skip, the schema and identity guards re-run each time. */
   private def commitAppend(
       log: DeltaLog,
       baseSnapshot: Option[Snapshot],
       adds: Seq[AddFile],
+      staged: ArrayBuffer[Path],
       schema: StructType,
       partCols: Seq[String],
       configuration: Map[String, String],
@@ -896,33 +868,11 @@ object DeltaWriter {
     var attempt = 0
     while (true) {
       attempt += 1
-      val version = snapshot.map(_.version + 1).getOrElse(0L)
-      // row tracking: assign baseRowId continuing from the CURRENT
-      // snapshot's mark (recomputed per retry — ids live only in the log,
-      // so a rebase just re-assigns; nothing in the data files changes)
-      val rtEnabled = snapshot.map(RowTracking.enabled)
-        .getOrElse(RowTracking.enabledAtCreate(configuration))
-      val (addsOut, rtDomain) =
-        if (!rtEnabled) (adds, None)
-        else {
-          val hwm = snapshot.map(RowTracking.highWaterMark).getOrElse(-1L)
-          val (as, _, dm) = RowTracking.assign(adds, hwm, version)
-          (as, dm)
-        }
       val actions = ArrayBuffer.empty[Action]
-      actions += Action(CommitInfo(System.currentTimeMillis(), operation,
-        Map("partitionBy" -> partCols.mkString(",")),
-        inCommitTimestamp = log.nextInCommitTimestamp(
-          snapshot.map(_.metadata.configuration).getOrElse(configuration),
-          version),
-        operationMetrics = Map(
-          "numFiles" -> addsOut.size.toString,
-          "numOutputRows" ->
-            addsOut.flatMap(_.parsedStats.flatMap(_.numRecords)).sum.toString,
-          "numOutputBytes" -> addsOut.map(_.size).sum.toString)))
       if (snapshot.isEmpty) {
         val createFeatures =
-          (if (rtEnabled) Seq("rowTracking", "domainMetadata") else Nil) ++
+          (if (RowTracking.enabledAtCreate(configuration))
+             Seq("rowTracking", "domainMetadata") else Nil) ++
             (if (hasDefaults(schema)) Seq("allowColumnDefaults") else Nil) ++
             // declare the feature so foreign writers that don't implement
             // identity assignment refuse instead of planting stale ids
@@ -984,28 +934,23 @@ object DeltaWriter {
       }
       for (app <- txnAppId; v <- txnVersion)
         actions += Action(SetTransaction(app, v, Some(System.currentTimeMillis())))
-      rtDomain.foreach(dm => actions += Action(dm))
-      addsOut.foreach(a => actions += Action(a))
-
-      val content = actions.map(ActionJson.toJson).mkString("", "\n", "\n")
       try {
-        LogStore.write(log.fs, log.commitFile(version), content)
-        log.invalidateCache()
-        log.maybeAutoCheckpoint(version, configuration ++
-          snapshot.map(_.metadata.configuration).getOrElse(Map.empty))
-        return version
+        return ConflictChecker.commit(log, snapshot, operation, actions.toSeq,
+          params = Map("partitionBy" -> partCols.mkString(",")),
+          metrics = Map(
+            "numFiles" -> adds.size.toString,
+            "numOutputRows" ->
+              adds.flatMap(_.parsedStats.flatMap(_.numRecords)).sum.toString,
+            "numOutputBytes" -> adds.map(_.size).sum.toString),
+          adds = adds, staged = staged, maxAttempts = 1)
       } catch {
         case _: CommitConflictException if attempt < 10 =>
-          log.invalidateCache()
           val latest = log.update()
-          // idempotent skip may now apply
+          // idempotent skip may now apply: another writer already performed
+          // this txn — return without committing (the staging scope drops
+          // our files)
           for (app <- txnAppId; v <- txnVersion;
                cur <- latest.setTransactions.get(app) if cur >= v) {
-            // another writer already performed this txn — drop our files
-            adds.foreach { a =>
-              try log.fs.delete(new Path(log.tablePath, a.decodedPath), false)
-              catch { case _: Exception => () }
-            }
             return latest.version
           }
           // Retry is safe only when the winner did NOT change the schema
@@ -1024,7 +969,7 @@ object DeltaWriter {
           // identity safety: our staged files hold ids computed against the
           // BASE snapshot's high-water mark — a concurrent commit that
           // advanced any mark makes those ids collide, so abort (the
-          // caller's rollback removes the staged files)
+          // staging scope removes the staged files)
           baseSnapshot.foreach { b =>
             require(Identity.hwmUnchanged(b.schema, latest.metadata.schema),
               s"Concurrent identity assignment on ${log.tablePath}: " +

@@ -1,7 +1,5 @@
 package graft.delta
 
-import scala.collection.mutable.ArrayBuffer
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
@@ -147,25 +145,20 @@ object Optimize {
         deletionVector = dv,
         modificationTime = now)
     }
-    val actions =
-      Seq(
-        Action(CommitInfo(now, "CLONE", Map(
-          "source" -> log.tablePath.toString,
-          "sourceVersion" -> snap.version.toString,
-          "filesAdded" -> adds.size.toString),
-          inCommitTimestamp =
-            if (DeltaLog.ictEnabled(snap.metadata.configuration)) Some(now)
-            else None)),
-        Action(snap.protocol),
+    tgtLog.fs.mkdirs(tgtLog.tablePath)
+    // the adds keep the source's row ids (the row-id domain is copied),
+    // so they ride as plain actions, not as fresh `adds`
+    ConflictChecker.commit(tgtLog, None, "CLONE",
+      Seq(Action(snap.protocol),
         Action(snap.metadata.copy(
           id = java.util.UUID.randomUUID.toString,
           createdTime = Some(now)))) ++
       snap.domainMetadata.map(Action(_)) ++
-      adds.map(Action(_))
-    tgtLog.fs.mkdirs(tgtLog.tablePath)
-    LogStore.write(tgtLog.fs, tgtLog.commitFile(0L),
-      actions.map(ActionJson.toJson).mkString("", "\n", "\n"))
-    tgtLog.invalidateCache()
+      adds.map(Action(_)),
+      params = Map(
+        "source" -> log.tablePath.toString,
+        "sourceVersion" -> snap.version.toString,
+        "filesAdded" -> adds.size.toString))
     Result(0L, 0, adds.size)
   }
 
@@ -219,28 +212,26 @@ object Optimize {
           s"exist (vacuumed?); first: ${vacuumed.head.decodedPath}")
 
     val now = System.currentTimeMillis()
-    val actions = ArrayBuffer.empty[Action]
-    actions += Action(CommitInfo(now, "RESTORE", Map(
-      "version" -> targetVersion.toString,
-      "filesAdded" -> toAdd.size.toString,
-      "filesRemoved" -> toRemove.size.toString),
-      inCommitTimestamp =
-        log.nextInCommitTimestamp(snap.metadata.configuration, snap.version + 1)))
-    if (snap.metadata.schemaString != target.metadata.schemaString ||
-        snap.metadata.configuration != target.metadata.configuration ||
-        snap.metadata.partitionColumns != target.metadata.partitionColumns)
-      actions += Action(target.metadata)
-    toRemove.foreach(f => actions += Action(RemoveFile(f.path, Some(now),
-      dataChange = true, f.deletionVector)))
-    toAdd.foreach(f => actions += Action(f.copy(dataChange = true,
-      modificationTime = now)))
-
+    val mdReset =
+      if (snap.metadata.schemaString != target.metadata.schemaString ||
+          snap.metadata.configuration != target.metadata.configuration ||
+          snap.metadata.partitionColumns != target.metadata.partitionColumns)
+        Seq(Action(target.metadata))
+      else Nil
     // restore reads the table state it diffs against: a concurrent commit
-    // is a conflict, not a retry
-    LogStore.write(log.fs, log.commitFile(snap.version + 1),
-      actions.map(ActionJson.toJson).mkString("", "\n", "\n"))
-    log.invalidateCache()
-    Result(snap.version + 1, toRemove.size, toAdd.size)
+    // is a conflict, not a retry. Re-added files keep their row ids, so
+    // they ride as plain actions, not as fresh `adds`.
+    val v = ConflictChecker.commit(log, Some(snap), "RESTORE",
+      mdReset ++
+        toRemove.map(f => Action(RemoveFile(f.path, Some(now),
+          dataChange = true, f.deletionVector))) ++
+        toAdd.map(f => Action(f.copy(dataChange = true, modificationTime = now))),
+      params = Map(
+        "version" -> targetVersion.toString,
+        "filesAdded" -> toAdd.size.toString,
+        "filesRemoved" -> toRemove.size.toString),
+      maxAttempts = 1)
+    Result(v, toRemove.size, toAdd.size)
   }
 
   /** Files selected by an `OPTIMIZE/ZORDER ... WHERE <partition predicate>`
@@ -331,8 +322,7 @@ object Optimize {
       if (partCols.nonEmpty) rows.repartition(numFiles, partCols.map(col): _*)
       else rows.repartition(numFiles)
 
-    val moved = ArrayBuffer.empty[Path]
-    try {
+    ConflictChecker.staging(log) { staged =>
       // column-mapped tables rewrite through the same physical-name staging
       // as append/DML (logical frame → physical names + field ids)
       val extraCols = matNames.toSeq.flatMap { case (mid, mver) =>
@@ -344,48 +334,29 @@ object Optimize {
       val (stage, stageSchema, stagePartCols, stageOpts) =
         DeltaWriter.toPhysical(spark, snap, repacked, partCols, extraCols)
       val adds = DeltaWriter.writeFiles(spark, log, stage, stageSchema,
-        stagePartCols, moved, stageOpts,
+        stagePartCols, staged, stageOpts,
             // post-mint config: the FIRST id-materializing rewrite must
             // already exempt the minted columns from stats
             configuration = mdAction.map(_.configuration)
               .getOrElse(snap.metadata.configuration))
-      def actionsAt(commitVersion: Long): Seq[Action] = {
-        // fresh baseRowId for the compacted files (ids are never reused;
-        // readers prefer the materialized per-row values)
-        val (addsV, rtDomain) =
-          if (!rtEnabled) (adds, None)
-          else {
-            val (as, _, dm) = RowTracking.assign(adds,
-              RowTracking.highWaterMark(snap), commitVersion)
-            (as, dm)
-          }
-        Seq(Action(CommitInfo(System.currentTimeMillis(), "OPTIMIZE",
-          Map("filesRemoved" -> toRewrite.size.toString,
-            "filesAdded" -> adds.size.toString),
-          inCommitTimestamp = log.nextInCommitTimestamp(
-            snap.metadata.configuration, commitVersion),
-          operationMetrics = Map(
-            "numRemovedFiles" -> toRewrite.size.toString,
-            "numAddedFiles" -> adds.size.toString,
-            "numRemovedBytes" -> toRewrite.map(_.size).sum.toString,
-            "numAddedBytes" -> adds.map(_.size).sum.toString)))) ++
+      // compacted files get fresh baseRowIds (ids are never reused;
+      // readers prefer the materialized per-row values). Compaction
+      // changes no rows: concurrent commits conflict only when they touch
+      // the exact files being rewritten (ConflictChecker)
+      val v = ConflictChecker.commit(log, Some(snap), "OPTIMIZE",
         mdAction.map(Action(_)).toSeq ++
-        rtDomain.map(Action(_)).toSeq ++
-        toRewrite.map(f => Action(RemoveFile(f.path,
-          Some(System.currentTimeMillis()), dataChange = false, f.deletionVector))) ++
-        addsV.map(a => Action(a.copy(dataChange = false)))
-      }
-      // compaction changes no rows: concurrent commits conflict only when
-      // they touch the exact files being rewritten (ConflictChecker)
-      val v = ConflictChecker.commitWithRebaseAt(log, snap,
-        cv => actionsAt(cv).map(ActionJson.toJson).mkString("", "\n", "\n"),
-        toRewrite.map(_.path).toSet,
-        ConflictChecker.ReadScope.FilesOnly)
+          toRewrite.map(f => Action(RemoveFile(f.path,
+            Some(System.currentTimeMillis()), dataChange = false, f.deletionVector))),
+        params = Map("filesRemoved" -> toRewrite.size.toString,
+          "filesAdded" -> adds.size.toString),
+        metrics = Map(
+          "numRemovedFiles" -> toRewrite.size.toString,
+          "numAddedFiles" -> adds.size.toString,
+          "numRemovedBytes" -> toRewrite.map(_.size).sum.toString,
+          "numAddedBytes" -> adds.map(_.size).sum.toString),
+        adds = adds.map(_.copy(dataChange = false)), staged = staged,
+        scope = ConflictChecker.ReadScope.FilesOnly)
       Result(v, toRewrite.size, adds.size)
-    } catch {
-      case t: Throwable =>
-        moved.foreach(p => try log.fs.delete(p, false) catch { case _: Exception => () })
-        throw t
     }
   }
 
@@ -469,8 +440,7 @@ object Optimize {
       .sortWithinPartitions((partCols.map(col) :+ col("__z")): _*)
       .drop("__z")
 
-    val moved = ArrayBuffer.empty[Path]
-    try {
+    ConflictChecker.staging(log) { staged =>
       val extraCols = matNames.toSeq.flatMap { case (mid, mver) =>
         Seq(org.apache.spark.sql.types.StructField(mid,
               org.apache.spark.sql.types.LongType, nullable = true),
@@ -479,43 +449,23 @@ object Optimize {
       }
       val (stage, stageSchema, stagePartCols, stageOpts) =
         DeltaWriter.toPhysical(spark, snap, repacked, partCols, extraCols)
-      val adds1 = DeltaWriter.writeFiles(spark, log, stage, stageSchema,
-        stagePartCols, moved, stageOpts,
+      val adds = DeltaWriter.writeFiles(spark, log, stage, stageSchema,
+        stagePartCols, staged, stageOpts,
             // post-mint config: the FIRST id-materializing rewrite must
             // already exempt the minted columns from stats
             configuration = mdAction.map(_.configuration)
               .getOrElse(snap.metadata.configuration))
-      val adds0 = clusteringProvider match {
-        case Some(p) => adds1.map(_.copy(clusteringProvider = Some(p)))
-        case None => adds1
-      }
-      val (adds, rtDomain) =
-        if (!rtEnabled) (adds0, None)
-        else {
-          val (as, _, dm) = RowTracking.assign(adds0,
-            RowTracking.highWaterMark(snap), snap.version + 1)
-          (as, dm)
-        }
-      val actions =
-        Seq(Action(CommitInfo(System.currentTimeMillis(), "OPTIMIZE",
-          Map("zorderBy" -> cols.mkString(","),
-            "filesRemoved" -> toRewrite.size.toString,
-            "filesAdded" -> adds.size.toString),
-          inCommitTimestamp = log.nextInCommitTimestamp(
-            snap.metadata.configuration, snap.version + 1)))) ++
+      val v = ConflictChecker.commit(log, Some(snap), "OPTIMIZE",
         mdAction.map(Action(_)).toSeq ++
-        rtDomain.map(Action(_)).toSeq ++
-        toRewrite.map(f => Action(RemoveFile(f.path,
-          Some(System.currentTimeMillis()), dataChange = false, f.deletionVector))) ++
-        adds.map(a => Action(a.copy(dataChange = false)))
-      LogStore.write(log.fs, log.commitFile(snap.version + 1),
-        actions.map(ActionJson.toJson).mkString("", "\n", "\n"))
-      log.invalidateCache()
-      Result(snap.version + 1, toRewrite.size, adds.size)
-    } catch {
-      case t: Throwable =>
-        moved.foreach(p => try log.fs.delete(p, false) catch { case _: Exception => () })
-        throw t
+          toRewrite.map(f => Action(RemoveFile(f.path,
+            Some(System.currentTimeMillis()), dataChange = false, f.deletionVector))),
+        params = Map("zorderBy" -> cols.mkString(","),
+          "filesRemoved" -> toRewrite.size.toString,
+          "filesAdded" -> adds.size.toString),
+        adds = adds.map(_.copy(dataChange = false,
+          clusteringProvider = clusteringProvider)),
+        staged = staged, maxAttempts = 1)
+      Result(v, toRewrite.size, adds.size)
     }
   }
 }

@@ -109,11 +109,9 @@ object RowTracking {
    * Assign `baseRowId` + `defaultRowCommitVersion` to `adds` continuing
    * from `hwm`, and produce the updated domain-metadata action. Files
    * without stats count as empty (our writer always stats real files).
-   * Returns (assigned adds, new mark, domain action) — or the input
-   * unchanged when nothing needed assigning.
    */
   def assign(adds: Seq[AddFile], hwm: Long, commitVersion: Long)
-      : (Seq[AddFile], Long, Option[DomainMetadata]) = {
+      : (Seq[AddFile], DomainMetadata) = {
     var next = hwm + 1
     val assigned = adds.map { a =>
       val n = a.parsedStats.flatMap(_.numRecords).getOrElse(0L)
@@ -122,9 +120,7 @@ object RowTracking {
       next += n
       out
     }
-    val newHwm = next - 1
-    val dm = DomainMetadata(DomainName,
-      s"""{"rowIdHighWaterMark":$newHwm}""", removed = false)
-    (assigned, newHwm, Some(dm))
+    (assigned, DomainMetadata(DomainName,
+      s"""{"rowIdHighWaterMark":${next - 1}}""", removed = false))
   }
 }

@@ -69,8 +69,16 @@ class ConcurrencySpec extends AnyFunSuite {
     (path, DeltaLog.forPath(spark, path))
   }
 
-  private def noopContent(op: String): String =
-    ActionJson.toJson(Action(CommitInfo(System.currentTimeMillis(), op))) + "\n"
+  /** Actions that touch the live file `path` without changing the table:
+    * a dataChange=false remove and re-add of it. */
+  private def touching(base: Snapshot, path: String): Seq[Action] = {
+    val live = base.allFiles.filter(_.path == path)
+    require(live.nonEmpty, s"$path is not live at version ${base.version}")
+    live.flatMap(f => Seq(
+      Action(RemoveFile(f.path, Some(System.currentTimeMillis()),
+        dataChange = false, f.deletionVector)),
+      Action(f.copy(dataChange = false))))
+  }
 
   test("ConflictChecker prunes a column-mapped table's winners by physical stats") {
     // fresh copy of the mapped fixture: the predicate resolves under
@@ -87,15 +95,15 @@ class ConcurrencySpec extends AnyFunSuite {
     // disjoint winner → rebase
     DeltaWriter.append(spark,
       rows.limit(3).withColumn("n_nationkey", col("n_nationkey") + 1000), path)
-    val v = ConflictChecker.commitWithRebase(log, base, noopContent("DELETE"),
-      Set.empty, ConflictChecker.ReadScope.Predicate(pred))
+    val v = ConflictChecker.commit(log, Some(base), "DELETE", Nil,
+      scope = ConflictChecker.ReadScope.Predicate(pred))
     assert(v == base.version + 2, s"expected rebase past the winner, got $v")
     // winner inside the predicate range → conflict
     val base2 = log.update()
     DeltaWriter.append(spark, rows.where(col("n_nationkey") < 2), path)
     val e = intercept[CommitConflictException] {
-      ConflictChecker.commitWithRebase(log, base2, noopContent("DELETE"),
-        Set.empty, ConflictChecker.ReadScope.Predicate(pred))
+      ConflictChecker.commit(log, Some(base2), "DELETE", Nil,
+        scope = ConflictChecker.ReadScope.Predicate(pred))
     }
     assert(e.getMessage.contains("may match"))
   }
@@ -115,8 +123,8 @@ class ConcurrencySpec extends AnyFunSuite {
     // disjointness → rebase lands it at v3
     val pred = ConflictChecker.resolve(base, col("s_suppkey") < 5)
     assert(pred.isDefined, "predicate resolution failed")
-    val v = ConflictChecker.commitWithRebase(log, base, noopContent("DELETE"),
-      Set(fileA), ConflictChecker.ReadScope.Predicate(pred))
+    val v = ConflictChecker.commit(log, Some(base), "DELETE", touching(base, fileA),
+      scope = ConflictChecker.ReadScope.Predicate(pred))
     assert(v == base.version + 2, s"expected rebase past the winner, got $v")
 
     // winner INSIDE the predicate range → conflict
@@ -124,8 +132,8 @@ class ConcurrencySpec extends AnyFunSuite {
     DeltaWriter.append(spark,
       src.limit(5).withColumn("s_suppkey", col("s_suppkey") % 5), path)
     val e = intercept[CommitConflictException] {
-      ConflictChecker.commitWithRebase(log, base2, noopContent("DELETE"),
-        Set(fileA), ConflictChecker.ReadScope.Predicate(pred))
+      ConflictChecker.commit(log, Some(base2), "DELETE", touching(base2, fileA),
+        scope = ConflictChecker.ReadScope.Predicate(pred))
     }
     assert(e.getMessage.contains("may match"))
 
@@ -134,24 +142,24 @@ class ConcurrencySpec extends AnyFunSuite {
     DeltaWriter.append(spark,
       src.limit(5).withColumn("s_suppkey", col("s_suppkey") + 90000), path)
     intercept[CommitConflictException] {
-      ConflictChecker.commitWithRebase(log, base3, noopContent("MERGE"),
-        Set(fileA), ConflictChecker.ReadScope.WholeTable)
+      ConflictChecker.commit(log, Some(base3), "MERGE", touching(base3, fileA),
+        scope = ConflictChecker.ReadScope.WholeTable)
     }
 
     // files-only scope (compaction): the same winner rebases fine...
     val base4 = log.update()
     DeltaWriter.append(spark,
       src.limit(5).withColumn("s_suppkey", col("s_suppkey") + 95000), path)
-    val v4 = ConflictChecker.commitWithRebase(log, base4, noopContent("OPTIMIZE"),
-      Set(fileA), ConflictChecker.ReadScope.FilesOnly)
+    val v4 = ConflictChecker.commit(log, Some(base4), "OPTIMIZE", touching(base4, fileA),
+      scope = ConflictChecker.ReadScope.FilesOnly)
     assert(v4 == log.update().version)
 
     // ...but a winner that REMOVED a touched file is always fatal
     val base5 = log.update()
     DeltaTable.forPath(spark, path).delete(col("s_suppkey") === 1) // DVs fileA
     val e5 = intercept[CommitConflictException] {
-      ConflictChecker.commitWithRebase(log, base5, noopContent("OPTIMIZE"),
-        Set(fileA), ConflictChecker.ReadScope.FilesOnly)
+      ConflictChecker.commit(log, Some(base5), "OPTIMIZE", touching(base5, fileA),
+        scope = ConflictChecker.ReadScope.FilesOnly)
     }
     assert(e5.getMessage.contains("removed file"))
   }

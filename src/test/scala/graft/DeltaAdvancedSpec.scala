@@ -497,11 +497,9 @@ class DeltaAdvancedSpec extends AnyFunSuite {
     // a commit staged against the STALE snapshot must CONFLICT on the
     // domain-metadata winner (rebasing over it would regress the mark) —
     // driven at the ConflictChecker level, where the race is controllable
-    val staleContent = Seq(Action(CommitInfo(System.currentTimeMillis(), "UPDATE")))
-      .map(ActionJson.toJson).mkString("", "\n", "\n")
     val e = intercept[Exception] {
-      ConflictChecker.commitWithRebase(log, snap, staleContent,
-        Set.empty, ConflictChecker.ReadScope.FilesOnly)
+      ConflictChecker.commit(log, Some(snap), "UPDATE", Nil,
+        scope = ConflictChecker.ReadScope.FilesOnly)
     }
     assert(e.getMessage.contains("domain metadata"), e.getMessage)
     // the mark from the winner is intact

@@ -89,9 +89,9 @@ object Checkpoints {
   def cleanUpExpiredLogs(log: DeltaLog, config: Map[String, String],
       nowMs: Long = System.currentTimeMillis()): Int = {
     val fs = log.fs
-    val checkpoints = log.listCheckpointVersions()
-    if (checkpoints.isEmpty) return 0
-    val cp = checkpoints.max
+    val listing = log.listing()
+    if (listing.checkpoints.isEmpty) return 0
+    val cp = listing.checkpoints.lastKey
     val cutoff = nowMs - parseRetentionMs(config.get("delta.logRetentionDuration"))
     var deleted = 0
     // Prefix-safe: delete only a CONTIGUOUS run of expired commits from the
@@ -99,7 +99,7 @@ object Checkpoints {
     // copies); deleting a mid-range commit while an older one survives
     // would leave a gap that a later replay could silently read through
     // (delta-spark's BufferingLogDeletionIterator solves the same hazard).
-    val candidates = log.listCommitVersions().sorted.takeWhile(_ < cp)
+    val candidates = listing.commits.takeWhile(_ < cp)
     val expiredPrefix = candidates.takeWhile { v =>
       val f = log.commitFile(v)
       fs.exists(f) && fs.getFileStatus(f).getModificationTime < cutoff
@@ -108,13 +108,8 @@ object Checkpoints {
       if (fs.delete(log.commitFile(v), false)) deleted += 1
     }
     // classic checkpoints below the latest one are superseded the same way
-    checkpoints.filter(_ < cp).foreach { v =>
-      val classic = try log.checkpointFiles(v) catch { case _: Exception => Nil }
-      classic.foreach { f =>
-        if (fs.exists(f) && fs.getFileStatus(f).getModificationTime < cutoff) {
-          if (fs.delete(f, false)) deleted += 1
-        }
-      }
+    listing.checkpoints.rangeUntil(cp).values.flatMap(_.parts).foreach { f =>
+      if (f.getModificationTime < cutoff && fs.delete(f.getPath, false)) deleted += 1
     }
     // V2 (uuid-manifest) checkpoints: expired manifests below the latest
     // checkpoint are superseded; after dropping them, reclaim `_sidecars`
@@ -123,7 +118,7 @@ object Checkpoints {
     // shields an IN-FLIGHT attempt's sidecars (renamed into place before
     // their manifest exists) and fresh crash orphans; long-expired orphans
     // from crashed attempts are reclaimed here, by design.
-    val manifests = log.listUuidManifests()
+    val manifests = listing.manifests
     manifests.filter(_._1 < cp).foreach { case (_, m) =>
       if (fs.exists(m) && fs.getFileStatus(m).getModificationTime < cutoff &&
           fs.delete(m, false)) deleted += 1

@@ -3,7 +3,7 @@ package graft.delta
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.catalyst.expressions.{Expression, Predicate}
-import org.apache.spark.sql.functions.{col, lit, sum}
+import org.apache.spark.sql.functions.{col, sum}
 
 /**
  * Checkpoint-backed snapshot for VERY large tables (10⁶-10⁷ add actions —
@@ -13,9 +13,9 @@ import org.apache.spark.sql.functions.{col, lit, sum}
  * predicate to executors and collects only the surviving AddFiles — the
  * driver's memory is O(#matching files), not O(#table files).
  *
- * The small post-checkpoint JSON tail is reconciled driver-side exactly
- * like the eager path: a tail add SHADOWS the checkpoint entry for its
- * path, a tail remove deletes it.
+ * The small post-checkpoint JSON tail is reconciled driver-side by the
+ * same [[LogReplay]] as the eager path: a tail add SHADOWS the checkpoint
+ * entry for its path, a tail remove deletes it.
  *
  * Maintenance operations (OPTIMIZE, VACUUM, listFiles, DV registry) still
  * use [[allFiles]], which materializes lazily — they are O(#files) by
@@ -32,95 +32,29 @@ private[graft] class LazySnapshot(
     version: Long,
     protocol: Protocol,
     metadata: Metadata,
-    checkpointPaths: Seq[Path],
-    tailAdds: Seq[AddFile],
-    tailRemovedPaths: Set[String],
+    private[delta] val checkpointPaths: Seq[Path],
+    private[delta] val tailAdds: Seq[AddFile],
+    /** Paths a post-checkpoint add or remove touched: their checkpoint
+      * entries are dead. */
+    private[delta] val shadowed: Set[String],
     setTransactions: Map[String, Long],
     domainMetadata: Seq[DomainMetadata],
-    tailRemoves: Seq[RemoveFile] = Nil)
+    tombstones: Seq[RemoveFile])
   extends Snapshot(log, version, protocol, metadata, Nil,
-    setTransactions, domainMetadata, tailRemoves) {
+    setTransactions, domainMetadata, tombstones) {
 
   @transient private lazy val addEncoder = Encoders.product[AddFile]
 
-  /** This lazy snapshot with extra commits folded on top (in order) — the
-    * `log_tail` read path for checkpoint-backed tables. Keeps the file
-    * list in the checkpoint Dataset: only the (small) extra-tail file
-    * actions reconcile driver-side, exactly like the JSON tail at build
-    * time. A `LogReplay.fromSnapshot` here would instead call [[allFiles]]
-    * and materialize 10⁶+ adds on the driver — the exact scenario
-    * `log_tail` exists for (catalog-served commits on large tables). */
-  private[delta] def withExtraTail(newVersion: Long,
-      commits: Seq[Seq[Action]]): LazySnapshot = {
-    import scala.collection.mutable
-    val replay = new LogReplay
-    replay.protocol = protocol
-    replay.metadata = metadata
-    replay.txns ++= setTransactions
-    domainMetadata.foreach(d => replay.domains.put(d.domain, d))
-    val adds = new mutable.LinkedHashMap[String, AddFile]
-    tailAdds.foreach(f => adds.put(f.decodedPath, f))
-    val shadowed = mutable.Set.empty[String] ++ tailRemovedPaths
-    val removes = new mutable.LinkedHashMap[String, RemoveFile]
-    tombstones.foreach(r => removes.put(r.decodedPath, r))
-    commits.flatten.foreach { a =>
-      a.add.foreach { f =>
-        adds.put(f.decodedPath, f); shadowed += f.decodedPath
-        removes.remove(f.decodedPath) // re-add resurrects
-      }
-      a.remove.foreach { r =>
-        adds.remove(r.decodedPath); shadowed += r.decodedPath
-        removes.put(r.decodedPath, r)
-      }
-      replay.apply(a.copy(add = None, remove = None))
-    }
-    ProtocolGate.validate(replay.protocol, log.tablePath.toString)
-    new LazySnapshot(log, newVersion, replay.protocol, replay.metadata,
-      checkpointPaths, adds.values.toSeq, shadowed.toSet,
-      replay.txns.toMap, replay.domains.values.toVector,
-      removes.values.toVector)
-  }
-
-  /** Typed adds Dataset: checkpoint adds (columns aligned to the AddFile
-    * encoder, absent optionals null-filled) minus tail-shadowed paths,
-    * plus the tail's own adds. */
+  /** Typed adds Dataset: checkpoint adds (decoded like the eager path's
+    * checkpoint actions) minus shadowed paths, plus the tail's own adds. */
   @transient private[graft] lazy val addsDataset: Dataset[AddFile] = {
     val spark = log.spark
-    val df0 = spark.read.parquet(checkpointPaths.map(_.toString): _*)
-      .where(col("add").isNotNull).select("add.*")
-    // foreign struct-form stats (writeStatsAsStruct, JSON form absent):
-    // render back to the JSON string so file skipping keeps pruning —
-    // same restoration DeltaLog.restoreParsedStructs does on the eager path
-    val df1 =
-      if (!df0.columns.contains("stats_parsed")) df0
-      else {
-        val rendered = org.apache.spark.sql.functions.to_json(col("stats_parsed"))
-        if (df0.columns.contains("stats"))
-          df0.withColumn("stats", org.apache.spark.sql.functions.coalesce(col("stats"), rendered))
-        else df0.withColumn("stats", rendered)
-      }
-    // ... and the partitionValues_parsed struct form likewise (a foreign
-    // struct-stats checkpoint may carry partition values ONLY as the typed
-    // struct; null-filling them would break constant injection + pruning)
-    val df =
-      if (!df1.columns.contains("partitionValues_parsed")) df1
-      else {
-        import org.apache.spark.sql.functions.{coalesce, from_json, to_json}
-        import org.apache.spark.sql.types.{MapType, StringType}
-        val rendered = from_json(
-          to_json(col("partitionValues_parsed"), Map("ignoreNullFields" -> "false")),
-          MapType(StringType, StringType))
-        if (df1.columns.contains("partitionValues"))
-          df1.withColumn("partitionValues", coalesce(col("partitionValues"), rendered))
-        else df1.withColumn("partitionValues", rendered)
-      }
-    val aligned = df.select(addEncoder.schema.fields.toIndexedSeq.map { f =>
-      if (df.columns.contains(f.name)) col(f.name)
-      else lit(null).cast(f.dataType).as(f.name)
-    }: _*)
-    val removed = tailRemovedPaths // small; serialized into the closure
-    val base = aligned.as[AddFile](addEncoder)
-      .filter((f: AddFile) => !removed.contains(f.decodedPath))
+    val dead = shadowed // small; serialized into the closure
+    val base = DeltaLog.actionFrame(spark.read.parquet(checkpointPaths.map(_.toString): _*))
+      .where(col("add").isNotNull)
+      .select(addEncoder.schema.fieldNames.toIndexedSeq.map(n => col(s"add.`$n`")): _*)
+      .as[AddFile](addEncoder)
+      .filter((f: AddFile) => !dead.contains(f.decodedPath))
     if (tailAdds.isEmpty) base
     else base.union(spark.createDataset(tailAdds)(addEncoder))
   }

@@ -58,9 +58,10 @@ class Snapshot(
       * a remove). Carried so checkpoints retain them within
       * `delta.deletedFileRetentionDuration` — foreign engines (and VACUUM)
       * must still see recent deletions once older commit JSONs are cleaned
-      * up, per protocol. [[LazySnapshot]] carries its JSON-tail removes
-      * plus the base checkpoint's UNexpired tombstones (bounded by the
-      * retention window), so its next checkpoint keeps the contract too. */
+      * up, per protocol. [[LazySnapshot]] carries the base checkpoint's
+      * tombstones plus its JSON-tail removes, like the eager replay; the
+      * retention filter applies when a checkpoint is written
+      * ([[Checkpoints.liveTombstones]]). */
     val tombstones: Seq[RemoveFile] = Nil) {
 
   /** Full reconciled file list. [[LazySnapshot]] (checkpoint-backed, 10⁶+

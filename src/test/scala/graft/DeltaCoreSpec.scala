@@ -20,6 +20,22 @@ object TestSpark {
     s
   }
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Thresholds that make every checkpoint-backed snapshot eager (an
+    * in-memory file list) or lazy (adds kept in the checkpoint parquet). */
+  val snapshotPaths: Seq[(String, Long)] = Seq("eager" -> Long.MaxValue, "lazy" -> 1L)
+
+  /** Run `body` with `spark.graft.lazySnapshot.minActions` set, on fresh
+    * DeltaLog handles; always restore (the shared session outlives it). */
+  def withLazyThreshold[A](minActions: Long)(body: => A): A = {
+    DeltaLog.clearCache()
+    spark.conf.set("spark.graft.lazySnapshot.minActions", minActions.toString)
+    try body
+    finally {
+      spark.conf.unset("spark.graft.lazySnapshot.minActions")
+      DeltaLog.clearCache()
+    }
+  }
 }
 
 class DeltaCoreSpec extends AnyFunSuite {
@@ -237,61 +253,65 @@ class DeltaCoreSpec extends AnyFunSuite {
   }
 
   test("gapped log fails loudly instead of replaying through the hole") {
-    val src = Fixtures.readParquet(spark, sfDir, "nation")
-    val path = tmpTable()
-    DeltaWriter.append(spark, src.limit(5), path)                       // v0
-    DeltaWriter.append(spark, src.limit(3), path)                       // v1
-    // v2 re-emits metaData — exactly the shape that let a gapped replay
-    // "succeed" silently before the contiguity guard
-    Alter.setProperties(spark, DeltaLog.forPath(spark, path), Map("foo.bar" -> "1")) // v2
-    DeltaWriter.append(spark, src.limit(2), path)                       // v3
-    assert(new java.io.File(path, "_delta_log/00000000000000000001.json").delete())
-    DeltaLog.clearCache()
-    val e = intercept[IllegalStateException] {
-      DeltaTable.forPath(spark, path).toDF.count()
+    for ((_, minActions) <- snapshotPaths) withLazyThreshold(minActions) {
+      val src = Fixtures.readParquet(spark, sfDir, "nation")
+      val path = tmpTable()
+      DeltaWriter.append(spark, src.limit(5), path)                       // v0
+      DeltaWriter.append(spark, src.limit(3), path)                       // v1
+      // v2 re-emits metaData — exactly the shape that let a gapped replay
+      // "succeed" silently before the contiguity guard
+      Alter.setProperties(spark, DeltaLog.forPath(spark, path), Map("foo.bar" -> "1")) // v2
+      DeltaWriter.append(spark, src.limit(2), path)                       // v3
+      assert(new java.io.File(path, "_delta_log/00000000000000000001.json").delete())
+      DeltaLog.clearCache()
+      val e = intercept[IllegalStateException] {
+        DeltaTable.forPath(spark, path).toDF.count()
+      }
+      assert(e.getMessage.contains("missing"), e.getMessage)
     }
-    assert(e.getMessage.contains("missing"), e.getMessage)
   }
 
   test("crashed re-checkpoint: mixed multi-part set without pointer is ignored") {
-    val src = Fixtures.readParquet(spark, sfDir, "orders")
-    val path = tmpTable()
-    DeltaWriter.append(spark, src.filter(col("o_orderkey") % 2 === 0).repartition(5), path)
-    DeltaWriter.append(spark, src.filter(col("o_orderkey") % 2 === 1).repartition(5), path)
-    val log = DeltaLog.forPath(spark, path)
-    Checkpoints.checkpoint(log, maxActionsPerPart = 4)
-    // Simulate a crash mid-way through a same-part-count re-checkpoint: the
-    // writer has retracted `_last_checkpoint` and renamed SOME new parts in
-    // (part 2 ends up holding part 1's rows — possibly dropping/duplicating
-    // the metaData or add actions). The set is complete BY NAME (same `of`),
-    // so only the retracted pointer distinguishes it from a good checkpoint.
-    val parts = new java.io.File(path, "_delta_log").listFiles()
-      .filter(_.getName.matches(raw"\d{20}\.checkpoint\.\d{10}\.\d{10}\.parquet"))
-      .sortBy(_.getName)
-    assert(parts.length >= 3)
-    java.nio.file.Files.copy(parts(0).toPath, parts(1).toPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    // keep Hadoop LocalFileSystem's checksum sidecar consistent with the copy
-    def crc(f: java.io.File) = new java.io.File(f.getParent, "." + f.getName + ".crc")
-    if (crc(parts(0)).exists())
-      java.nio.file.Files.copy(crc(parts(0)).toPath, crc(parts(1)).toPath,
+    for ((_, minActions) <- snapshotPaths) withLazyThreshold(minActions) {
+      val src = Fixtures.readParquet(spark, sfDir, "orders")
+      val path = tmpTable()
+      DeltaWriter.append(spark, src.filter(col("o_orderkey") % 2 === 0).repartition(5), path)
+      DeltaWriter.append(spark, src.filter(col("o_orderkey") % 2 === 1).repartition(5), path)
+      val log = DeltaLog.forPath(spark, path)
+      Checkpoints.checkpoint(log, maxActionsPerPart = 4)
+      // Simulate a crash mid-way through a same-part-count re-checkpoint: the
+      // writer has retracted `_last_checkpoint` and renamed SOME new parts in
+      // (part 2 ends up holding part 1's rows — possibly dropping/duplicating
+      // the metaData or add actions). The set is complete BY NAME (same `of`),
+      // so only the retracted pointer distinguishes it from a good checkpoint.
+      val parts = new java.io.File(path, "_delta_log").listFiles()
+        .filter(_.getName.matches(raw"\d{20}\.checkpoint\.\d{10}\.\d{10}\.parquet"))
+        .sortBy(_.getName)
+      assert(parts.length >= 3)
+      java.nio.file.Files.copy(parts(0).toPath, parts(1).toPath,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    val logDir = new java.io.File(path, "_delta_log")
-    new java.io.File(logDir, "_last_checkpoint").delete()
-    new java.io.File(logDir, "._last_checkpoint.crc").delete()
-    DeltaLog.clearCache()
-    // the mixed multi-part set must be ignored (WARN + JSON replay), not
-    // silently accepted with lost/duplicated actions
-    val t = DeltaTable.forPath(spark, path)
-    assert(t.toDF.count() == src.count())
+      // keep Hadoop LocalFileSystem's checksum sidecar consistent with the copy
+      def crc(f: java.io.File) = new java.io.File(f.getParent, "." + f.getName + ".crc")
+      if (crc(parts(0)).exists())
+        java.nio.file.Files.copy(crc(parts(0)).toPath, crc(parts(1)).toPath,
+          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      val logDir = new java.io.File(path, "_delta_log")
+      new java.io.File(logDir, "_last_checkpoint").delete()
+      new java.io.File(logDir, "._last_checkpoint.crc").delete()
+      DeltaLog.clearCache()
+      // the mixed multi-part set must be ignored (WARN + JSON replay), not
+      // silently accepted with lost/duplicated actions
+      val t = DeltaTable.forPath(spark, path)
+      assert(t.toDF.count() == src.count())
 
-    // and a completed re-checkpoint (pointer present, counts consistent)
-    // is used again: drop v0's commit json and re-read from the checkpoint
-    Checkpoints.checkpoint(DeltaLog.forPath(spark, path), maxActionsPerPart = 4)
-    DeltaLog.clearCache()
-    new java.io.File(logDir, "00000000000000000000.json").delete()
-    new java.io.File(logDir, ".00000000000000000000.json.crc").delete()
-    assert(DeltaTable.forPath(spark, path).toDF.count() == src.count())
+      // and a completed re-checkpoint (pointer present, counts consistent)
+      // is used again: drop v0's commit json and re-read from the checkpoint
+      Checkpoints.checkpoint(DeltaLog.forPath(spark, path), maxActionsPerPart = 4)
+      DeltaLog.clearCache()
+      new java.io.File(logDir, "00000000000000000000.json").delete()
+      new java.io.File(logDir, ".00000000000000000000.json.crc").delete()
+      assert(DeltaTable.forPath(spark, path).toDF.count() == src.count())
+    }
   }
 
   test("protocol gating: unsupported reader feature fails loudly on read") {

@@ -1,0 +1,156 @@
+package graft.delta
+
+import java.nio.file.{Files, Paths}
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.functions.col
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.{CountingFileSystem, TestSpark}
+
+/** Snapshot resolution: one `_delta_log` listing per resolve, the eager and
+  * the checkpoint-backed (lazy) snapshot agree on all table state, a log
+  * tail extends a checkpoint-only log, and a long-lived reader's version
+  * cache stays bounded. */
+class SnapshotResolveSpec extends AnyFunSuite {
+  import TestSpark._
+
+  private def tmpTable(): String = Files.createTempDirectory("graft-resolve").toString + "/t"
+
+  private def rows(lo: Long, hi: Long) =
+    spark.range(lo, hi).select(col("id"), (col("id") % 2).as("p")).coalesce(1)
+
+  test("one _delta_log listing per resolve: cold, poll after a commit, no change") {
+    CountingFileSystem.register(spark)
+    for ((name, minActions) <- snapshotPaths) withLazyThreshold(minActions) {
+      val path = tmpTable()
+      DeltaWriter.append(spark, rows(0, 10), path)
+      DeltaWriter.append(spark, rows(10, 20), path)
+      Checkpoints.checkpoint(DeltaLog.forPath(spark, path))
+      val reader = DeltaLog.forPath(spark, s"${CountingFileSystem.Scheme}://$path")
+      def listings(resolve: => Snapshot): (Snapshot, Int) = {
+        CountingFileSystem.calls.clear()
+        val snap = resolve
+        (snap, CountingFileSystem.count("listStatus", "_delta_log"))
+      }
+      val (cold, c1) = listings(reader.update())
+      assert(cold.isInstanceOf[LazySnapshot] == (name == "lazy"), name)
+      DeltaWriter.append(spark, rows(20, 30), path)
+      val (polled, c2) = listings(reader.update())
+      assert(polled.version == cold.version + 1)
+      val (same, c3) = listings(reader.update())
+      assert(same eq polled)
+      assert((c1, c2, c3) == (1, 1, 1),
+        s"$name: _delta_log listings cold/poll/no-change = $c1/$c2/$c3")
+      assert(reader.update().toDF.count() == 30)
+    }
+  }
+
+  /** All table state a snapshot carries, keyed so the two paths compare
+    * regardless of file-list order. */
+  private def state(s: Snapshot) = (
+    s.version,
+    s.allFiles.map(f => f.path -> f).toMap,
+    Checkpoints.liveTombstones(s).map(r => r.path -> r).toMap,
+    s.setTransactions,
+    s.domainMetadata.map(d => d.domain -> d).toMap,
+    s.protocol,
+    s.metadata)
+
+  test("eager and checkpoint-backed snapshots agree at every version") {
+    val path = tmpTable()
+    val table = DeltaTable.forPath(spark, path)
+    def log = DeltaLog.forPath(spark, path)
+    /** Compares the two paths at `v`; `lazyExpected` pins which path the
+      * lazy threshold actually takes there. */
+    def compare(v: Long, lazyExpected: Boolean): Unit = {
+      val Seq(eager, lzy) = snapshotPaths.map { case (_, minActions) =>
+        withLazyThreshold(minActions)(DeltaLog.forPath(spark, path).snapshotAt(v))
+      }
+      assert(!eager.isInstanceOf[LazySnapshot], s"v$v")
+      assert(lzy.isInstanceOf[LazySnapshot] == lazyExpected, s"v$v")
+      assert(state(lzy) == state(eager), s"v$v")
+    }
+    // every commit below lands at the next version; the table's own
+    // checkpoints are the two explicit ones
+    val steps: Seq[(String, () => Unit)] = Seq(
+      "append, struct-stats config" -> (() => DeltaWriter.append(spark, rows(0, 20), path,
+        partitionBy = Seq("p"),
+        configuration = Map("delta.checkpoint.writeStatsAsStruct" -> "true"))),
+      "append with txn" -> (() => DeltaWriter.append(spark, rows(20, 40), path,
+        txnAppId = Some("app"), txnVersion = Some(1L))),
+      "DV delete (DV re-add)" -> (() => table.delete(col("id") % 5 === 0)),
+      "set domain" -> (() => table.setDomainMetadata("d1", "{}")),
+      "remove domain" -> (() => table.setDomainMetadata("d1", "{}", removed = true)),
+      "remove a file" -> (() => {
+        val f = log.update().allFiles.minBy(_.path)
+        ConflictChecker.commit(log, Some(log.update()), "MANUAL REMOVE", Seq(Action(
+          RemoveFile(f.path, Some(System.currentTimeMillis()), deletionVector = f.deletionVector))))
+      }),
+      "re-add the same path" -> (() => {
+        val gone = log.update().tombstones.maxBy(_.deletionTimestamp)
+        val f = log.snapshotAt(log.update().version - 1).allFiles.find(_.path == gone.path).get
+        ConflictChecker.commit(log, Some(log.update()), "MANUAL ADD", Seq(Action(f)))
+      }),
+      "DV delete on a DV file" -> (() => table.delete(col("id") % 7 === 0)),
+      "append" -> (() => DeltaWriter.append(spark, rows(40, 50), path)))
+    steps.zipWithIndex.foreach { case ((what, step), v) =>
+      step()
+      assert(log.update().version == v, what)
+      if (v == 1) Checkpoints.checkpoint(log) // single part, struct stats
+      if (v == 6) Checkpoints.checkpoint(log, maxActionsPerPart = 2) // multi-part
+      // the tip at each version, while _last_checkpoint names the newest
+      // checkpoint below it: the lazy threshold takes the lazy path
+      if (v >= 1) compare(v, lazyExpected = true)
+    }
+    assert(Files.list(Paths.get(path, "_delta_log"))
+      .filter(_.getFileName.toString.matches(raw"0+6\.checkpoint\.\d+\.\d+\.parquet")).count() > 1)
+    // every version of the finished log: below v6 the only checkpoint is
+    // one the pointer no longer names, so both thresholds replay eagerly
+    (0L to 8L).foreach(v => compare(v, lazyExpected = v >= 6))
+
+    // a log tail over either path: v8 served from outside the log
+    val c8 = Paths.get(path, "_delta_log", f"${8L}%020d.json")
+    val tail = Files.createTempDirectory("graft-resolve-tail").resolve(c8.getFileName)
+    Files.move(c8, tail)
+    val Seq(eager, lzy) = snapshotPaths.map { case (_, minActions) =>
+      withLazyThreshold(minActions)(
+        DeltaLog.forPath(spark, path).snapshotWithLogTail(Seq(new Path(tail.toString))))
+    }
+    assert(lzy.isInstanceOf[LazySnapshot] && !eager.isInstanceOf[LazySnapshot])
+    assert(state(lzy) == state(eager))
+    assert(eager.version == 8)
+    assert(lzy.toDF.count() == eager.toDF.count())
+  }
+
+  test("a log tail extends a log whose commits the checkpoint covers are gone") {
+    val path = tmpTable()
+    (0L until 3L).foreach(i => DeltaWriter.append(spark, rows(i, i + 1), path)) // v0..v2
+    Checkpoints.checkpoint(DeltaLog.forPath(spark, path))                      // cp@v2
+    DeltaWriter.append(spark, rows(3, 4), path)                                // v3
+    val logDir = Paths.get(path, "_delta_log")
+    val tail = Files.createTempDirectory("graft-resolve-tail").resolve(f"${3L}%020d.json")
+    Files.move(logDir.resolve(tail.getFileName.toString), tail)
+    (0L to 2L).foreach(v => Files.delete(logDir.resolve(f"$v%020d.json")))
+    DeltaLog.clearCache()
+    val log = DeltaLog.forPath(spark, path)
+    assert(log.update().version == 2)
+    val snap = log.snapshotWithLogTail(Seq(new Path(tail.toString)))
+    assert(snap.version == 3)
+    assert(snap.toDF.count() == 4)
+  }
+
+  test("a reader polling a table written elsewhere keeps one cached snapshot") {
+    val path = tmpTable()
+    DeltaWriter.append(spark, rows(0, 1), path)
+    val reader = DeltaLog.forPath(spark.newSession(), path)
+    assert(reader.update().version == 0)
+    (1L to 20L).foreach { v =>
+      DeltaWriter.append(spark, rows(v, v + 1), path)
+      assert(reader.update().version == v)
+    }
+    assert(reader.versionCache.size <= 1,
+      s"version cache holds ${reader.versionCache.size} snapshots after 20 polls")
+    assert(reader.snapshotAt(20L) eq reader.update())
+  }
+}

@@ -1,7 +1,7 @@
 package graft.delta
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.functions._
@@ -318,7 +318,10 @@ object DeltaDelete {
           case None => fresh
         }
         val newly = merged.cardinality - existing.map(_.cardinality).getOrElse(0L)
-        if (af.parsedStats.flatMap(_.numRecords).contains(merged.cardinality)) {
+        // every hit was deleted already: the file is unchanged, and a
+        // remove + re-add of it would be a data change with no changed row
+        if (newly == 0) ()
+        else if (af.parsedStats.flatMap(_.numRecords).contains(merged.cardinality)) {
           // fully deleted → plain remove, no DV to write
           out += DvBuildResult(af, fullyDeleted = true, newly,
             None, None, None, None, None, None)
@@ -404,6 +407,63 @@ object DeltaDelete {
   }
 
   /**
+   * The tail DELETE, UPDATE and MERGE share, in one staging scope: write
+   * the new row images `rows` (logical columns, plus the materialized
+   * row-id column `ids` names on a row-tracked table) through the checks
+   * appends run, soft-delete the `hits` (file path `p`, row index `i`),
+   * stage the change data and land ONE commit. Nothing commits when no
+   * row was deleted, unless `force`.
+   *
+   * @param ids the row-id column and, on its first rewrite, the metadata
+   *   that mints its name (see [[RowTracking.rewriteIdColumn]])
+   * @param changes the change-data frame (logical columns plus
+   *   `_change_type`), built only when the change data feed is on and the
+   *   operation commits
+   * @param metrics the commitInfo metrics, given the rows newly deleted
+   *   and the deletion vectors added
+   * @return the rows newly deleted, replaced rows included
+   */
+  private[delta] def rewrite(spark: SparkSession, log: DeltaLog, snap: Snapshot,
+      op: String, hits: Option[DataFrame], rows: Option[DataFrame],
+      changes: => DataFrame,
+      ids: Option[(String, Option[Metadata])] = None,
+      actions: Seq[Action] = Nil,
+      params: Map[String, String],
+      metrics: (Long, Int) => Map[String, String],
+      scope: => ConflictChecker.ReadScope,
+      force: Boolean = false): Long =
+    ConflictChecker.staging(log) { staged =>
+      val minted = ids.flatMap(_._2)
+      val adds = rows.fold(Seq.empty[AddFile]) { w =>
+        val (stage, stageSchema, stagePartCols, stageOpts) = DeltaWriter.toPhysical(spark, snap,
+          DeltaWriter.withWriteChecks(w, snap.schema,
+            snap.metadata.configuration, log.tablePath.toString),
+          snap.metadata.partitionColumns, ids.toSeq.map(i => RowTracking.idField(i._1)))
+        DeltaWriter.writeFiles(spark, log, stage, stageSchema, stagePartCols, staged, stageOpts,
+          // post-mint config: the FIRST id-materializing rewrite must
+          // already exempt the minted columns from stats
+          configuration = minted.fold(snap.metadata.configuration)(_.configuration))
+      }
+      val (dvActs, deleted) =
+        hits.fold((Seq.empty[Action], 0L))(dvActions(log, snap, _, staged))
+      if (deleted > 0 || force) {
+        val cdcLines =
+          if (!Cdc.enabled(snap)) Nil
+          else Cdc.writeChangeData(spark, log, snap, changes,
+            snap.metadata.partitionColumns, staged)
+        // optimistic concurrency: rebase over winners disjoint under
+        // `scope` (see ConflictChecker) — conflicts remain loud errors
+        ConflictChecker.commit(log, Some(snap), op,
+          minted.map(Action(_)).toSeq ++
+            (if (dvActs.nonEmpty) protocolUpgradeActions(snap) else Nil) ++ actions ++ dvActs,
+          params = params,
+          metrics = metrics(deleted, dvActs.count(_.add.exists(_.deletionVector.isDefined))),
+          adds = adds, cdc = cdcLines, staged = staged, scope = scope)
+      }
+      deleted
+    }
+
+  /**
    * Soft-delete rows matching `condition`: per affected file, write a new
    * DV (union with any existing one), commit remove+add. Files whose rows
    * are all deleted are removed outright.
@@ -413,194 +473,114 @@ object DeltaDelete {
   def delete(spark: SparkSession, log: DeltaLog, condition: Column): Long = {
     val snap = log.update()
     ProtocolGate.validateWrite(snap, "DELETE")
-    // deleted rows kept: already-deleted matches union away
-    val hitRows = snap.relationDF(dropDeleted = false).where(condition)
-      .select(col("_metadata.file_path").as("p"), col("_metadata.row_index").as("i"))
-    ConflictChecker.staging(log) { staged =>
+    rewrite(spark, log, snap, "DELETE",
+      // deleted rows kept: already-deleted matches union away
+      hits = Some(snap.relationDF(dropDeleted = false).where(condition)
+        .select(col("_metadata.file_path").as("p"), col("_metadata.row_index").as("i"))),
+      rows = None,
       // CDF: the newly deleted rows are the LIVE matches (already-deleted
       // rows union into the bitmap as no-ops and must not re-emit)
-      val cdcLines =
-        if (!Cdc.enabled(snap)) Nil
-        else Cdc.writeChangeData(spark, log, snap,
-          Cdc.typed(snap.relationDF().where(condition), "delete"),
-          snap.metadata.partitionColumns, staged)
-      val (actions, deletedRows) = dvActions(log, snap, hitRows, staged)
-      // optimistic concurrency: rebase over logically-disjoint winners
-      // (see ConflictChecker) — conflicts remain loud errors
-      if (actions.nonEmpty)
-        ConflictChecker.commit(log, Some(snap), "DELETE",
-          protocolUpgradeActions(snap) ++ actions,
-          params = Map("predicate" -> condition.toString),
-          metrics = Map(
-            "numDeletedRows" -> deletedRows.toString,
-            "numDeletionVectorsAdded" ->
-              actions.count(_.add.exists(_.deletionVector.isDefined)).toString),
-          cdc = cdcLines, staged = staged,
-          scope = ConflictChecker.ReadScope.Predicate(
-            ConflictChecker.resolve(snap, condition)))
-      deletedRows
-    }
+      changes = Cdc.typed(snap.relationDF().where(condition), "delete"),
+      params = Map("predicate" -> condition.toString),
+      metrics = (n, dvs) => Map(
+        "numDeletedRows" -> n.toString, "numDeletionVectorsAdded" -> dvs.toString),
+      scope = ConflictChecker.ReadScope.Predicate(ConflictChecker.resolve(snap, condition)))
   }
 }
 
 /**
- * MERGE-style upsert: source rows replace key-matched live target rows
- * (soft-deleted via DV) and unmatched source rows are inserted — one
- * commit. The scale shape is one equi-join of the target scan against the
- * source keyed on the merge keys (broadcast when the source is small),
- * plus one write of |source| rows.
+ * MERGE: one clause engine behind the builder, SQL MERGE, `upsert` and
+ * `mergeDelete` — beyond the reference, whose catalog rejects all DML
+ * (src/storage/delta_catalog.cpp:102-117).
+ *
+ * Scale shape: the source is read ONCE, into one tagged relation,
+ * persisted for the duration of the operation when more than one consumer
+ * reads it: target ⋈ source on the merge keys, with the join type the
+ * clause kinds need and an `__action` column naming the clause each row
+ * takes. One aggregate over it enforces
+ * the cardinality guards and counts every clause before any file is
+ * written; the written rows, the change data and the replaced/deleted
+ * (file, row) set are filters and projections of it. A source that
+ * changes between evaluations (a non-deterministic expression, files
+ * rewritten during the MERGE) is therefore seen the same by every
+ * consumer. Driver traffic stays bounded: one aggregate row, the DV file
+ * list, per-file add stats.
  */
 object DeltaMerge {
 
-  /** @return (rowsUpdated, rowsInserted) */
+  /** Source rows replace key-matched live target rows (their stable row
+    * ids kept on row-tracked tables) and, with `insertNotMatched`, the
+    * other source rows are inserted — one commit. With a txn (the
+    * streaming sink's foreachBatch), a batch already recorded for the
+    * app id is a no-op.
+    * @return (rowsUpdated, rowsInserted) */
   def upsert(spark: SparkSession, log: DeltaLog, source: DataFrame,
       keyCols: Seq[String], insertNotMatched: Boolean = true,
       txnAppId: Option[String] = None,
       txnVersion: Option[Long] = None): (Long, Long) = {
-    val snap = log.update()
-    ProtocolGate.validateWrite(snap, "MERGE")
-    require(keyCols.nonEmpty, "merge keys required")
-    // idempotent merge (streaming foreachBatch replay): a batch already
-    // recorded for this appId dedupes to a no-op before any work
-    for (app <- txnAppId; v <- txnVersion; cur <- snap.setTransactions.get(app)
-         if cur >= v) {
-      return (0L, 0L)
-    }
-    val schemaCols = snap.schema.fieldNames.toSeq
-    // a source may omit generated columns (the engine computes them);
-    // everything else must match. withWriteChecks is applied AFTER the
-    // update-only semi filter so only rows that will actually be written
-    // are validated — MERGE is a write path, not a constraint bypass, but
-    // a never-written source row must not abort it either.
-    val genFilled = DeltaWriter.fillGenerated(Some(snap), source)
-    require(genFilled.columns.map(_.toLowerCase).toSet == schemaCols.map(_.toLowerCase).toSet,
-      s"source schema must match table: ${schemaCols.sorted}")
-    val aligned0 = genFilled.select(schemaCols.map(c => col(s"`$c`")): _*)
-
-    val live = snap.relationDF()
-    // update-only MERGE (no WHEN NOT MATCHED clause): write only source
-    // rows whose key exists in the target — a semi join, not a collect
-    val alignedKeyed =
-      if (insertNotMatched) aligned0
-      else {
-        val tkeys = live.select(keyCols.map(c => col(s"`$c`")): _*).distinct()
-        aligned0.join(tkeys,
-          keyCols.map(c => aligned0(s"`$c`") === tkeys(s"`$c`")).reduce(_ && _),
-          "left_semi")
-      }
-    val aligned = DeltaWriter.withWriteChecks(alignedKeyed, snap.schema,
-      snap.metadata.configuration, log.tablePath.toString)
-
-    // MERGE precondition (the SQL-standard ambiguity guards): each key
-    // matches at most one target row and appears at most once in the
-    // source — otherwise "replace matched rows with the source row" would
-    // silently shrink or duplicate the table. Two bounded aggregates
-    // (first offending key only), refused BEFORE any file is written.
-    val keys = aligned.select(keyCols.map(c => col(s"`$c`")): _*).distinct()
-    def firstDupKey(d: DataFrame, what: String): Unit = {
-      val dup = d.groupBy(keyCols.map(c => col(s"`$c`")): _*)
-        .agg(count(lit(1)).as("n")).where(col("n") > 1).limit(1).collect()
-      if (dup.nonEmpty)
-        throw new IllegalStateException(
-          s"MERGE refused: $what has ${dup(0).getLong(keyCols.length)} rows " +
-            s"for key ${keyCols.zipWithIndex.map { case (c, i) => s"$c=${dup(0).get(i)}" }.mkString(", ")}")
-    }
-    firstDupKey(aligned0, "source")
-    firstDupKey(live.join(keys,
-      keyCols.map(c => live(s"`$c`") === keys(s"`$c`")).reduce(_ && _),
-      "left_semi").select(keyCols.map(c => col(s"`$c`")): _*), "target")
-
-    // target physical rows whose key appears in the source → soft-delete
-    val hitRows = live
-      .join(keys, keyCols.map(c => live(s"`$c`") === keys(s"`$c`")).reduce(_ && _),
-        "left_semi")
-      .select(col("_metadata.file_path").as("p"), col("_metadata.row_index").as("i"))
-
-    ConflictChecker.staging(log) { staged =>
-      val (stage, stageSchema, stagePartCols, stageOpts) =
-        DeltaWriter.toPhysical(spark, snap, aligned, snap.metadata.partitionColumns)
-      val adds = DeltaWriter.writeFiles(spark, log, stage, stageSchema,
-        stagePartCols, staged, stageOpts, configuration = snap.metadata.configuration)
-      // CDF: replaced target rows (preimage), their source replacements
-      // (postimage), and non-matching source rows (insert) — one stage
-      val cdcLines =
-        if (!Cdc.enabled(snap)) Nil
-        else {
-          val cols = snap.schema.fieldNames.map(c => col(s"`$c`")).toIndexedSeq
-          val tkeys = live.select(keyCols.map(c => col(s"`$c`")): _*).distinct()
-          def srcJoin(tpe: String): DataFrame = Cdc.typed(
-            aligned.join(tkeys,
-              keyCols.map(c => aligned(s"`$c`") === tkeys(s"`$c`")).reduce(_ && _),
-              tpe), if (tpe == "left_semi") "update_postimage" else "insert")
-          val pre = Cdc.typed(live.join(keys,
-              keyCols.map(c => live(s"`$c`") === keys(s"`$c`")).reduce(_ && _),
-              "left_semi").select(cols: _*), "update_preimage")
-          Cdc.writeChangeData(spark, log, snap,
-            pre.unionByName(srcJoin("left_semi")).unionByName(srcJoin("left_anti")),
-            snap.metadata.partitionColumns, staged)
-        }
-      val (dvActs, replacedRows) = DeltaDelete.dvActions(log, snap, hitRows, staged)
-      // source row count from the write's own per-file stats — recomputing
-      // the source (a second full pass) doubled MERGE's source cost
-      val perFile = adds.map(_.parsedStats.flatMap(_.numRecords))
-      val sourceRows =
-        if (perFile.forall(_.isDefined)) perFile.flatten.sum
-        else aligned.count()
-      val txnActs = for (app <- txnAppId.toSeq; v <- txnVersion.toSeq)
-        yield Action(SetTransaction(app, v, Some(System.currentTimeMillis())))
-      // MERGE reads the whole target key set: any concurrent data change
-      // conflicts; disjoint winners (txn markers, compactions) rebase
-      ConflictChecker.commit(log, Some(snap), "MERGE",
-        (if (dvActs.nonEmpty) DeltaDelete.protocolUpgradeActions(snap) else Nil) ++
-          txnActs ++ dvActs,
-        params = Map("keys" -> keyCols.mkString(",")),
-        adds = adds, cdc = cdcLines, staged = staged)
-      (replacedRows, sourceRows - replacedRows)
-    }
+    val (updated, _, inserted) = mergeClauses(spark, log, source, keyCols,
+      Seq(MergeClause(None, isDelete = false, Nil)),
+      if (insertNotMatched) Some((None, Nil)) else None,
+      txn = for (app <- txnAppId; v <- txnVersion) yield (app, v))
+    (updated, inserted)
   }
 
-  /** One WHEN MATCHED clause for [[mergeClauses]]: optional condition and
-    * UPDATE assignments are Columns over the merge join's PREFIXED columns
-    * (`__t_<col>` = target side, `__s_<col>` = source side — the SQL
-    * rewrite tags each attribute's side, so `t.x`/`s.x` stay unambiguous
-    * even though both relations share names). Empty assignments on an
-    * UPDATE clause mean SET * (every column from the source row). The
-    * FIRST clause whose condition holds wins per row, SQL order. */
+  /** MERGE ... WHEN MATCHED THEN DELETE: soft-delete target rows whose
+    * key appears in `source` (the tombstone-list pattern — drop every
+    * doc id a dedup pass condemned). The source needs only the keys.
+    * @return rows deleted */
+  def mergeDelete(spark: SparkSession, log: DeltaLog, source: DataFrame,
+      keyCols: Seq[String]): Long =
+    mergeClauses(spark, log, source, keyCols,
+      Seq(MergeClause(None, isDelete = true, Nil)), None)._2
+
+  /** One WHEN MATCHED / WHEN NOT MATCHED BY SOURCE clause: optional
+    * condition and UPDATE assignments are Columns over the merge join's
+    * PREFIXED columns (`__t_<col>` = target side, `__s_<col>` = source
+    * side — the SQL rewrite tags each attribute's side, so `t.x`/`s.x`
+    * stay unambiguous even though both relations share names). Empty
+    * assignments on an UPDATE clause mean SET * (every column from the
+    * source row). The FIRST clause whose condition holds wins per row,
+    * SQL order. */
   case class MergeClause(cond: Option[Column], isDelete: Boolean,
       assignments: Seq[(String, Column)])
 
   /**
-   * General MERGE with clause conditions and expression assignments — the
-   * CDC-apply surface (`WHEN MATCHED AND s.op='D' THEN DELETE` +
-   * `WHEN MATCHED THEN UPDATE SET *` + conditional INSERT) the plain
-   * [[upsert]] cannot express. Beyond the reference (its catalog rejects
-   * all DML, src/storage/delta_catalog.cpp:102-117).
+   * MERGE with clause conditions and expression assignments — e.g. the
+   * CDC-apply shape `WHEN MATCHED AND s.op='D' THEN DELETE` +
+   * `WHEN MATCHED THEN UPDATE SET *` + conditional INSERT. Unassigned
+   * columns of a partial UPDATE keep the TARGET value (a partial SET is
+   * never widened to SET *); generated columns not assigned are
+   * recomputed from the final row, and SET * and INSERT * take them from the
+   * source row (filled in when the source omits them).
    *
-   * Scale shape: target and source meet in ONE inner equi-join on the
-   * merge keys with both sides' columns prefixed (`__t_`/`__s_`); clause
-   * selection is a codegen'd when-chain over that join; unmatched inserts
-   * are one anti join. Unassigned columns of a partial UPDATE keep the
-   * TARGET value (SQL semantics — a partial SET is never widened to
-   * SET *), and generated columns not explicitly assigned are recomputed
-   * from the final row. Driver traffic stays bounded: one clause-count
-   * aggregate, the DV file list, per-file add stats.
+   * Cardinality guards (refused before any file is written): a source key
+   * has at most one source row, and a matched key at most one target row.
+   * The one exemption, delta-spark's: a MERGE whose only clause is an
+   * unconditional WHEN MATCHED DELETE deletes every matched target row
+   * once, whatever the source holds.
    *
    * @param notMatched None = no INSERT clause; Some((cond, assignments)) —
    *   empty assignments = INSERT * (condition may reference SOURCE only).
    * @param bySource WHEN NOT MATCHED BY SOURCE clauses — applied to TARGET
-   *   rows whose merge key has no source match (one anti join on the key
-   *   set); conditions/assignments may reference TARGET columns only.
+   *   rows whose merge key has no source match; conditions/assignments may
+   *   reference TARGET columns only.
+   * @param txn (app id, version) recorded by the commit; a MERGE whose
+   *   version the table already holds for that app is a no-op.
    * @return (rowsUpdated, rowsDeleted, rowsInserted)
    */
   def mergeClauses(spark: SparkSession, log: DeltaLog, source: DataFrame,
       keyCols: Seq[String], matched: Seq[MergeClause],
       notMatched: Option[(Option[Column], Seq[(String, Column)])],
-      bySource: Seq[MergeClause] = Nil): (Long, Long, Long) = {
+      bySource: Seq[MergeClause] = Nil,
+      txn: Option[(String, Long)] = None): (Long, Long, Long) = {
     val snap = log.update()
     ProtocolGate.validateWrite(snap, "MERGE")
     require(keyCols.nonEmpty, "merge keys required")
     require(matched.nonEmpty || notMatched.isDefined || bySource.nonEmpty,
       "MERGE needs at least one clause")
+    if (txn.exists { case (app, v) => snap.setTransactions.get(app).exists(_ >= v) })
+      return (0L, 0L, 0L)
     val schemaCols = snap.schema.fieldNames.toSeq
 
     // SET * / INSERT * write whole source rows — only then must the source
@@ -622,257 +602,153 @@ object DeltaMerge {
     require(missingKeys.isEmpty, s"source lacks merge key(s): ${missingKeys.mkString(", ")}")
 
     // prefix EVERY source column (incl. extras like a CDC op flag, which
-    // only clause conditions see)
-    val sPref = genFilled.select(
-      genFilled.columns.toIndexedSeq.map(c => col(s"`$c`").as(s"__s_$c")): _*)
+    // only clause conditions see); `__srow` identifies a source row (null
+    // on a target-only row of an outer join)
+    val sPref = genFilled.select((genFilled.columns.toIndexedSeq.map(c =>
+      col(s"`$c`").as(s"__s_$c")) :+ monotonically_increasing_id().as("__srow")): _*)
     // row-tracked tables: updated images keep their stable id via the
     // materialized id column; inserted rows get fresh ids from the new
     // file's baseRowId (their materialized slot stays null)
-    val rtEnabled = RowTracking.enabled(snap)
-    val (mdAction, matNames) =
-      if (!rtEnabled) (None, None)
-      else {
-        val (md, names, minted) = RowTracking.ensureMaterializedNames(snap.metadata)
-        (if (minted) Some(md) else None, Some(names))
-      }
-    val extraCols = matNames.toSeq.map { case (mid, _) =>
-      org.apache.spark.sql.types.StructField(mid,
-        org.apache.spark.sql.types.LongType, nullable = true) }
-    val live = snap.relationDF(extraDataCols = extraCols)
-    val tPref = live.select((schemaCols.map(c => col(s"`$c`").as(s"__t_$c")) ++ Seq(
-      col("_metadata.file_path").as("__file"),
-      col("_metadata.row_index").as("__row")) ++
-      matNames.toSeq.map { case (mid, _) =>
-        RowTracking.preservedIdCol(snap, mid).as("__rowid") }).toIndexedSeq: _*)
+    val ids = RowTracking.rewriteIdColumn(snap)
+    val tPref = snap.relationDF(extraDataCols = ids.toSeq.map(i => RowTracking.idField(i._1)))
+      .select((schemaCols.map(c => col(s"`$c`").as(s"__t_$c")) ++ Seq(
+        col("_metadata.file_path").as("__file"),
+        col("_metadata.row_index").as("__row")) ++
+        ids.map { case (mid, _) => RowTracking.preservedIdCol(snap, mid).as("__rowid") })
+        .toIndexedSeq: _*)
     val joinCond = keyCols.map(c => col(s"`__t_$c`") === col(s"`__s_$c`")).reduce(_ && _)
-    val joined = tPref.join(sPref, joinCond, "inner")
 
-    // MERGE cardinality guards (same contract as upsert): refuse BEFORE
-    // any file is written, first offending key only
-    def firstDup(d: DataFrame, cols: Seq[String], what: String): Unit = {
-      val dup = d.groupBy(cols.map(c => col(s"`$c`")): _*)
-        .agg(count(lit(1)).as("n")).where(col("n") > 1).limit(1).collect()
-      if (dup.nonEmpty)
-        throw new IllegalStateException(
-          s"MERGE refused: $what has ${dup(0).getLong(cols.length)} rows for key " +
-            cols.zipWithIndex.map { case (c, i) => s"$c=${dup(0).get(i)}" }.mkString(", "))
-    }
-    firstDup(sPref, keyCols.map(c => s"__s_$c"), "source")
-    firstDup(joined, keyCols.map(c => s"__t_$c"), "matched target")
-
-    // first matching clause per row (SQL order; null = no clause applies,
-    // the target row stays and the source row is not written)
-    val actionCol = matched.zipWithIndex.foldRight(lit(null).cast("int")) {
-      case ((cl, i), rest) => cl.cond match {
-        case Some(c) => when(coalesce(c, lit(false)), lit(i)).otherwise(rest)
-        case None => lit(i) // unconditional: later clauses unreachable
-      }
-    }
-    val acted = joined.withColumn("__action", actionCol)
-
-    val actionCounts: Map[Int, Long] = acted.groupBy(col("__action"))
-      .agg(count(lit(1)).as("n")).collect()
-      .collect { case r if !r.isNullAt(0) => r.getInt(0) -> r.getLong(1) }.toMap
-
-    // WHEN NOT MATCHED BY SOURCE: target rows whose key set has no source
-    // match (one anti join); clause chain sees only __t_ columns. Each
-    // target row appears at most once here, so no cardinality guard.
-    val bsActed: Option[DataFrame] =
-      if (bySource.isEmpty) None
-      else {
-        val tUnmatched = tPref.join(
-          sPref.select(keyCols.map(c => col(s"`__s_$c`")): _*).distinct(),
-          joinCond, "left_anti")
-        val bsActionCol = bySource.zipWithIndex.foldRight(lit(null).cast("int")) {
-          case ((cl, i), rest) => cl.cond match {
-            case Some(c) => when(coalesce(c, lit(false)), lit(i)).otherwise(rest)
-            case None => lit(i)
-          }
+    // action numbers: matched clause i → i, the insert → insertAt (a
+    // clause that never holds when there is none), by-source clause j →
+    // insertAt + 1 + j; null = no clause applies (the target row stays, the
+    // source row is not written)
+    val insertAt = matched.length
+    val bySourceAt = insertAt + 1
+    val clauses = ((matched :+ notMatched.fold(MergeClause(Some(lit(false)), isDelete = false, Nil)) {
+      case (c, asg) => MergeClause(c, isDelete = false, asg) }) ++ bySource).toIndexedSeq
+    val updates = clauses.indices.filter(a => a != insertAt && !clauses(a).isDelete)
+    val deletes = clauses.indices.filter(a => clauses(a).isDelete)
+    def firstHolding(from: Int, until: Int): Column =
+      (from until until).foldRight(lit(null).cast("int")) { (a, rest) =>
+        clauses(a).cond match {
+          case Some(c) => when(coalesce(c, lit(false)), lit(a)).otherwise(rest)
+          case None => lit(a) // unconditional: later clauses unreachable
         }
-        Some(tUnmatched.withColumn("__action", bsActionCol))
       }
-    val bsCounts: Map[Int, Long] = bsActed match {
-      case None => Map.empty
-      case Some(d) => d.groupBy(col("__action")).agg(count(lit(1)).as("n")).collect()
-        .collect { case r if !r.isNullAt(0) => r.getInt(0) -> r.getLong(1) }.toMap
-    }
-
-    val updatedRows = matched.zipWithIndex.collect {
-      case (cl, i) if !cl.isDelete => actionCounts.getOrElse(i, 0L) }.sum +
-      bySource.zipWithIndex.collect {
-        case (cl, i) if !cl.isDelete => bsCounts.getOrElse(i, 0L) }.sum
-    val deletedRows = matched.zipWithIndex.collect {
-      case (cl, i) if cl.isDelete => actionCounts.getOrElse(i, 0L) }.sum +
-      bySource.zipWithIndex.collect {
-        case (cl, i) if cl.isDelete => bsCounts.getOrElse(i, 0L) }.sum
-
-    /** Final-row projection under LOGICAL names: assigned columns take the
-      * clause expression, unassigned keep the target value (updates) —
-      * empty assignments = whole source row. Generated columns not
-      * explicitly assigned recompute from the final values. */
-    def projectRow(d: DataFrame, asg: Seq[(String, Column)], fromTarget: Boolean,
-        withId: Boolean = false): DataFrame = {
-      val idCol =
-        if (!withId) Nil
-        else matNames.toSeq.map { case (mid, _) =>
-          if (fromTarget) col("__rowid").as(mid)
-          else lit(null).cast("long").as(mid) // insert: fresh id from baseRowId
-        }
-      val base = d.select((schemaCols.map { c =>
-        asg.find(_._1.equalsIgnoreCase(c)) match {
-          case Some((_, v)) => v.as(c)
-          case None if asg.isEmpty => col(s"`__s_$c`").as(c)
-          case None if fromTarget => col(s"`__t_$c`").as(c)
-          case None => throw new IllegalArgumentException(
-            s"INSERT assignments must cover every column; missing $c")
-        }
-      } ++ idCol).toIndexedSeq: _*)
-      snap.schema.fields.foldLeft(base) { (b, f) =>
-        if (f.metadata.contains("delta.generationExpression") &&
-            !asg.exists(_._1.equalsIgnoreCase(f.name)))
-          b.withColumn(f.name,
-            expr(f.metadata.getString("delta.generationExpression")).cast(f.dataType))
-        else b
-      }
-    }
-    val updateWrites = matched.zipWithIndex.collect { case (cl, i) if !cl.isDelete =>
-      projectRow(acted.where(col("__action") === i), cl.assignments,
-        fromTarget = true, withId = rtEnabled)
-    } ++ bsActed.toSeq.flatMap { d =>
-      bySource.zipWithIndex.collect { case (cl, i) if !cl.isDelete =>
-        projectRow(d.where(col("__action") === i), cl.assignments,
-          fromTarget = true, withId = rtEnabled)
-      }
-    }
-    val unmatched = sPref.join(
-      tPref.select(keyCols.map(c => col(s"`__t_$c`")): _*).distinct(),
-      joinCond, "left_anti")
-    val insertWrites = notMatched.toSeq.map { case (condOpt, asg) =>
-      val base = condOpt.map(c => unmatched.where(coalesce(c, lit(false))))
-        .getOrElse(unmatched)
-      projectRow(base, asg, fromTarget = false, withId = rtEnabled)
-    }
-    val toWrite = (updateWrites ++ insertWrites).reduceOption(_ unionByName _)
-      .map(w => DeltaWriter.withWriteChecks(w, snap.schema,
-        snap.metadata.configuration, log.tablePath.toString))
-
-    val hitRows = (acted.where(col("__action").isNotNull)
-      .select(col("__file").as("p"), col("__row").as("i")) +:
-      bsActed.toSeq.map(_.where(col("__action").isNotNull)
-        .select(col("__file").as("p"), col("__row").as("i"))))
-      .reduce(_ union _)
-
-    ConflictChecker.staging(log) { staged =>
-      val adds = toWrite match {
-        case Some(w) =>
-          val (stage, stageSchema, stagePartCols, stageOpts) =
-            DeltaWriter.toPhysical(spark, snap, w,
-              snap.metadata.partitionColumns, extraCols)
-          DeltaWriter.writeFiles(spark, log, stage, stageSchema,
-            stagePartCols, staged, stageOpts, configuration = snap.metadata.configuration)
-        case None => Nil
-      }
-      val cdcLines =
-        if (!Cdc.enabled(snap)) Nil
+    // the join type follows the clause kinds. The guard exemption needs
+    // each matched target row once: a semi join. Otherwise every source row
+    // is kept (the source guard sees them all, inserts take the unmatched
+    // ones), and by-source clauses keep every target row too.
+    val exempt = notMatched.isEmpty && bySource.isEmpty &&
+      matched.map(c => (c.cond, c.isDelete)) == Seq((None, true))
+    val joinType =
+      if (exempt) "left_semi" else if (bySource.nonEmpty) "full_outer" else "right_outer"
+    val matchedRow = col("__srow").isNotNull && col("__file").isNotNull
+    val action =
+      if (exempt) lit(0)
+      else when(matchedRow, firstHolding(0, insertAt))
+        .when(col("__file").isNull, firstHolding(insertAt, bySourceAt))
+        .otherwise(firstHolding(bySourceAt, clauses.length))
+    // an outer join that keeps every source row can only broadcast the
+    // target, and a broadcast copy of the target stays in driver memory
+    // until the context cleaner runs: sort-merge instead, as for any large
+    // target. The semi join keeps Spark's choice (a small source broadcasts).
+    val joined = tPref.join(if (exempt) sPref else sPref.hint("merge"), joinCond, joinType)
+      .withColumn("__action", action)
+    // persisted when read more than once, so every consumer sees the same
+    // source rows; released on every exit path
+    val tagged = if (exempt && !Cdc.enabled(snap)) joined else joined.persist()
+    try {
+      // both cardinality guards and every clause's count in one aggregate,
+      // before any file is written: per source key (target-only rows share
+      // the null key) a violation rank — 2 = several source rows, 1 =
+      // several matched target rows — then the worst rank and the totals
+      val counts: IndexedSeq[Long] =
+        if (exempt) IndexedSeq.fill(clauses.length)(0L)
         else {
-          val parts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-          matched.zipWithIndex.foreach { case (cl, i) =>
-            val rows = acted.where(col("__action") === i)
-            val tgtVals = rows.select(schemaCols.map(c => col(s"`__t_$c`").as(c)): _*)
-            if (cl.isDelete) parts += Cdc.typed(tgtVals, "delete")
-            else {
-              parts += Cdc.typed(tgtVals, "update_preimage")
-              parts += Cdc.typed(
-                projectRow(rows, cl.assignments, fromTarget = true), "update_postimage")
-            }
-          }
-          bsActed.foreach { d =>
-            bySource.zipWithIndex.foreach { case (cl, i) =>
-              val rows = d.where(col("__action") === i)
-              val tgtVals = rows.select(schemaCols.map(c => col(s"`__t_$c`").as(c)): _*)
-              if (cl.isDelete) parts += Cdc.typed(tgtVals, "delete")
-              else {
-                parts += Cdc.typed(tgtVals, "update_preimage")
-                parts += Cdc.typed(
-                  projectRow(rows, cl.assignments, fromTarget = true), "update_postimage")
-              }
-            }
-          }
-          insertWrites.foreach { w =>
-            // CDF frames carry LOGICAL schema columns only: drop the
-            // materialized row-id column the row-tracked WRITE path adds
-            // (withId above) — update/delete frames don't have it, so the
-            // strict unionByName below would throw, and an insert-only
-            // MERGE would pollute _change_data with the id column
-            val clean = matNames.toSeq.foldLeft(w) { case (d, (mid, _)) => d.drop(mid) }
-            parts += Cdc.typed(clean, "insert")
-          }
-          if (parts.isEmpty) Nil
-          else Cdc.writeChangeData(spark, log, snap,
-            parts.reduce(_ unionByName _), snap.metadata.partitionColumns, staged)
+          val matchedRows = count(when(matchedRow, lit(1)))
+          val r = tagged
+            .groupBy(keyCols.map(c => when(col("__srow").isNotNull, col(s"`__s_$c`")).as(c)): _*)
+            .agg(when(min(col("__srow")) < max(col("__srow")), 2)
+                .when(matchedRows > 1, 1).otherwise(0).as("__v"),
+              (matchedRows.as("__n") +: clauses.indices.map(a =>
+                count(when(col("__action") === a, lit(1))).as(s"__c$a"))): _*)
+            .agg(max(struct((Seq("__v", "__n") ++ keyCols).map(c => col(s"`$c`")): _*)),
+              clauses.indices.map(a => coalesce(sum(col(s"__c$a")), lit(0L))): _*)
+            .collect()(0)
+          val worst = r.getStruct(0)
+          if (worst != null && worst.getInt(0) > 0)
+            throw new IllegalStateException("MERGE refused: " +
+              (if (worst.getInt(0) == 2) "source has more than one row"
+               else s"matched target has ${worst.getLong(1)} rows") + " for key " +
+              keyCols.indices.map(i => s"${keyCols(i)}=${worst.get(2 + i)}").mkString(", "))
+          clauses.indices.map(a => r.getLong(1 + a))
         }
-      val (dvActs, _) = DeltaDelete.dvActions(log, snap, hitRows, staged)
-      if (dvActs.isEmpty && adds.isEmpty) (0L, 0L, 0L)
-      else {
-        val perFile = adds.map(_.parsedStats.flatMap(_.numRecords))
-        val writtenRows =
-          if (perFile.forall(_.isDefined)) perFile.flatten.sum
-          else toWrite.map(_.count()).getOrElse(0L)
-        val insertedRows = writtenRows - updatedRows
-        ConflictChecker.commit(log, Some(snap), "MERGE",
-          mdAction.map(Action(_)).toSeq ++
-            (if (dvActs.nonEmpty) DeltaDelete.protocolUpgradeActions(snap) else Nil) ++
-            dvActs,
-          params = Map("keys" -> keyCols.mkString(","),
-            "matchedClauses" -> matched.length.toString),
-          metrics = Map(
-            "numTargetRowsUpdated" -> updatedRows.toString,
-            "numTargetRowsDeleted" -> deletedRows.toString,
-            "numTargetRowsInserted" -> insertedRows.toString),
-          adds = adds, cdc = cdcLines, staged = staged)
-        (updatedRows, deletedRows, insertedRows)
+      val updated = updates.map(counts).sum
+      val inserted = counts(insertAt)
+
+      /** A written row under LOGICAL names: an assigned column takes the
+        * clause expression, an unassigned one keeps the target value
+        * (updates); empty assignments take the whole source row. A
+        * generated column not assigned recomputes from the final values.
+        * Row-tracked tables add the id column: an update keeps the
+        * target row's id, an insert gets a fresh one. */
+      def image(a: Int): DataFrame = {
+        val asg = clauses(a).assignments
+        val fromTarget = a != insertAt
+        val base = tagged.where(col("__action") === a).select((schemaCols.map { c =>
+          asg.find(_._1.equalsIgnoreCase(c)) match {
+            case Some((_, v)) => v.as(c)
+            case None if asg.isEmpty => col(s"`__s_$c`").as(c)
+            case None if fromTarget => col(s"`__t_$c`").as(c)
+            case None => throw new IllegalArgumentException(
+              s"INSERT assignments must cover every column; missing $c")
+          }
+        } ++ ids.map { case (mid, _) =>
+          (if (fromTarget) col("__rowid") else lit(null).cast("long")).as(mid)
+        }).toIndexedSeq: _*)
+        if (asg.isEmpty) base
+        else snap.schema.fields.foldLeft(base) { (b, f) =>
+          if (f.metadata.contains("delta.generationExpression") &&
+              !asg.exists(_._1.equalsIgnoreCase(f.name)))
+            b.withColumn(f.name,
+              expr(f.metadata.getString("delta.generationExpression")).cast(f.dataType))
+          else b
+        }
       }
-    }
-  }
-
-  /** MERGE ... WHEN MATCHED THEN DELETE: soft-delete target rows whose
-    * key appears in `source` (the tombstone-list pattern — drop every
-    * doc id a dedup pass condemned). One semi join keyed on the merge
-    * keys → DV actions; nothing driver-side scales with row count.
-    * @return rows deleted */
-  def mergeDelete(spark: SparkSession, log: DeltaLog, source: DataFrame,
-      keyCols: Seq[String]): Long = {
-    val snap = log.update()
-    ProtocolGate.validateWrite(snap, "MERGE")
-    require(keyCols.nonEmpty, "merge keys required")
-    val missing = keyCols.filterNot(k =>
-      source.columns.exists(_.equalsIgnoreCase(k)))
-    require(missing.isEmpty, s"source lacks merge key(s): ${missing.mkString(", ")}")
-
-    val live = snap.relationDF()
-    val keys = source.select(keyCols.map(c => col(s"`$c`")): _*).distinct()
-    val matchedLive = live
-      .join(keys, keyCols.map(c => live(s"`$c`") === keys(s"`$c`")).reduce(_ && _),
-        "left_semi")
-    val hitRows = matchedLive
-      .select(col("_metadata.file_path").as("p"), col("_metadata.row_index").as("i"))
-    ConflictChecker.staging(log) { staged =>
-      val cdcLines =
-        if (!Cdc.enabled(snap)) Nil
-        else {
-          val cols = snap.schema.fieldNames.map(c => col(s"`$c`")).toIndexedSeq
-          Cdc.writeChangeData(spark, log, snap,
-            Cdc.typed(matchedLive.select(cols: _*), "delete"),
-            snap.metadata.partitionColumns, staged)
-        }
-      val (dvActs, deletedRows) = DeltaDelete.dvActions(log, snap, hitRows, staged)
-      if (dvActs.nonEmpty)
-        ConflictChecker.commit(log, Some(snap), "MERGE",
-          DeltaDelete.protocolUpgradeActions(snap) ++ dvActs,
-          params = Map("keys" -> keyCols.mkString(","), "matched" -> "delete"),
-          cdc = cdcLines, staged = staged)
-      deletedRows
-    }
+      val images = (updates ++ Seq(insertAt).filter(_ => notMatched.isDefined))
+        .map(a => a -> image(a))
+      def changes: DataFrame = {
+        val logical = schemaCols.map(c => col(s"`$c`"))
+        def targetRows(as: Seq[Int]) = tagged.where(col("__action").isin(as: _*))
+          .select(schemaCols.map(c => col(s"`__t_$c`").as(c)): _*)
+        (Cdc.typed(targetRows(deletes), "delete") +:
+          Cdc.typed(targetRows(updates), "update_preimage") +:
+          images.map { case (a, img) => Cdc.typed(img.select(logical: _*),
+            if (a == insertAt) "insert" else "update_postimage") })
+          .reduce(_ unionByName _)
+      }
+      val replaced = DeltaDelete.rewrite(spark, log, snap, "MERGE",
+        hits = Option.when(exempt || updated + deletes.map(counts).sum > 0)(
+          tagged.where(col("__action") =!= insertAt)
+            .select(col("__file").as("p"), col("__row").as("i"))),
+        rows = Option.when(updated + inserted > 0)(images.map(_._2).reduce(_ unionByName _)),
+        changes = changes, ids = ids,
+        actions = txn.toSeq.map { case (app, v) =>
+          Action(SetTransaction(app, v, Some(System.currentTimeMillis()))) },
+        params = Map("keys" -> keyCols.mkString(","),
+          "matchedClauses" -> matched.length.toString),
+        metrics = (n, _) => Map(
+          "numTargetRowsUpdated" -> updated.toString,
+          "numTargetRowsDeleted" -> (n - updated).toString,
+          "numTargetRowsInserted" -> inserted.toString),
+        // MERGE reads the whole target key set: any concurrent data
+        // change conflicts; disjoint winners (txn markers, compactions)
+        // rebase
+        scope = ConflictChecker.ReadScope.WholeTable,
+        force = inserted > 0 || txn.isDefined)
+      (updated, replaced - updated, inserted)
+    } finally tagged.unpersist()
   }
 }
 
@@ -899,83 +775,47 @@ object DeltaUpdate {
         s"UPDATE cannot assign identity column(s) ${idHit.mkString(", ")}")
 
     // row-tracked tables: the rewritten images carry each row's stable id
-    // in the materialized id column (names minted on first rewrite); the
-    // commit version intentionally stays unmaterialized — the updated
-    // row's row_commit_version falls back to the new file's
-    // defaultRowCommitVersion, i.e. THIS commit, per protocol
-    val rtEnabled = RowTracking.enabled(snap)
-    val (mdAction, matNames) =
-      if (!rtEnabled) (None, None)
-      else {
-        val (md, names, minted) = RowTracking.ensureMaterializedNames(snap.metadata)
-        (if (minted) Some(md) else None, Some(names))
-      }
-    val extraCols = matNames.toSeq.map { case (mid, _) =>
-      org.apache.spark.sql.types.StructField(mid,
-        org.apache.spark.sql.types.LongType, nullable = true) }
-
+    // in the materialized id column; the commit version intentionally
+    // stays unmaterialized — the updated row's row_commit_version falls
+    // back to the new file's defaultRowCommitVersion, i.e. THIS commit,
+    // per protocol
+    val ids = RowTracking.rewriteIdColumn(snap)
     // live rows only: resurrecting already-deleted rows would be corruption
-    val live = snap.relationDF(extraDataCols = extraCols)
-    val matched = live.where(condition)
+    val matched = snap.relationDF(extraDataCols = ids.toSeq.map(i => RowTracking.idField(i._1)))
+      .where(condition)
 
     // new row images, in logical column order. Generated columns NOT
     // explicitly SET are recomputed from their expressions (an update to a
     // source column must not leave a stale derived value); explicitly-SET
-    // generated columns and CHECK constraints are enforced below by the
-    // same write pass appends use — row-level DML must not be a constraint
+    // generated columns and CHECK constraints are enforced by the same
+    // write checks appends use — row-level DML must not be a constraint
     // bypass.
     val assigned = matched.select((snap.schema.fields.map { f =>
       assignments.get(f.name).map(_.as(f.name)).getOrElse(col(s"`${f.name}`"))
-    } ++ matNames.toSeq.map { case (mid, _) =>
+    } ++ ids.map { case (mid, _) =>
       RowTracking.preservedIdCol(snap, mid).as(mid) }).toIndexedSeq: _*)
     // second phase so generation expressions see POST-assignment values
-    val newRows0 = snap.schema.fields.foldLeft(assigned) { (d, f) =>
+    val newRows = snap.schema.fields.foldLeft(assigned) { (d, f) =>
       if (f.metadata.contains("delta.generationExpression") &&
           !assignments.contains(f.name))
-        d.withColumn(f.name, org.apache.spark.sql.functions.expr(
+        d.withColumn(f.name, expr(
           f.metadata.getString("delta.generationExpression")).cast(f.dataType))
       else d
     }
-    val newRows = DeltaWriter.withWriteChecks(newRows0, snap.schema,
-      snap.metadata.configuration, log.tablePath.toString)
-
-    ConflictChecker.staging(log) { staged =>
-      val (stage, stageSchema, stagePartCols, stageOpts) =
-        DeltaWriter.toPhysical(spark, snap, newRows,
-          snap.metadata.partitionColumns, extraCols)
-      val adds = DeltaWriter.writeFiles(spark, log, stage, stageSchema,
-        stagePartCols, staged, stageOpts,
-            // post-mint config: the FIRST id-materializing rewrite must
-            // already exempt the minted columns from stats
-            configuration = mdAction.map(_.configuration)
-              .getOrElse(snap.metadata.configuration))
+    val cols = snap.schema.fieldNames.map(c => col(s"`$c`")).toIndexedSeq
+    DeltaDelete.rewrite(spark, log, snap, "UPDATE",
+      hits = Some(matched.select(
+        col("_metadata.file_path").as("p"), col("_metadata.row_index").as("i"))),
+      rows = Some(newRows), ids = ids,
       // CDF: pre-assignment matches + their new images, one cdc stage
-      val cdcLines =
-        if (!Cdc.enabled(snap)) Nil
-        else {
-          val cols = snap.schema.fieldNames.map(c => col(s"`$c`")).toIndexedSeq
-          Cdc.writeChangeData(spark, log, snap,
-            Cdc.typed(matched.select(cols: _*), "update_preimage")
-              .unionByName(Cdc.typed(newRows.select(cols: _*), "update_postimage")),
-            snap.metadata.partitionColumns, staged)
-        }
-      val hitRows = matched.select(
-        col("_metadata.file_path").as("p"), col("_metadata.row_index").as("i"))
-      val (dvActs, updatedRows) = DeltaDelete.dvActions(log, snap, hitRows, staged)
-      if (updatedRows > 0L)
-        ConflictChecker.commit(log, Some(snap), "UPDATE",
-          mdAction.map(Action(_)).toSeq ++
-            DeltaDelete.protocolUpgradeActions(snap) ++ dvActs,
-          params = Map("predicate" -> condition.toString),
-          metrics = Map("numUpdatedRows" -> updatedRows.toString),
-          adds = adds, cdc = cdcLines, staged = staged,
-          // row-tracked: any concurrent commit may have assigned ids from
-          // the same high-water mark — conflict instead of rebasing
-          scope =
-            if (rtEnabled) ConflictChecker.ReadScope.WholeTable
-            else ConflictChecker.ReadScope.Predicate(
-              ConflictChecker.resolve(snap, condition)))
-      updatedRows
-    }
+      changes = Cdc.typed(matched.select(cols: _*), "update_preimage")
+        .unionByName(Cdc.typed(newRows.select(cols: _*), "update_postimage")),
+      params = Map("predicate" -> condition.toString),
+      metrics = (n, _) => Map("numUpdatedRows" -> n.toString),
+      // row-tracked: any concurrent commit may have assigned ids from
+      // the same high-water mark — conflict instead of rebasing
+      scope =
+        if (RowTracking.enabled(snap)) ConflictChecker.ReadScope.WholeTable
+        else ConflictChecker.ReadScope.Predicate(ConflictChecker.resolve(snap, condition)))
   }
 }

@@ -28,9 +28,11 @@ import graft.delta.DeltaMerge.MergeClause
  *     .execute()
  * }}}
  *
- * Scale shape is [[DeltaMerge.mergeClauses]]'s: one inner equi-join on
- * the merge keys, a codegen'd when-chain for clause selection, one anti
- * join for inserts, DV soft-deletes for replaced rows.
+ * Scale shape is [[DeltaMerge.mergeClauses]]'s: the source is read once
+ * into one persisted join of target and source on the merge keys, tagged
+ * by a codegen'd when-chain with the clause each row takes; the guards,
+ * clause counts, written rows, change data and DV soft-deletes of
+ * replaced rows all derive from it.
  */
 final class MergeBuilder private[delta] (
     table: DeltaTable, source: DataFrame, keyCols: Seq[String]) {

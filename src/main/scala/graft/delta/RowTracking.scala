@@ -53,6 +53,20 @@ object RowTracking {
           names, true)
     }
 
+  /** The materialized column a rewrite (UPDATE, MERGE) stores each
+    * rewritten row's stable id in, on a row-tracked table; None otherwise.
+    * The first rewrite mints the names, and then also returns the metadata
+    * that records them, for its commit. */
+  private[delta] def rewriteIdColumn(snap: Snapshot): Option[(String, Option[Metadata])] =
+    if (!enabled(snap)) None
+    else {
+      val (md, (id, _), minted) = ensureMaterializedNames(snap.metadata)
+      Some((id, if (minted) Some(md) else None))
+    }
+
+  private[delta] def idField(name: String): StructField =
+    StructField(name, LongType, nullable = true)
+
   /** Per-file lookup column: absolute path → value, as a codegen'd literal
     * map (no join). Null when no file carries the value. */
   private[delta] def pathMapCol(scoped: Snapshot, value: AddFile => Option[Long]): Column = {

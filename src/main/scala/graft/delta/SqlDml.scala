@@ -78,16 +78,14 @@ object SqlDml {
     }
 
   /**
-   * `MergeIntoTable` → command. The canonical upsert shapes (unconditional
-   * `UPDATE SET *` / `DELETE`, `INSERT *`) keep their dedicated commands;
-   * everything else with clause conditions or expression assignments —
-   * incl. the CDC-apply pattern `WHEN MATCHED AND s.op='D' THEN DELETE` —
-   * routes to [[MergeClausesGraftTableCommand]], whose engine evaluates
-   * clauses over a two-sided prefixed join. A partial `SET x = s.x` is
-   * NEVER widened to SET * (unassigned columns keep target values there).
-   * `WHEN NOT MATCHED BY SOURCE` (UPDATE/DELETE of target rows without a
-   * source match, target-only expressions) rides the same engine via an
-   * anti join on the key set.
+   * `MergeIntoTable` → [[MergeGraftTableCommand]], one command over the
+   * [[DeltaMerge.mergeClauses]] engine for every statement shape: clause
+   * conditions, expression assignments (a partial `SET x = s.x` is NEVER
+   * widened to SET * — unassigned columns keep target values), the
+   * CDC-apply pattern `WHEN MATCHED AND s.op='D' THEN DELETE`, and
+   * `WHEN NOT MATCHED BY SOURCE` UPDATE/DELETE of target rows without a
+   * source match (target-only expressions). The statement shape picks
+   * only the result columns.
    */
   def rewriteMerge(m: MergeIntoTable): Option[LogicalPlan] = {
     graftPath(m.targetTable).map { path =>
@@ -112,7 +110,7 @@ object SqlDml {
       }
       // Orient each equality as (target, source). When the condition is
       // resolved, exprId set membership attributes each side EXACTLY; only
-      // unresolved conditions fall back to name membership. The upsert
+      // unresolved conditions fall back to name membership. The merge
       // engine joins target and source BY THE SAME NAME, so `t.a = s.b`
       // with a ≠ b cannot be expressed — refuse it loudly rather than
       // silently joining on the wrong column.
@@ -171,7 +169,7 @@ object SqlDml {
 
       // SET * equivalence, STRICT: every target column assigned, each
       // value the same-named SOURCE attribute (exprId-checked — `SET x =
-      // t.x` or a partial list must NOT take the replace-row fast path)
+      // t.x` or a partial list is not the plain upsert shape)
       def isSetStar(assignments: Seq[Assignment]): Boolean = {
         def srcAttr(e: Expression): Option[AttributeReference] = e match {
           case a: AttributeReference if sourceAttrs.contains(a) => Some(a)
@@ -185,23 +183,7 @@ object SqlDml {
           .exists(_.name.equalsIgnoreCase(assignmentPath(a.key).head)))
       }
 
-      val sourceMatchesSchema =
-        m.sourceTable.output.map(_.name.toLowerCase).toSet ==
-          targetCols.map(_.toLowerCase).toSet
-      val plainInsert: Option[Boolean] = m.notMatchedActions match {
-        case Nil => Some(false)
-        case Seq(InsertStarAction(None)) => Some(true)
-        case Seq(InsertAction(None, assignments)) if isSetStar(assignments) => Some(true)
-        case _ => None
-      }
-      val plainMatched: Option[Boolean] = m.matchedActions match { // Some(isDelete)
-        case Seq(DeleteAction(None)) => Some(true)
-        case Seq(UpdateStarAction(None)) => Some(false)
-        case Seq(UpdateAction(None, assignments, _)) if isSetStar(assignments) => Some(false)
-        case _ => None
-      }
-      // WHEN NOT MATCHED BY SOURCE clauses act on target rows alone — the
-      // clause engine evaluates them over the anti-joined target side, so
+      // WHEN NOT MATCHED BY SOURCE clauses act on target rows alone, so
       // conditions/assignments may reference TARGET columns only
       val bySource = m.notMatchedBySourceActions.map {
         case DeleteAction(cond) => DeltaMerge.MergeClause(
@@ -220,48 +202,63 @@ object SqlDml {
         case other => throw new UnsupportedOperationException(
           s"graft MERGE: unsupported WHEN NOT MATCHED BY SOURCE action: $other")
       }
-      (plainMatched, plainInsert) match {
-        case (Some(true), Some(false)) if bySource.isEmpty =>
-          MergeDeleteGraftTableCommand(path, m.sourceTable, pairs)
-        case (Some(false), Some(ins)) if sourceMatchesSchema && bySource.isEmpty =>
-          MergeGraftTableCommand(path, m.sourceTable, pairs, ins)
-        case _ =>
-          val clauses = m.matchedActions.map {
-            case DeleteAction(cond) => DeltaMerge.MergeClause(
-              cond.map(sided(_, allowTarget = true, "WHEN MATCHED condition")),
-              isDelete = true, Nil)
-            case UpdateStarAction(cond) => DeltaMerge.MergeClause(
-              cond.map(sided(_, allowTarget = true, "WHEN MATCHED condition")),
-              isDelete = false, Nil)
-            case UpdateAction(cond, assignments, _) =>
-              val asg = assignments.map(a => assignmentName(a.key) ->
-                sided(a.value, allowTarget = true, "UPDATE assignment"))
-              require(asg.nonEmpty, "graft MERGE: UPDATE requires assignments")
-              DeltaMerge.MergeClause(
-                cond.map(sided(_, allowTarget = true, "WHEN MATCHED condition")),
-                isDelete = false, asg)
-            case other => throw new UnsupportedOperationException(
-              s"graft MERGE: unsupported WHEN MATCHED action: $other")
-          }
-          val notM = m.notMatchedActions match {
-            case Nil => None
-            case Seq(InsertStarAction(cond)) =>
-              Some((cond.map(sided(_, allowTarget = false,
-                "WHEN NOT MATCHED condition")), Nil: Seq[(String, Column)]))
-            case Seq(InsertAction(cond, assignments)) =>
-              val asg = assignments.map(a => assignmentName(a.key) ->
-                sided(a.value, allowTarget = false, "INSERT value"))
-              val covered = asg.map(_._1.toLowerCase).toSet
-              val missing = targetCols.filterNot(c => covered.contains(c.toLowerCase))
-              if (missing.nonEmpty) throw new UnsupportedOperationException(
-                s"graft MERGE INSERT must assign every column; missing ${missing.mkString(", ")}")
-              Some((cond.map(sided(_, allowTarget = false,
-                "WHEN NOT MATCHED condition")), asg))
-            case other => throw new UnsupportedOperationException(
-              s"graft MERGE supports a single WHEN NOT MATCHED clause: $other")
-          }
-          MergeClausesGraftTableCommand(path, m.sourceTable, pairs, clauses, notM, bySource)
+      val clauses = m.matchedActions.map {
+        case DeleteAction(cond) => DeltaMerge.MergeClause(
+          cond.map(sided(_, allowTarget = true, "WHEN MATCHED condition")),
+          isDelete = true, Nil)
+        case UpdateStarAction(cond) => DeltaMerge.MergeClause(
+          cond.map(sided(_, allowTarget = true, "WHEN MATCHED condition")),
+          isDelete = false, Nil)
+        case UpdateAction(cond, assignments, _) =>
+          val asg = assignments.map(a => assignmentName(a.key) ->
+            sided(a.value, allowTarget = true, "UPDATE assignment"))
+          require(asg.nonEmpty, "graft MERGE: UPDATE requires assignments")
+          DeltaMerge.MergeClause(
+            cond.map(sided(_, allowTarget = true, "WHEN MATCHED condition")),
+            isDelete = false, asg)
+        case other => throw new UnsupportedOperationException(
+          s"graft MERGE: unsupported WHEN MATCHED action: $other")
       }
+      val notM = m.notMatchedActions match {
+        case Nil => None
+        case Seq(InsertStarAction(cond)) =>
+          Some((cond.map(sided(_, allowTarget = false,
+            "WHEN NOT MATCHED condition")), Nil: Seq[(String, Column)]))
+        case Seq(InsertAction(cond, assignments)) =>
+          val asg = assignments.map(a => assignmentName(a.key) ->
+            sided(a.value, allowTarget = false, "INSERT value"))
+          val covered = asg.map(_._1.toLowerCase).toSet
+          val missing = targetCols.filterNot(c => covered.contains(c.toLowerCase))
+          if (missing.nonEmpty) throw new UnsupportedOperationException(
+            s"graft MERGE INSERT must assign every column; missing ${missing.mkString(", ")}")
+          Some((cond.map(sided(_, allowTarget = false,
+            "WHEN NOT MATCHED condition")), asg))
+        case other => throw new UnsupportedOperationException(
+          s"graft MERGE supports a single WHEN NOT MATCHED clause: $other")
+      }
+
+      // the result columns of each statement shape: a lone unconditional
+      // DELETE returns rows_deleted; the plain upsert (unconditional SET *,
+      // optional INSERT *, over a source with the table's columns) returns
+      // rows_updated, rows_inserted; every other shape all three
+      val plainUpsert =
+        (m.matchedActions match {
+          case Seq(UpdateStarAction(None)) => true
+          case Seq(UpdateAction(None, assignments, _)) => isSetStar(assignments)
+          case _ => false
+        }) && (m.notMatchedActions match {
+          case Nil | Seq(InsertStarAction(None)) => true
+          case Seq(InsertAction(None, assignments)) => isSetStar(assignments)
+          case _ => false
+        }) && m.sourceTable.output.map(_.name.toLowerCase).toSet ==
+          targetCols.map(_.toLowerCase).toSet
+      val columns =
+        if (bySource.nonEmpty) MergeGraftTableCommand.allColumns
+        else if (m.matchedActions == Seq(DeleteAction(None)) && m.notMatchedActions.isEmpty)
+          Seq("rows_deleted")
+        else if (plainUpsert) Seq("rows_updated", "rows_inserted")
+        else MergeGraftTableCommand.allColumns
+      MergeGraftTableCommand(path, m.sourceTable, pairs, clauses, notM, bySource, columns)
     }
   }
 }
@@ -294,60 +291,28 @@ case class UpdateGraftTableCommand(
   }
 }
 
-/** MERGE ... WHEN MATCHED THEN DELETE — returns rows_deleted. */
-case class MergeDeleteGraftTableCommand(
-    path: String,
-    source: LogicalPlan,
-    keyCols: Seq[String]) extends LeafRunnableCommand {
-  override val output: Seq[AttributeReference] =
-    Seq(AttributeReference("rows_deleted", LongType, nullable = false)())
-  override def innerChildren: Seq[LogicalPlan] = Seq(source)
-  override def run(spark: SparkSession): Seq[Row] = {
-    val log = DeltaLog.forPath(spark, path)
-    val n = DeltaMerge.mergeDelete(spark, log,
-      GraftColumnBridge.ofRows(spark, source), keyCols)
-    Seq(Row(n))
-  }
-}
-
-/** General MERGE (clause conditions / expression assignments) — returns
-  * (rows_updated, rows_deleted, rows_inserted). */
-case class MergeClausesGraftTableCommand(
+/** MERGE into a graft table through [[DeltaMerge.mergeClauses]] —
+  * returns the counts `columns` names, in that order. */
+case class MergeGraftTableCommand(
     path: String,
     source: LogicalPlan,
     keyCols: Seq[String],
     matched: Seq[DeltaMerge.MergeClause],
     notMatched: Option[(Option[Column], Seq[(String, Column)])],
-    bySource: Seq[DeltaMerge.MergeClause] = Nil)
-    extends LeafRunnableCommand {
-  override val output: Seq[AttributeReference] = Seq(
-    AttributeReference("rows_updated", LongType, nullable = false)(),
-    AttributeReference("rows_deleted", LongType, nullable = false)(),
-    AttributeReference("rows_inserted", LongType, nullable = false)())
+    bySource: Seq[DeltaMerge.MergeClause],
+    columns: Seq[String]) extends LeafRunnableCommand {
+  override val output: Seq[AttributeReference] =
+    columns.map(AttributeReference(_, LongType, nullable = false)())
   override def innerChildren: Seq[LogicalPlan] = Seq(source)
   override def run(spark: SparkSession): Seq[Row] = {
     val log = DeltaLog.forPath(spark, path)
     val (up, del, ins) = DeltaMerge.mergeClauses(spark, log,
       GraftColumnBridge.ofRows(spark, source), keyCols, matched, notMatched, bySource)
-    Seq(Row(up, del, ins))
+    val counts = Map("rows_updated" -> up, "rows_deleted" -> del, "rows_inserted" -> ins)
+    Seq(Row.fromSeq(columns.map(counts)))
   }
 }
 
-/** MERGE (upsert shape) into a graft table — returns (updated, inserted). */
-case class MergeGraftTableCommand(
-    path: String,
-    source: LogicalPlan,
-    keyCols: Seq[String],
-    insertNotMatched: Boolean) extends LeafRunnableCommand {
-  override val output: Seq[AttributeReference] = Seq(
-    AttributeReference("rows_updated", LongType, nullable = false)(),
-    AttributeReference("rows_inserted", LongType, nullable = false)())
-  override def innerChildren: Seq[LogicalPlan] = Seq(source)
-  override def run(spark: SparkSession): Seq[Row] = {
-    val log = DeltaLog.forPath(spark, path)
-    val sourceDf = GraftColumnBridge.ofRows(spark, source)
-    val (up, ins) = DeltaMerge.upsert(spark, log, sourceDf, keyCols,
-      insertNotMatched = insertNotMatched)
-    Seq(Row(up, ins))
-  }
+object MergeGraftTableCommand {
+  val allColumns: Seq[String] = Seq("rows_updated", "rows_deleted", "rows_inserted")
 }

@@ -64,4 +64,17 @@ class BroadDeleteSpec extends AnyFunSuite {
     assert(got.count() == want.count())
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
   }
+
+  test("a DELETE that matches only deleted rows lands no commit") {
+    val path = tmpTable()
+    DeltaWriter.append(spark, spark.range(100).select(col("id").as("k")), path)
+    val t = DeltaTable.forPath(spark, path)
+    assert(t.delete(col("k") < 10) == 10)
+    val v = DeltaLog.forPath(spark, path).update().version
+    // a remove + re-add of an unchanged file would be a data change with
+    // no changed row, which a plain stream on the table refuses
+    assert(t.delete(col("k") < 10) == 0)
+    assert(DeltaLog.forPath(spark, path).update().version == v)
+    assert(t.toDF.count() == 90)
+  }
 }

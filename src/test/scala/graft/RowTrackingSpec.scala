@@ -350,10 +350,27 @@ class RowTrackingSpec extends AnyFunSuite {
     assert(after.forall(_._2 >= 0), "null/negative row id after upsert")
     assert(after.map(_._2).toSet.size == after.length,
       "duplicate row ids after upsert")
-    // replacement + inserted rows are NEW physical rows: fresh ids past
-    // the pre-upsert mark
+    // inserted rows are new rows: fresh ids past the pre-upsert mark
+    // (replaced rows keep their ids, see the next test)
     assert(after.filter(_._1 >= 200).forall(_._2 > maxBefore),
       "inserted rows must take fresh ids past the mark")
+  }
+
+  test("upsert keeps the stable row ids of updated rows") {
+    val dir = freshDir()
+    val src = Fixtures.readParquet(spark, sfDir, "nation")
+      .select(col("n_nationkey"), col("n_name"))
+    DeltaWriter.append(spark, src, dir, configuration = rtConf)
+    def ids(): Map[Long, Long] =
+      DeltaTable.forPath(spark, dir).toDFWithVirtualColumns
+        .select(col("n_nationkey").cast("long"), col("row_id")).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val before = ids()
+    DeltaTable.forPath(spark, dir).upsert(src.filter(col("n_nationkey") < 5)
+      .withColumn("n_name", concat(lit("upd_"), col("n_name"))), Seq("n_nationkey"))
+    DeltaLog.clearCache()
+    val after = ids()
+    before.foreach { case (k, id) => assert(after(k) == id, s"key $k id changed") }
   }
 
   test("MERGE on a row-tracked CDF table: change feed stays id-free") {

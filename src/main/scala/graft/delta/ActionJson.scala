@@ -50,7 +50,8 @@ object ActionJson {
     else if (n.has("txn")) Some(Action(txn = Some(parseTxn(n.get("txn")))))
     else if (n.has("domainMetadata")) Some(Action(domainMetadata = Some(parseDomainMetadata(n.get("domainMetadata")))))
     else if (n.has("commitInfo")) Some(Action(commitInfo = Some(parseCommitInfo(n.get("commitInfo")))))
-    else None // cdc and future actions: ignored for state reconstruction
+    else if (n.has("cdc")) Some(Action(cdc = Some(parseCdc(n.get("cdc")))))
+    else None // future actions: ignored
   }
 
   private def optStr(n: JsonNode, f: String): Option[String] =
@@ -96,7 +97,13 @@ object ActionJson {
       path = n.get("path").asText,
       deletionTimestamp = optLong(n, "deletionTimestamp"),
       dataChange = Option(n.get("dataChange")).forall(_.asBoolean),
-      deletionVector = Option(n.get("deletionVector")).filterNot(_.isNull).map(parseDv))
+      deletionVector = Option(n.get("deletionVector")).filterNot(_.isNull).map(parseDv),
+      partitionValues = Option(n.get("partitionValues")).filterNot(_.isNull)
+        .map(_ => strMap(n, "partitionValues")),
+      size = optLong(n, "size"))
+
+  def parseCdc(n: JsonNode): AddCDCFile =
+    AddCDCFile(n.get("path").asText, strMap(n, "partitionValues"), n.get("size").asLong)
 
   def parseMetadata(n: JsonNode): Metadata =
     Metadata(
@@ -201,6 +208,15 @@ object ActionJson {
       r.deletionTimestamp.foreach(o.put("deletionTimestamp", _))
       o.put("dataChange", r.dataChange)
       r.deletionVector.foreach(dv => dvNode(o.putObject("deletionVector"), dv))
+      r.partitionValues.foreach(putStrMap(o, "partitionValues", _))
+      r.size.foreach(o.put("size", _))
+    }
+    a.cdc.foreach { c =>
+      val o = root.putObject("cdc")
+      o.put("path", c.path)
+      putStrMap(o, "partitionValues", c.partitionValues)
+      o.put("size", c.size)
+      o.put("dataChange", false)
     }
     a.txn.foreach { t =>
       val o = root.putObject("txn")

@@ -84,7 +84,21 @@ final case class RemoveFile(
     path: String,
     deletionTimestamp: Option[Long] = None,
     dataChange: Boolean = true,
-    deletionVector: Option[DeletionVectorDescriptor] = None) {
+    deletionVector: Option[DeletionVectorDescriptor] = None,
+    // optional per protocol (`extendedFileMetadata`): foreign writers
+    // record the removed file's partition values and size
+    partitionValues: Option[Map[String, String]] = None,
+    size: Option[Long] = None) {
+  lazy val decodedPath: String = Actions.percentDecode(path)
+}
+
+/** A change data file (`cdc` action): `_change_data/` parquet holding a
+  * commit's row-level changes with a `_change_type` column. State replay
+  * ignores it; only change-feed reads use it. */
+final case class AddCDCFile(
+    path: String,
+    partitionValues: Map[String, String],
+    size: Long) {
   lazy val decodedPath: String = Actions.percentDecode(path)
 }
 
@@ -139,7 +153,8 @@ final case class Action(
     add: Option[AddFile] = None,
     remove: Option[RemoveFile] = None,
     txn: Option[SetTransaction] = None,
-    domainMetadata: Option[DomainMetadata] = None)
+    domainMetadata: Option[DomainMetadata] = None,
+    cdc: Option[AddCDCFile] = None)
 
 object Action {
   def apply(a: Any): Action = a match {
@@ -150,5 +165,6 @@ object Action {
     case r: RemoveFile => Action(remove = Some(r))
     case t: SetTransaction => Action(txn = Some(t))
     case d: DomainMetadata => Action(domainMetadata = Some(d))
+    case c: AddCDCFile => Action(cdc = Some(c))
   }
 }

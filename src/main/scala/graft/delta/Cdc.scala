@@ -80,15 +80,8 @@ object Cdc {
         if (!fs.rename(sf, target))
           throw new IllegalStateException(s"Failed to move $sf -> $target")
         moved += target
-        val st = fs.getFileStatus(target)
-        val pv = DeltaWriter.partitionValuesFromPath(rel, partCols)
-        val pvJson = ActionJson.mapper.writeValueAsString(
-          pv.foldLeft(ActionJson.mapper.createObjectNode()) {
-            case (n, (k, v)) => n.put(k, v); n
-          })
-        val pathJson = ActionJson.mapper.writeValueAsString(
-          s"$DIR/${DeltaWriter.encodePath(rel)}")
-        s"""{"cdc":{"path":$pathJson,"partitionValues":$pvJson,"size":${st.getLen},"dataChange":false}}"""
+        ActionJson.toJson(Action(AddCDCFile(s"$DIR/${DeltaWriter.encodePath(rel)}",
+          DeltaWriter.partitionValuesFromPath(rel, partCols), fs.getFileStatus(target).getLen)))
       }.toSeq
     } finally {
       try fs.delete(staging, true) catch { case _: Exception => () }

@@ -1,12 +1,7 @@
 package graft.delta
 
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BooleanType, DataType}
-import org.apache.spark.unsafe.types.UTF8String
 
 import graft.delta.DvCodec.Bitmap64
 
@@ -35,19 +30,32 @@ object DeletionVectors {
     * pervasive DVs the driver would otherwise serially fetch 10⁵ bitmap
     * files before the first task could run. */
   def registry(snapshot: Snapshot): Map[String, DvHandle] = {
-    val tablePath = snapshot.log.tablePath.toString
-    val conf = new SerializableHadoopConf(
-      snapshot.log.spark.sessionState.newHadoopConf())
+    val slot = slots(snapshot.log)
     // (path, descriptor) pairs only: on a LazySnapshot this collects a
     // distributed PROJECTION of the checkpoint-backed file list — never
     // the stats-bearing AddFiles (the registry is inherently O(#files),
     // but descriptor pairs are ~10× smaller than full file entries and
     // the driver-side list materialization is avoided entirely)
-    snapshot.dvRegistryPairs.flatMap { case (decodedPath, dv) =>
-      val slot = dv.map(d => new DvSlot(d, tablePath, conf)).orNull
+    registry(snapshot.log.tablePath.toString,
+      snapshot.dvRegistryPairs.map { case (p, dv) => p -> dv.map(slot) })
+  }
+
+  /** The registry of an explicit file list: (decoded path, bitmap handle;
+    * None when the file has no bitmap). Every listed file is registered. */
+  def registry(tablePath: String,
+      files: Seq[(String, Option[DvHandle])]): Map[String, DvHandle] =
+    files.flatMap { case (decodedPath, handle) =>
+      val slot = handle.orNull
       val p = Snapshot.absolutePathOf(tablePath, decodedPath)
       Seq(p.toString -> slot, p.toUri.getPath -> slot, p.toUri.toString -> slot)
     }.toMap
+
+  /** Descriptor → lazily-read handle; the handles of one call share one
+    * serialized Hadoop configuration. */
+  def slots(log: DeltaLog): DeletionVectorDescriptor => DvHandle = {
+    val tablePath = log.tablePath.toString
+    val conf = new SerializableHadoopConf(log.spark.sessionState.newHadoopConf())
+    d => new DvSlot(d, tablePath, conf)
   }
 }
 
@@ -71,7 +79,7 @@ sealed abstract class DvHandle extends Serializable {
   def bitmap: Bitmap64
 }
 
-/** An already-resolved bitmap (CDF diff probes build these directly). */
+/** An already-resolved bitmap (CDF's DV-growth diffs). */
 final class ResolvedDv(bm: Bitmap64) extends DvHandle {
   override def bitmap: Bitmap64 = bm
 }
@@ -100,57 +108,6 @@ final class DvSlot(
     }
     b
   }
-}
-
-/** Per-task memoized (file → bitmap) resolver: rows arrive clustered by
-  * file, so the common case is a byte-equality check on the previous path
-  * — no per-row String allocation or map lookup. */
-class DvLookupCache extends Serializable {
-  private var lastPath: UTF8String = _
-  private var lastBitmap: Bitmap64 = _
-  private var map: Map[String, DvHandle] = _
-  def deleted(bc: Broadcast[Map[String, DvHandle]], path: UTF8String, idx: Long): Boolean = {
-    if (lastPath == null || !lastPath.equals(path)) {
-      if (map == null) map = bc.value
-      lastPath = path.clone()
-      lastBitmap = map.get(path.toString) match {
-        case Some(slot) => if (slot == null) null else slot.bitmap
-        case None => throw new IllegalStateException(
-          s"scanned file not in the snapshot's DV registry (path rendering mismatch?): $path")
-      }
-    }
-    lastBitmap != null && lastBitmap.contains(idx)
-  }
-}
-
-/** (file_path, row_index) ∈ deletion vectors? O(1) broadcast bitmap probe,
-  * with real codegen so the scan's WholeStageCodegen span stays intact. */
-case class DvRowDeleted(
-    left: Expression,
-    right: Expression,
-    dvs: Broadcast[Map[String, DvHandle]])
-  extends BinaryExpression {
-  override def dataType: DataType = BooleanType
-
-  @transient private lazy val interpretedCache = new DvLookupCache
-
-  override def nullSafeEval(path: Any, idx: Any): Any =
-    interpretedCache.deleted(dvs, path.asInstanceOf[UTF8String], idx.asInstanceOf[Long])
-
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-    val bcRef = ctx.addReferenceObj("dvsBc", dvs, "org.apache.spark.broadcast.Broadcast")
-    val cache = ctx.addMutableState("graft.delta.DvLookupCache", "dvCache",
-      v => s"$v = new graft.delta.DvLookupCache();")
-    nullSafeCodeGen(ctx, ev, (p, i) =>
-      s"${ev.value} = $cache.deleted($bcRef, $p, $i);")
-  }
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): DvRowDeleted =
-    copy(left = l, right = r)
-  override def prettyName: String = "dv_row_deleted"
 }
 
 /** Mutable 64-bit roaring bitmap builder — the per-file aggregation buffer
@@ -475,7 +432,7 @@ object DeltaDelete {
     ProtocolGate.validateWrite(snap, "DELETE")
     rewrite(spark, log, snap, "DELETE",
       // deleted rows kept: already-deleted matches union away
-      hits = Some(snap.relationDF(dropDeleted = false).where(condition)
+      hits = Some(snap.relationDF(rows = RowSelection.All).where(condition)
         .select(col("_metadata.file_path").as("p"), col("_metadata.row_index").as("i"))),
       rows = None,
       // CDF: the newly deleted rows are the LIVE matches (already-deleted

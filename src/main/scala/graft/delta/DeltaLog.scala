@@ -367,14 +367,6 @@ class DeltaLog private (@transient val spark: SparkSession, val tablePath: Path)
           }.getOrElse(Map.empty[String, String]))
     }
 
-  /** Paths of `cdc` actions in commit `v` (URL-encoded, as written). The
-    * action model deliberately omits cdc (state replay skips them), so CDF
-    * reads pull them straight off the wire format. */
-  def readCommitCdcPaths(v: Long): Seq[String] =
-    ActionJson.parseDocuments(DeltaLog.readText(fs, commitFile(v))).flatMap { n =>
-      Option(n.get("cdc")).filterNot(_.isNull).map(_.get("path").asText)
-    }
-
   /** Checkpoint at `v` → actions. A uuid-named V2 manifest wins over a
     * classic checkpoint for the same version (readers that understand v2
     * should prefer it per protocol); classic 1..n-part parquet otherwise. */

@@ -30,8 +30,11 @@ import org.apache.spark.sql.types.StructType
  * semantics), `ignoreChanges`.
  *
  * Scale: getOffset is one log listing; getBatch plans a bounded file
- * list (the range's adds) into an ordinary parquet scan — no state
- * beyond the engine's offset checkpoint.
+ * list (the range's adds) into a [[Snapshot.relation]] over exactly those
+ * files under the latest snapshot's metadata — the reader every table
+ * scan uses, so column mapping and the table's partition types apply and
+ * files that predate a column add read it as null. No state beyond the
+ * engine's offset checkpoint.
  *
  * Admission control: implements [[SupportsTriggerAvailableNow]] (v1
  * `Source` mixing in the connector interface, the same shape delta-spark
@@ -277,7 +280,6 @@ final class DeltaStreamSource(
           "micro-batch read them; restart the stream from an available " +
           "version")
     if (readChangeFeed) return getChangeBatch(versions)
-    val partitioned = log.update().metadata.partitionColumns.nonEmpty
     val adds = versions.flatMap { v =>
       val acts = log.readCommit(v)
       val removes = acts.flatMap(_.remove).filter(_.dataChange)
@@ -296,55 +298,28 @@ final class DeltaStreamSource(
       val until = if (v == endV) math.min(endIdx, all.size.toLong) else all.size.toLong
       all.slice(from.toInt, until.toInt)
     }
-    val batch = if (adds.isEmpty) {
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    } else {
-      val paths = adds.map { a =>
-        val d = Actions.percentDecode(a.path)
-        if (d.startsWith("/") || d.contains("://")) d
-        else new org.apache.hadoop.fs.Path(log.tablePath, d).toString
-      }
-      val snap = log.update()
-      if (snap.columnMappingMode == "none") {
-        val r = spark.read.schema(schema)
-        val df = (if (partitioned) r.option("basePath", log.tablePath.toString) else r)
-          .parquet(paths: _*)
-        df.select(schema.fieldNames.map(col).toIndexedSeq: _*)
-      } else {
-        // column-mapped tables store PHYSICAL names in the parquet files
-        // (and partition dirs): forcing the logical schema onto the stock
-        // parquet reader name-matches nothing and returns silent NULLs —
-        // read physically, then project back to logical names
-        val r = spark.read
-        val df = (if (partitioned) r.option("basePath", log.tablePath.toString) else r)
-          .parquet(paths: _*)
-        df.select(snap.schema.fields.map(snap.logicalColumn).toIndexedSeq: _*)
-      }
-    }
-    org.apache.spark.sql.GraftColumnBridge.asStreamingBatch(batch)
+    val batch =
+      if (adds.isEmpty) emptyBatch
+      else log.update().relationDF(files = Some(adds.map(_ -> None)))
+    asStreamingBatch(batch)
   }
 
-  /** CDF micro-batch: the version range's row-level change feed via
-    * [[DeltaTable.changes]] (DV-diff aware, cdc-file aware, fail-closed
-    * on underivable commits), stamped with the protocol's change
-    * columns. Versions with no dataChange actions contribute nothing. */
-  private def getChangeBatch(versions: Seq[Long]): DataFrame = {
-    val changed = versions.filter { v =>
-      val acts = log.readCommit(v)
-      log.readCommitCdcPaths(v).nonEmpty ||
-        acts.flatMap(_.add).exists(_.dataChange) ||
-        acts.flatMap(_.remove).exists(_.dataChange)
-    }
-    val batch =
-      if (changed.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else
-        DeltaTable.forPath(spark, log.tablePath.toString)
-          .changes(changed.min, changed.max)
+  /** CDF micro-batch: the versions' row-level change feed via
+    * [[DeltaTable.changeFeed]] (DV-diff aware, cdc-file aware, fail-closed
+    * on underivable commits, each commit file read once), stamped with
+    * the protocol's change columns. Versions with no dataChange actions
+    * contribute nothing. */
+  private def getChangeBatch(versions: Seq[Long]): DataFrame =
+    asStreamingBatch(DeltaTable.forPath(spark, log.tablePath.toString)
+      .changeFeed(versions).getOrElse(emptyBatch))
+
+  private def emptyBatch: DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+
+  /** The batch in this source's column order, as a streaming plan. */
+  private def asStreamingBatch(df: DataFrame): DataFrame =
     org.apache.spark.sql.GraftColumnBridge.asStreamingBatch(
-      batch.select(schema.fieldNames.map(col).toIndexedSeq: _*))
-  }
+      df.select(schema.fieldNames.map(n => col(s"`$n`")).toIndexedSeq: _*))
 
   override def commit(end: OffsetV1): Unit = ()
   override def stop(): Unit = ()

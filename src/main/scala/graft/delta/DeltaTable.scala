@@ -46,8 +46,6 @@ class DeltaTable private (val spark: SparkSession, val log: DeltaLog,
   def toDFWithVirtualColumns: DataFrame = {
     import org.apache.spark.sql.functions._
     val snap = snapshot
-    require(snap.columnMappingMode == "none",
-      "virtual-column scan not supported on column-mapped tables")
     val mapArgs = snap.allFiles.zipWithIndex.flatMap { case (f, i) =>
       val p = snap.absolutePath(f)
       Seq(p.toString -> i, p.toUri.getPath -> i)
@@ -292,62 +290,54 @@ class DeltaTable private (val spark: SparkSession, val log: DeltaLog,
    * of its row-level net change, documented rather than guessed at (the
    * reference reads CDF tables only as plain tables and never derives a
    * feed at all, test/sql/dat/all.test:197-206).
-   * Old commits' files may predate column adds/widening; frames are
-   * unioned null-filling the missing columns.
+   * Every frame reads through [[Snapshot.relation]] under this handle's
+   * snapshot: logical names on column-mapped tables, partition columns
+   * typed by the table (a removed file's values come from the log, else
+   * its Hive path), and files that predate a column add read it as null.
    */
   def changes(startVersion: Long, endVersion: Long): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge
-    import org.apache.spark.sql.catalyst.expressions.Not
-    import org.apache.spark.sql.functions.{col, lit}
-    import graft.delta.DvCodec.Bitmap64
     require(startVersion <= endVersion,
       s"changes: startVersion $startVersion > endVersion $endVersion")
     val have = log.listCommitVersions().toSet
     val versions = (startVersion to endVersion).filter(have.contains)
     require(versions.nonEmpty,
       s"changes: no commits in [$startVersion,$endVersion] for ${log.tablePath}")
-    val partitioned = snapshot.metadata.partitionColumns.nonEmpty
-    def readData(paths: Seq[String]): DataFrame = {
-      val r = spark.read
-      (if (partitioned) r.option("basePath", log.tablePath.toString) else r)
-        .parquet(paths: _*)
-    }
-    /** Physical→logical projection for DERIVED frames (raw data-file
-      * reads): on a column-mapped table the parquet columns carry
-      * physical names — without this the derived feed would emit
-      * col-<uuid> names (the cdc-file branch already projects). */
-    def toLogical(df: DataFrame): DataFrame =
-      if (snapshot.columnMappingMode == "none") df
-      else df.select(snapshot.schema.fields.map(snapshot.logicalColumn).toIndexedSeq: _*)
-    def abs(p: String): String = {
-      val d = Actions.percentDecode(p)
-      if (d.startsWith("/") || d.contains("://")) d
-      else new org.apache.hadoop.fs.Path(log.tablePath, d).toString
-    }
-    /** Rows of `files` whose row_index is IN (keep=true) / NOT IN
-      * (keep=false) the file's bitmap — the same broadcast-probe expression
-      * the DV scan uses, fail-closed on unregistered paths. */
-    def bitmapRows(files: Seq[(String, Bitmap64)], keep: Boolean): Option[DataFrame] =
-      if (files.isEmpty) None
-      else {
-        val reg: Map[String, DvHandle] = files.flatMap { case (p, bm) =>
-          // qualified + raw renderings, mirroring DeletionVectors.registry
-          // (the scan reports file: URIs; fail-closed probe needs them all)
-          val hp = log.fs.makeQualified(new org.apache.hadoop.fs.Path(p))
-          val h: DvHandle = new ResolvedDv(bm)
-          Seq(hp.toString -> h, hp.toUri.getPath -> h, hp.toUri.toString -> h)
-        }.toMap
-        val df = readData(files.map(_._1))
-        val hit = DvRowDeleted(
-          GraftColumnBridge.expression(col("_metadata.file_path")),
-          GraftColumnBridge.expression(col("_metadata.row_index")),
-          spark.sparkContext.broadcast(reg))
-        val cond = if (keep) hit else Not(hit)
-        Some(df.where(GraftColumnBridge.column(cond))
-          .select(df.columns.map(c => col(s"`$c`")).toIndexedSeq: _*))
-      }
+    val feed = changeFeed(versions)
+    require(feed.isDefined,
+      s"changes: no dataChange actions in [$startVersion,$endVersion]")
+    feed.get
+  }
+
+  /** [[changes]] over the given commit versions, reading each commit file
+    * once; None when none of them changes a row. Every frame is a
+    * [[Snapshot.relation]] over the version's files under this handle's
+    * snapshot metadata, so column mapping, deletion vectors and the
+    * table's partition types apply as in [[toDF]]. */
+  private[delta] def changeFeed(versions: Seq[Long]): Option[DataFrame] = {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.types.{StringType, StructField}
+    import graft.delta.DvCodec.Bitmap64
+    val snap = snapshot
+    val slot = DeletionVectors.slots(log)
+    val partKeys = snap.physicalPartitionSchema.fieldNames.toSeq
     def dvBitmap(d: Option[DeletionVectorDescriptor]): Bitmap64 =
       d.map(dv => DeletionVectorStore.read(log, dv)).getOrElse(Bitmap64.empty)
+    /** A pure remove as a readable file: partition values and size from
+      * the log when the writer recorded them, else from its Hive path and
+      * the file itself. */
+    def removedFile(v: Long, r: RemoveFile): AddFile = {
+      val pv = r.partitionValues.getOrElse(
+        DeltaWriter.partitionValuesFromPath(r.decodedPath, partKeys))
+      partKeys.find(k => !pv.contains(k)).foreach { k =>
+        throw new IllegalStateException(
+          s"changes: version $v of ${log.tablePath} removes ${r.decodedPath} " +
+            s"with no value for partition column $k in the log or its path")
+      }
+      val size = r.size.getOrElse(log.fs.getFileStatus(
+        Snapshot.absolutePathOf(log.tablePath.toString, r.decodedPath)).getLen)
+      AddFile(r.path, pv, size, modificationTime = 0L, deletionVector = r.deletionVector)
+    }
     val frames = versions.flatMap { v =>
       val acts = log.readCommit(v)
       // ICT-aware: the stamped _commit_timestamp must agree with the
@@ -357,22 +347,20 @@ class DeltaTable private (val spark: SparkSession, val log: DeltaLog,
       // timestamped before the boundary that admitted them)
       val ts = acts.flatMap(_.commitInfo).headOption
         .map(ci => ci.inCommitTimestamp.getOrElse(ci.timestamp)).getOrElse(0L)
-      val cdcPaths = log.readCommitCdcPaths(v)
-      def stamp(df: DataFrame, tpe: Option[String]): DataFrame = {
-        val typed = tpe.map(t => df.withColumn("_change_type", lit(t))).getOrElse(df)
-        typed.withColumn("_commit_version", lit(v))
-          .withColumn("_commit_timestamp", lit(ts))
-      }
-      if (cdcPaths.nonEmpty) {
-        // cdc files are authoritative for the version's row-level changes.
-        // On column-mapped tables they are keyed PHYSICALLY like data
-        // files — project back to logical names (+_change_type literal).
-        val raw = readData(cdcPaths.map(abs))
-        val logical =
-          if (snapshot.columnMappingMode == "none") raw
-          else raw.select((snapshot.schema.fields.map(snapshot.logicalColumn) :+
-            col("_change_type")).toIndexedSeq: _*)
-        Seq(stamp(logical, None))
+      def read(files: Seq[(AddFile, Option[DvHandle])], rows: RowSelection,
+          changeType: Column, extra: Seq[StructField] = Nil): Option[DataFrame] =
+        if (files.isEmpty) None
+        else Some(snap.relationDF(rows = rows, extraDataCols = extra, files = Some(files))
+          .select(snap.schema.fieldNames.map(n => col(s"`$n`")).toIndexedSeq ++ Seq(
+            changeType.as("_change_type"), lit(v).as("_commit_version"),
+            lit(ts).as("_commit_timestamp")): _*))
+      val cdcFiles = acts.flatMap(_.cdc)
+      if (cdcFiles.nonEmpty) {
+        // cdc files are authoritative for the version's row-level changes
+        // and carry `_change_type` per row
+        read(cdcFiles.map(c => AddFile(c.path, c.partitionValues, c.size, 0L) -> None),
+          RowSelection.All, col("_change_type"),
+          Seq(StructField("_change_type", StringType, nullable = true))).toSeq
       } else {
         val allAdds = acts.flatMap(_.add)
         val adds = allAdds.filter(_.dataChange)
@@ -385,7 +373,7 @@ class DeltaTable private (val spark: SparkSession, val log: DeltaLog,
         val freshAdds = adds.filterNot(a => readdedPaths.contains(a.decodedPath))
 
         // delete rows from DV growth: new DV ∖ old DV per re-added file
-        val dvDiffs = readds.map { r =>
+        val dvDiffs = readds.flatMap { r =>
           val a = addByPath(r.decodedPath)
           val oldDv = dvBitmap(r.deletionVector)
           val newDv = dvBitmap(a.deletionVector)
@@ -396,29 +384,21 @@ class DeltaTable private (val spark: SparkSession, val log: DeltaLog,
                 s"${r.decodedPath} without growing its deletion vector " +
                 "(row restore or in-place rewrite); CDF cannot be derived " +
                 "soundly — enable CDF on the writer")
-          abs(r.path) -> Bitmap64.andNot(newDv, oldDv)
-        }.filter(_._2.cardinality > 0)
-        // a pure remove deletes the file's still-LIVE rows (minus last DV)
-        val (removedWithDv, removedPlain) = pureRemoves.partition(_.deletionVector.isDefined)
-        val ins = Seq(
-          bitmapRows(freshAdds.filter(_.deletionVector.isDefined)
-            .map(a => abs(a.path) -> dvBitmap(a.deletionVector)), keep = false),
-          Option(freshAdds.filter(_.deletionVector.isEmpty))
-            .filter(_.nonEmpty).map(as => readData(as.map(a => abs(a.path))))
-        ).flatten.map(df => stamp(toLogical(df), Some("insert")))
-        val del = Seq(
-          bitmapRows(dvDiffs, keep = true),
-          bitmapRows(removedWithDv.map(r => abs(r.path) -> dvBitmap(r.deletionVector)),
-            keep = false),
-          Option(removedPlain).filter(_.nonEmpty)
-            .map(rs => readData(rs.map(r => abs(r.path))))
-        ).flatten.map(df => stamp(toLogical(df), Some("delete")))
-        ins ++ del
+          val diff = Bitmap64.andNot(newDv, oldDv)
+          if (diff.cardinality > 0) Some(a -> Some(new ResolvedDv(diff): DvHandle)) else None
+        }
+        Seq(
+          // fresh adds insert their live rows (minus any DV they carry)
+          read(freshAdds.map(a => a -> a.deletionVector.map(slot)),
+            RowSelection.Live, lit("insert")),
+          read(dvDiffs, RowSelection.Deleted, lit("delete")),
+          // a pure remove deletes the file's still-LIVE rows (minus last DV)
+          read(pureRemoves.map(r => removedFile(v, r) -> r.deletionVector.map(slot)),
+            RowSelection.Live, lit("delete"))
+        ).flatten
       }
     }
-    require(frames.nonEmpty,
-      s"changes: no dataChange actions in [$startVersion,$endVersion]")
-    frames.reduce(_.unionByName(_, allowMissingColumns = true))
+    frames.reduceOption(_.union(_))
   }
 
   /** DELETE via deletion vectors (beyond the reference's own surface,

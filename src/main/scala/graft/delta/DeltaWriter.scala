@@ -341,7 +341,7 @@ object DeltaWriter {
           (snap.allFiles.map(f => Action(RemoveFile(f.path, Some(now),
             dataChange = true, f.deletionVector))), Nil)
         case Some(cond) =>
-          val hitRows = snap.relationDF(dropDeleted = false).where(cond)
+          val hitRows = snap.relationDF(rows = RowSelection.All).where(cond)
             .select(col("_metadata.file_path").as("p"),
               col("_metadata.row_index").as("i"))
           val (dvActs, _) = DeltaDelete.dvActions(log, snap, hitRows, staged)

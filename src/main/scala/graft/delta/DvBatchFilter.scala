@@ -20,6 +20,10 @@ import graft.delta.DvCodec.Bitmap64
  *     vectors (bounded by batch size, typically 4096 rows); constant
  *     partition-value vectors pass through as they are.
  *
+ * With `keepDeleted` the survivors are the bitmap's rows instead (CDF's
+ * delete rows); the zero-copy re-wrap then applies when every row of the
+ * batch is in the bitmap.
+ *
  * At scale this is the difference between "one DV'd file among 10k" costing
  * one batch copy vs. the entire table scanning row-at-a-time.
  */
@@ -36,10 +40,12 @@ private[delta] object DvBatchFilter {
       case _ => false
     })
 
-  def filterBatch(batch: ColumnarBatch, bm: Bitmap64, idxOrdinal: Int,
-      keep: Array[Int], outTypes: Array[DataType]): ColumnarBatch = {
+  /** Rows whose index is outside `bm` (or, with `keepDeleted`, inside
+    * it); a null `bm` marks every row live. */
+  def filterBatch(batch: ColumnarBatch, bm: Bitmap64, keepDeleted: Boolean,
+      idxOrdinal: Int, keep: Array[Int], outTypes: Array[DataType]): ColumnarBatch = {
     val n = batch.numRows()
-    val deleted =
+    val inBitmap =
       if (bm == null) 0
       else {
         val idxCol = batch.column(idxOrdinal)
@@ -51,7 +57,8 @@ private[delta] object DvBatchFilter {
         }
         d
       }
-    if (deleted == 0) {
+    val nOut = if (keepDeleted) inBitmap else n - inBitmap
+    if (nOut == n) {
       // zero-copy: new wrapper over the SAME vectors, minus the idx column
       val vs = new Array[ColumnVector](keep.length)
       var i = 0
@@ -60,7 +67,6 @@ private[delta] object DvBatchFilter {
     } else {
       val out = new Array[ColumnVector](keep.length)
       val idxCol = batch.column(idxOrdinal)
-      val nOut = n - deleted
       var c = 0
       while (c < keep.length) {
         out(c) = batch.column(keep(c)) match {
@@ -69,7 +75,7 @@ private[delta] object DvBatchFilter {
           case k: ConstantColumnVector => k
           case src =>
             val dst = new OnHeapColumnVector(math.max(nOut, 1), outTypes(c))
-            copySurvivors(src, outTypes(c), idxCol, bm, n, dst)
+            copySurvivors(src, outTypes(c), idxCol, bm, keepDeleted, n, dst)
             dst
         }
         c += 1
@@ -79,11 +85,11 @@ private[delta] object DvBatchFilter {
   }
 
   private def copySurvivors(src: ColumnVector, dt: DataType, idxCol: ColumnVector,
-      bm: Bitmap64, n: Int, dst: OnHeapColumnVector): Unit = {
+      bm: Bitmap64, keepDeleted: Boolean, n: Int, dst: OnHeapColumnVector): Unit = {
     var r = 0
     var w = 0
     while (r < n) {
-      if (!bm.contains(idxCol.getLong(r))) {
+      if (bm.contains(idxCol.getLong(r)) == keepDeleted) {
         if (src.isNullAt(r)) dst.putNull(w)
         else dt match {
           case BooleanType => dst.putBoolean(w, src.getBoolean(r))

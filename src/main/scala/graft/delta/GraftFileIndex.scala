@@ -68,17 +68,19 @@ class GraftFileIndex(spark: SparkSession, snapshot: Snapshot,
       * listFiles call — by then subordinate jobs are legal, making this the
       * Spark analog of the reference's dynamic filter re-prune
       * (delta_multi_file_list.cpp:989-1021). */
-    dynamicThunks: Seq[() => Seq[Expression]] = Nil) extends FileIndex {
+    dynamicThunks: Seq[() => Seq[Expression]] = Nil,
+    /** An explicit file list read under the snapshot's metadata (see
+      * [[Snapshot.relation]]); None lists the snapshot's own files. */
+    files: Option[Seq[AddFile]] = None) extends FileIndex {
 
   def withDynamicThunk(t: () => Seq[Expression]): GraftFileIndex =
-    new GraftFileIndex(spark, snapshot, options, dynamicThunks :+ t)
+    new GraftFileIndex(spark, snapshot, options, dynamicThunks :+ t, files)
 
-  /** Exact live row count from log metadata (DV-aware) — the
-    * [[MetadataOnlyCount]] rewrite's input; None bails to a real scan. */
-  def snapshotExactRowCount: Option[Long] = snapshot.exactRowCount
-
-  /** The snapshot, for the metadata-only MIN/MAX/COUNT(col) rewrite. */
-  private[delta] def snapshotRef: Snapshot = snapshot
+  /** The snapshot whose log facts describe exactly the listed files — the
+    * [[MetadataOnlyCount]] rewrites' input. None for an explicit file
+    * list: its rows are not the snapshot's, so those rewrites bail. */
+  private[delta] def metadataSnapshot: Option[Snapshot] =
+    if (files.isEmpty) Some(snapshot) else None
 
   /** Evaluated once; a failing thunk degrades to no dynamic pruning. */
   @transient private lazy val dynamicFilters: Seq[Expression] =
@@ -90,9 +92,9 @@ class GraftFileIndex(spark: SparkSession, snapshot: Snapshot,
   // stats keys are PHYSICAL, so filters are renamed before stats lookups
   override def partitionSchema: StructType = snapshot.partitionSchema
   override def refresh(): Unit = ()
-  override def sizeInBytes: Long = snapshot.sizeInBytes
+  override def sizeInBytes: Long = files.fold(snapshot.sizeInBytes)(_.map(_.size).sum)
   override def inputFiles: Array[String] =
-    snapshot.allFiles.map(f => snapshot.absolutePath(f).toString).toArray
+    files.getOrElse(snapshot.allFiles).map(f => snapshot.absolutePath(f).toString).toArray
 
   override def listFiles(
       partitionFilters: Seq[Expression],
@@ -115,7 +117,7 @@ class GraftFileIndex(spark: SparkSession, snapshot: Snapshot,
       GraftMetrics.record(PushdownEvent(
         snapshot.log.tablePath.toString, "generated",
         derivedPartFilters.map(_.sql).mkString(" AND "),
-        snapshot.fileCount.toInt, -1))
+        filesBefore, -1))
     val allPartFilters = partitionFilters ++ derivedPartFilters
     // 2. partition predicate, bound POSITIONALLY against the partition
     //    schema (row construction looks values up by the LOG's physical
@@ -135,7 +137,10 @@ class GraftFileIndex(spark: SparkSession, snapshot: Snapshot,
     // one pass over the snapshot's state — in-memory filter for regular
     // snapshots, executor-side Dataset filter + survivor collect for
     // checkpoint-backed LazySnapshots (10⁶+ adds never hit the driver)
-    val afterPartition = snapshot.scanCandidates(statsKeeper, partitionBound)
+    val afterPartition = files match {
+      case Some(fs) => snapshot.filterFiles(fs, statsKeeper, partitionBound)
+      case None => snapshot.scanCandidates(statsKeeper, partitionBound)
+    }
     // event typing mirrors the reference's log (file_skipping_params.test):
     // `constant` only when the constant path is ENABLED and had filters to
     // push; a disabled-or-filterless listing records `none` (observability
@@ -145,7 +150,7 @@ class GraftFileIndex(spark: SparkSession, snapshot: Snapshot,
       snapshot.log.tablePath.toString,
       if (options.constantEnabled && dataFilters.nonEmpty) "constant" else "none",
       (dataFilters ++ partitionFilters).map(_.sql).mkString(" AND "),
-      snapshot.fileCount.toInt, afterPartition.size))
+      filesBefore, afterPartition.size))
     // 3. dynamic (join-derived) stats re-prune — bounds computed at runtime
     val afterDynamic =
       if (dynamicThunks.isEmpty || !options.dynamicEnabled) afterPartition
@@ -170,6 +175,8 @@ class GraftFileIndex(spark: SparkSession, snapshot: Snapshot,
           files.map(fileStatus).toArray)
       }.toSeq
   }
+
+  private def filesBefore: Int = files.fold(snapshot.fileCount.toInt)(_.size)
 
   private def fileStatus(f: AddFile): FileStatus =
     new FileStatus(f.size, false, 1, 128L * 1024 * 1024, f.modificationTime,

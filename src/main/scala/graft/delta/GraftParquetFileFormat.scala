@@ -32,21 +32,28 @@ import graft.delta.DvCodec.Bitmap64
  *    readers from row-group metadata, so it stays correct under page
  *    skipping and file splits); each row's index is probed against the
  *    file's broadcast bitmap and dropped if deleted, then the extra
- *    column is projected away. The probe FAILS CLOSED: every file in the
- *    snapshot is registered (null bitmap when DV-less) and an
- *    unrecognized path raises rather than resurrecting deleted rows.
+ *    column is projected away. The probe FAILS CLOSED: every listed file
+ *    is registered (null bitmap when DV-less) and an unrecognized path
+ *    raises rather than resurrecting deleted rows. With `keepDeleted` the
+ *    probe is inverted: only the bitmap's rows pass (CDF's delete rows),
+ *    and a file without a bitmap is not read at all.
  *
  * Scale: the DV registry ships once per executor (broadcast); the probe is
  * O(1) per row with no join or shuffle, preserving scan partitioning.
  */
 class GraftParquetFileFormat(
     logicalToPhysical: Map[String, StructField],
+    /** Bitmaps of the listed files; None = no listed file has one. */
     dvRegistry: Option[Broadcast[Map[String, DvHandle]]],
+    keepDeleted: Boolean,
     fieldIdMode: Boolean) extends ParquetFileFormat {
 
   /** Whether this reader drops DV-deleted rows ([[Snapshot.relation]]
-    * hands it the registry of the snapshot its file index lists). */
-  def dropsDeletedRows: Boolean = dvRegistry.isDefined
+    * hands it the registry of the files its file index lists). */
+  def dropsDeletedRows: Boolean = dvRegistry.isDefined && !keepDeleted
+
+  /** Whether this reader emits only the bitmaps' rows. */
+  def keepsOnlyDeletedRows: Boolean = keepDeleted
 
   private def isMapped: Boolean = logicalToPhysical.exists {
     case (l, p) => l != p.name || fieldIdMode
@@ -61,9 +68,11 @@ class GraftParquetFileFormat(
   // scan's generated code casts data columns to the off-heap class, and
   // the compactor copies on-heap.
   override def supportBatch(sparkSession: SparkSession, schema: StructType): Boolean =
-    (dvRegistry.isEmpty || (DvBatchFilter.allAtomic(schema) &&
+    (!filtersRows || (DvBatchFilter.allAtomic(schema) &&
       !sparkSession.sessionState.conf.offHeapColumnVectorEnabled)) &&
       super.supportBatch(sparkSession, schema)
+
+  private def filtersRows: Boolean = dvRegistry.isDefined || keepDeleted
 
   // Distinct formats must not compare equal (ParquetFileFormat.equals is
   // class-based): exchange/scan reuse would otherwise conflate two tables'
@@ -180,66 +189,68 @@ class GraftParquetFileFormat(
     if (fieldIdMode)
       hadoopConf.setBoolean("spark.sql.parquet.fieldId.read.enabled", true)
 
-    dvRegistry match {
-      case None =>
-        super.buildReaderWithPartitionValues(sparkSession, physData,
-          partitionSchema, physRequired, physFilters, options, hadoopConf)
+    if (!filtersRows)
+      return super.buildReaderWithPartitionValues(sparkSession, physData,
+        partitionSchema, physRequired, physFilters, options, hadoopConf)
 
-      case Some(bc) =>
-        val rowIdxName = GraftColumnBridge.parquetRowIndexTempColumnName
-        // _metadata.row_index requests already inject the temp column;
-        // reuse it rather than creating a duplicate
-        val existingIdx = physRequired.fieldNames.indexOf(rowIdxName)
-        // nullable=true is required: the parquet readers special-case the
-        // temp column by NAME and generate it, but a non-nullable field
-        // first trips the missing-required-column check
-        val withIdx =
-          if (existingIdx >= 0) physRequired
-          else StructType(physRequired.fields :+
-            StructField(rowIdxName, LongType, nullable = true))
-        val idxOrdinal = if (existingIdx >= 0) existingIdx else physRequired.length
-        val dropIdxColumn = existingIdx < 0
+    val rowIdxName = GraftColumnBridge.parquetRowIndexTempColumnName
+    // _metadata.row_index requests already inject the temp column;
+    // reuse it rather than creating a duplicate
+    val existingIdx = physRequired.fieldNames.indexOf(rowIdxName)
+    // nullable=true is required: the parquet readers special-case the
+    // temp column by NAME and generate it, but a non-nullable field
+    // first trips the missing-required-column check
+    val withIdx =
+      if (existingIdx >= 0) physRequired
+      else StructType(physRequired.fields :+
+        StructField(rowIdxName, LongType, nullable = true))
+    val idxOrdinal = if (existingIdx >= 0) existingIdx else physRequired.length
+    val dropIdxColumn = existingIdx < 0
 
-        val delegate = super.buildReaderWithPartitionValues(sparkSession,
-          physData, partitionSchema, withIdx, physFilters, options, hadoopConf)
+    val delegate = super.buildReaderWithPartitionValues(sparkSession,
+      physData, partitionSchema, withIdx, physFilters, options, hadoopConf)
 
-        val nOut = requiredSchema.length + partitionSchema.length
-        // delegate row layout: withIdx ++ partition values
-        val inFields = withIdx.fields ++ partitionSchema.fields
-        // whether the delegate hands out ColumnarBatches: the scan node
-        // decided it over its whole output (incl. `_metadata`) and super
-        // obeys that option, not a recomputation over this reader's schema
-        val returningBatch =
-          options.get(FileFormat.OPTION_RETURNING_BATCH).contains("true")
+    val nOut = requiredSchema.length + partitionSchema.length
+    // delegate row layout: withIdx ++ partition values
+    val inFields = withIdx.fields ++ partitionSchema.fields
+    // whether the delegate hands out ColumnarBatches: the scan node
+    // decided it over its whole output (incl. `_metadata`) and super
+    // obeys that option, not a recomputation over this reader's schema
+    val returningBatch =
+      options.get(FileFormat.OPTION_RETURNING_BATCH).contains("true")
+    // a local, so the per-row probe reads no field
+    val keepDeleted = this.keepDeleted
 
-        (pf: PartitionedFile) => {
-          val bm = bitmapFor(bc.value, pf)
-          val rows = delegate(pf)
-          if (returningBatch) {
-            val keep = inFields.indices.filter(i => !dropIdxColumn || i != idxOrdinal).toArray
-            val outTypes = keep.map(i => inFields(i).dataType)
-            // elements are really ColumnarBatch (batch contract); keep the
-            // lambda param erased so scalac doesn't insert an InternalRow cast
-            rows.asInstanceOf[Iterator[AnyRef]].map { r =>
-              val batch = r.asInstanceOf[org.apache.spark.sql.vectorized.ColumnarBatch]
-              DvBatchFilter.filterBatch(batch, bm, idxOrdinal, keep, outTypes): AnyRef
-            }.asInstanceOf[Iterator[InternalRow]]
-          } else {
-            val filtered =
-              if (bm == null) rows
-              else rows.filter(r => !bm.contains(r.getLong(idxOrdinal)))
-            if (!dropIdxColumn) filtered
-            else {
-              val proj = UnsafeProjection.create(
-                inFields.zipWithIndex.collect {
-                  case (f, i) if i != idxOrdinal =>
-                    BoundReference(i, f.dataType, f.nullable)
-                }.toIndexedSeq)
-              assert(inFields.length - 1 == nOut)
-              filtered.map(proj)
-            }
-          }
+    (pf: PartitionedFile) => {
+      val bm = dvRegistry.map(bc => bitmapFor(bc.value, pf)).orNull
+      // no bitmap, so no row to keep: the file is not opened
+      if (keepDeleted && bm == null) Iterator.empty
+      else if (returningBatch) {
+        val keep = inFields.indices.filter(i => !dropIdxColumn || i != idxOrdinal).toArray
+        val outTypes = keep.map(i => inFields(i).dataType)
+        // elements are really ColumnarBatch (batch contract); keep the
+        // lambda param erased so scalac doesn't insert an InternalRow cast
+        delegate(pf).asInstanceOf[Iterator[AnyRef]].map { r =>
+          val batch = r.asInstanceOf[org.apache.spark.sql.vectorized.ColumnarBatch]
+          DvBatchFilter.filterBatch(batch, bm, keepDeleted, idxOrdinal, keep,
+            outTypes): AnyRef
+        }.asInstanceOf[Iterator[InternalRow]]
+      } else {
+        val rows = delegate(pf)
+        val filtered =
+          if (bm == null) rows
+          else rows.filter(r => bm.contains(r.getLong(idxOrdinal)) == keepDeleted)
+        if (!dropIdxColumn) filtered
+        else {
+          val proj = UnsafeProjection.create(
+            inFields.zipWithIndex.collect {
+              case (f, i) if i != idxOrdinal =>
+                BoundReference(i, f.dataType, f.nullable)
+            }.toIndexedSeq)
+          assert(inFields.length - 1 == nOut)
+          filtered.map(proj)
         }
+      }
     }
   }
 
@@ -249,7 +260,7 @@ class GraftParquetFileFormat(
       .orElse(map.get(p.toString))
       .orElse(map.get(p.toUri.getPath))
       .getOrElse(throw new IllegalStateException(
-        s"scanned file not in the snapshot's DV registry (path rendering mismatch?): ${pf.filePath}"))
+        s"scanned file not in the read's DV registry (path rendering mismatch?): ${pf.filePath}"))
     if (handle == null) null else handle.bitmap
   }
 }

@@ -46,24 +46,26 @@ import org.apache.spark.sql.types._
  *    constrains extremes).
  *
  * The child must be a bare (possibly column-pruned) scan of a
- * [[GraftFileIndex]]-backed relation with no filters. `count(*)` equals
- * the metadata live count only when the scan yields live rows alone: its
- * format drops this snapshot's DV-deleted rows, or the table has no DVs —
- * a relation that keeps deleted rows (the DML's raw scan) on a DV table
- * keeps its real scan. Anything else keeps the real scan.
+ * [[GraftFileIndex]]-backed relation over the snapshot's own files with no
+ * filters. `count(*)` equals the metadata live count only when the scan
+ * yields live rows alone: its format drops this snapshot's DV-deleted
+ * rows, or the table has no DVs — a relation that keeps deleted rows (the
+ * DML's raw scan) on a DV table keeps its real scan. A relation over an
+ * explicit file list (change feed, stream batch) or one that keeps only
+ * deleted rows always keeps its real scan.
  */
 class MetadataOnlyCount(spark: SparkSession) extends Rule[LogicalPlan] {
 
-  /** The scan under projections, plus whether it yields live rows only. */
-  private def unwrap(plan: LogicalPlan): Option[(GraftFileIndex, Boolean)] = plan match {
+  /** The scanned snapshot under projections, plus whether the scan yields
+    * live rows only. */
+  private def unwrap(plan: LogicalPlan): Option[(Snapshot, Boolean)] = plan match {
     case lr: LogicalRelation => lr.relation match {
-      case fs: HadoopFsRelation => fs.location match {
-        case g: GraftFileIndex =>
-          val live = !g.snapshotRef.hasDeletionVectors || (fs.fileFormat match {
-            case f: GraftParquetFileFormat => f.dropsDeletedRows
-            case _ => false
-          })
-          Some((g, live))
+      case fs: HadoopFsRelation => (fs.location, fs.fileFormat) match {
+        case (g: GraftFileIndex, f: GraftParquetFileFormat) =>
+          g.metadataSnapshot.flatMap { snap =>
+            if (f.keepsOnlyDeletedRows) None
+            else Some((snap, !snap.hasDeletionVectors || f.dropsDeletedRows))
+          }
         case _ => None
       }
       case _ => None
@@ -116,8 +118,7 @@ class MetadataOnlyCount(spark: SparkSession) extends Rule[LogicalPlan] {
     * the real scan. `SELECT DISTINCT pc` and `GROUP BY pc` count/min/max
     * over a 100 TB table become one metadata pass, O(#partitions). */
   private def rewriteGrouped(a: Aggregate, child: LogicalPlan): Option[LogicalPlan] = {
-    val (index, live) = unwrap(child).getOrElse(return None)
-    val snap = index.snapshotRef
+    val (snap, live) = unwrap(child).getOrElse(return None)
     // the answer is the LIVE grouping; a scan that keeps DV-deleted rows
     // includes them — bail exactly like the global count
     if (!live) return None
@@ -202,8 +203,7 @@ class MetadataOnlyCount(spark: SparkSession) extends Rule[LogicalPlan] {
   }
 
   private def rewrite(a: Aggregate, child: LogicalPlan): Option[LogicalPlan] = {
-    val (index, live) = unwrap(child).getOrElse(return None)
-    val snap = index.snapshotRef
+    val (snap, live) = unwrap(child).getOrElse(return None)
     // Which columns need EXACT extremes (min/max) vs only nullCount
     // arithmetic (count(col))? count(col) is answerable for ANY type —
     // the truncated-bounds argument only constrains extremes.
@@ -226,7 +226,7 @@ class MetadataOnlyCount(spark: SparkSession) extends Rule[LogicalPlan] {
     // count(*) from Σ numRecords − Σ DV cardinality is the LIVE count —
     // a scan that keeps DV-deleted rows counts them too
     def countStar: Option[Long] =
-      if (live) index.snapshotExactRowCount else None
+      if (live) snap.exactRowCount else None
     val values: Seq[Any] = a.aggregateExpressions.map {
       case Alias(AggregateExpression(f, Complete, false, None, _), _) => f match {
         case Count(Seq(Literal(1, _))) =>

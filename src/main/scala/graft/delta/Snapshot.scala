@@ -6,6 +6,19 @@ import org.apache.spark.sql.execution.datasources.HadoopFsRelation
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
+/** Which rows of each listed file a [[Snapshot.relation]] read emits,
+  * given the file's deletion bitmap. */
+private[delta] sealed trait RowSelection
+private[delta] object RowSelection {
+  /** Rows outside the bitmap: the table's live rows. */
+  case object Live extends RowSelection
+  /** Every row, bitmaps ignored (a DML that unions new deletes into the
+    * existing bitmaps). */
+  case object All extends RowSelection
+  /** Only the bitmap's rows (CDF's delete rows of a DV-growth commit). */
+  case object Deleted extends RowSelection
+}
+
 object Snapshot {
   /** THE canonical decoded-path → absolute-Path rule (absolute paths pass
     * through; relative ones resolve against the table root). A pure
@@ -17,26 +30,6 @@ object Snapshot {
   private[delta] def absolutePathOf(tablePath: String, decodedPath: String): Path = {
     val p = new Path(decodedPath)
     if (p.isAbsolute) p else new Path(new Path(tablePath), p)
-  }
-
-  /** True when `a` and `b` agree on every (nested) field NAME — i.e. no
-    * physical rename applies anywhere inside the type. Metadata and
-    * nullability are ignored: only a NAME difference needs a restoring
-    * cast on read / a renaming cast on write. */
-  private[delta] def sameFieldNames(
-      a: org.apache.spark.sql.types.DataType,
-      b: org.apache.spark.sql.types.DataType): Boolean = {
-    import org.apache.spark.sql.types.{ArrayType, MapType}
-    (a, b) match {
-      case (x: StructType, y: StructType) =>
-        x.length == y.length && x.fields.zip(y.fields).forall { case (f, g) =>
-          f.name == g.name && sameFieldNames(f.dataType, g.dataType)
-        }
-      case (ArrayType(x, _), ArrayType(y, _)) => sameFieldNames(x, y)
-      case (MapType(xk, xv, _), MapType(yk, yv, _)) =>
-        sameFieldNames(xk, yk) && sameFieldNames(xv, yv)
-      case _ => true
-    }
   }
 }
 
@@ -97,10 +90,16 @@ class Snapshot(
   private[graft] def scanCandidates(
       statsKeeper: Option[AddFile => Boolean],
       partitionBound: Option[org.apache.spark.sql.catalyst.expressions.Expression])
+      : Seq[AddFile] = filterFiles(allFiles, statsKeeper, partitionBound)
+
+  /** [[scanCandidates]]' in-memory filter over any file list. */
+  private[delta] def filterFiles(files: Seq[AddFile],
+      statsKeeper: Option[AddFile => Boolean],
+      partitionBound: Option[org.apache.spark.sql.catalyst.expressions.Expression])
       : Seq[AddFile] = {
     val afterStats = statsKeeper match {
-      case Some(k) => FileSkipping.filterWith(allFiles, k)
-      case None => allFiles
+      case Some(k) => FileSkipping.filterWith(files, k)
+      case None => files
     }
     partitionBound match {
       case Some(b) =>
@@ -155,19 +154,6 @@ class Snapshot(
       case MapType(k, v, n) => MapType(physicalType(k), physicalType(v), n)
       case other => other
     }
-  }
-
-  /** Column expression restoring a physically-named column back to its
-    * LOGICAL rendition: top-level alias, plus a positional struct cast
-    * when any NESTED field was physically renamed (cast-free otherwise —
-    * flat mapped tables keep their plans unchanged). */
-  private[delta] def logicalColumn(f: org.apache.spark.sql.types.StructField)
-      : org.apache.spark.sql.Column = {
-    val c = col(s"`${physicalName(f)}`")
-    val restored =
-      if (Snapshot.sameFieldNames(physicalType(f.dataType), f.dataType)) c
-      else c.cast(f.dataType)
-    restored.as(f.name)
   }
 
   @transient private lazy val physicalNames: Map[String, String] =
@@ -282,7 +268,7 @@ class Snapshot(
   def asRelation: org.apache.spark.sql.sources.BaseRelation = asRelation(ScanOptions())
 
   def asRelation(options: ScanOptions): org.apache.spark.sql.sources.BaseRelation =
-    relation(options, dropDeleted = true, Nil)
+    relation(options, RowSelection.Live, Nil)
 
   /** THE read path of every snapshot scan: LOGICAL column names, with
     * deletion vectors and column mapping (name + id mode) applied INSIDE
@@ -291,29 +277,45 @@ class Snapshot(
     * `_metadata` stays reachable (the DML paths locate rows by
     * file_path/row_index).
     *
-    * @param dropDeleted   false keeps DV-deleted rows (a DML that unions
-    *                      new deletes into existing bitmaps)
+    * @param rows          which rows of each file: live, all, or only the
+    *                      bitmap's
     * @param extraDataCols extra physical pass-through columns (nullable;
     *                      files lacking them read null) — the materialized
-    *                      row-id columns a row-tracked rewrite preserves */
-  private[delta] def relation(options: ScanOptions, dropDeleted: Boolean,
-      extraDataCols: Seq[org.apache.spark.sql.types.StructField]): HadoopFsRelation = {
+    *                      row-id columns a row-tracked rewrite preserves,
+    *                      a change file's `_change_type`
+    * @param files         an explicit file list read under this snapshot's
+    *                      metadata instead of the snapshot's own files
+    *                      (change feed, stream batches), each with the
+    *                      bitmap `rows` applies to it; partition values
+    *                      come from each AddFile */
+  private[delta] def relation(options: ScanOptions, rows: RowSelection,
+      extraDataCols: Seq[org.apache.spark.sql.types.StructField],
+      files: Option[Seq[(AddFile, Option[DvHandle])]] = None): HadoopFsRelation = {
     val spark = log.spark
     val logicalToPhysical = dataSchema.fields.map(f => f.name -> physicalField(f)).toMap
+    val dvRegistry = (rows, files) match {
+      case (RowSelection.All, _) => None
+      case (_, None) => dvRegistryBroadcast
+      case (_, Some(fs)) =>
+        if (fs.forall(_._2.isEmpty)) None
+        else Some(spark.sparkContext.broadcast(DeletionVectors.registry(
+          log.tablePath.toString, fs.map { case (f, h) => f.decodedPath -> h })))
+    }
     HadoopFsRelation(
-      location = new GraftFileIndex(spark, this, options),
+      location = new GraftFileIndex(spark, this, options, files = files.map(_.map(_._1))),
       partitionSchema = partitionSchema,
       dataSchema = StructType(dataSchema.fields ++ extraDataCols),
       bucketSpec = None,
-      fileFormat = new GraftParquetFileFormat(logicalToPhysical,
-        if (dropDeleted) dvRegistryBroadcast else None,
+      fileFormat = new GraftParquetFileFormat(logicalToPhysical, dvRegistry,
+        keepDeleted = rows == RowSelection.Deleted,
         fieldIdMode = columnMappingMode == "id"),
       options = Map.empty)(spark)
   }
 
   /** [[relation]] as a DataFrame (data columns, then partition columns). */
   private[delta] def relationDF(options: ScanOptions = ScanOptions(),
-      dropDeleted: Boolean = true,
-      extraDataCols: Seq[org.apache.spark.sql.types.StructField] = Nil): DataFrame =
-    log.spark.baseRelationToDataFrame(relation(options, dropDeleted, extraDataCols))
+      rows: RowSelection = RowSelection.Live,
+      extraDataCols: Seq[org.apache.spark.sql.types.StructField] = Nil,
+      files: Option[Seq[(AddFile, Option[DvHandle])]] = None): DataFrame =
+    log.spark.baseRelationToDataFrame(relation(options, rows, extraDataCols, files))
 }

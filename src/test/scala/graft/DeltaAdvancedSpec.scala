@@ -73,6 +73,9 @@ class DeltaAdvancedSpec extends AnyFunSuite {
     val src = Fixtures.readParquet(spark, sfDir, "nation")
     assert(t.toDF.count() == src.count())
     assert(spark.read.format("graftdelta").load(p).count() == src.count())
+    // the change feed reads the cdc file: its count is the rows it holds
+    val cdcFeed = t.changes(2, 2)
+    assert(cdcFeed.count() == 3 && cdcFeed.collect().length == 3)
   }
 
   test("CDF changes(): inserts per version, rewrites skipped, DV deletes derived") {
@@ -96,6 +99,9 @@ class DeltaAdvancedSpec extends AnyFunSuite {
     // a DV-encoded delete yields exactly its bitmap-diff rows as deletes
     DeltaTable.forPath(spark, path).delete(col("r_regionkey") === 0)
     val dels = DeltaTable.forPath(spark, path).changes(3, 3)
+    // count() scans: a DV-growth frame keeps only bitmap rows, which no
+    // log statistic counts
+    assert(dels.count() == dels.collect().length)
     assert(dels.filter(col("_change_type") =!= "delete").count() == 0)
     assert(dels.select(col("r_regionkey").cast("long"))
       .collect().map(_.getLong(0)).toSeq == Seq(0L))
@@ -119,6 +125,7 @@ class DeltaAdvancedSpec extends AnyFunSuite {
     val nUpd = DeltaTable.forPath(spark, path)
       .update(col("s_suppkey") % 7 === 0, Map("s_acctbal" -> lit(0.0)))
     val cdf = DeltaTable.forPath(spark, path).changes(1, 1)
+    assert(cdf.count() == cdf.collect().length)
     // the update's preimages surface as deletes, postimages as inserts
     assert(cdf.filter(col("_change_type") === "delete").count() == nUpd)
     assert(cdf.filter(col("_change_type") === "insert").count() == nUpd)
@@ -131,6 +138,15 @@ class DeltaAdvancedSpec extends AnyFunSuite {
     val wipe = DeltaTable.forPath(spark, path).changes(2, 2)
     assert(wipe.filter(col("_change_type") =!= "delete").count() == 0)
     assert(wipe.count() == live)
+    assert(wipe.collect().length == live)
+    // RESTORE re-adds the update's files as fresh adds, one carrying its
+    // DV: the feed inserts exactly their live rows
+    DeltaTable.forPath(spark, path).restore(1)
+    val back = DeltaTable.forPath(spark, path).changes(3, 3)
+    assert(DeltaLog.forPath(spark, path).readCommit(3).flatMap(_.add)
+      .exists(_.deletionVector.isDefined))
+    assert(back.filter(col("_change_type") =!= "insert").count() == 0)
+    assert(back.count() == live && back.collect().length == live)
     // a hand-forged DV SHRINK (row restore) refuses loudly
     val log = DeltaLog.forPath(spark, path)
     val snapActs = log.readCommit(1)

@@ -877,51 +877,67 @@ class DeltaSurfaceSpec extends AnyFunSuite {
     assert(n2 == src.count(), s"session 2 read $n2 rows, expected ${src.count()}")
   }
 
+  /** Inputs of the virtual-column tests: a 3-file supplier table, and
+    * copies of the column-mapped supplier fixtures (name and id mode). */
+  private def virtualColumnInputs(): Seq[(String, String)] = {
+    val plain = tmpTable()
+    DeltaWriter.append(spark,
+      Fixtures.readParquet(spark, sfDir, "supplier").repartition(3), plain)
+    ("plain" -> plain) +: Seq(Fixtures.Mapped, Fixtures.MappedId).map { variant =>
+      val p = tmpTable()
+      org.apache.commons.io.FileUtils.copyDirectory(
+        new java.io.File(Fixtures.delta(spark, sfDir, "supplier", variant)),
+        new java.io.File(p))
+      variant.name -> p
+    }
+  }
+
   test("virtual columns: filename, file_row_number, delta_file_number") {
     val src = Fixtures.readParquet(spark, sfDir, "supplier")
-    val path = tmpTable()
-    DeltaWriter.append(spark, src.repartition(3), path)
-    val t = DeltaTable.forPath(spark, path)
-    val df = t.toDFWithVirtualColumns
-    val rows = df.agg(
-      countDistinct(col("delta_file_number")).as("nf"),
-      countDistinct(col("filename")).as("nn"),
-      count(lit(1)).as("n")).collect()(0)
-    assert(rows.getAs[Long]("nf") == 3)
-    assert(rows.getAs[Long]("nn") == 3)
-    assert(rows.getAs[Long]("n") == src.count())
-    // row numbers are dense per file
-    val perFile = df.groupBy(col("delta_file_number"))
-      .agg(count(lit(1)).as("n"), max(col("file_row_number")).as("mx"))
-      .collect()
-    perFile.foreach(r => assert(r.getAs[Long]("mx") == r.getAs[Long]("n") - 1))
-    // virtual columns survive deletes (DV-filtered rows excluded)
-    t.delete(col("s_suppkey") % 2 === 0)
-    val after = t.toDFWithVirtualColumns
-    assert(after.count() == src.filter(col("s_suppkey") % 2 === 1).count())
+    for ((input, path) <- virtualColumnInputs()) {
+      val t = DeltaTable.forPath(spark, path)
+      val nFiles = t.snapshot.allFiles.size
+      if (input == "plain") assert(nFiles == 3)
+      val df = t.toDFWithVirtualColumns
+      val rows = df.agg(
+        countDistinct(col("delta_file_number")).as("nf"),
+        countDistinct(col("filename")).as("nn"),
+        count(lit(1)).as("n")).collect()(0)
+      assert(rows.getAs[Long]("nf") == nFiles, input)
+      assert(rows.getAs[Long]("nn") == nFiles, input)
+      assert(rows.getAs[Long]("n") == src.count(), input)
+      // row numbers are dense per file
+      val perFile = df.groupBy(col("delta_file_number"))
+        .agg(count(lit(1)).as("n"), max(col("file_row_number")).as("mx"))
+        .collect()
+      perFile.foreach(r => assert(r.getAs[Long]("mx") == r.getAs[Long]("n") - 1, input))
+      // virtual columns survive deletes (DV-filtered rows excluded)
+      t.delete(col("s_suppkey") % 2 === 0)
+      val after = t.toDFWithVirtualColumns
+      assert(after.count() == src.filter(col("s_suppkey") % 2 === 1).count(), input)
+    }
   }
 
   test("virtual columns on a DV table: survivors keep (filename, file_row_number)") {
-    val src = Fixtures.readParquet(spark, sfDir, "supplier")
-    val path = tmpTable()
-    DeltaWriter.append(spark, src.repartition(3), path)
-    val t = DeltaTable.forPath(spark, path)
-    def positions(df: org.apache.spark.sql.DataFrame): Map[Long, (String, Long)] =
-      df.select(col("s_suppkey"), col("filename"), col("file_row_number")).collect()
-        .map(r => r.getAs[Number](0).longValue -> (r.getString(1), r.getLong(2))).toMap
-    val before = positions(t.toDFWithVirtualColumns)
-    // two deletes: the second reads `_metadata.row_index` through a scan
-    // that already drops the first one's rows inside the reader
-    t.delete(col("s_suppkey") % 3 === 0)
-    t.delete(col("s_suppkey") % 5 === 0)
-    assert(t.snapshot.hasDeletionVectors)
-    val afterDf = t.toDFWithVirtualColumns
-    val after = positions(afterDf)
-    val survivors = before.filter { case (k, _) => k % 3 != 0 && k % 5 != 0 }
-    assert(after == survivors)
-    // a narrow projection (row index alone) reads the same positions
-    assert(afterDf.select(col("file_row_number")).collect().map(_.getLong(0)).sorted.toSeq ==
-      survivors.values.map(_._2).toSeq.sorted)
+    for ((input, path) <- virtualColumnInputs()) {
+      val t = DeltaTable.forPath(spark, path)
+      def positions(df: org.apache.spark.sql.DataFrame): Map[Long, (String, Long)] =
+        df.select(col("s_suppkey"), col("filename"), col("file_row_number")).collect()
+          .map(r => r.getAs[Number](0).longValue -> (r.getString(1), r.getLong(2))).toMap
+      val before = positions(t.toDFWithVirtualColumns)
+      // two deletes: the second reads `_metadata.row_index` through a scan
+      // that already drops the first one's rows inside the reader
+      t.delete(col("s_suppkey") % 3 === 0)
+      t.delete(col("s_suppkey") % 5 === 0)
+      assert(t.snapshot.hasDeletionVectors, input)
+      val afterDf = t.toDFWithVirtualColumns
+      val after = positions(afterDf)
+      val survivors = before.filter { case (k, _) => k % 3 != 0 && k % 5 != 0 }
+      assert(after == survivors, input)
+      // a narrow projection (row index alone) reads the same positions
+      assert(afterDf.select(col("file_row_number")).collect().map(_.getLong(0)).sorted.toSeq ==
+        survivors.values.map(_._2).toSeq.sorted, input)
+    }
   }
 
   test("pushdown_filters toggle: identical results, skipping disabled") {

@@ -66,7 +66,7 @@ class MetadataAggSpec extends AnyFunSuite {
     val p = Fixtures.delta(spark, sfDir, "supplier", Fixtures.Dv)
     val snap = DeltaLog.forPath(spark, p).update()
     val src = Fixtures.readParquet(spark, sfDir, "supplier")
-    val rawCount = snap.relationDF(dropDeleted = false).groupBy().count()
+    val rawCount = snap.relationDF(rows = RowSelection.All).groupBy().count()
     assert(!rawCount.queryExecution.optimizedPlan.collectLeaves().forall(
       _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]),
       s"raw-relation count must scan:\n${rawCount.queryExecution.optimizedPlan}")

@@ -210,6 +210,7 @@ object ActionJson {
       r.deletionVector.foreach(dv => dvNode(o.putObject("deletionVector"), dv))
       r.partitionValues.foreach(putStrMap(o, "partitionValues", _))
       r.size.foreach(o.put("size", _))
+      if (r.partitionValues.isDefined && r.size.isDefined) o.put("extendedFileMetadata", true)
     }
     a.cdc.foreach { c =>
       val o = root.putObject("cdc")

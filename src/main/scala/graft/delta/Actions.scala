@@ -78,6 +78,13 @@ final case class AddFile(
 
   /** Parsed add-action stats (numRecords/minValues/maxValues/nullCount). */
   lazy val parsedStats: Option[ParsedStats] = stats.flatMap(ParsedStats.parse)
+
+  /** The remove of this file at `timestamp`, carrying its deletion vector,
+    * partition values and size (`extendedFileMetadata`), so change-feed
+    * readers need neither its path nor the file itself. */
+  def removed(timestamp: Long, dataChange: Boolean = true): RemoveFile =
+    RemoveFile(path, Some(timestamp), dataChange, deletionVector,
+      Some(partitionValues), Some(size))
 }
 
 final case class RemoveFile(
@@ -85,8 +92,9 @@ final case class RemoveFile(
     deletionTimestamp: Option[Long] = None,
     dataChange: Boolean = true,
     deletionVector: Option[DeletionVectorDescriptor] = None,
-    // optional per protocol (`extendedFileMetadata`): foreign writers
-    // record the removed file's partition values and size
+    // optional per protocol (`extendedFileMetadata`): the removed file's
+    // partition values and size (this library always writes them; foreign
+    // writers may not)
     partitionValues: Option[Map[String, String]] = None,
     size: Option[Long] = None) {
   lazy val decodedPath: String = Actions.percentDecode(path)

@@ -303,8 +303,7 @@ object DeltaDelete {
     results.foreach { r =>
       val f = r.f
       deletedRows += r.newlyDeleted
-      actions += Action(RemoveFile(f.path, Some(now),
-        dataChange = true, f.deletionVector))
+      actions += Action(f.removed(now))
       if (!r.fullyDeleted) {
         // file still has live rows → re-add with the merged DV. dataChange
         // is set explicitly: `f` may be replayed from an OPTIMIZE commit

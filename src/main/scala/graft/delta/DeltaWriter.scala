@@ -7,7 +7,7 @@ import java.util.UUID
 import scala.collection.mutable.ArrayBuffer
 
 import com.fasterxml.jackson.databind.node.ObjectNode
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -18,14 +18,13 @@ import org.apache.spark.sql.types._
  * COPY → per-file WRITTEN_FILE_STATISTICS → NOT NULL enforcement → add
  * actions → atomic commit, src/storage/delta_transaction.cpp:490-573).
  *
- * Execution split mirrors §3.3 of SURVEY.md: parquet writing and the stats
- * aggregation run distributed on executors; only per-file *metadata* (one
- * row per file) is collected to the driver for the commit. File moves are
- * same-filesystem renames (metadata ops).
+ * Execution split mirrors §3.3 of SURVEY.md: one Spark job writes each
+ * parquet file at its final path and aggregates that file's stats in the
+ * same task ([[InPlaceWrite]]); only per-file *metadata* (one record per
+ * file) reaches the driver for the commit. No file is renamed or read
+ * back.
  */
 object DeltaWriter {
-
-  private val STATS_PREFIX = "gs_"
 
   /**
    * Append `df` to the Delta table at `path`, creating it when absent.
@@ -161,7 +160,7 @@ object DeltaWriter {
     val enforced = withWriteChecks(aligned, tableSchema,
       snapshot.map(_.metadata.configuration).getOrElse(configuration), path)
 
-    // stage + stats + move (executors), then commit with retry.
+    // write + stats (executors), then commit with retry.
     // (mergeSchema may have EVOLVED tableSchema beyond snap.schema — only
     // the mapped branch may use the snapshot's schema, where mergeSchema
     // is refused.)
@@ -325,7 +324,8 @@ object DeltaWriter {
     ConflictChecker.staging(log) { staged =>
       // overwritten data is NEW data: on row-tracked tables [[commit]]
       // assigns fresh ids past the mark
-      val adds = writeFiles(spark, log, toStage, stageSchema, stagePartCols, staged, stageOpts)
+      val adds = writeFiles(spark, log, toStage, stageSchema, stagePartCols, staged, stageOpts,
+        snap.metadata.configuration)
       val now = System.currentTimeMillis()
       val (removeActs, upgradeActs) = replaceWhere match {
         case None if dynamicPartitions =>
@@ -335,11 +335,9 @@ object DeltaWriter {
           // tables) matches the existing files by construction
           val touched = adds.map(_.partitionValues).toSet
           (snap.allFiles.filter(f => touched.contains(f.partitionValues))
-            .map(f => Action(RemoveFile(f.path, Some(now),
-              dataChange = true, f.deletionVector))), Nil)
+            .map(f => Action(f.removed(now))), Nil)
         case None =>
-          (snap.allFiles.map(f => Action(RemoveFile(f.path, Some(now),
-            dataChange = true, f.deletionVector))), Nil)
+          (snap.allFiles.map(f => Action(f.removed(now))), Nil)
         case Some(cond) =>
           val hitRows = snap.relationDF(rows = RowSelection.All).where(cond)
             .select(col("_metadata.file_path").as("p"),
@@ -402,119 +400,58 @@ object DeltaWriter {
     }
   }
 
-  /**
-   * Stage `aligned` as parquet under the table root, collect per-file
-   * stats distributed, enforce NOT NULL, move files into place, and
-   * return the (uncommitted) add actions. The caller commits; `moved`
-   * is the buffer of a [[ConflictChecker.staging]] scope, which deletes
-   * the files again unless the commit lands.
-   */
   private[delta] def shreddingEnabled(conf: Map[String, String]): Boolean =
     conf.get("delta.enableVariantShredding").exists(_.equalsIgnoreCase("true"))
 
+  /**
+   * Write `aligned` as parquet files in place under the table root, in ONE
+   * Spark job whose tasks also collect each file's stats; enforce NOT NULL
+   * from those stats and return the (uncommitted) add actions. The caller
+   * commits; `staged` is the buffer of a [[ConflictChecker.staging]]
+   * scope, which holds every written file before any check runs and
+   * deletes them again unless the commit lands.
+   */
   private[delta] def writeFiles(
       spark: SparkSession,
       log: DeltaLog,
       aligned: DataFrame,
       tableSchema: StructType,
       partCols: Seq[String],
-      moved: ArrayBuffer[Path],
-      writeOptions: Map[String, String] = Map.empty,
-      /** table configuration governing stats collection; empty → read the
-        * live table's (callers on the create path must pass the create
-        * config — no snapshot exists yet) */
-      configuration: Map[String, String] = Map.empty): Seq[AddFile] = {
-    val fs = log.fs
-    // no leading dot/underscore: the staging dir is read back with
-    // spark.read for the stats pass, and hidden-path filters would skip it
-    val staging = new Path(log.tablePath, s"tmp-stage-${UUID.randomUUID}")
-    try {
-      val tableConf =
-        if (configuration.nonEmpty) configuration
-        else if (log.tableExists) log.update().metadata.configuration
-        else Map.empty[String, String]
-      // delta.enableVariantShredding governs the PHYSICAL variant layout
-      // in BOTH directions: with the property, variant columns write
-      // SHREDDED (parquet variant-shredding layout, typed_value subtree)
-      // and the protocol carries variantShredding-preview on both sides
-      // (stamped at create / SET TBLPROPERTIES); without it, shredding is
-      // explicitly DISABLED for the write — Spark 4.1 defaults
-      // writeShredding+inferShreddingSchema to TRUE, which would silently
-      // put shredded files into tables advertising only variantType, a
-      // layout spec-conformant foreign readers may refuse. The setting is
-      // WRITE-LOCAL: variant writes run on a cloneSession() fork whose
-      // isolated SQLConf carries the toggle, so two concurrent variant
-      // writes with opposite delta.enableVariantShredding in one session
-      // cannot race each other's layout — the property governs the TABLE,
-      // never the caller's session.
-      val hasVariant = ProtocolGate.typeFeatures(tableSchema).contains("variantType")
-      val shred = shreddingEnabled(tableConf) && hasVariant
-      val shredKeys = Seq("spark.sql.variant.writeShredding.enabled",
-        "spark.sql.variant.inferShreddingSchema")
-      val toWrite =
-        if (!hasVariant) aligned
-        else {
-          val ws = org.apache.spark.sql.GraftColumnBridge.cloneSession(spark)
-          shredKeys.foreach(ws.conf.set(_, shred.toString))
-          org.apache.spark.sql.GraftColumnBridge.ofRows(
-            ws, aligned.queryExecution.analyzed)
-        }
-      toWrite.write
-        .mode("overwrite")
-        .options(writeOptions)
-        .partitionBy(partCols: _*)
-        .parquet(staging.toString)
+      staged: ArrayBuffer[Path],
+      writeOptions: Map[String, String],
+      /** the table configuration (at create: the create config), which
+        * governs stats collection and the variant layout */
+      configuration: Map[String, String]): Seq[AddFile] = {
+    val stats = statColumns(tableSchema, partCols, configuration)
+    val written = InPlaceWrite(spark, aligned, log.tablePath, partCols, writeOptions,
+      configuration, stats.map(_.agg), staged)
+      .map(w => w -> fileStats(stats, w.numRecords, w.stats))
 
-      // empty input (e.g. CREATE TABLE with no rows) stages no part files;
-      // spark.read over a file-less dir cannot infer a schema
-      if (!listRecursive(fs, staging).exists(_.getName.endsWith(".parquet")))
-        return Seq.empty
-      val statsByFile =
-        collectStats(spark, staging.toString, tableSchema, partCols, tableConf)
-
-      // NOT NULL enforcement from stats (reference delta_insert.cpp:151-247)
-      val notNullCols = tableSchema.fields.filterNot(_.nullable).map(_.name)
-      statsByFile.values.foreach { fileStats =>
-        notNullCols.foreach { c =>
-          if (fileStats.nullCounts.getOrElse(c, 0L) > 0)
-            throw new IllegalStateException(
-              s"NOT NULL constraint violated for column: $c")
-        }
-        // nested paths (reference ExtractNotNullConstraints,
-        // delta_multi_file_list.cpp:567-584): violated only when the
-        // parent struct is present but the child is null
-        fileStats.nnViolations.foreach { case (path, n) =>
-          if (n > 0)
-            throw new IllegalStateException(
-              s"NOT NULL constraint violated for nested column: $path")
-        }
+    // NOT NULL enforcement from stats (reference delta_insert.cpp:151-247)
+    val notNullCols = tableSchema.fields.filterNot(_.nullable).map(_.name)
+    written.foreach { case (_, fileStats) =>
+      notNullCols.foreach { c =>
+        if (fileStats.nullCounts.getOrElse(c, 0L) > 0)
+          throw new IllegalStateException(
+            s"NOT NULL constraint violated for column: $c")
       }
-
-      val staged = listRecursive(fs, staging)
-        .filter(p => p.getName.endsWith(".parquet"))
-      staged.map { sf =>
-        val rel = relativize(staging, sf)
-        val target = new Path(log.tablePath, rel)
-        fs.mkdirs(target.getParent)
-        if (!fs.rename(sf, target))
-          throw new IllegalStateException(s"Failed to move $sf -> $target")
-        moved += target
-        val st = fs.getFileStatus(target)
-        val fileStats = statsByFile.get(sf.toUri.getPath)
-        AddFile(
-          path = encodePath(rel),
-          partitionValues = partitionValuesFromPath(rel, partCols),
-          size = st.getLen,
-          modificationTime = st.getModificationTime,
-          dataChange = true,
-          // a staged file with no stats group is EMPTY (every row feeds its
-          // file's group): record that, so readers (metadata-only count,
-          // row-tracking enablement) can prove zero rows instead of
-          // assuming unknown
-          stats = fileStats.map(_.toJson).orElse(Some("""{"numRecords":0}""")))
-      }.toSeq
-    } finally {
-      try fs.delete(staging, true) catch { case _: Exception => () }
+      // nested paths (reference ExtractNotNullConstraints,
+      // delta_multi_file_list.cpp:567-584): violated only when the
+      // parent struct is present but the child is null
+      fileStats.nnViolations.foreach { case (path, n) =>
+        if (n > 0)
+          throw new IllegalStateException(
+            s"NOT NULL constraint violated for nested column: $path")
+      }
+    }
+    written.map { case (w, fileStats) =>
+      AddFile(
+        path = encodePath(w.path),
+        partitionValues = w.partitionValues,
+        size = w.size,
+        modificationTime = w.modificationTime,
+        dataChange = true,
+        stats = Some(fileStats.toJson))
     }
   }
 
@@ -605,15 +542,19 @@ object DeltaWriter {
     case _ => c.cast(to)
   }
 
-  private case class FileStats(
+  private[delta] case class FileStats(
       numRecords: Long,
       mins: Map[String, Any],
       maxs: Map[String, Any],
       nullCounts: Map[String, Long],
       /** nested-NOT-NULL violation counts (parent present, child null) —
         * enforcement only, never written to the stats JSON */
-      nnViolations: Map[String, Long] = Map.empty) {
+      nnViolations: Map[String, Long]) {
     def toJson: String = {
+      // an EMPTY file records its zero rows, so readers (metadata-only
+      // count, row-tracking enablement) can prove them instead of assuming
+      // unknown
+      if (numRecords == 0) return """{"numRecords":0}"""
       val root = ActionJson.mapper.createObjectNode()
       root.put("numRecords", numRecords)
       // dotted keys ("s.a") become nested objects {"s":{"a":v}} — the
@@ -636,11 +577,7 @@ object DeltaWriter {
       }
       putVals("minValues", mins)
       putVals("maxValues", maxs)
-      val nc = root.putObject("nullCount")
-      nullCounts.toSeq.sortBy(_._1).foreach { case (k, v) =>
-        val (tgt, leaf) = nest(nc, k)
-        tgt.put(leaf, v)
-      }
+      putVals("nullCount", nullCounts)
       root.put("tightBounds", true)
       ActionJson.mapper.writeValueAsString(root)
     }
@@ -670,16 +607,22 @@ object DeltaWriter {
     case _ => false
   }
 
-  /** One distributed pass over the staged files: per-file numRecords +
-    * min/max/nullCount per data column (the analog of DuckDB's
-    * WRITTEN_FILE_STATISTICS rows, delta_insert.cpp:114-234). */
-  private def collectStats(
-      spark: SparkSession,
-      staging: String,
+  /** One per-file statistic: `kind` is "min", "max", "nc" (null count) or
+    * "nnv" (nested NOT NULL violations, never written to the stats JSON),
+    * `agg` its aggregate over a file's rows. */
+  private[delta] final case class StatColumn(kind: String, key: String,
+      agg: org.apache.spark.sql.Column)
+
+  /** The stats a write collects per file (the analog of DuckDB's
+    * WRITTEN_FILE_STATISTICS rows, delta_insert.cpp:114-234), as
+    * aggregates over the file's rows: numRecords comes with every file,
+    * these add min/max/nullCount per data column and the nested NOT NULL
+    * violation counts. */
+  private[delta] def statColumns(
       tableSchema: StructType,
       partCols: Seq[String],
-      configuration: Map[String, String] = Map.empty): Map[String, FileStats] = {
-    // row-tracked rewrites stage the materialized row-id/commit-version
+      configuration: Map[String, String]): Seq[StatColumn] = {
+    // row-tracked rewrites write the materialized row-id/commit-version
     // columns alongside the data; they are NOT table-schema columns, so
     // emitting min/max/nullCount for them would both diverge from the
     // protocol's stats shape and burn dataSkippingNumIndexedCols slots
@@ -716,97 +659,56 @@ object DeltaWriter {
       .flatMap(_.trim.toIntOption).getOrElse(32)
     val statKeys =
       if (numIndexed < 0) allStatKeys else allStatKeys.take(numIndexed)
+    def nullCount(key: String, c: org.apache.spark.sql.Column) =
+      StatColumn("nc", key, sum(when(c.isNull, 1L).otherwise(0L)))
     // NOT NULL columns beyond the cap still need their nullCount — the
     // write-path constraint check reads it; only min/max skipping stats
     // are capped
-    val ncOnlyKeys: Seq[(String, org.apache.spark.sql.Column)] = {
-      val kept = statKeys.map(_._1).toSet
-      val nonNullable = dataFields.filterNot(_.nullable).map(_.name).toSet
-      allStatKeys.collect {
-        case (key, c, _) if !kept.contains(key) && nonNullable.contains(key) =>
-          (key, c)
-      }
+    val kept = statKeys.map(_._1).toSet
+    val nonNullable = dataFields.filterNot(_.nullable).map(_.name).toSet
+    val ncOnly = allStatKeys.collect {
+      case (key, c, _) if !kept.contains(key) && nonNullable.contains(key) =>
+        nullCount(key, c)
     }
     // nested NOT NULL constraint paths: parent struct present, child null
-    val nnKeys: Seq[(String, org.apache.spark.sql.Column)] =
-      dataFields.toSeq.flatMap { f =>
-        f.dataType match {
-          case s: StructType => s.fields.toSeq.collect {
-            case sub if !sub.nullable =>
-              (s"${f.name}.${sub.name}",
-                col(s"`${f.name}`").isNotNull &&
-                  col(s"`${f.name}`").getField(sub.name).isNull)
-          }
-          // NOT NULL variant: enforced through the JSON-invisible
-          // violation channel, since variant emits no nullCount stat
-          case dt if dt == org.apache.spark.sql.types.VariantType &&
-              !f.nullable =>
-            Seq((f.name, col(s"`${f.name}`").isNull))
-          case _ => Nil
+    val nnViolations = dataFields.toSeq.flatMap { f =>
+      val violated = f.dataType match {
+        case s: StructType => s.fields.toSeq.collect {
+          case sub if !sub.nullable =>
+            (s"${f.name}.${sub.name}",
+              col(s"`${f.name}`").isNotNull &&
+                col(s"`${f.name}`").getField(sub.name).isNull)
         }
+        // NOT NULL variant: enforced through the JSON-invisible
+        // violation channel, since variant emits no nullCount stat
+        case dt if dt == org.apache.spark.sql.types.VariantType &&
+            !f.nullable =>
+          Seq((f.name, col(s"`${f.name}`").isNull))
+        case _ => Nil
       }
-    val read = spark.read.parquet(staging)
-    val aggs = ArrayBuffer[org.apache.spark.sql.Column](count(lit(1)).as(s"${STATS_PREFIX}n"))
-    statKeys.foreach { case (key, c, dt) =>
-      if (statsEligible(dt)) {
-        aggs += min(c).as(s"${STATS_PREFIX}min_$key")
-        aggs += max(c).as(s"${STATS_PREFIX}max_$key")
-      }
-      aggs += sum(when(c.isNull, 1L).otherwise(0L)).as(s"${STATS_PREFIX}nc_$key")
+      violated.map { case (key, v) =>
+        StatColumn("nnv", key, sum(when(v, 1L).otherwise(0L))) }
     }
-    ncOnlyKeys.foreach { case (key, c) =>
-      aggs += sum(when(c.isNull, 1L).otherwise(0L)).as(s"${STATS_PREFIX}nc_$key")
-    }
-    nnKeys.foreach { case (key, violated) =>
-      aggs += sum(when(violated, 1L).otherwise(0L)).as(s"${STATS_PREFIX}nnv_$key")
-    }
-    val rows = read
-      .groupBy(col("_metadata.file_path").as(s"${STATS_PREFIX}file"))
-      .agg(aggs.head, aggs.tail.toSeq: _*)
-      .collect()
-    rows.map { r =>
-      val file = new Path(r.getAs[String](s"${STATS_PREFIX}file")).toUri.getPath
-      val mins = Map.newBuilder[String, Any]
-      val maxs = Map.newBuilder[String, Any]
-      val ncs = Map.newBuilder[String, Long]
-      statKeys.foreach { case (key, _, dt) =>
-        if (statsEligible(dt)) {
-          val mn = r.getAs[Any](s"${STATS_PREFIX}min_$key")
-          val mx = r.getAs[Any](s"${STATS_PREFIX}max_$key")
-          if (mn != null) mins += key -> mn
-          if (mx != null) maxs += key -> mx
-        }
-        val nc = r.getAs[Any](s"${STATS_PREFIX}nc_$key")
-        if (nc != null) ncs += key -> nc.asInstanceOf[Long]
-      }
-      ncOnlyKeys.foreach { case (key, _) =>
-        val nc = r.getAs[Any](s"${STATS_PREFIX}nc_$key")
-        if (nc != null) ncs += key -> nc.asInstanceOf[Long]
-      }
-      val nnv = nnKeys.map { case (key, _) =>
-        key -> Option(r.getAs[Any](s"${STATS_PREFIX}nnv_$key"))
-          .map(_.asInstanceOf[Long]).getOrElse(0L)
-      }.toMap
-      file -> FileStats(r.getAs[Long](s"${STATS_PREFIX}n"), mins.result(), maxs.result(),
-        ncs.result(), nnv)
+    statKeys.flatMap { case (key, c, dt) =>
+      (if (statsEligible(dt))
+         Seq(StatColumn("min", key, min(c)), StatColumn("max", key, max(c)))
+       else Nil) :+ nullCount(key, c)
+    } ++ ncOnly ++ nnViolations
+  }
+
+  /** A file's [[FileStats]] from its row count and the values of
+    * [[statColumns]] over its rows (Scala-typed, in column order; null =
+    * no value). */
+  private[delta] def fileStats(cols: Seq[StatColumn], numRecords: Long,
+      values: Seq[Any]): FileStats = {
+    def of(kind: String): Map[String, Any] = cols.zip(values).collect {
+      case (c, v) if c.kind == kind && v != null => c.key -> v
     }.toMap
+    def counts(kind: String) = of(kind).map { case (k, v) => k -> v.asInstanceOf[Long] }
+    FileStats(numRecords, of("min"), of("max"), counts("nc"), counts("nnv"))
   }
 
   // -------------------------------------------------------------------------
-
-  private[delta] def listRecursive(fs: FileSystem, dir: Path): Seq[Path] = {
-    val out = ArrayBuffer.empty[Path]
-    val it = fs.listFiles(dir, true)
-    while (it.hasNext) out += it.next().getPath
-    out.toSeq
-  }
-
-  private[delta] def relativize(base: Path, p: Path): String = {
-    val b = base.toUri.getPath.stripSuffix("/")
-    val s = p.toUri.getPath
-    require(s.startsWith(b + "/"), s"$p not under $base")
-    s.substring(b.length + 1)
-  }
 
   /** URL-encode each path segment, keeping '/' (protocol `add.path` form). */
   private[delta] def encodePath(rel: String): String =
@@ -814,9 +716,12 @@ object DeltaWriter {
       URLEncoder.encode(seg, StandardCharsets.UTF_8).replace("+", "%20")).mkString("/")
 
   /** Hive-style `col=val` dirs → protocol partitionValues (null for
-    * __HIVE_DEFAULT_PARTITION__; values %-unescaped). Reference equivalent:
-    * partition map from kernel transform, delta_multi_file_list.cpp:347-417. */
+    * __HIVE_DEFAULT_PARTITION__; values %-unescaped, '+' kept). The change
+    * feed reads a foreign remove's partition values this way when the log
+    * entry lacks them. Reference equivalent: partition map from kernel
+    * transform, delta_multi_file_list.cpp:347-417. */
   private[delta] def partitionValuesFromPath(rel: String, partCols: Seq[String]): Map[String, String] = {
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName
     if (partCols.isEmpty) return Map.empty
     val dirs = rel.split('/').dropRight(1)
     dirs.flatMap { d =>
@@ -828,23 +733,6 @@ object DeltaWriter {
         Some(k -> (if (v == "__HIVE_DEFAULT_PARTITION__") null else v))
       }
     }.toMap
-  }
-
-  /** Hive path unescape (%XX only — '+' stays itself, unlike URLDecoder). */
-  private def unescapePathName(s: String): String = {
-    if (!s.contains('%')) return s
-    val sb = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '%' && i + 2 < s.length) {
-        try {
-          sb.append(Integer.parseInt(s.substring(i + 1, i + 3), 16).toChar)
-          i += 3
-        } catch { case _: NumberFormatException => sb.append(c); i += 1 }
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
   }
 
   // -------------------------------------------------------------------------

@@ -37,8 +37,8 @@ object Optimize {
    * `retentionMs` below [[MinRetentionMs]] requires `force = true`
    * (mirror of Delta's retentionDurationCheck): an aggressive window
    * deletes files a concurrent reader's pinned snapshot still needs.
-   * In-flight append staging dirs (`tmp-stage-*`) are never entered —
-   * their files are mid-write and not yet referenced by any commit.
+   * A write's files sit in place before its commit; the retention window
+   * protects them (as in delta-spark). Old `tmp-stage-*` dirs are skipped.
    *
    * Scale notes: the referenced-set is the snapshot file list (already on
    * the driver for planning) plus DV files; the candidate listing is one
@@ -75,8 +75,7 @@ object Optimize {
     def walk(dir: Path): Unit = fs.listStatus(dir).foreach { st =>
       val name = st.getPath.getName
       if (st.isDirectory) {
-        // tmp-stage-*: a concurrent append's staging dir (DeltaWriter) —
-        // its files are in flight, not abandoned. Hidden dirs (_delta_log,
+        // tmp-stage-*: an earlier writer's staging dir. Hidden dirs (_delta_log,
         // _symlink_format_manifest, ...) are metadata a vacuum must never
         // touch — their files are not in `live` yet still current (e.g. a
         // symlink manifest for Presto/Trino readers). _change_data is the
@@ -223,8 +222,7 @@ object Optimize {
     // they ride as plain actions, not as fresh `adds`.
     val v = ConflictChecker.commit(log, Some(snap), "RESTORE",
       mdReset ++
-        toRemove.map(f => Action(RemoveFile(f.path, Some(now),
-          dataChange = true, f.deletionVector))) ++
+        toRemove.map(f => Action(f.removed(now))) ++
         toAdd.map(f => Action(f.copy(dataChange = true, modificationTime = now))),
       params = Map(
         "version" -> targetVersion.toString,
@@ -345,8 +343,8 @@ object Optimize {
       // the exact files being rewritten (ConflictChecker)
       val v = ConflictChecker.commit(log, Some(snap), "OPTIMIZE",
         mdAction.map(Action(_)).toSeq ++
-          toRewrite.map(f => Action(RemoveFile(f.path,
-            Some(System.currentTimeMillis()), dataChange = false, f.deletionVector))),
+          toRewrite.map(f => Action(
+            f.removed(System.currentTimeMillis(), dataChange = false))),
         params = Map("filesRemoved" -> toRewrite.size.toString,
           "filesAdded" -> adds.size.toString),
         metrics = Map(
@@ -457,8 +455,8 @@ object Optimize {
               .getOrElse(snap.metadata.configuration))
       val v = ConflictChecker.commit(log, Some(snap), "OPTIMIZE",
         mdAction.map(Action(_)).toSeq ++
-          toRewrite.map(f => Action(RemoveFile(f.path,
-            Some(System.currentTimeMillis()), dataChange = false, f.deletionVector))),
+          toRewrite.map(f => Action(
+            f.removed(System.currentTimeMillis(), dataChange = false))),
         params = Map("zorderBy" -> cols.mkString(","),
           "filesRemoved" -> toRewrite.size.toString,
           "filesAdded" -> adds.size.toString),

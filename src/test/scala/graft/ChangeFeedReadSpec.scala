@@ -1,5 +1,8 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -130,8 +133,27 @@ class ChangeFeedReadSpec extends AnyFunSuite {
     DeltaTable.forPath(spark, path).delete(col("region") === "001")    // v1
     DeltaLog.clearCache()
     val log = DeltaLog.forPath(spark, path)
+    // this library's removes carry the removed file's partition values and
+    // size (extendedFileMetadata)
     val removes = log.readCommit(1).flatMap(_.remove)
-    assert(removes.nonEmpty && removes.forall(_.partitionValues.isEmpty))
+    val removed = log.readCommit(0).flatMap(_.add)
+      .filter(_.partitionValues == Map("region" -> "001"))
+    assert(removes.map(r => (r.path, r.partitionValues, r.size)) ==
+      removed.map(a => (a.path, Some(a.partitionValues), Some(a.size))))
+    // rewrite v1 as a writer that records neither would have left it
+    val commit = java.nio.file.Paths.get(path, "_delta_log", f"${1}%020d.json")
+    val lines = java.nio.file.Files.readAllLines(commit).asScala.map { line =>
+      val n = ActionJson.mapper.readTree(line)
+      Option(n.get("remove")).foreach { case r: ObjectNode =>
+        r.remove(java.util.List.of("partitionValues", "size", "extendedFileMetadata"))
+      }
+      ActionJson.mapper.writeValueAsString(n)
+    }
+    log.fs.delete(log.commitFile(1), false)
+    LogStore.write(log.fs, log.commitFile(1), lines.mkString("", "\n", "\n"))
+    DeltaLog.clearCache()
+    val bare = DeltaLog.forPath(spark, path).readCommit(1).flatMap(_.remove)
+    assert(bare.nonEmpty && bare.forall(r => r.partitionValues.isEmpty && r.size.isEmpty))
     val feed = DeltaTable.forPath(spark, path).changes(1, 1)
     assert(feed.select("id", "region", "_change_type").collect().toSeq ==
       Seq(Row(2L, "001", "delete")))

@@ -1,7 +1,7 @@
 package graft.delta
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Encoders, SaveMode}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, LongType,
   MapType, Metadata, StructField, StructType}
 
@@ -203,7 +203,7 @@ object Checkpoints {
     val tmpDir = new Path(log.logPath, s".cptmp-${java.util.UUID.randomUUID}")
     val nParts = math.max(1L,
       (fileActions.size + maxActionsPerPart - 1L) / maxActionsPerPart).toInt
-    spark.createDataset(fileActions)(Encoders.product[Action]).toDF()
+    spark.createDataset(fileActions)(DeltaLog.actionEncoder).toDF()
       .select(col("add"), col("remove"))
       .repartition(nParts).write.mode(SaveMode.Overwrite).parquet(tmpDir.toString)
     val sidecarInfos = fs.listStatus(tmpDir).map(_.getPath)
@@ -216,7 +216,7 @@ object Checkpoints {
       }.toSeq
 
     // manifest: non-file actions + checkpointMetadata + sidecar pointers
-    val base = spark.createDataset(nonFile)(Encoders.product[Action]).toDF()
+    val base = spark.createDataset(nonFile)(DeltaLog.actionEncoder).toDF()
       .withColumn("checkpointMetadata",
         lit(null).cast("struct<version:bigint>"))
       .withColumn("sidecar",
@@ -263,7 +263,7 @@ object Checkpoints {
     val nParts = math.max(1L,
       (actions.size + maxActionsPerPart - 1L) / maxActionsPerPart).toInt
     val tmpDir = new Path(log.logPath, s".cptmp-${java.util.UUID.randomUUID}")
-    val ds = spark.createDataset(actions)(Encoders.product[Action])
+    val ds = spark.createDataset(actions)(DeltaLog.actionEncoder)
     val out =
       if (snap.metadata.configuration
           .getOrElse("delta.checkpoint.writeStatsAsStruct", "false")

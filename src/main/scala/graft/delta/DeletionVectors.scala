@@ -111,7 +111,7 @@ final class DvSlot(
 }
 
 /** Mutable 64-bit roaring bitmap builder — the per-file aggregation buffer
-  * for executor-side DV construction. */
+  * of the executor-side DV build ([[DeltaDelete.dvActions]]). */
 final class DvBitmapBuffer extends Serializable {
   val parts: scala.collection.mutable.SortedMap[Int, org.roaringbitmap.RoaringBitmap] =
     scala.collection.mutable.SortedMap.empty
@@ -132,44 +132,6 @@ final class DvBitmapBuffer extends Serializable {
     Bitmap64(scala.collection.immutable.SortedMap.from(parts))
 }
 
-/** Typed aggregator building one serialized (portable-format) bitmap per
-  * file ON THE EXECUTORS: rows never leave their partitions un-compressed
-  * and the driver receives only one small byte array per affected file —
-  * a DELETE touching 10⁹ rows ships bitmaps, not 10⁹ longs. */
-object DvBitmapAgg
-    extends org.apache.spark.sql.expressions.Aggregator[(String, Long), DvBitmapBuffer, Array[Byte]] {
-  import org.apache.spark.sql.{Encoder, Encoders}
-  override def zero: DvBitmapBuffer = new DvBitmapBuffer
-  override def reduce(b: DvBitmapBuffer, v: (String, Long)): DvBitmapBuffer = { b.add(v._2); b }
-  override def merge(a: DvBitmapBuffer, b: DvBitmapBuffer): DvBitmapBuffer = a.mergeIn(b)
-  override def finish(b: DvBitmapBuffer): Array[Byte] = DvCodec.serialize(b.toBitmap)
-  override def bufferEncoder: Encoder[DvBitmapBuffer] = Encoders.javaSerialization[DvBitmapBuffer]
-  override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-}
-
-/** One affected file's aggregated bitmap joined to its snapshot entry —
-  * the input row of the executor-side DV build. `f` is None for a hit in a
-  * file the snapshot doesn't know (fail loudly, never drop). */
-private[delta] final case class DvBuildInput(
-    p: String,
-    dv: Array[Byte],
-    f: Option[AddFile])
-
-/** What the driver gets back per affected file: the file's snapshot entry
-  * plus a DESCRIPTOR (or a fully-deleted marker), never a bitmap. Results
-  * are O(#affected files) — the action assembly needs no table-wide
-  * lookup. */
-private[delta] final case class DvBuildResult(
-    f: AddFile,
-    fullyDeleted: Boolean,
-    newlyDeleted: Long,
-    dvFile: Option[String],
-    storageType: Option[String],
-    pathOrInlineDv: Option[String],
-    offset: Option[Int],
-    sizeInBytes: Option[Int],
-    cardinality: Option[Long])
-
 /**
  * DELETE via deletion vectors — beyond the reference's own surface (it
  * rejects DELETE, src/storage/delta_catalog.cpp:102-117) but required for
@@ -178,144 +140,138 @@ private[delta] final case class DvBuildResult(
  */
 object DeltaDelete {
 
+  /** Affected files per DV-build task: a broad DML over 10⁵ files writes
+    * ~100 multi-DV files in parallel, a narrow one writes one. */
+  private val FilesPerDvTask = 1024
+
   /** Build the remove+re-add-with-DV actions for the physical rows in
-    * `hitRows` (columns p = file path, i = row index). Shared by DELETE
-    * and UPDATE. Returns (actions, newly-deleted row count). DV files
-    * written along the way are appended to `moved` (when given) so a
-    * failed commit can reclaim them.
+    * `hitRows` (columns p = file path, i = row index). Shared by DELETE,
+    * UPDATE, MERGE and `replaceWhere`. Returns (actions, newly-deleted row
+    * count). DV files written along the way are appended to `moved` (when
+    * given) so a failed commit can reclaim them.
     *
-    * Scale shape: one shuffle keyed by file path; bitmaps are built,
-    * MERGED with any existing DV, and WRITTEN as multi-DV files entirely
-    * on executors — the driver receives only small descriptor rows, never
-    * a bitmap. A DELETE/MERGE touching 10⁵–10⁶ files at 100 TB therefore
-    * writes its DVs with full cluster parallelism instead of funneling
-    * every bitmap through one process (delta-spark's shape). */
+    * Scale shape: ONE Spark job. The per-file facts (existing DV,
+    * `numRecords`) are the files the hit scan itself listed on the driver
+    * — the [[GraftFileIndex]] listing of the hit plan's relation over
+    * `snap`, after partition and stats skipping (a [[LazySnapshot]] lists
+    * only survivors, so the table's file list never materializes) — and
+    * ship as one broadcast. Hits are keyed by their decoded path and
+    * folded into one bitmap per file with a map-side combine; each reduce
+    * task ORs in the file's existing DV and writes its files' bitmaps as
+    * multi-DV files, so the driver receives only descriptors, never a
+    * bitmap (delta-spark's shape). A hit in a file the listing lacks fails
+    * the job in its map stage, before any DV file is written. */
   private[delta] def dvActions(log: DeltaLog, snap: Snapshot,
-      hitRows: org.apache.spark.sql.DataFrame,
+      hitRows: DataFrame,
       moved: scala.collection.mutable.ArrayBuffer[org.apache.hadoop.fs.Path] = null)
       : (Seq[Action], Long) = {
-    import org.apache.spark.sql.Encoders
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     val spark = log.spark
-    val tupEnc = Encoders.tuple(Encoders.STRING, Encoders.scalaLong)
-    // canonical path rendering = DECODED URI path: `_metadata.file_path`
-    // is a url-encoded URI string ("file:/…/file%20b.parquet" for a file
-    // named with a space — foreign writers URL-encode log paths), while
-    // the snapshot facts below key by the DECODED path. java.net.URI
-    // decodes the escapes; Hadoop's Path would keep "%20" as literal
-    // characters and a DELETE hitting such a file would fail the
-    // unknown-file guard. Fall back to Path for a non-URI string.
-    val hitsDf = hitRows
-      .select(col("p"), col("i"))
-      .as[(String, Long)](tupEnc)
-      .map { pi: (String, Long) =>
-        val decoded =
-          try new java.net.URI(pi._1).getPath
-          catch { case _: java.net.URISyntaxException =>
-            new org.apache.hadoop.fs.Path(pi._1).toUri.getPath }
-        (decoded, pi._2) }(tupEnc)
-      .groupByKey(_._1)(Encoders.STRING)
-      .agg(DvBitmapAgg.toColumn.name("dv"))
-      .toDF("p", "dv")
-
-    // Per-file facts, DISTRIBUTED: derived from the Dataset-backed file
-    // list (LazySnapshot streams its checkpoint parquet; eager snapshots
-    // wrap their in-memory list) and joined to the hits as a real join —
-    // the driver never re-renders the whole table's file facts into a
-    // local relation. On a 10⁶-file LazySnapshot table a single-row DELETE
-    // previously cost an O(#table-files) driver materialization here.
     val tablePathStr = log.tablePath.toString
-    val factEnc = Encoders.tuple(Encoders.STRING, Encoders.product[AddFile])
-    val factsDf = snap.filesDataset.map { f =>
-      (Snapshot.absolutePathOf(tablePathStr, f.decodedPath).toUri.getPath, f)
-    }(factEnc).toDF("k", "f")
-
-    val inputEnc = Encoders.product[DvBuildInput]
-    // right outer from facts preserves every hit: one with no fact row
-    // (f null) is a hit in a file the snapshot doesn't know — loud failure
-    // downstream, never a silently skipped delete. Spark cannot broadcast
-    // the preserved side of an outer join, so at scale this is a shuffled
-    // join — facts O(#table-files) but fully distributed (same order as
-    // any metadata pass; AQE may still broadcast facts when small).
-    val inputDs = factsDf.join(hitsDf, factsDf("k") === hitsDf("p"), "right")
-      .select(hitsDf("p"), col("dv"), col("f"))
-      .as[DvBuildInput](inputEnc)
-
+    val hits = hitRows.select(col("p"), col("i").cast("long"))
+    // planning the hits lists the scanned files: facts are read after it
+    val hitRdd = hits.queryExecution.toRdd
+    val candidates: Map[String, AddFile] = hits.queryExecution.analyzed
+      .collectWithSubqueries { case l: LogicalRelation => l.relation }
+      .flatMap {
+        case HadoopFsRelation(idx: GraftFileIndex, _, _, _, _, _)
+            if idx.metadataSnapshot.exists(_ eq snap) => idx.listedFiles
+        case _ => Nil
+      }
+      .map(f => Snapshot.absolutePathOf(tablePathStr, f.decodedPath).toUri.getPath -> f)
+      .toMap
+    val facts = spark.sparkContext.broadcast(candidates.map { case (k, f) =>
+      k -> ((f.deletionVector, f.parsedStats.flatMap(_.numRecords))) })
     val conf = new SerializableHadoopConf(spark.sessionState.newHadoopConf())
-    val results: Array[DvBuildResult] = inputDs.mapPartitions { it =>
+    val partitioner = new org.apache.spark.HashPartitioner(math.max(1, math.min(
+      hitRdd.getNumPartitions, (candidates.size + FilesPerDvTask - 1) / FilesPerDvTask)))
+    // per affected file: (path key, newly deleted rows, the written DV
+    // file and descriptor; None when every row is now deleted)
+    val results = try hitRdd.mapPartitions { rows =>
+      val known = facts.value
+      // `_metadata.file_path` is a url-encoded URI string
+      // ("file:/…/file%20b.parquet" for a file named with a space), the
+      // facts key by the DECODED path: java.net.URI decodes the escapes
+      // (Hadoop's Path would keep "%20" literally). Once per distinct path
+      // per task; the row's string is reused by the scan, so it is copied.
+      val decoded = new java.util.HashMap[org.apache.spark.unsafe.types.UTF8String, String]
+      rows.map { r =>
+        val raw = r.getUTF8String(0)
+        var p = decoded.get(raw)
+        if (p == null) {
+          p = try new java.net.URI(raw.toString).getPath
+            catch { case _: java.net.URISyntaxException =>
+              new org.apache.hadoop.fs.Path(raw.toString).toUri.getPath }
+          // never a silently skipped delete
+          if (!known.contains(p)) throw new IllegalStateException(s"hit in unknown file $p")
+          decoded.put(raw.clone(), p)
+        }
+        (p, r.getLong(1))
+      }
+    }.aggregateByKey(new DvBitmapBuffer, partitioner)(
+      (b, i) => { b.add(i); b }, _ mergeIn _
+    ).mapPartitions { files =>
+      val known = facts.value
       val tp = new org.apache.hadoop.fs.Path(tablePathStr)
       lazy val fs = tp.getFileSystem(conf.value)
-      val out = scala.collection.mutable.ArrayBuffer.empty[DvBuildResult]
-      // one multi-DV file per partition (rotated at ~16 MB so no single
-      // file grows unbounded under a very broad delete). A FAILED or
+      val out = scala.collection.mutable.ArrayBuffer
+        .empty[(String, Long, Option[(String, DeletionVectorDescriptor)])]
+      // one multi-DV file per task (rotated at ~16 MB so no single file
+      // grows unbounded under a very broad delete). A FAILED or
       // speculative task attempt may leave its multi-DV file orphaned in
       // the table root (it was never collected, so neither the commit nor
       // `moved` knows it): orphans are unreferenced by every snapshot and
       // are reclaimed by VACUUM once past retention — bounded garbage,
       // same contract as an orphaned parquet from a failed write task.
-      val pend = scala.collection.mutable.ArrayBuffer.empty[(AddFile, Array[Byte], Long, Long)]
+      val pend = scala.collection.mutable.ArrayBuffer.empty[(String, Array[Byte], Long, Long)]
       var pendBytes = 0L
       def flush(): Unit = if (pend.nonEmpty) {
         val (file, descs) = DeletionVectorStore.writeMany(tp, fs,
           pend.map(_._2).toSeq, pend.map(_._3).toSeq)
         pend.indices.foreach { i =>
-          val d = descs(i)
-          out += DvBuildResult(pend(i)._1, fullyDeleted = false, pend(i)._4,
-            Some(file.toString), Some(d.storageType), Some(d.pathOrInlineDv),
-            d.offset, Some(d.sizeInBytes), Some(d.cardinality))
+          out += ((pend(i)._1, pend(i)._4, Some((file.toString, descs(i)))))
         }
         pend.clear(); pendBytes = 0L
       }
-      it.foreach { in =>
-        val af = in.f.getOrElse(throw new IllegalStateException(
-          s"hit in unknown file ${in.p}"))
-        val fresh = DvCodec.deserialize(in.dv)
-        val existing = af.deletionVector.map(DeletionVectorStore.read(tp, fs, _))
-        val merged = existing match {
-          case Some(e) => Bitmap64.or(e, fresh)
-          case None => fresh
-        }
+      files.foreach { case (p, buf) =>
+        val (existingDv, numRecords) = known(p)
+        val fresh = buf.toBitmap
+        val existing = existingDv.map(DeletionVectorStore.read(tp, fs, _))
+        val merged = existing.fold(fresh)(Bitmap64.or(_, fresh))
         val newly = merged.cardinality - existing.map(_.cardinality).getOrElse(0L)
         // every hit was deleted already: the file is unchanged, and a
         // remove + re-add of it would be a data change with no changed row
         if (newly == 0) ()
-        else if (af.parsedStats.flatMap(_.numRecords).contains(merged.cardinality)) {
-          // fully deleted → plain remove, no DV to write
-          out += DvBuildResult(af, fullyDeleted = true, newly,
-            None, None, None, None, None, None)
-        } else {
+        // fully deleted → plain remove, no DV to write
+        else if (numRecords.contains(merged.cardinality)) out += ((p, newly, None))
+        else {
           val bytes = DvCodec.serialize(merged)
-          pend += ((af, bytes, merged.cardinality, newly))
+          pend += ((p, bytes, merged.cardinality, newly))
           pendBytes += bytes.length
           if (pendBytes >= 16L * 1024 * 1024) flush()
         }
       }
       flush()
       out.iterator
-    }(Encoders.product[DvBuildResult]).collect()
+    }.collect() finally facts.destroy()
     if (results.isEmpty) return (Nil, 0L)
 
     if (moved != null)
-      results.flatMap(_.dvFile).distinct
+      results.flatMap(_._3.map(_._1)).distinct
         .foreach(f => moved += new org.apache.hadoop.fs.Path(f))
-    var deletedRows = 0L
-    val actions = scala.collection.mutable.ArrayBuffer.empty[Action]
     val now = System.currentTimeMillis()
-    results.foreach { r =>
-      val f = r.f
-      deletedRows += r.newlyDeleted
-      actions += Action(f.removed(now))
-      if (!r.fullyDeleted) {
-        // file still has live rows → re-add with the merged DV. dataChange
-        // is set explicitly: `f` may be replayed from an OPTIMIZE commit
-        // (dataChange=false), but THIS commit deletes rows — copying the
-        // stale flag would hide the change from CDF/streaming consumers
-        val desc = DeletionVectorDescriptor(r.storageType.get,
-          r.pathOrInlineDv.get, r.offset, r.sizeInBytes.get, r.cardinality.get)
-        actions += Action(f.copy(deletionVector = Some(desc), dataChange = true,
+    val actions = results.toSeq.flatMap { case (p, _, dv) =>
+      val f = candidates(p)
+      // file still has live rows → re-add with the merged DV. dataChange
+      // is set explicitly: `f` may be replayed from an OPTIMIZE commit
+      // (dataChange=false), but THIS commit deletes rows — copying the
+      // stale flag would hide the change from CDF/streaming consumers
+      Action(f.removed(now)) +: dv.toSeq.map { case (_, d) =>
+        Action(f.copy(deletionVector = Some(d), dataChange = true,
           stats = wideBoundsStats(f.stats)))
       }
     }
-    (actions.toSeq, deletedRows)
+    (actions, results.map(_._2).sum)
   }
 
   /** Stats carried onto a DV-carrying add are no longer exact — the DV may

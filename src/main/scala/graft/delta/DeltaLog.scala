@@ -70,7 +70,7 @@ class DeltaLog private (@transient val spark: SparkSession, val tablePath: Path)
           .filter(n => n.has("sidecar") && !n.get("sidecar").isNull)
           .map(_.get("sidecar").get("path").asText)
       else {
-        val df = spark.read.parquet(manifest.toString)
+        val df = DeltaLog.readParquet(spark, Seq(manifest))
         if (!df.columns.contains("sidecar")) Nil
         else df.select(col("sidecar.path")).where(col("sidecar").isNotNull)
           .collect().map(_.getString(0)).toSeq
@@ -254,7 +254,7 @@ class DeltaLog private (@transient val spark: SparkSession, val tablePath: Path)
         val huge = size.exists(sz => sz >= lazyThreshold || cp.bytes >= lazyThresholdBytes)
         val (count, actions) =
           if (huge) {
-            val df = spark.read.parquet(cp.paths.map(_.toString): _*)
+            val df = DeltaLog.readParquet(spark, cp.paths)
             (df.count(), decodeActionDf(
               df.where(org.apache.spark.sql.functions.col("add").isNull),
               s"$logPath v$cv (non-add)"))
@@ -377,7 +377,7 @@ class DeltaLog private (@transient val spark: SparkSession, val tablePath: Path)
   private def readCheckpoint(cp: CheckpointRef): Seq[Action] = cp.manifest match {
     case Some(m) => readV2Checkpoint(cp.version, m)
     case None =>
-      decodeActionDf(spark.read.parquet(cp.paths.map(_.toString): _*), s"$logPath v${cp.version}")
+      decodeActionDf(DeltaLog.readParquet(spark, cp.paths), s"$logPath v${cp.version}")
   }
 
   /** V2 checkpoint: the manifest (json lines or parquet) holds
@@ -395,7 +395,7 @@ class DeltaLog private (@transient val spark: SparkSession, val tablePath: Path)
         val scs = nodes.filter(_.has("sidecar")).map(_.get("sidecar").get("path").asText)
         (nodes.flatMap(ActionJson.fromNode), scs) // sidecar/cpMeta lines drop out
       } else {
-        val df = spark.read.parquet(manifest.toString)
+        val df = DeltaLog.readParquet(spark, Seq(manifest))
         val cols = df.columns.toSet
         validateCheckpointMetadata(v, manifest,
           if (!cols.contains("checkpointMetadata")) None
@@ -412,7 +412,7 @@ class DeltaLog private (@transient val spark: SparkSession, val tablePath: Path)
       }
     if (sidecars.isEmpty) actions
     else actions ++ decodeActionDf(
-      spark.read.parquet(sidecars.map(resolveSidecarPath(_).toString): _*),
+      DeltaLog.readParquet(spark, sidecars.map(resolveSidecarPath)),
       s"${manifest.getName} sidecars")
   }
 
@@ -438,7 +438,7 @@ class DeltaLog private (@transient val spark: SparkSession, val tablePath: Path)
     * bottleneck). Shapes the encoder can't resolve fall back to the JSON
     * path. */
   private def decodeActionDf(df: org.apache.spark.sql.DataFrame, what: String): Seq[Action] =
-    try DeltaLog.actionFrame(df).as[Action](org.apache.spark.sql.Encoders.product[Action])
+    try DeltaLog.actionFrame(df).as[Action](DeltaLog.actionEncoder)
       .collect().toSeq
     catch {
       // AnalysisException: encoder can't resolve the layout at all.
@@ -589,7 +589,7 @@ object DeltaLog {
     import org.apache.spark.sql.functions.{col, lit, struct, when}
     import org.apache.spark.sql.types.StructType
     val df = restoreParsedStructs(df0)
-    df.select(org.apache.spark.sql.Encoders.product[Action].schema.fields.toIndexedSeq.map { f =>
+    df.select(actionEncoder.schema.fields.toIndexedSeq.map { f =>
       if (!df.columns.contains(f.name)) lit(null).cast(f.dataType).as(f.name)
       else (f.dataType, df.schema(f.name).dataType) match {
         case (want: StructType, have: StructType)
@@ -601,6 +601,34 @@ object DeltaLog {
         case _ => col(f.name)
       }
     }: _*)
+  }
+
+  /** The one [[Action]] encoder. Deriving it reflects over the whole
+    * action model (~60 ms), so every typed action decode and checkpoint
+    * write shares this instance. */
+  private[delta] lazy val actionEncoder: org.apache.spark.sql.Encoder[Action] =
+    org.apache.spark.sql.Encoders.product[Action]
+
+  /** Checkpoint-shaped parquet files (classic parts, V2 manifests,
+    * sidecars) as a DataFrame whose schema is the first file's footer,
+    * read on the driver. That is the schema Spark itself takes without a
+    * schema merge — its `org.apache.spark.sql.parquet.row.metadata` key,
+    * else the parquet schema converted under the session conf — minus the
+    * Spark job it runs to infer it. */
+  private[delta] def readParquet(spark: SparkSession, paths: Seq[Path])
+      : org.apache.spark.sql.DataFrame = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.types.{DataType, StructType}
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromPath(paths.head, spark.sessionState.newHadoopConf()))
+    val meta = try reader.getFooter.getFileMetaData finally reader.close()
+    val schema = Option(meta.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
+      .flatMap(json => scala.util.Try(DataType.fromJson(json)).toOption)
+      .collect { case s: StructType => s }
+      .getOrElse(new org.apache.spark.sql.execution.datasources.parquet
+        .ParquetToSparkSchemaConverter(spark.sessionState.conf).convert(meta.getSchema))
+    spark.read.schema(schema).parquet(paths.map(_.toString): _*)
   }
 
   def forPath(spark: SparkSession, path: String): DeltaLog = {

@@ -71,10 +71,20 @@ class GraftFileIndex(spark: SparkSession, snapshot: Snapshot,
     dynamicThunks: Seq[() => Seq[Expression]] = Nil,
     /** An explicit file list read under the snapshot's metadata (see
       * [[Snapshot.relation]]); None lists the snapshot's own files. */
-    files: Option[Seq[AddFile]] = None) extends FileIndex {
+    files: Option[Seq[AddFile]] = None,
+    /** What [[listFiles]] returned, by log path; shared with the copies
+      * [[withDynamicThunk]] makes. */
+    listed: java.util.concurrent.ConcurrentHashMap[String, AddFile] =
+      new java.util.concurrent.ConcurrentHashMap[String, AddFile]) extends FileIndex {
 
   def withDynamicThunk(t: () => Seq[Expression]): GraftFileIndex =
-    new GraftFileIndex(spark, snapshot, options, dynamicThunks :+ t, files)
+    new GraftFileIndex(spark, snapshot, options, dynamicThunks :+ t, files, listed)
+
+  /** Every file a listing of this index (or of a pruning copy) returned:
+    * the files a plan over it scanned, after partition and stats
+    * skipping. A DML's deletion-vector build takes its per-file facts
+    * from here ([[DeltaDelete.dvActions]]). */
+  private[delta] def listedFiles: Iterable[AddFile] = listed.values.asScala
 
   /** The snapshot whose log facts describe exactly the listed files — the
     * [[MetadataOnlyCount]] rewrites' input. None for an explicit file
@@ -166,6 +176,7 @@ class GraftFileIndex(spark: SparkSession, snapshot: Snapshot,
           pruned
         }
       }
+    afterDynamic.foreach(f => listed.put(f.path, f))
     // 4. group by partition values → PartitionDirectory
     afterDynamic
       .groupBy(_.partitionValues)

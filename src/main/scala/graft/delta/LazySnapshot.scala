@@ -22,11 +22,6 @@ import org.apache.spark.sql.functions.{col, sum}
  * nature. `delta-kernel`-style engines make the same split: scans stream
  * the checkpoint, maintenance reads it whole.
  */
-/** (decodedPath, descriptor) projection row for the distributed DV
-  * registry collect. */
-private[delta] final case class DvRegPair(
-    p: String, dv: Option[DeletionVectorDescriptor])
-
 private[graft] class LazySnapshot(
     log: DeltaLog,
     version: Long,
@@ -43,54 +38,48 @@ private[graft] class LazySnapshot(
   extends Snapshot(log, version, protocol, metadata, Nil,
     setTransactions, domainMetadata, tombstones) {
 
-  @transient private lazy val addEncoder = Encoders.product[AddFile]
-
-  /** Typed adds Dataset: checkpoint adds (decoded like the eager path's
-    * checkpoint actions) minus shadowed paths, plus the tail's own adds. */
-  @transient private[graft] lazy val addsDataset: Dataset[AddFile] = {
+  /** The live adds as add actions, typed by the shared
+    * [[DeltaLog.actionEncoder]]: checkpoint adds (decoded like the eager
+    * path's checkpoint actions) minus shadowed paths, plus the tail's own
+    * adds. Every row's `add` is set. */
+  @transient private[graft] lazy val addsDataset: Dataset[Action] = {
     val spark = log.spark
     val dead = shadowed // small; serialized into the closure
-    val base = DeltaLog.actionFrame(spark.read.parquet(checkpointPaths.map(_.toString): _*))
+    val base = DeltaLog.actionFrame(DeltaLog.readParquet(spark, checkpointPaths))
       .where(col("add").isNotNull)
-      .select(addEncoder.schema.fieldNames.toIndexedSeq.map(n => col(s"add.`$n`")): _*)
-      .as[AddFile](addEncoder)
-      .filter((f: AddFile) => !dead.contains(f.decodedPath))
+      .as[Action](DeltaLog.actionEncoder)
+      .filter((a: Action) => !dead.contains(a.add.get.decodedPath))
     if (tailAdds.isEmpty) base
-    else base.union(spark.createDataset(tailAdds)(addEncoder))
+    else base.union(spark.createDataset(tailAdds.map(Action(_)))(DeltaLog.actionEncoder))
   }
 
   /** Diagnostics: whether a full driver-side materialization ever happened
     * (scans should never trigger one). */
   @volatile private[graft] var materializedFull: Boolean = false
 
-  /** DML's per-file facts come straight from the checkpoint-backed
-    * Dataset — a DELETE on a 10⁶-file table never collects the list. */
-  override private[delta] def filesDataset: Dataset[AddFile] = addsDataset
-
   /** DV registry input as a distributed projection collect: descriptor
     * pairs only, never the stats-bearing AddFiles. */
   override private[delta] def dvRegistryPairs
       : Seq[(String, Option[DeletionVectorDescriptor])] =
-    addsDataset.mapPartitions(
-      _.map(f => DvRegPair(f.decodedPath, f.deletionVector)))(
-      Encoders.product[DvRegPair]).collect().toSeq.map(e => (e.p, e.dv))
+    addsDataset.rdd.map { a => val f = a.add.get; (f.decodedPath, f.deletionVector) }
+      .collect().toSeq
 
   override lazy val allFiles: Seq[AddFile] = {
     materializedFull = true
-    addsDataset.collect().toSeq
+    addsDataset.collect().toSeq.flatMap(_.add)
   }
 
   override lazy val fileCount: Long = addsDataset.count()
 
   override lazy val sizeInBytes: Long =
-    addsDataset.agg(sum(col("size"))).collect()(0).getLong(0)
+    addsDataset.agg(sum(col("add.size"))).collect()(0).getLong(0)
 
   /** Distributed Σ numRecords: (sum, files-without-stats) per partition. */
   override lazy val numRecordsEstimate: Option[Long] = {
     val (total, missing) = addsDataset
       .mapPartitions { it =>
         var s = 0L; var miss = 0L
-        it.foreach(f => f.parsedStats.flatMap(_.numRecords) match {
+        it.foreach(a => a.add.get.parsedStats.flatMap(_.numRecords) match {
           case Some(n) => s += n
           case None => miss += 1
         })
@@ -101,7 +90,7 @@ private[graft] class LazySnapshot(
   }
 
   override lazy val hasDeletionVectors: Boolean =
-    !addsDataset.filter((f: AddFile) => f.deletionVector.isDefined).isEmpty
+    !addsDataset.where(col("add.deletionVector").isNotNull).isEmpty
 
   /** Distributed grouped live counts: executor-side partial sums keyed by
     * the escaped partition tuple, merged on the driver — partials are
@@ -115,7 +104,7 @@ private[graft] class LazySnapshot(
       // short-circuit on bail: no point decoding the rest of a 10⁶-add
       // checkpoint partition just to emit the sentinel
       while (it.hasNext && !bail) {
-        fn(it.next()) match {
+        fn(it.next().add.get) match {
           case None => bail = true
           case Some((vals, live)) =>
             val k = ColumnFacts.encodeKey(vals)
@@ -143,7 +132,7 @@ private[graft] class LazySnapshot(
     val fn = ColumnFacts.fileFacts(key, isPartition, dt, needExtremes) _
     val partials = addsDataset.mapPartitions { it =>
       val fold = new ColumnFacts.Fold(dt)
-      while (it.hasNext && !fold.bailed) fold.add(fn(it.next()))
+      while (it.hasNext && !fold.bailed) fold.add(fn(it.next().add.get))
       Iterator(fold.result match {
         case None => (1L, 0L, null: String, null: String)
         case Some((c, mn, mx)) =>
@@ -163,7 +152,8 @@ private[graft] class LazySnapshot(
     val (total, missing) = addsDataset
       .mapPartitions { it =>
         var s = 0L; var miss = 0L
-        it.foreach { f =>
+        it.foreach { a =>
+          val f = a.add.get
           f.parsedStats.flatMap(_.numRecords) match {
             case Some(n) => s += n - f.deletionVector.map(_.cardinality).getOrElse(0L)
             case None => miss += 1
@@ -187,10 +177,11 @@ private[graft] class LazySnapshot(
     val bound = partitionBound
     addsDataset.mapPartitions { it =>
       val pred = bound.map(Predicate.createInterpreted)
-      it.filter { f =>
+      it.filter { a =>
+        val f = a.add.get
         keep.forall(_(f)) &&
           pred.forall(_.eval(PartitionUtil.internalRow(f.partitionValues, pSchema)))
       }
-    }(addEncoder).collect().toSeq
+    }(DeltaLog.actionEncoder).collect().toSeq.flatMap(_.add)
   }
 }

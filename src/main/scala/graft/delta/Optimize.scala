@@ -384,7 +384,7 @@ object Optimize {
       /** stamped on the rewritten adds (liquid-clustered OPTIMIZE) */
       clusteringProvider: Option[String] = None): Result = {
     import org.apache.spark.sql.functions.{coalesce, conv, floor, greatest,
-      hex, least, lit, max, min, substring}
+      hex, least, lit, max, min, struct, substring}
     val snap = log.update()
     ProtocolGate.validateWrite(snap, "OPTIMIZE")
     val partCols = snap.metadata.partitionColumns
@@ -416,6 +416,17 @@ object Optimize {
       if (hi <= lo) lit(0)
       else least(lit(65535), greatest(lit(0),
         floor((col(c).cast("double") - lit(lo)) * 65535.0 / (hi - lo)).cast("int")))
+    // every numeric column's (min, max) in one aggregate job
+    val numeric = cols.filter(c =>
+      snap.schema(c).dataType != org.apache.spark.sql.types.StringType)
+    val bounds: Map[String, org.apache.spark.sql.Row] =
+      if (numeric.isEmpty) Map.empty
+      else {
+        val aggs = numeric.map(c =>
+          struct(min(col(c).cast("double")), max(col(c).cast("double"))))
+        val r = rows.agg(aggs.head, aggs.tail: _*).head()
+        numeric.indices.map(i => numeric(i) -> r.getStruct(i)).toMap
+      }
     val bucketCols = cols.map { c =>
       snap.schema(c).dataType match {
         case org.apache.spark.sql.types.StringType =>
@@ -423,8 +434,7 @@ object Optimize {
             conv(hex(substring(col(c).cast("binary"), 1, 2)), 16, 10).cast("int"),
             lit(0))
         case _ =>
-          val mm = rows.agg(
-            min(col(c).cast("double")), max(col(c).cast("double"))).head()
+          val mm = bounds(c)
           if (mm.isNullAt(0)) lit(0)
           else numericBucket(c, mm.getDouble(0), mm.getDouble(1))
       }

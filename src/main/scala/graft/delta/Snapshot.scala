@@ -64,15 +64,6 @@ class Snapshot(
 
   def fileCount: Long = allFiles.size
 
-  /** Typed Dataset over the full file list — the DISTRIBUTED surface for
-    * passes that must not funnel O(#table-files) through the driver (the
-    * DML path's per-file facts join). Eager snapshots wrap their
-    * in-memory list; [[LazySnapshot]] overrides with its checkpoint-backed
-    * Dataset so the list never materializes driver-side. */
-  private[delta] def filesDataset: org.apache.spark.sql.Dataset[AddFile] =
-    log.spark.createDataset(allFiles)(
-      org.apache.spark.sql.Encoders.product[AddFile])
-
   /** (decodedPath, deletionVector) projection of the file list — the DV
     * registry's input. Eager snapshots read the in-memory list;
     * [[LazySnapshot]] collects the projection distributed so DV-table

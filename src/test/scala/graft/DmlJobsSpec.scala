@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.BusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,22 +8,10 @@ import graft.delta._
 /** Spark jobs per DML kind on a 40k-row table, with the change data feed
   * off and on. The counts are pinned, so a change that adds a pass over
   * the data to a DML kind fails here. A write is one job: its files'
-  * stats are collected in the writing tasks, never by reading them back. */
+  * stats are collected in the writing tasks, never by reading them back,
+  * and a DML's deletion vectors are built in one job. */
 class DmlJobsSpec extends AnyFunSuite {
   import TestSpark._
-
-  /** Jobs started while `body` runs. */
-  private def jobs(body: => Any): Int = {
-    val sc = spark.sparkContext
-    val started = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = started.incrementAndGet()
-    }
-    BusDrain(sc)
-    sc.addSparkListener(listener)
-    try { body; BusDrain(sc); started.get }
-    finally sc.removeSparkListener(listener)
-  }
 
   private def rows(from: Long, until: Long) =
     spark.range(from, until).select(col("id").as("k"), (col("id") % 97).as("v"))
@@ -52,12 +36,12 @@ class DmlJobsSpec extends AnyFunSuite {
   /** (plain, change data feed on) */
   private val pinned: Map[String, (Int, Int)] = Map(
     "10-row append" -> ((1, 1)),
-    "DELETE" -> ((3, 4)),
-    "UPDATE" -> ((4, 5)),
-    "upsert" -> ((9, 10)),
-    "builder MERGE" -> ((9, 10)),
-    "mergeDelete" -> ((4, 6)),
-    "builder delete-only MERGE" -> ((4, 6)))
+    "DELETE" -> ((1, 2)),
+    "UPDATE" -> ((2, 3)),
+    "upsert" -> ((7, 8)),
+    "builder MERGE" -> ((7, 8)),
+    "mergeDelete" -> ((2, 4)),
+    "builder delete-only MERGE" -> ((2, 4)))
 
   test("Spark jobs per DML kind, change data feed off and on") {
     val counted = ops.map { case (name, op) =>
@@ -66,7 +50,7 @@ class DmlJobsSpec extends AnyFunSuite {
         DeltaWriter.append(spark, rows(0, 40000).repartition(4), dir,
           configuration =
             if (cdf) Map("delta.enableChangeDataFeed" -> "true") else Map.empty)
-        jobs(op(dir))
+        SparkJobs.during(op(dir)).size
       }
       name -> ((perMode(0), perMode(1)))
     }.toMap

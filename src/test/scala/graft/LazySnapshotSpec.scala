@@ -153,9 +153,9 @@ class LazySnapshotSpec extends AnyFunSuite {
       val total = src.count()
       val hit = src.where(col("l_orderkey") < 100).count()
       assert(hit > 0)
-      // the per-file facts join must come from the Dataset-backed list:
-      // a driver-side materialization on a 10⁶-file table would undo the
-      // executor-side DV write this path exists for
+      // the per-file facts must come from the hit scan's own listing of
+      // surviving files: a driver-side materialization on a 10⁶-file
+      // table would undo the executor-side DV write this path exists for
       val deleted = DeltaDelete.delete(spark, log, col("l_orderkey") < 100)
       assert(deleted == hit)
       assert(!lazySnap.materializedFull,

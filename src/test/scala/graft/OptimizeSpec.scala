@@ -321,6 +321,25 @@ class OptimizeSpec extends AnyFunSuite {
     }
   }
 
+  test("a 4-column numeric ZORDER computes every column's bounds in one aggregate") {
+    val src = spark.range(20000L).select(col("id"),
+      (col("id") % 97).as("a"), (col("id") % 89).cast("double").as("b"),
+      (col("id") % 83).cast("int").as("c"), (col("id") % 79).as("d"))
+    /** The jobs a ZORDER by `cols` runs on a fresh copy of `src`. */
+    def jobs(cols: Seq[String]): Seq[String] = {
+      val path = tmpTable()
+      DeltaWriter.append(spark, src.repartition(4), path)
+      val started = SparkJobs.during(DeltaTable.forPath(spark, path).zorder(cols))
+      assert(DeltaTable.forPath(spark, path).toDF.count() == 20000)
+      started
+    }
+    // one bounds aggregate whatever the column count: a job per column
+    // would add three to the 4-column run
+    val one = jobs(Seq("a"))
+    val four = jobs(Seq("a", "b", "c", "d"))
+    assert(four.size == one.size, s"\n1 column: $one\n4 columns: $four")
+  }
+
   test("overwrite replaces content atomically; replaceWhere scopes it") {
     val src = Fixtures.readParquet(spark, sfDir, "nation")
       .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))

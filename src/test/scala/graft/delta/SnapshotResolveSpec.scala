@@ -6,7 +6,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{CountingFileSystem, TestSpark}
+import graft.{CountingFileSystem, SparkJobs, TestSpark}
 
 /** Snapshot resolution: one `_delta_log` listing per resolve, the eager and
   * the checkpoint-backed (lazy) snapshot agree on all table state, a log
@@ -44,6 +44,22 @@ class SnapshotResolveSpec extends AnyFunSuite {
         s"$name: _delta_log listings cold/poll/no-change = $c1/$c2/$c3")
       assert(reader.update().toDF.count() == 30)
     }
+  }
+
+  test("a cold resolve over a single-part checkpoint runs one Spark job") {
+    val path = tmpTable()
+    DeltaWriter.append(spark, rows(0, 10), path)
+    DeltaWriter.append(spark, rows(10, 20), path)
+    Checkpoints.checkpoint(DeltaLog.forPath(spark, path))
+    DeltaWriter.append(spark, rows(20, 30), path)
+    DeltaLog.clearCache()
+    var snap: Snapshot = null
+    val jobs = SparkJobs.during { snap = DeltaLog.forPath(spark, path).update() }
+    assert(!snap.isInstanceOf[LazySnapshot])
+    assert(snap.version == 2 && snap.allFiles.size == 3)
+    // the checkpoint's schema comes from its footer: no inference job
+    assert(jobs.size == 1, jobs.mkString("\n"))
+    assert(snap.toDF.count() == 30)
   }
 
   /** All table state a snapshot carries, keyed so the two paths compare

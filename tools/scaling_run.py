@@ -5,7 +5,9 @@ Runs the bench's own fresh-JVM `--one` mode (warm + 2 hot, min printed as
 `[one] <name> <sec>`) over the full x300 synthetic dir at alternating core
 counts (32, 8, 32, 8 — alternation cancels host drift; min per (query,
 cpus) across rounds), then writes bench-rounds/r20-scaling-x300.json with
-per-query seconds and the 8→32-core speedup ratio.
+per-query seconds and the 8→32-core speedup ratio. A query with no timed
+row at either core count, or a zero 32-core time, has no ratio: it is
+listed with the reason under `excluded` and printed.
 
 Usage: python3 tools/scaling_run.py <x300_dir> [rounds=2]
 """
@@ -56,9 +58,16 @@ def main():
             for k, v in t.items():
                 if k not in best[cpus] or v < best[cpus][k]:
                     best[cpus][k] = v
-    ratios = {q: round(best[8][q] / best[32][q], 2)
-              for q in QUERIES if q in best[8] and q in best[32]
-              and best[32][q] > 0}
+    ratios, excluded = {}, {}
+    for q in QUERIES:
+        missing = [c for c in (8, 32) if q not in best[c]]
+        if missing:
+            excluded[q] = "no timed row at %s cores" % \
+                " and ".join(str(c) for c in missing)
+        elif best[32][q] <= 0:
+            excluded[q] = "zero 32-core time"
+        else:
+            ratios[q] = round(best[8][q] / best[32][q], 2)
     art = {
         "purpose": "VERDICT r19 #1: 8-vs-32-core scaling at x300 "
                    "(fresh-JVM --one mode, min over alternating rounds)",
@@ -67,12 +76,15 @@ def main():
         "best_32": {k: round(v, 3) for k, v in sorted(best[32].items())},
         "best_8": {k: round(v, 3) for k, v in sorted(best[8].items())},
         "speedup_8_to_32": dict(sorted(ratios.items())),
+        "excluded": dict(sorted(excluded.items())),
     }
     out = "bench-rounds/r20-scaling-x300.json"
     with open(out, "w") as f:
         json.dump(art, f, indent=1)
     print("wrote", out)
     print(json.dumps(art["speedup_8_to_32"], indent=1))
+    for q, why in art["excluded"].items():
+        print(f"excluded from speedup_8_to_32: {q}: {why}")
 
 if __name__ == "__main__":
     main()

@@ -137,15 +137,9 @@ object Alter {
         // was set while no variant column existed (setProperties skips the
         // stamp then), the first variant column makes every subsequent
         // write shred, so variantShredding-preview must stamp HERE
-        val tf0 = ProtocolGate.typeFeatures(
-          org.apache.spark.sql.types.StructType(cols.map(_._2)))
-        val tf =
-          if (tf0.contains("variantType") &&
-              DeltaWriter.shreddingEnabled(snap.metadata.configuration))
-            tf0 :+ "variantShredding-preview"
-          else tf0
-        ProtocolGate.readerWriterFeatureUpgrade(base.getOrElse(snap.protocol), tf)
-          .orElse(base)
+        ProtocolGate.readerWriterFeatureUpgrade(base.getOrElse(snap.protocol),
+          ProtocolGate.typeFeatures(org.apache.spark.sql.types.StructType(cols.map(_._2)),
+            snap.metadata.configuration)).orElse(base)
       })
   }
 

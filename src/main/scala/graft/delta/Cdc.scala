@@ -47,7 +47,7 @@ object Cdc {
     // column-mapped tables: change files are keyed physically like data
     // files (incl. field ids in id mode); _change_type stays literal (a
     // metadata column, never mapped)
-    val (changeDf, _, partCols, writeOpts) = DeltaWriter.toPhysical(spark, snap,
+    val (changeDf, _, partCols, writeOpts) = DeltaWriter.toPhysical(Some(snap), snap.schema,
       changeDf0, partCols0, Seq(StructField("_change_type", StringType)))
     InPlaceWrite(spark, changeDf, new Path(log.tablePath, DIR), partCols, writeOpts,
       snap.metadata.configuration, Nil, staged).map { w =>

@@ -321,13 +321,13 @@ object DeltaDelete {
   /**
    * The tail DELETE, UPDATE and MERGE share, in one staging scope: write
    * the new row images `rows` (logical columns, plus the materialized
-   * row-id column `ids` names on a row-tracked table) through the checks
-   * appends run, soft-delete the `hits` (file path `p`, row index `i`),
-   * stage the change data and land ONE commit. Nothing commits when no
-   * row was deleted, unless `force`.
+   * row-id column `ids` names on a row-tracked table) through the write
+   * step [[DeltaWriter.write]], soft-delete the `hits` (file path `p`,
+   * row index `i`), stage the change data and land ONE commit. Nothing
+   * commits when no row was deleted, unless `force`.
    *
-   * @param ids the row-id column and, on its first rewrite, the metadata
-   *   that mints its name (see [[RowTracking.rewriteIdColumn]])
+   * @param ids the materialized row-id columns on a row-tracked table;
+   *   the rows carry the id column only (see [[RowTracking.rewriteColumns]])
    * @param changes the change-data frame (logical columns plus
    *   `_change_type`), built only when the change data feed is on and the
    *   operation commits
@@ -338,24 +338,18 @@ object DeltaDelete {
   private[delta] def rewrite(spark: SparkSession, log: DeltaLog, snap: Snapshot,
       op: String, hits: Option[DataFrame], rows: Option[DataFrame],
       changes: => DataFrame,
-      ids: Option[(String, Option[Metadata])] = None,
+      ids: Option[RowTracking.RewriteColumns] = None,
       actions: Seq[Action] = Nil,
       params: Map[String, String],
       metrics: (Long, Int) => Map[String, String],
       scope: => ConflictChecker.ReadScope,
       force: Boolean = false): Long =
     ConflictChecker.staging(log) { staged =>
-      val minted = ids.flatMap(_._2)
-      val adds = rows.fold(Seq.empty[AddFile]) { w =>
-        val (stage, stageSchema, stagePartCols, stageOpts) = DeltaWriter.toPhysical(spark, snap,
-          DeltaWriter.withWriteChecks(w, snap.schema,
-            snap.metadata.configuration, log.tablePath.toString),
-          snap.metadata.partitionColumns, ids.toSeq.map(i => RowTracking.idField(i._1)))
-        DeltaWriter.writeFiles(spark, log, stage, stageSchema, stagePartCols, staged, stageOpts,
-          // post-mint config: the FIRST id-materializing rewrite must
-          // already exempt the minted columns from stats
-          configuration = minted.fold(snap.metadata.configuration)(_.configuration))
-      }
+      val minted = ids.flatMap(_.minted)
+      val adds = rows.fold(Seq.empty[AddFile])(DeltaWriter.write(spark, log, Some(snap),
+        snap.schema, _, snap.metadata.partitionColumns,
+        minted.getOrElse(snap.metadata).configuration, staged,
+        passThrough = ids.map(c => RowTracking.idField(c.id)).toSeq))
       val (dvActs, deleted) =
         hits.fold((Seq.empty[Action], 0L))(dvActions(log, snap, _, staged))
       if (deleted > 0 || force) {
@@ -502,7 +496,9 @@ object DeltaMerge {
       matched.exists(cl => !cl.isDelete && cl.assignments.isEmpty) ||
       notMatched.exists(_._2.isEmpty)
     val genFilled =
-      if (needAllSourceCols) DeltaWriter.fillGenerated(Some(snap), source) else source
+      if (needAllSourceCols)
+        DeltaWriter.fillMissing("delta.generationExpression", snap.schema, source)
+      else source
     if (needAllSourceCols) {
       val missing = schemaCols.filterNot(c =>
         genFilled.columns.exists(_.equalsIgnoreCase(c)))
@@ -521,12 +517,12 @@ object DeltaMerge {
     // row-tracked tables: updated images keep their stable id via the
     // materialized id column; inserted rows get fresh ids from the new
     // file's baseRowId (their materialized slot stays null)
-    val ids = RowTracking.rewriteIdColumn(snap)
-    val tPref = snap.relationDF(extraDataCols = ids.toSeq.map(i => RowTracking.idField(i._1)))
+    val ids = RowTracking.rewriteColumns(snap)
+    val tPref = snap.relationDF(extraDataCols = ids.map(c => RowTracking.idField(c.id)).toSeq)
       .select((schemaCols.map(c => col(s"`$c`").as(s"__t_$c")) ++ Seq(
         col("_metadata.file_path").as("__file"),
         col("_metadata.row_index").as("__row")) ++
-        ids.map { case (mid, _) => RowTracking.preservedIdCol(snap, mid).as("__rowid") })
+        ids.map(c => RowTracking.preservedIdCol(snap, c.id).as("__rowid")))
         .toIndexedSeq: _*)
     val joinCond = keyCols.map(c => col(s"`__t_$c`") === col(s"`__s_$c`")).reduce(_ && _)
 
@@ -616,17 +612,12 @@ object DeltaMerge {
             case None => throw new IllegalArgumentException(
               s"INSERT assignments must cover every column; missing $c")
           }
-        } ++ ids.map { case (mid, _) =>
-          (if (fromTarget) col("__rowid") else lit(null).cast("long")).as(mid)
-        }).toIndexedSeq: _*)
+        } ++ ids.map(c =>
+          (if (fromTarget) col("__rowid") else lit(null).cast("long")).as(c.id)
+        )).toIndexedSeq: _*)
         if (asg.isEmpty) base
-        else snap.schema.fields.foldLeft(base) { (b, f) =>
-          if (f.metadata.contains("delta.generationExpression") &&
-              !asg.exists(_._1.equalsIgnoreCase(f.name)))
-            b.withColumn(f.name,
-              expr(f.metadata.getString("delta.generationExpression")).cast(f.dataType))
-          else b
-        }
+        else DeltaWriter.fillMissing("delta.generationExpression", snap.schema, base,
+          refill = c => !asg.exists(_._1.equalsIgnoreCase(c)))
       }
       val images = (updates ++ Seq(insertAt).filter(_ => notMatched.isDefined))
         .map(a => a -> image(a))
@@ -691,9 +682,9 @@ object DeltaUpdate {
     // stays unmaterialized — the updated row's row_commit_version falls
     // back to the new file's defaultRowCommitVersion, i.e. THIS commit,
     // per protocol
-    val ids = RowTracking.rewriteIdColumn(snap)
+    val ids = RowTracking.rewriteColumns(snap)
     // live rows only: resurrecting already-deleted rows would be corruption
-    val matched = snap.relationDF(extraDataCols = ids.toSeq.map(i => RowTracking.idField(i._1)))
+    val matched = snap.relationDF(extraDataCols = ids.map(c => RowTracking.idField(c.id)).toSeq)
       .where(condition)
 
     // new row images, in logical column order. Generated columns NOT
@@ -704,16 +695,10 @@ object DeltaUpdate {
     // bypass.
     val assigned = matched.select((snap.schema.fields.map { f =>
       assignments.get(f.name).map(_.as(f.name)).getOrElse(col(s"`${f.name}`"))
-    } ++ ids.map { case (mid, _) =>
-      RowTracking.preservedIdCol(snap, mid).as(mid) }).toIndexedSeq: _*)
+    } ++ ids.map(c => RowTracking.preservedIdCol(snap, c.id).as(c.id))).toIndexedSeq: _*)
     // second phase so generation expressions see POST-assignment values
-    val newRows = snap.schema.fields.foldLeft(assigned) { (d, f) =>
-      if (f.metadata.contains("delta.generationExpression") &&
-          !assignments.contains(f.name))
-        d.withColumn(f.name, expr(
-          f.metadata.getString("delta.generationExpression")).cast(f.dataType))
-      else d
-    }
+    val newRows = DeltaWriter.fillMissing("delta.generationExpression", snap.schema,
+      assigned, refill = !assignments.contains(_))
     val cols = snap.schema.fieldNames.map(c => col(s"`$c`")).toIndexedSeq
     DeltaDelete.rewrite(spark, log, snap, "UPDATE",
       hits = Some(matched.select(

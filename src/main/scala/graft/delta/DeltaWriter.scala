@@ -47,8 +47,7 @@ object DeltaWriter {
       mergeSchema: Boolean = false): Long = {
 
     val log = DeltaLog.forPath(spark, path)
-    val exists = log.tableExists
-    val snapshot = if (exists) Some(log.update()) else None
+    val snapshot = if (log.tableExists) Some(log.update()) else None
 
     // BEYOND the reference (it rejects writes to column-mapped tables,
     // test/sql/generated/writing/append/basic_append.test:74+): appends
@@ -72,128 +71,109 @@ object DeltaWriter {
     }
 
     val partCols = snapshot.map(_.metadata.partitionColumns).getOrElse(partitionBy)
-
-    val genFilled00 = fillGenerated(snapshot, df)
-    val genFilled0 = fillDefaults(
-      snapshot.map(_.schema).getOrElse(genFilled00.schema), genFilled00)
-
-    // identity columns: auto-assign when missing (distributed prefix sum),
-    // sync the high-water mark when explicit; the new mark is committed in
-    // the SAME version via the schema re-emit below. At creation the
-    // supplied values seed the mark.
-    val (genFilled, identityMarks) = Identity.fill(spark,
-      snapshot.map(_.schema).getOrElse(df.schema), genFilled0,
-      creating = snapshot.isEmpty)
-
-    // column alignment + schema validation against the table; with
-    // mergeSchema, unseen columns extend the schema and existing columns
-    // may WIDEN (int→long, float→double, decimal growth — the protocol's
-    // type-widening evolution; old files upcast on read). Incoming columns
-    // NARROWER than the table type are upcast before writing either way.
-    val (aligned, tableSchema0) = snapshot match {
-      case Some(s) =>
-        val have = genFilled.columns.map(_.toLowerCase).toSet
-        val want = s.schema.fieldNames.map(_.toLowerCase).toSet
-        def dfField(name: String): StructField =
-          genFilled.schema.fields.find(_.name.equalsIgnoreCase(name)).get
-        def castTo(target: StructField): org.apache.spark.sql.Column = {
-          val in = dfField(target.name)
-          alignExpr(col(s"`${in.name}`"), in.dataType, target.dataType).as(target.name)
-        }
-        if (mergeSchema) {
-          require(want.subsetOf(have),
-            s"mergeSchema append must contain all table columns; missing ${(want -- have).toSeq.sorted}")
-          val newCols = genFilled.columns.filterNot(c => s.schema.fieldNames.exists(_.equalsIgnoreCase(c)))
-          val mergedExisting = s.schema.fields.map { tf =>
-            widenedType(tf.dataType, dfField(tf.name).dataType, allowNewFields = true) match {
-              case Some(w) => tf.copy(dataType = w)
-              case None => throw new IllegalArgumentException(
-                s"Cannot merge types for column ${tf.name}: " +
-                  s"table ${tf.dataType.sql}, data ${dfField(tf.name).dataType.sql}")
-            }
-          }
-          val evolved = StructType(mergedExisting ++
-            newCols.map(c => genFilled.schema(genFilled.schema.fieldIndex(c)).copy(nullable = true)))
-          (genFilled.select(evolved.fields.map(castTo).toIndexedSeq: _*), evolved)
-        } else {
-          require(have == want,
-            s"Schema mismatch appending to $path: have ${have.toSeq.sorted}, want ${want.toSeq.sorted}")
-          s.schema.fields.foreach { tf =>
-            val inT = dfField(tf.name).dataType
-            // incoming must align INTO the table type unchanged: narrower
-            // primitives upcast, struct fields missing from the incoming
-            // side null-fill (nested add-column evolution — old-shape
-            // writers keep working after an ALTER), but nothing that would
-            // WIDEN the table schema without mergeSchema.
-            require(widenedType(tf.dataType, inT).contains(tf.dataType),
-              s"Type mismatch for column ${tf.name}: table ${tf.dataType.sql}, " +
-                s"data ${inT.sql} (not losslessly alignable; use mergeSchema to widen)")
-          }
-          (genFilled.select(s.schema.fields.map(castTo).toIndexedSeq: _*), s.schema)
-        }
-      case None => (genFilled, genFilled.schema)
-    }
-    // advanced identity high-water marks ride the same commit (the
-    // schemaString comparison in commitAppend re-emits metaData)
-    val tableSchema = Identity.withMarks(tableSchema0, identityMarks)
-
-    // reference rejects appends to EXISTING tables whose schema carries
-    // NOT NULL array-element constraints (delta_table_entry.cpp:99-103);
-    // creating a table from such a DataFrame is fine
-    if (snapshot.isDefined) {
-      tableSchema.fields.foreach { f =>
-        f.dataType match {
-          case ArrayType(_, false) =>
-            throw new UnsupportedOperationException(
-              s"Writes to tables with non-nullable array elements are not supported (column ${f.name})")
-          case _ => ()
-        }
-      }
-    }
-
-    // ---- CHECK constraints (`delta.constraints.<name>` configuration,
-    // protocol writer feature `checkConstraints`) and generated-column
-    // equality: enforced IN the write pass itself via assert_true — one
-    // codegen'd predicate riding the existing write scan, never a second
-    // validation job over the data (the 100 TB-sound shape); a violation
-    // fails the job and the staging scope removes staged files
-    val enforced = withWriteChecks(aligned, tableSchema,
-      snapshot.map(_.metadata.configuration).getOrElse(configuration), path)
-
-    // write + stats (executors), then commit with retry.
-    // (mergeSchema may have EVOLVED tableSchema beyond snap.schema — only
-    // the mapped branch may use the snapshot's schema, where mergeSchema
-    // is refused.)
-    val (toStage, stageSchema, stagePartCols, stageOpts) = snapshot match {
-      case Some(s) if s.columnMappingMode != "none" =>
-        toPhysical(spark, s, enforced, partCols)
-      case _ => (enforced, tableSchema, partCols, Map.empty[String, String])
-    }
+    val (rows, schema, _) = prepare(spark, df, path, snapshot, mergeSchema)
     ConflictChecker.staging(log) { staged =>
-      val adds = writeFiles(spark, log, toStage, stageSchema, stagePartCols,
-        staged, stageOpts,
-        snapshot.map(_.metadata.configuration).getOrElse(configuration))
-      commitAppend(log, snapshot, adds, staged, tableSchema, partCols,
+      val adds = write(spark, log, snapshot, schema, rows, partCols,
+        snapshot.map(_.metadata.configuration).getOrElse(configuration), staged)
+      commitAppend(log, snapshot, adds, staged, schema, partCols,
         configuration, txnAppId, txnVersion, operation)
     }
   }
 
-  /** Project `df` (logical column names) to the snapshot's PHYSICAL
+  /**
+   * The rows an append or overwrite writes and the schema it writes
+   * under. Generated columns and defaults the frame omits are filled;
+   * identity columns are assigned or synced (the advanced high-water marks
+   * ride the returned schema, so the commit re-emits them). Columns align
+   * on the table's LOGICAL names and types: narrower incoming types
+   * upcast, and missing nullable struct fields null-fill. With
+   * `mergeSchema`, unseen columns extend the schema and existing columns
+   * may WIDEN (the protocol's type widening; old files upcast on read).
+   * At create (`snapshot` None) the frame's own schema is the table's.
+   *
+   * @return (aligned rows, write schema, advanced identity marks)
+   */
+  private def prepare(spark: SparkSession, df: DataFrame, path: String,
+      snapshot: Option[Snapshot], mergeSchema: Boolean)
+      : (DataFrame, StructType, Map[String, Long]) = {
+    val table = snapshot.fold(df.schema)(_.schema)
+    // identity: auto-assign when missing (distributed prefix sum), sync
+    // the high-water mark when explicit; at creation the supplied values
+    // seed the mark
+    val (filled, marks) = Identity.fill(spark, table,
+      fillMissing("CURRENT_DEFAULT", table, fillMissing("delta.generationExpression", table, df)),
+      creating = snapshot.isEmpty)
+    val (aligned, schema) = snapshot match {
+      case None => (filled, filled.schema)
+      case Some(s) =>
+        val have = filled.columns.map(_.toLowerCase).toSet
+        val want = s.schema.fieldNames.map(_.toLowerCase).toSet
+        def dfField(name: String): StructField =
+          filled.schema.fields.find(_.name.equalsIgnoreCase(name)).get
+        val evolved =
+          if (mergeSchema) {
+            require(want.subsetOf(have),
+              s"mergeSchema append must contain all table columns; missing ${(want -- have).toSeq.sorted}")
+            val newCols = filled.schema.fields.filterNot(f => want.contains(f.name.toLowerCase))
+            StructType(s.schema.fields.map { tf =>
+              widenedType(tf.dataType, dfField(tf.name).dataType, allowNewFields = true) match {
+                case Some(w) => tf.copy(dataType = w)
+                case None => throw new IllegalArgumentException(
+                  s"Cannot merge types for column ${tf.name}: " +
+                    s"table ${tf.dataType.sql}, data ${dfField(tf.name).dataType.sql}")
+              }
+            } ++ newCols.map(_.copy(nullable = true)))
+          } else {
+            require(have == want,
+              s"Schema mismatch writing $path: have ${have.toSeq.sorted}, want ${want.toSeq.sorted}")
+            // nothing may WIDEN the table schema without mergeSchema
+            s.schema.fields.foreach { tf =>
+              val inT = dfField(tf.name).dataType
+              require(widenedType(tf.dataType, inT).contains(tf.dataType),
+                s"Type mismatch for column ${tf.name}: table ${tf.dataType.sql}, " +
+                  s"data ${inT.sql} (not losslessly alignable; use mergeSchema to widen)")
+            }
+            s.schema
+          }
+        (filled.select(evolved.fields.map { tf =>
+          val in = dfField(tf.name)
+          alignExpr(col(s"`${in.name}`"), in.dataType, tf.dataType).as(tf.name)
+        }.toIndexedSeq: _*), evolved)
+    }
+    // the reference rejects writes to EXISTING tables whose schema carries
+    // NOT NULL array-element constraints (delta_table_entry.cpp:99-103);
+    // creating a table from such a frame is fine
+    if (snapshot.isDefined) schema.fields.foreach { f =>
+      f.dataType match {
+        case ArrayType(_, false) =>
+          throw new UnsupportedOperationException(
+            s"Writes to tables with non-nullable array elements are not supported (column ${f.name})")
+        case _ => ()
+      }
+    }
+    (aligned, Identity.withMarks(schema, marks), marks)
+  }
+
+  /** Project `df` (logical column names) to the table's PHYSICAL
     * rendition: parquet files, stats keys and partitionValues of
     * column-mapped tables are keyed by physical name; id mode also stamps
     * `parquet.field.id` so readers resolve by id. Nested struct renames
     * (and id-mode nested field ids) ride a positional cast to the physical
-    * TYPE. Returns the extra per-write options the staging write needs —
-    * id mode enables field-id writing via the job hadoopConf, never by
-    * mutating the session conf. */
-  private[delta] def toPhysical(spark: SparkSession, s: Snapshot,
+    * TYPE. Returns the physical schema, partition columns and the extra
+    * per-write options — id mode enables field-id writing via the job
+    * hadoopConf, never by mutating the session conf. Unmapped tables
+    * (and a create) write `df` under `schema`, which a mergeSchema append
+    * may have evolved beyond the snapshot's; mapped tables refuse
+    * mergeSchema and write under the snapshot's. */
+  private[delta] def toPhysical(snapshot: Option[Snapshot], schema: StructType,
       df: DataFrame, partCols: Seq[String],
       /** physical pass-through columns beyond the table schema (the
         * row-tracking rewrite's materialized id columns) */
-      extraCols: Seq[org.apache.spark.sql.types.StructField] = Nil)
+      extraCols: Seq[StructField] = Nil)
       : (DataFrame, StructType, Seq[String], Map[String, String]) = {
-    if (s.columnMappingMode == "none")
-      return (df, StructType(s.schema.fields ++ extraCols), partCols, Map.empty)
+    val mapped = snapshot.filter(_.columnMappingMode != "none")
+    if (mapped.isEmpty) return (df, StructType(schema.fields ++ extraCols), partCols, Map.empty)
+    val s = mapped.get
     val writeOpts =
       if (s.columnMappingMode == "id")
         Map("spark.sql.parquet.fieldId.write.enabled" -> "true")
@@ -212,42 +192,22 @@ object DeltaWriter {
     (proj, StructType(physFields), physPart, writeOpts)
   }
 
-  /** Column defaults (field metadata `CURRENT_DEFAULT` — Spark's own
-    * default-value metadata key — protocol writer feature
-    * `allowColumnDefaults`): an incoming frame may omit the column and the
-    * engine fills the default EXPRESSION at write time. Write-time only,
-    * per the Delta feature: rows in files written before the column
-    * existed still read as NULL. */
-  private[delta] def fillDefaults(schema: StructType, df: DataFrame): DataFrame =
+  /** `df` with every column of `schema` it omits (or that `refill` names)
+    * whose field metadata holds an expression under `key` computed from
+    * that expression, in place when present:
+    *  - generated columns (`delta.generationExpression`, writer feature
+    *    `generatedColumns`); a supplied value is checked against the
+    *    expression in the write step instead;
+    *  - column defaults (`CURRENT_DEFAULT`, Spark's default-value key,
+    *    writer feature `allowColumnDefaults`), filled at write time only:
+    *    rows in files written before the column existed still read NULL. */
+  private[delta] def fillMissing(key: String, schema: StructType, df: DataFrame,
+      refill: String => Boolean = _ => false): DataFrame =
     schema.fields.foldLeft(df) { (d, f) =>
-      if (f.metadata.contains("CURRENT_DEFAULT") &&
-          !d.columns.exists(_.equalsIgnoreCase(f.name)))
-        d.withColumn(f.name,
-          org.apache.spark.sql.functions.expr(
-            f.metadata.getString("CURRENT_DEFAULT")).cast(f.dataType))
+      if (f.metadata.contains(key) &&
+          (refill(f.name) || !d.columns.exists(_.equalsIgnoreCase(f.name))))
+        d.withColumn(f.name, expr(f.metadata.getString(key)).cast(f.dataType))
       else d
-    }
-
-  private[delta] def hasDefaults(schema: StructType): Boolean =
-    schema.fields.exists(_.metadata.contains("CURRENT_DEFAULT"))
-
-  /** Generated columns (field metadata `delta.generationExpression`,
-    * protocol writer feature `generatedColumns`): a writer may omit the
-    * column entirely — the engine computes it from the expression; a
-    * supplied value is validated against the expression in the write pass
-    * (withWriteChecks). */
-  private[delta] def fillGenerated(snapshot: Option[Snapshot], df: DataFrame): DataFrame =
-    snapshot match {
-      case Some(s) =>
-        s.schema.fields.foldLeft(df) { (d, f) =>
-          if (f.metadata.contains("delta.generationExpression") &&
-              !d.columns.exists(_.equalsIgnoreCase(f.name)))
-            d.withColumn(f.name,
-              org.apache.spark.sql.functions.expr(
-                f.metadata.getString("delta.generationExpression")).cast(f.dataType))
-          else d
-        }
-      case None => df
     }
 
   /**
@@ -284,48 +244,30 @@ object DeltaWriter {
       return append(spark, df, path, partitionBy, configuration)
     }
     val snap = log.update()
-    ProtocolGate.validateWrite(snap,
-      if (replaceWhere.isDefined) "REPLACE WHERE" else "OVERWRITE")
+    val op =
+      if (dynamicPartitions) "OVERWRITE PARTITIONS"
+      else if (replaceWhere.isDefined) "REPLACE WHERE" else "OVERWRITE"
+    ProtocolGate.validateWrite(snap, op)
     val partCols = snap.metadata.partitionColumns
     require(!dynamicPartitions || replaceWhere.isEmpty,
       "dynamic partition overwrite and replaceWhere are mutually exclusive")
     require(!dynamicPartitions || partCols.nonEmpty,
       s"dynamic partition overwrite requires a partitioned table ($path is unpartitioned)")
 
-    val genFilled1 = fillDefaults(snap.schema, fillGenerated(Some(snap), df))
-    // identity columns: same contract as append — missing columns
-    // auto-assign from the mark, explicit values refuse unless
-    // allowExplicitInsert and sync the mark (committed via the metadata
-    // re-emit below); overwritten rows are NEW data, never id reuse
-    val (genFilled, identityMarks) = Identity.fill(spark, snap.schema, genFilled1)
-    val have = genFilled.columns.map(_.toLowerCase).toSet
-    val want = snap.schema.fieldNames.map(_.toLowerCase).toSet
-    require(have == want,
-      s"Schema mismatch overwriting $path: have ${have.toSeq.sorted}, want ${want.toSeq.sorted}")
-    val aligned0 = genFilled.select(snap.schema.fields.map { tf =>
-      val in = genFilled.schema.fields.find(_.name.equalsIgnoreCase(tf.name)).get
-      require(widenedType(tf.dataType, in.dataType).contains(tf.dataType),
-        s"Type mismatch for column ${tf.name}: table ${tf.dataType.sql}, data ${in.dataType.sql}")
-      alignExpr(col(s"`${in.name}`"), in.dataType, tf.dataType).as(tf.name)
-    }.toIndexedSeq: _*)
+    val (aligned, schema, identityMarks) = prepare(spark, df, path, Some(snap), mergeSchema = false)
     // replaceWhere contract: a row outside the predicate would silently
     // survive the logical replace — refuse the whole write instead
     val constrained = replaceWhere match {
-      case Some(p) => aligned0.filter(assert_true(
+      case Some(p) => aligned.filter(assert_true(
         coalesce(p, lit(false)),
         lit(s"replaceWhere violated overwriting $path: row does not satisfy $p")).isNull)
-      case None => aligned0
+      case None => aligned
     }
-    val enforced = withWriteChecks(constrained, snap.schema,
-      snap.metadata.configuration, path)
-
-    val (toStage, stageSchema, stagePartCols, stageOpts) =
-      toPhysical(spark, snap, enforced, partCols)
     ConflictChecker.staging(log) { staged =>
       // overwritten data is NEW data: on row-tracked tables [[commit]]
       // assigns fresh ids past the mark
-      val adds = writeFiles(spark, log, toStage, stageSchema, stagePartCols, staged, stageOpts,
-        snap.metadata.configuration)
+      val adds = write(spark, log, Some(snap), schema, constrained, partCols,
+        snap.metadata.configuration, staged)
       val now = System.currentTimeMillis()
       val (removeActs, upgradeActs) = replaceWhere match {
         case None if dynamicPartitions =>
@@ -345,13 +287,8 @@ object DeltaWriter {
           val (dvActs, _) = DeltaDelete.dvActions(log, snap, hitRows, staged)
           (dvActs, DeltaDelete.protocolUpgradeActions(snap))
       }
-      val op =
-        if (dynamicPartitions) "OVERWRITE PARTITIONS"
-        else if (replaceWhere.isDefined) "REPLACE WHERE" else "OVERWRITE"
       ConflictChecker.commit(log, Some(snap), op,
-        (if (identityMarks.nonEmpty)
-           Seq(Action(snap.metadata.copy(schemaString =
-             Identity.withMarks(snap.schema, identityMarks).json)))
+        (if (identityMarks.nonEmpty) Seq(Action(snap.metadata.copy(schemaString = schema.json)))
          else Nil) ++ upgradeActs ++ removeActs,
         params = Map(
           "filesAdded" -> adds.size.toString,
@@ -378,7 +315,7 @@ object DeltaWriter {
     * generation expression. assert_true evaluates per row inside the write
     * scan (null when satisfied → row kept; throws naming the rule when
     * violated). */
-  private[delta] def withWriteChecks(
+  private def withWriteChecks(
       aligned: DataFrame,
       tableSchema: StructType,
       configuration: Map[String, String],
@@ -396,7 +333,7 @@ object DeltaWriter {
     }
     (checks ++ genChecks).foldLeft(aligned) { case (d, (name, sql)) =>
       d.filter(assert_true(expr(sql),
-        lit(s"$name violated appending to $path: $sql")).isNull)
+        lit(s"$name violated writing to $path: $sql")).isNull)
     }
   }
 
@@ -404,14 +341,50 @@ object DeltaWriter {
     conf.get("delta.enableVariantShredding").exists(_.equalsIgnoreCase("true"))
 
   /**
-   * Write `aligned` as parquet files in place under the table root, in ONE
-   * Spark job whose tasks also collect each file's stats; enforce NOT NULL
-   * from those stats and return the (uncommitted) add actions. The caller
-   * commits; `staged` is the buffer of a [[ConflictChecker.staging]]
-   * scope, which holds every written file before any check runs and
-   * deletes them again unless the commit lands.
+   * The one write step every table write runs: append, overwrite, the DML
+   * rewrites (UPDATE, MERGE) and the id-stable rewrite of OPTIMIZE and
+   * ZORDER. It applies the table's CHECK constraints and generated-column
+   * checks to `rows` (an assert_true filter riding the write scan, so no
+   * extra job), projects them to the table's PHYSICAL names on
+   * column-mapped tables, writes them in place in one Spark job whose tasks
+   * also collect each file's stats, enforces NOT NULL from those stats and
+   * returns the (uncommitted) add actions. It runs inside the caller's
+   * [[ConflictChecker.staging]] scope, whose `staged` buffer holds every
+   * written file and deletes them again unless the commit lands.
+   *
+   * @param snapshot the table written to; None at create
+   * @param schema the write schema: the table's, or the evolved one of a
+   *   mergeSchema append, or the frame's at create
+   * @param rows the logical rows of `schema`'s columns plus `passThrough`
+   * @param configuration the configuration the write runs under: the
+   *   table's (at create: the create config), after any row-id name
+   *   minting of the rewrite it belongs to — it governs the checks, stats
+   *   collection and the variant layout
+   * @param passThrough physical columns written beyond the table schema:
+   *   the materialized row-id columns of a rewrite on a row-tracked table
+   * @param dataChange/clusteringProvider stamped on the add actions
    */
-  private[delta] def writeFiles(
+  private[delta] def write(
+      spark: SparkSession,
+      log: DeltaLog,
+      snapshot: Option[Snapshot],
+      schema: StructType,
+      rows: DataFrame,
+      partCols: Seq[String],
+      configuration: Map[String, String],
+      staged: ArrayBuffer[Path],
+      passThrough: Seq[StructField] = Nil,
+      dataChange: Boolean = true,
+      clusteringProvider: Option[String] = None): Seq[AddFile] = {
+    val (physical, physSchema, physPartCols, writeOptions) = toPhysical(snapshot, schema,
+      withWriteChecks(rows, schema, configuration, log.tablePath.toString), partCols, passThrough)
+    writeFiles(spark, log, physical, physSchema, physPartCols, staged, writeOptions,
+      configuration, dataChange, clusteringProvider)
+  }
+
+  /** Write `aligned` (physical columns) in place and return its add
+    * actions, NOT NULL enforced from the per-file stats. */
+  private def writeFiles(
       spark: SparkSession,
       log: DeltaLog,
       aligned: DataFrame,
@@ -419,9 +392,9 @@ object DeltaWriter {
       partCols: Seq[String],
       staged: ArrayBuffer[Path],
       writeOptions: Map[String, String],
-      /** the table configuration (at create: the create config), which
-        * governs stats collection and the variant layout */
-      configuration: Map[String, String]): Seq[AddFile] = {
+      configuration: Map[String, String],
+      dataChange: Boolean,
+      clusteringProvider: Option[String]): Seq[AddFile] = {
     val stats = statColumns(tableSchema, partCols, configuration)
     val written = InPlaceWrite(spark, aligned, log.tablePath, partCols, writeOptions,
       configuration, stats.map(_.agg), staged)
@@ -450,8 +423,9 @@ object DeltaWriter {
         partitionValues = w.partitionValues,
         size = w.size,
         modificationTime = w.modificationTime,
-        dataChange = true,
-        stats = Some(fileStats.toJson))
+        dataChange = dataChange,
+        stats = Some(fileStats.toJson),
+        clusteringProvider = clusteringProvider)
     }
   }
 
@@ -758,36 +732,23 @@ object DeltaWriter {
       attempt += 1
       val actions = ArrayBuffer.empty[Action]
       if (snapshot.isEmpty) {
-        val createFeatures =
-          (if (RowTracking.enabledAtCreate(configuration))
-             Seq("rowTracking", "domainMetadata") else Nil) ++
-            (if (hasDefaults(schema)) Seq("allowColumnDefaults") else Nil) ++
-            // declare the feature so foreign writers that don't implement
-            // identity assignment refuse instead of planting stale ids
-            (if (Identity.identityCols(schema).nonEmpty) Seq("identityColumns")
-             else Nil) ++
-            // CDF and generated columns are writer contracts too: a foreign
-            // writer that can't emit change data / recompute generation
-            // expressions must refuse, not corrupt
-            (if (configuration.get("delta.enableChangeDataFeed")
-                 .exists(_.equalsIgnoreCase("true"))) Seq("changeDataFeed")
-             else Nil) ++
-            (if (schema.fields.exists(
-                 _.metadata.contains("delta.generationExpression")))
-               Seq("generatedColumns")
-             else Nil) ++
-            (if (DeltaLog.ictEnabled(configuration)) Seq("inCommitTimestamp")
-             else Nil)
-        // TIMESTAMP_NTZ / VARIANT columns imply reader+writer features:
-        // readers that can't decode them must refuse, not misread. A
-        // shredding-enabled variant table additionally advertises
-        // variantShredding-preview on BOTH sides — shredded files are a
-        // reader-visible physical layout.
-        val typeFeats0 = ProtocolGate.typeFeatures(schema)
-        val typeFeats =
-          if (shreddingEnabled(configuration) && typeFeats0.contains("variantType"))
-            typeFeats0 :+ "variantShredding-preview"
-          else typeFeats0
+        // identity, CDF and generated columns are writer contracts: a
+        // foreign writer that can't assign ids, emit change data or
+        // recompute generation expressions must refuse, not corrupt
+        val createFeatures = Seq(
+          Seq("rowTracking", "domainMetadata") -> RowTracking.enabledAtCreate(configuration),
+          Seq("allowColumnDefaults") -> schema.fields.exists(_.metadata.contains("CURRENT_DEFAULT")),
+          Seq("identityColumns") -> Identity.identityCols(schema).nonEmpty,
+          Seq("changeDataFeed") ->
+            configuration.get("delta.enableChangeDataFeed").exists(_.equalsIgnoreCase("true")),
+          Seq("generatedColumns") ->
+            schema.fields.exists(_.metadata.contains("delta.generationExpression")),
+          Seq("inCommitTimestamp") -> DeltaLog.ictEnabled(configuration))
+          .collect { case (fs, true) => fs }.flatten
+        // TIMESTAMP_NTZ / VARIANT (and shredded variant) columns imply
+        // reader+writer features: readers that can't decode them must
+        // refuse, not misread
+        val typeFeats = ProtocolGate.typeFeatures(schema, configuration)
         actions += Action(
           if (createFeatures.nonEmpty || typeFeats.nonEmpty)
             Protocol(
@@ -810,14 +771,9 @@ object DeltaWriter {
         // stamps skip it then) the commit that first brings a variant
         // column also brings the first shredded files, so
         // variantShredding-preview must ride the SAME upgrade.
-        val evoFeats0 = ProtocolGate.typeFeatures(schema)
-        val evoFeats =
-          if (shreddingEnabled(snapshot.get.metadata.configuration) &&
-              evoFeats0.contains("variantType"))
-            evoFeats0 :+ "variantShredding-preview"
-          else evoFeats0
         ProtocolGate.readerWriterFeatureUpgrade(snapshot.get.protocol,
-          evoFeats).foreach(p => actions += Action(p))
+          ProtocolGate.typeFeatures(schema, snapshot.get.metadata.configuration))
+          .foreach(p => actions += Action(p))
         actions += Action(snapshot.get.metadata.copy(schemaString = schema.json))
       }
       for (app <- txnAppId; v <- txnVersion)

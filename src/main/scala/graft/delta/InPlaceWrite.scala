@@ -1,6 +1,9 @@
 package graft.delta
 
+import java.io.FileNotFoundException
 import java.util.UUID
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.collection.mutable
 import scala.collection.mutable.ArrayBuffer
@@ -8,8 +11,10 @@ import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.{JobContext, TaskAttemptContext}
+import org.apache.spark.SparkContext
 import org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage
 import org.apache.spark.internal.io.{FileCommitProtocol, FileNameSpec}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd, SparkListenerTaskStart}
 import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, SparkSession, classic}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, BoundReference, Cast, JoinedRow, MutableProjection, SpecificInternalRow, UnsafeProjection, UnsafeRow}
@@ -74,7 +79,8 @@ private[delta] object InPlaceWrite {
         }.get)
     val tracker = new FileStatsTracker(dataAttrs, partAttrs, aggs,
       spark.conf.get("spark.sql.session.timeZone"))
-    val committer = new InPlaceCommitProtocol(root.toString, staged)
+    val committer = new InPlaceCommitProtocol(root.toString, partCols.size,
+      spark.sparkContext, staged)
     // hadoop conf and options as InsertIntoHadoopFsRelationCommand builds
     // them (id-mode field ids ride the options)
     val qe = toWrite.queryExecution
@@ -105,30 +111,56 @@ private[delta] object InPlaceWrite {
 
 /**
  * Commit protocol that writes every file at its final
- * `<partition dir>/part-<split>-<uuid>.parquet` path (the shape of
+ * `<partition dir>/part-<split>-<token>-<uuid>.parquet` path (the shape of
  * delta-spark's `DelayedCommitProtocol`): the Delta commit, not a file
  * move, makes a file visible. A task commit reports each file's relative
  * path, size and modification time, and [[onTaskCommit]] adds it to
  * `staged` on the driver; a task abort deletes the task's files; job
- * commit and abort touch no file.
+ * commit touches no file.
+ *
+ * A task of a failed job may still commit its file after the job failed,
+ * and Spark drops that commit message. So the job abort waits until every
+ * task of the write has ended ([[WriteTasks]]) and then deletes every file
+ * named with the write's `token`.
  */
 private[delta] final class InPlaceCommitProtocol(
-    root: String, @transient private val staged: ArrayBuffer[Path])
+    root: String, partitionDepth: Int,
+    @transient private val sc: SparkContext,
+    @transient private val staged: ArrayBuffer[Path])
   extends FileCommitProtocol with Serializable {
   import InPlaceWrite.Committed
 
+  private val token = UUID.randomUUID.toString
   @transient private[delta] val committed = ArrayBuffer.empty[Committed]
   @transient private var taskFiles: ArrayBuffer[String] = _
+  @transient private var tasks: WriteTasks = _
 
-  override def setupJob(job: JobContext): Unit = ()
-  override def commitJob(job: JobContext, taskCommits: Seq[TaskCommitMessage]): Unit = ()
-  override def abortJob(job: JobContext): Unit = ()
+  override def setupJob(job: JobContext): Unit = {
+    tasks = new WriteTasks(sc.getLocalProperty(SQLExecution.EXECUTION_ID_KEY))
+    sc.addSparkListener(tasks)
+  }
+
+  override def commitJob(job: JobContext, taskCommits: Seq[TaskCommitMessage]): Unit =
+    sc.removeSparkListener(tasks)
+
+  override def abortJob(job: JobContext): Unit = {
+    try tasks.awaitEnded(sc) finally sc.removeSparkListener(tasks)
+    val fs = new Path(root).getFileSystem(job.getConfiguration)
+    // the write's files sit `partitionDepth` partition dirs below the root
+    def sweep(dir: Path, depth: Int): Unit = fs.listStatus(dir).foreach { st =>
+      val name = st.getPath.getName
+      if (st.isDirectory) { if (depth > 0 && name.contains("=")) sweep(st.getPath, depth - 1) }
+      else if (name.contains(token)) fs.delete(st.getPath, false)
+    }
+    try sweep(new Path(root), partitionDepth) catch { case _: FileNotFoundException => () }
+  }
+
   override def setupTask(task: TaskAttemptContext): Unit = taskFiles = ArrayBuffer.empty
 
   override def newTaskTempFile(task: TaskAttemptContext, dir: Option[String],
       spec: FileNameSpec): String = {
     val split = task.getTaskAttemptID.getTaskID.getId
-    val name = f"${spec.prefix}part-$split%05d-${UUID.randomUUID}${spec.suffix}"
+    val name = f"${spec.prefix}part-$split%05d-$token-${UUID.randomUUID}${spec.suffix}"
     val rel = dir.fold(name)(d => s"$d/$name")
     taskFiles += rel
     new Path(root, rel).toString
@@ -153,6 +185,30 @@ private[delta] final class InPlaceCommitProtocol(
       staged += new Path(root, c.path)
       committed += c
     }
+}
+
+/** The running tasks of the Spark jobs one SQL execution starts, counted
+  * from the listener bus. */
+private final class WriteTasks(executionId: String) extends SparkListener {
+  private val stages = ConcurrentHashMap.newKeySet[Int]()
+  private val running = new AtomicInteger
+
+  override def onJobStart(e: SparkListenerJobStart): Unit =
+    if (Option(e.properties).exists(_.getProperty(SQLExecution.EXECUTION_ID_KEY) == executionId))
+      e.stageIds.foreach(stages.add)
+  override def onTaskStart(e: SparkListenerTaskStart): Unit =
+    if (stages.contains(e.stageId)) running.incrementAndGet()
+  override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+    if (stages.contains(e.stageId)) running.decrementAndGet()
+
+  /** Wait, at most two minutes, until every task started so far has
+    * ended. A failed job's tasks have all been started (and their starts
+    * posted) by the time the job's failure returns. */
+  def awaitEnded(sc: SparkContext): Unit = {
+    val deadline = System.currentTimeMillis() + 120000
+    try GraftColumnBridge.drainListenerBus(sc) catch { case NonFatal(_) => () }
+    while (running.get > 0 && System.currentTimeMillis() < deadline) Thread.sleep(20)
+  }
 }
 
 /**

@@ -1,7 +1,7 @@
 package graft.delta
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /**
@@ -11,10 +11,11 @@ import org.apache.spark.sql.functions.col
  * + an object-store request; DVs tax every scan with bitmap probes).
  *
  * Semantics: per partition, files smaller than `smallFileThreshold` or
- * carrying a DV are rewritten into `targetFileCount`-sized files; the
- * commit removes the originals and adds the compacted files with
- * dataChange=false (readers of any version see identical rows — time
- * travel across the OPTIMIZE is preserved).
+ * carrying a DV are rewritten into files of `maxRowsPerFile` rows (or
+ * `delta.targetFileSize` bytes, when set); the commit removes the
+ * originals and adds the compacted files with dataChange=false (readers
+ * of any version see identical rows — time travel across the OPTIMIZE is
+ * preserved).
  */
 object Optimize {
 
@@ -267,6 +268,59 @@ object Optimize {
         f => keepPaths.contains(f.decodedPath)
     }
 
+  /**
+   * The id-stable rewrite OPTIMIZE and ZORDER share: read the live rows of
+   * `files`, lay them out with `repack`, write them through the write step
+   * [[DeltaWriter.write]] with dataChange=false and commit the removes and
+   * adds in one version. Readers of any version see identical rows — time
+   * travel across the rewrite is preserved. On a row-tracked table each
+   * row carries its stable id and commit version in the materialized
+   * columns (the first rewrite mints their names, and its commit records
+   * them); the new files get fresh baseRowIds, never read for a row whose
+   * id is materialized.
+   *
+   * @param params commitInfo params beyond the file counts
+   * @param scope/maxAttempts the commit's conflict handling
+   * @param clusteringProvider stamped on the adds (liquid clustering)
+   */
+  private def rewrite(spark: SparkSession, log: DeltaLog, snap: Snapshot,
+      files: Seq[AddFile], params: Map[String, String],
+      scope: ConflictChecker.ReadScope, maxAttempts: Int,
+      clusteringProvider: Option[String] = None)(repack: DataFrame => DataFrame): Result = {
+    // scoped snapshot over just the files being rewritten: same scan path
+    // as toDF (DV filtering, partition values, logical order)
+    val scoped = new Snapshot(log, snap.version, snap.protocol, snap.metadata,
+      files, snap.setTransactions, snap.domainMetadata)
+    val ids = RowTracking.rewriteColumns(snap)
+    val rows = ids.fold(scoped.toDF)(RowTracking.preservedRowsDF(scoped, _))
+    val minted = ids.flatMap(_.minted)
+    ConflictChecker.staging(log) { staged =>
+      val adds = DeltaWriter.write(spark, log, Some(snap), snap.schema, repack(rows),
+        snap.metadata.partitionColumns,
+        // post-mint: the FIRST id-materializing rewrite already exempts
+        // the minted columns from stats
+        minted.getOrElse(snap.metadata).configuration, staged,
+        passThrough = ids.toSeq.flatMap(c =>
+          Seq(RowTracking.idField(c.id), RowTracking.idField(c.version))),
+        dataChange = false, clusteringProvider = clusteringProvider)
+      val now = System.currentTimeMillis()
+      val v = ConflictChecker.commit(log, Some(snap), "OPTIMIZE",
+        minted.map(Action(_)).toSeq ++
+          files.map(f => Action(f.removed(now, dataChange = false))),
+        params = params ++ Map("filesRemoved" -> files.size.toString,
+          "filesAdded" -> adds.size.toString),
+        metrics = Map(
+          "numRemovedFiles" -> files.size.toString,
+          "numAddedFiles" -> adds.size.toString,
+          "numRemovedBytes" -> files.map(_.size).sum.toString,
+          "numAddedBytes" -> adds.map(_.size).sum.toString),
+        adds = adds, staged = staged, scope = scope, maxAttempts = maxAttempts)
+      Result(v, files.size, adds.size)
+    }
+  }
+
+  /** OPTIMIZE as one [[rewrite]]: a concurrent commit conflicts only when
+    * it touches a file being rewritten. */
   def compact(
       spark: SparkSession,
       log: DeltaLog,
@@ -286,25 +340,7 @@ object Optimize {
       .filter { case (_, fs) => fs.size > 1 || fs.exists(_.deletionVector.isDefined) }
     if (byPartition.isEmpty) return Result(snap.version, 0, 0)
     val toRewrite = byPartition.values.flatten.toSeq
-    val rewriteSet = toRewrite.map(_.decodedPath).toSet
 
-    // scoped snapshot over just the files being rewritten: same scan path
-    // as toDF (DV filtering, partition values, logical order)
-    val scoped = new Snapshot(log, snap.version, snap.protocol, snap.metadata,
-      toRewrite, snap.setTransactions, snap.domainMetadata)
-    // row-tracked tables rewrite id-stably: each row carries its id in the
-    // materialized columns (minted into the configuration on first rewrite)
-    val rtEnabled = RowTracking.enabled(snap)
-    val (mdAction, matNames) =
-      if (!rtEnabled) (None, None)
-      else {
-        val (md, names, minted) = RowTracking.ensureMaterializedNames(snap.metadata)
-        (if (minted) Some(md) else None, Some(names))
-      }
-    val rows = matNames match {
-      case Some((mid, mver)) => RowTracking.preservedRowsDF(scoped, mid, mver)
-      case None => scoped.toDF
-    }
     // delta.targetFileSize (bytes) takes precedence over the row cap when
     // set — size output files by byte volume like delta-spark's OPTIMIZE
     val numFiles = snap.metadata.configuration.get("delta.targetFileSize")
@@ -316,45 +352,10 @@ object Optimize {
           / maxRowsPerFile + 1).toInt
     }
     val partCols = snap.metadata.partitionColumns
-    val repacked =
+    rewrite(spark, log, snap, toRewrite, Map.empty,
+      ConflictChecker.ReadScope.FilesOnly, maxAttempts = 10) { rows =>
       if (partCols.nonEmpty) rows.repartition(numFiles, partCols.map(col): _*)
       else rows.repartition(numFiles)
-
-    ConflictChecker.staging(log) { staged =>
-      // column-mapped tables rewrite through the same physical-name staging
-      // as append/DML (logical frame → physical names + field ids)
-      val extraCols = matNames.toSeq.flatMap { case (mid, mver) =>
-        Seq(org.apache.spark.sql.types.StructField(mid,
-              org.apache.spark.sql.types.LongType, nullable = true),
-            org.apache.spark.sql.types.StructField(mver,
-              org.apache.spark.sql.types.LongType, nullable = true))
-      }
-      val (stage, stageSchema, stagePartCols, stageOpts) =
-        DeltaWriter.toPhysical(spark, snap, repacked, partCols, extraCols)
-      val adds = DeltaWriter.writeFiles(spark, log, stage, stageSchema,
-        stagePartCols, staged, stageOpts,
-            // post-mint config: the FIRST id-materializing rewrite must
-            // already exempt the minted columns from stats
-            configuration = mdAction.map(_.configuration)
-              .getOrElse(snap.metadata.configuration))
-      // compacted files get fresh baseRowIds (ids are never reused;
-      // readers prefer the materialized per-row values). Compaction
-      // changes no rows: concurrent commits conflict only when they touch
-      // the exact files being rewritten (ConflictChecker)
-      val v = ConflictChecker.commit(log, Some(snap), "OPTIMIZE",
-        mdAction.map(Action(_)).toSeq ++
-          toRewrite.map(f => Action(
-            f.removed(System.currentTimeMillis(), dataChange = false))),
-        params = Map("filesRemoved" -> toRewrite.size.toString,
-          "filesAdded" -> adds.size.toString),
-        metrics = Map(
-          "numRemovedFiles" -> toRewrite.size.toString,
-          "numAddedFiles" -> adds.size.toString,
-          "numRemovedBytes" -> toRewrite.map(_.size).sum.toString,
-          "numAddedBytes" -> adds.map(_.size).sum.toString),
-        adds = adds.map(_.copy(dataChange = false)), staged = staged,
-        scope = ConflictChecker.ReadScope.FilesOnly)
-      Result(v, toRewrite.size, adds.size)
     }
   }
 
@@ -363,8 +364,7 @@ object Optimize {
    * clustered on the Morton interleave of the given columns, so per-file
    * min/max stats become tight on EVERY listed column and stats-based
    * file skipping works for filters on any of them (a plain sort gives
-   * that for its leading column only). Readers of any version see
-   * identical rows — removes/adds carry dataChange=false like [[compact]].
+   * that for its leading column only). One [[rewrite]] of every file.
    *
    * Shape: one small agg for global per-column min/max (bucket scaling),
    * then one range-repartition + within-partition sort on the z-key and
@@ -397,83 +397,47 @@ object Optimize {
     }
     val toRewrite = snap.allFiles
     if (toRewrite.isEmpty) return Result(snap.version, 0, 0)
-
-    // id-stable rewrite on row-tracked tables, same mechanism as compact
-    val rtEnabled = RowTracking.enabled(snap)
-    val (mdAction, matNames) =
-      if (!rtEnabled) (None, None)
-      else {
-        val (md, names, minted) = RowTracking.ensureMaterializedNames(snap.metadata)
-        (if (minted) Some(md) else None, Some(names))
-      }
-    val rows = matNames match {
-      case Some((mid, mver)) => RowTracking.preservedRowsDF(snap, mid, mver)
-      case None => snap.toDF
-    }
-    // 16-bit bucket code per column: min/max-scaled rank for orderable
-    // types; first-two-bytes code for strings; null → 0
-    def numericBucket(c: String, lo: Double, hi: Double) =
-      if (hi <= lo) lit(0)
-      else least(lit(65535), greatest(lit(0),
-        floor((col(c).cast("double") - lit(lo)) * 65535.0 / (hi - lo)).cast("int")))
-    // every numeric column's (min, max) in one aggregate job
-    val numeric = cols.filter(c =>
-      snap.schema(c).dataType != org.apache.spark.sql.types.StringType)
-    val bounds: Map[String, org.apache.spark.sql.Row] =
-      if (numeric.isEmpty) Map.empty
-      else {
-        val aggs = numeric.map(c =>
-          struct(min(col(c).cast("double")), max(col(c).cast("double"))))
-        val r = rows.agg(aggs.head, aggs.tail: _*).head()
-        numeric.indices.map(i => numeric(i) -> r.getStruct(i)).toMap
-      }
-    val bucketCols = cols.map { c =>
-      snap.schema(c).dataType match {
-        case org.apache.spark.sql.types.StringType =>
-          coalesce(
-            conv(hex(substring(col(c).cast("binary"), 1, 2)), 16, 10).cast("int"),
-            lit(0))
-        case _ =>
-          val mm = bounds(c)
-          if (mm.isNullAt(0)) lit(0)
-          else numericBucket(c, mm.getDouble(0), mm.getDouble(1))
-      }
-    }
-    val zKey = graft.functions.ZOrderCode.zOrderCode(bucketCols)
     val numFiles = math.max(1L,
       toRewrite.map(f => f.parsedStats.flatMap(_.numRecords).getOrElse(0L)).sum
         / maxRowsPerFile + 1).toInt
-    val repacked = rows.withColumn("__z", zKey)
-      .repartitionByRange(numFiles, (partCols.map(col) :+ col("__z")): _*)
-      .sortWithinPartitions((partCols.map(col) :+ col("__z")): _*)
-      .drop("__z")
 
-    ConflictChecker.staging(log) { staged =>
-      val extraCols = matNames.toSeq.flatMap { case (mid, mver) =>
-        Seq(org.apache.spark.sql.types.StructField(mid,
-              org.apache.spark.sql.types.LongType, nullable = true),
-            org.apache.spark.sql.types.StructField(mver,
-              org.apache.spark.sql.types.LongType, nullable = true))
+    // a concurrent commit conflicts: the rewrite re-clusters every file
+    rewrite(spark, log, snap, toRewrite, Map("zorderBy" -> cols.mkString(",")),
+      ConflictChecker.ReadScope.WholeTable, maxAttempts = 1, clusteringProvider) { rows =>
+      // 16-bit bucket code per column: min/max-scaled rank for orderable
+      // types; first-two-bytes code for strings; null → 0
+      def numericBucket(c: String, lo: Double, hi: Double) =
+        if (hi <= lo) lit(0)
+        else least(lit(65535), greatest(lit(0),
+          floor((col(c).cast("double") - lit(lo)) * 65535.0 / (hi - lo)).cast("int")))
+      // every numeric column's (min, max) in one aggregate job
+      val numeric = cols.filter(c =>
+        snap.schema(c).dataType != org.apache.spark.sql.types.StringType)
+      val bounds: Map[String, org.apache.spark.sql.Row] =
+        if (numeric.isEmpty) Map.empty
+        else {
+          val aggs = numeric.map(c =>
+            struct(min(col(c).cast("double")), max(col(c).cast("double"))))
+          val r = rows.agg(aggs.head, aggs.tail: _*).head()
+          numeric.indices.map(i => numeric(i) -> r.getStruct(i)).toMap
+        }
+      val bucketCols = cols.map { c =>
+        snap.schema(c).dataType match {
+          case org.apache.spark.sql.types.StringType =>
+            coalesce(
+              conv(hex(substring(col(c).cast("binary"), 1, 2)), 16, 10).cast("int"),
+              lit(0))
+          case _ =>
+            val mm = bounds(c)
+            if (mm.isNullAt(0)) lit(0)
+            else numericBucket(c, mm.getDouble(0), mm.getDouble(1))
+        }
       }
-      val (stage, stageSchema, stagePartCols, stageOpts) =
-        DeltaWriter.toPhysical(spark, snap, repacked, partCols, extraCols)
-      val adds = DeltaWriter.writeFiles(spark, log, stage, stageSchema,
-        stagePartCols, staged, stageOpts,
-            // post-mint config: the FIRST id-materializing rewrite must
-            // already exempt the minted columns from stats
-            configuration = mdAction.map(_.configuration)
-              .getOrElse(snap.metadata.configuration))
-      val v = ConflictChecker.commit(log, Some(snap), "OPTIMIZE",
-        mdAction.map(Action(_)).toSeq ++
-          toRewrite.map(f => Action(
-            f.removed(System.currentTimeMillis(), dataChange = false))),
-        params = Map("zorderBy" -> cols.mkString(","),
-          "filesRemoved" -> toRewrite.size.toString,
-          "filesAdded" -> adds.size.toString),
-        adds = adds.map(_.copy(dataChange = false,
-          clusteringProvider = clusteringProvider)),
-        staged = staged, maxAttempts = 1)
-      Result(v, toRewrite.size, adds.size)
+      val zKey = graft.functions.ZOrderCode.zOrderCode(bucketCols)
+      rows.withColumn("__z", zKey)
+        .repartitionByRange(numFiles, (partCols.map(col) :+ col("__z")): _*)
+        .sortWithinPartitions((partCols.map(col) :+ col("__z")): _*)
+        .drop("__z")
     }
   }
 }

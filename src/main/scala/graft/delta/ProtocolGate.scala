@@ -87,8 +87,12 @@ object ProtocolGate {
   /** Reader+writer features a schema's TYPES imply: a table carrying a
     * TIMESTAMP_NTZ or VARIANT column must advertise the feature on BOTH
     * sides — a reader that can't decode those physical encodings must
-    * refuse, not misread. Recursed through struct/array/map. */
-  def typeFeatures(schema: org.apache.spark.sql.types.StructType): Seq[String] = {
+    * refuse, not misread. Recursed through struct/array/map. A variant
+    * column of a table whose `configuration` enables variant shredding
+    * also implies `variantShredding-preview`: shredded files are a
+    * reader-visible physical layout. */
+  def typeFeatures(schema: org.apache.spark.sql.types.StructType,
+      configuration: Map[String, String] = Map.empty): Seq[String] = {
     import org.apache.spark.sql.types._
     val found = scala.collection.mutable.LinkedHashSet.empty[String]
     def walk(dt: DataType): Unit = dt match {
@@ -100,6 +104,8 @@ object ProtocolGate {
       case _ => ()
     }
     walk(schema)
+    if (found("variantType") && DeltaWriter.shreddingEnabled(configuration))
+      found += "variantShredding-preview"
     found.toSeq
   }
 
@@ -141,17 +147,12 @@ object ProtocolGate {
     }
   }
 
-  /** Row-moving operations (UPDATE/MERGE/OPTIMIZE/ZORDER) all rewrite
-    * id-stably on row-tracked tables: each rewritten row carries its id in
-    * the materialized row-id columns ([[RowTracking.preservedRowsDF]] /
-    * `preservedIdCol`), so none need refusing anymore. */
-  private val rowMovingOps = Set.empty[String]
-
   /** Operations that remove rows with dataChange=true — forbidden on
     * `delta.appendOnly` tables per protocol. OPTIMIZE/VACUUM stay legal:
     * their removes are dataChange=false rewrites / physical cleanup. */
   private val dataChangeRemovalOps =
-    Set("DELETE", "UPDATE", "MERGE", "RESTORE", "OVERWRITE", "REPLACE WHERE")
+    Set("DELETE", "UPDATE", "MERGE", "RESTORE", "OVERWRITE", "OVERWRITE PARTITIONS",
+      "REPLACE WHERE")
 
   /** Gate a write of kind `operation` ("WRITE", "DELETE", "UPDATE",
     * "MERGE", "OPTIMIZE") against the table's writer protocol. */
@@ -184,11 +185,6 @@ object ProtocolGate {
       throw new UnsupportedTableFeatureException(
         s"Cannot $operation $tablePath: table is append-only " +
           "(delta.appendOnly=true forbids dataChange removes)")
-    if (rowMovingOps.contains(operation) && RowTracking.enabled(snap))
-      throw new UnsupportedTableFeatureException(
-        s"Cannot $operation $tablePath: row tracking is enabled and this " +
-          "engine does not materialize row ids through rewrites " +
-          "(append, DELETE and OVERWRITE remain legal)")
     // MERGE copies source rows wholesale (incl. identity values) without
     // assignment or high-water-mark sync — refuse rather than let a merge
     // plant ids a later append would collide with. Append/overwrite gate

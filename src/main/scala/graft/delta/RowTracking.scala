@@ -13,13 +13,14 @@ import org.apache.spark.sql.types.{LongType, StructField}
  * assigns on append/overwrite and preserves the fields through JSON
  * commits AND checkpoints.
  *
- * Rewrites (OPTIMIZE) preserve ids by MATERIALIZING them: the rewritten
- * parquet carries two extra physical columns (names minted once into the
- * table configuration, `delta.rowTracking.materializedRowIdColumnName` /
+ * Rewrites preserve ids by MATERIALIZING them: the rewritten parquet
+ * carries extra physical columns (names minted once into the table
+ * configuration, `delta.rowTracking.materializedRowIdColumnName` /
  * `...RowCommitVersionColumnName` — the protocol's mechanism), and a
  * reader resolves row id = materialized value if present else
- * baseRowId + row_index. UPDATE/MERGE on row-tracked tables remain
- * refused ([[ProtocolGate]]).
+ * baseRowId + row_index. OPTIMIZE and ZORDER write both columns; UPDATE
+ * and MERGE write the id column only, so a rewritten row's commit
+ * version is the version that rewrote it.
  *
  * Assignment is pure driver-side bookkeeping over the commit's add
  * actions (numRecords comes from the per-file stats already computed by
@@ -53,15 +54,18 @@ object RowTracking {
           names, true)
     }
 
-  /** The materialized column a rewrite (UPDATE, MERGE) stores each
-    * rewritten row's stable id in, on a row-tracked table; None otherwise.
-    * The first rewrite mints the names, and then also returns the metadata
-    * that records them, for its commit. */
-  private[delta] def rewriteIdColumn(snap: Snapshot): Option[(String, Option[Metadata])] =
+  /** The materialized columns a rewrite stores each row's stable id and
+    * commit version in, and, when this rewrite is the first and mints
+    * their names, the metadata that records them for its commit. */
+  private[delta] final case class RewriteColumns(id: String, version: String,
+      minted: Option[Metadata])
+
+  /** [[RewriteColumns]] on a row-tracked table; None otherwise. */
+  private[delta] def rewriteColumns(snap: Snapshot): Option[RewriteColumns] =
     if (!enabled(snap)) None
     else {
-      val (md, (id, _), minted) = ensureMaterializedNames(snap.metadata)
-      Some((id, if (minted) Some(md) else None))
+      val (md, (id, version), minted) = ensureMaterializedNames(snap.metadata)
+      Some(RewriteColumns(id, version, if (minted) Some(md) else None))
     }
 
   private[delta] def idField(name: String): StructField =
@@ -90,16 +94,13 @@ object RowTracking {
     * previously-materialized value wins, else baseRowId + row_index.
     * DV-deleted rows are dropped. This is the frame a rewrite
     * (OPTIMIZE/ZORDER) writes back, id-stable by construction. */
-  def preservedRowsDF(scoped: Snapshot, matId: String, matVer: String): DataFrame = {
-    val extra = Seq(
-      StructField(matId, LongType, nullable = true),
-      StructField(matVer, LongType, nullable = true))
+  private[delta] def preservedRowsDF(scoped: Snapshot, cols: RewriteColumns): DataFrame = {
     val freshId = pathMapCol(scoped, _.baseRowId) + col("_metadata.row_index")
     val freshVer = pathMapCol(scoped, _.defaultRowCommitVersion)
-    scoped.relationDF(extraDataCols = extra).select((
+    scoped.relationDF(extraDataCols = Seq(idField(cols.id), idField(cols.version))).select((
       scoped.schema.fieldNames.map(n => col(s"`$n`")) ++ Seq(
-      coalesce(col(s"`$matId`"), freshId).as(matId),
-      coalesce(col(s"`$matVer`"), freshVer).as(matVer))).toIndexedSeq: _*)
+      coalesce(col(s"`${cols.id}`"), freshId).as(cols.id),
+      coalesce(col(s"`${cols.version}`"), freshVer).as(cols.version))).toIndexedSeq: _*)
   }
 
   def enabled(snap: Snapshot): Boolean =

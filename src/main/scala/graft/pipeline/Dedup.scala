@@ -82,8 +82,11 @@ object Dedup {
     * verify's repartition): duplicate pairs come from DIFFERENT shingle/
     * band partitions, so .distinct()'s map-side combine could never merge
     * them anyway — the raw multiset crossed the wire either way, plus the
-    * deduped set a second time. Same skew exposure as before (verify was
-    * already keyed on id_a). Measured (JaccardDistinctProbe, interleaved
+    * deduped set a second time. Skew exposure: the exchange is keyed on
+    * id_a alone and runs BEFORE deduplication, so a hot document's whole
+    * raw candidate multiset (every duplicate pair it forms, across all
+    * bands) lands in one partition; before, only its deduped pairs did
+    * (at verify). Measured (JaccardDistinctProbe, interleaved
     * same-window A/B at sf0.1): candidates 0.95-1.37 s → 0.72-1.05 s,
     * full row 1.35-1.66 s → 1.09-1.17 s; identical pair sets. */
   private def dedupPairs(raw: DataFrame): DataFrame = {

@@ -29,6 +29,11 @@ object GraftColumnBridge {
   def cloneSession(spark: SparkSession): SparkSession =
     spark.asInstanceOf[classic.SparkSession].cloneSession()
 
+  /** Wait until the listener bus has delivered every event posted so far
+    * (`listenerBus` is `private[spark]`). */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
   /** The `private[sql]` temporary column name parquet readers match BY NAME
     * and populate with the physical (file-level) row index when a nullable
     * long field of this name appears in requiredSchema. */

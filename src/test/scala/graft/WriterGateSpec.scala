@@ -122,4 +122,25 @@ class WriterGateSpec extends AnyFunSuite {
       assert(s.contains("r_regionkey"), s"table-column stats missing: $s")
     }
   }
+
+  test("append and overwrite both refuse a table with non-nullable array elements") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("a", ArrayType(IntegerType, containsNull = false))))
+    def frame = spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(Row(1L, Seq(1, 2))), 1), schema)
+    val path = tmpTable()
+    // creating such a table is fine; writes to it are refused
+    DeltaWriter.append(spark, frame, path)
+    val refusals = Seq[(String, () => Any)](
+      "append" -> (() => DeltaWriter.append(spark, frame, path)),
+      "overwrite" -> (() => DeltaWriter.overwrite(spark, frame, path)))
+    refusals.foreach { case (kind, write) =>
+      val e = intercept[UnsupportedOperationException](write())
+      assert(e.getMessage.contains("non-nullable array elements"), s"$kind: ${e.getMessage}")
+      DeltaLog.clearCache()
+      assert(DeltaLog.forPath(spark, path).update().version == 0, s"$kind landed a version")
+    }
+  }
 }

@@ -37,6 +37,11 @@ class InPlaceWriteSpec extends AnyFunSuite {
     val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       .map(t => String.valueOf(t.getMessage)).toSeq
     assert(messages.exists(_.contains(expected)), messages.mkString("\n"))
+    // a task of the failed job may still be running: judge the table once
+    // it has ended
+    val deadline = System.currentTimeMillis() + 30000
+    while (spark.sparkContext.statusTracker.getExecutorInfos.exists(_.numRunningTasks > 0) &&
+        System.currentTimeMillis() < deadline) Thread.sleep(50)
     DeltaLog.clearCache()
     val snap = DeltaLog.forPath(spark, path).update()
     assert(snap.version == before, "a failed write committed")
@@ -101,6 +106,30 @@ class InPlaceWriteSpec extends AnyFunSuite {
     })
     assertLeavesNothing(path, "late boom") {
       DeltaWriter.append(spark, spark.range(0, 400, 1, 4).select(late(col("id")).as("id")), path)
+    }
+    assert(DeltaTable.forPath(spark, path).toDF.count() == 10)
+  }
+
+  test("a task still writing when another task fails leaves no file") {
+    val path = tmpTable()
+    DeltaWriter.append(spark, spark.range(0, 10).toDF(), path)
+    // partition 0 fails at once. Partition 1 sleeps through the cancel's
+    // interrupt, then (reading no interruptible input) writes and commits
+    // its file after the job has failed
+    def sleepThrough(ms: Long): Unit = {
+      val end = System.currentTimeMillis() + ms
+      while (System.currentTimeMillis() < end)
+        try Thread.sleep(math.max(1L, end - System.currentTimeMillis()))
+        catch { case _: InterruptedException => () }
+    }
+    val schema = StructType(Seq(StructField("id", LongType)))
+    val rows = spark.sparkContext.parallelize(Seq(0, 1), 2).mapPartitionsWithIndex { (i, _) =>
+      if (i == 0) throw new IllegalStateException("fails at once")
+      sleepThrough(1500)
+      Iterator.tabulate(100)(j => Row(j.toLong))
+    }
+    assertLeavesNothing(path, "fails at once") {
+      DeltaWriter.append(spark, spark.createDataFrame(rows, schema), path)
     }
     assert(DeltaTable.forPath(spark, path).toDF.count() == 10)
   }

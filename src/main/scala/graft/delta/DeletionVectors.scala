@@ -31,11 +31,10 @@ object DeletionVectors {
     * files before the first task could run. */
   def registry(snapshot: Snapshot): Map[String, DvHandle] = {
     val slot = slots(snapshot.log)
-    // (path, descriptor) pairs only: on a LazySnapshot this collects a
-    // distributed PROJECTION of the checkpoint-backed file list — never
-    // the stats-bearing AddFiles (the registry is inherently O(#files),
-    // but descriptor pairs are ~10× smaller than full file entries and
-    // the driver-side list materialization is avoided entirely)
+    // (path, descriptor) pairs only, from the snapshot's DvPairs fold: on a
+    // LazySnapshot the fold runs on executors and only the pairs reach the
+    // driver, never the stats-bearing AddFiles (the registry is inherently
+    // O(#files), but pairs are ~10× smaller than full file entries)
     registry(snapshot.log.tablePath.toString,
       snapshot.dvRegistryPairs.map { case (p, dv) => p -> dv.map(slot) })
   }

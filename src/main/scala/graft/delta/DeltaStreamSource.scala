@@ -36,6 +36,12 @@ import org.apache.spark.sql.types.StructType
  * files that predate a column add read it as null. No state beyond the
  * engine's offset checkpoint.
  *
+ * Schema: the stream's schema is the table's at stream start. Additive
+ * changes (ADD COLUMN) keep it readable; a batch whose latest metadata has
+ * lost one of its columns (DROP or RENAME COLUMN) fails before reading,
+ * naming the column and the version — delta-spark's contract for
+ * non-additive schema changes.
+ *
  * Admission control: implements [[SupportsTriggerAvailableNow]] (v1
  * `Source` mixing in the connector interface, the same shape delta-spark
  * uses), so `Trigger.AvailableNow` processes exactly the versions present
@@ -102,9 +108,9 @@ final class DeltaStreamSource(
   // schema is fixed at stream start (latest snapshot); files from older
   // versions null-fill columns added since (same rule as the batch scan).
   // CDF mode appends the protocol's three change columns.
+  private val startSchema: StructType = log.update().schema
   override val schema: StructType =
-    if (readChangeFeed) DeltaStreamSource.cdfSchema(log.update().schema)
-    else log.update().schema
+    if (readChangeFeed) DeltaStreamSource.cdfSchema(startSchema) else startSchema
 
   private case class VersionOffset(version: Long) extends OffsetV1 {
     override def json: String = s"""{"version":$version}"""
@@ -279,6 +285,16 @@ final class DeltaStreamSource(
           s"of ${log.tablePath} were retention-cleaned before this " +
           "micro-batch read them; restart the stream from an available " +
           "version")
+    // every batch reads under the latest metadata: a column of the start
+    // schema that is gone from it (DROP or RENAME COLUMN) cannot be read
+    val snap = log.update()
+    DeltaStreamSource.lostColumn(startSchema, snap.schema).foreach { c =>
+      throw new IllegalStateException(
+        s"graftdelta stream: column `$c` of the stream's schema is gone from " +
+          s"${log.tablePath} as of version ${snap.version} (dropped or " +
+          "renamed): a non-additive schema change. Restart the stream to " +
+          "read the table's current schema")
+    }
     if (readChangeFeed) return getChangeBatch(versions)
     val adds = versions.flatMap { v =>
       val acts = log.readCommit(v)
@@ -300,7 +316,7 @@ final class DeltaStreamSource(
     }
     val batch =
       if (adds.isEmpty) emptyBatch
-      else log.update().relationDF(files = Some(adds.map(_ -> None)))
+      else snap.relationDF(files = Some(adds.map(_ -> None)))
     asStreamingBatch(batch)
   }
 
@@ -327,6 +343,17 @@ final class DeltaStreamSource(
 }
 
 object DeltaStreamSource {
+  /** The first (dotted) column of `was` that `now` lacks by name, looking
+    * into nested structs; None when `now` only adds columns. */
+  private[delta] def lostColumn(was: StructType, now: StructType): Option[String] =
+    was.fields.iterator.flatMap { f =>
+      (f.dataType, now.fields.find(_.name == f.name).map(_.dataType)) match {
+        case (_, None) => Some(f.name)
+        case (a: StructType, Some(b: StructType)) => lostColumn(a, b).map(c => s"${f.name}.$c")
+        case _ => None
+      }
+    }.nextOption()
+
   /** "10m"/"1g"-style byte strings (delta-spark accepts these for
     * maxBytesPerTrigger) or a plain byte count. */
   private[delta] def parseBytes(s: String): Long = {

@@ -57,22 +57,24 @@ object ParsedStats {
  */
 object FileSkipping {
 
-  /** Below this, the fork/join overhead outweighs parallel stats parsing. */
-  private val ParallelThreshold = 8192
+  /** Below this many files an in-memory [[FileFold]] runs sequentially:
+    * the fork/join overhead outweighs parallel stats parsing. */
+  private[delta] val ParallelThreshold = 8192
 
   /** Returns the files that may contain matching rows.
     *
     * Scale: per-file work is stats-JSON parse + predicate eval; at
     * many-file scale (a 100 TB table has 10⁵-10⁶ add actions) a
     * single-threaded driver scan becomes the planning bottleneck, so large
-    * lists are pruned on the common fork-join pool (order-preserving;
-    * `parsedStats` is a thread-safe lazy val, the evaluator is pure). */
-  def prune(files: Seq[AddFile], dataSchema: StructType, filters: Seq[Expression]): Seq[AddFile] = {
+    * lists are pruned by [[Snapshot.fold]]'s fork-join path
+    * (order-preserving; the evaluator is pure). */
+  def prune(files: Seq[AddFile], dataSchema: StructType, filters: Seq[Expression]): Seq[AddFile] =
     keeper(dataSchema, filters) match {
       case None => files
-      case Some(keep) => filterWith(files, keep)
+      case Some(keep) =>
+        Snapshot.fold(files, new FileFold.Candidates(Some(keep), None, new StructType))
+          .files.toVector
     }
-  }
 
   /** The per-file keep decision as a SERIALIZABLE closure (captures only the
     * resolved filter expressions + schema), so a Dataset-backed snapshot can
@@ -88,17 +90,6 @@ object FileSkipping {
         case Some(st) => resolved.forall(e => mayContain(st, dataSchema, e))
         case None => true // no stats → cannot skip (reference: kept)
       }
-    }
-  }
-
-  /** Driver-side filter with the fork-join parallel path for large lists. */
-  private[delta] def filterWith(files: Seq[AddFile], keep: AddFile => Boolean): Seq[AddFile] = {
-    if (files.size < ParallelThreshold) files.filter(keep)
-    else {
-      val arr = files.toArray
-      val kept = java.util.stream.IntStream.range(0, arr.length).parallel()
-        .filter(i => keep(arr(i))).toArray
-      kept.map(arr(_)).toSeq
     }
   }
 

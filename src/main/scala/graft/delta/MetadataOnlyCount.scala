@@ -1,5 +1,7 @@
 package graft.delta
 
+import scala.collection.mutable
+
 import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -247,8 +249,7 @@ class MetadataOnlyCount(spark: SparkSession) extends Rule[LogicalPlan] {
 }
 
 /** Per-file exact column contributions for [[MetadataOnlyCount]]'s
-  * MIN/MAX/COUNT(col) rewrite. Pure functions of the AddFile so a
-  * LazySnapshot can fold them on executors. */
+  * rewrites, and the two [[FileFold]]s that combine them. */
 private[delta] object ColumnFacts {
 
   /** Resolve an aggregate's (logical) attribute name to (statsKey,
@@ -350,82 +351,40 @@ private[delta] object ColumnFacts {
     Some((vals, nr - f.deletionVector.map(_.cardinality).getOrElse(0L)))
   }
 
-  /** Round-trip escape for a raw partition tuple (nullable strings) so
-    * LazySnapshot partials can key a Dataset row on it. Separator \\u0000,
-    * null marker \\u0001, escape char \\u0002 — all three are escaped
-    * inside values, so any raw partition string round-trips exactly. */
-  def encodeKey(vals: Seq[String]): String =
-    vals.map { v =>
-      if (v == null) "\u0001"
-      else v.replace("\u0002", "\u0002e")
-        .replace("\u0000", "\u0002s")
-        .replace("\u0001", "\u0002n")
-    }.mkString("\u0000")
-  def decodeKey(s: String): Seq[String] =
-    s.split("\u0000", -1).toSeq.map { v =>
-      if (v == "\u0001") null
-      else {
-        val sb = new StringBuilder
-        var i = 0
-        while (i < v.length) {
-          val c = v.charAt(i)
-          if (c == '\u0002' && i + 1 < v.length) {
-            v.charAt(i + 1) match {
-              case 'e' => sb.append('\u0002')
-              case 's' => sb.append('\u0000')
-              case 'n' => sb.append('\u0001')
-              case other => sb.append(c).append(other)
-            }
-            i += 2
-          } else { sb.append(c); i += 1 }
-        }
-        sb.toString
-      }
-    }
+  /** [[Snapshot.partitionLiveFacts]]' fold: live rows summed per raw
+    * partition tuple of `keys`, in first-seen order; None once a file
+    * cannot give its row (see [[partitionLiveRow]]). */
+  final class PartitionLive(keys: Seq[String])
+      extends FileFold[Option[mutable.LinkedHashMap[Seq[String], Long]]] {
+    private type Acc = Option[mutable.LinkedHashMap[Seq[String], Long]]
+    def zero: Acc = Some(mutable.LinkedHashMap.empty)
+    def add(p: Acc, f: AddFile): Acc =
+      for (acc <- p; row <- partitionLiveRow(keys)(f)) yield plus(acc, row)
+    def merge(a: Acc, b: Acc): Acc =
+      for (x <- a; y <- b) yield y.foldLeft(x)(plus)
+    override def bailed(p: Acc): Boolean = p.isEmpty
+    private def plus(acc: mutable.LinkedHashMap[Seq[String], Long],
+        row: (Seq[String], Long)): mutable.LinkedHashMap[Seq[String], Long] =
+      acc += row._1 -> (acc.getOrElse(row._1, 0L) + row._2)
+  }
 
-  /** Streaming combiner over file contributions (driver- or
-    * executor-side). The ordering is lazy: a count-only fold never
+  /** [[Snapshot.exactColumnFacts]]' fold: the files' [[fileFacts]]
+    * combined into (nonNullRows, min, max); None once a file cannot prove
+    * its contribution. The ordering is lazy: a count-only fold never
     * compares values, so types without an interpreted ordering still
     * count fine. */
-  final class Fold(dt: DataType) {
-    private lazy val ord = org.apache.spark.sql.catalyst.util.TypeUtils
+  final class Fold(key: String, isPartition: Boolean, dt: DataType, needExtremes: Boolean)
+      extends FileFold[Option[(Long, Any, Any)]] {
+    private type Acc = Option[(Long, Any, Any)]
+    @transient private lazy val ord = org.apache.spark.sql.catalyst.util.TypeUtils
       .getInterpretedOrdering(dt)
-    private var bail = false
-    private var nonNull = 0L
-    private var mn: Any = null
-    private var mx: Any = null
-    def bailed: Boolean = bail
-    def add(ff: Option[(Long, Any, Any)]): Unit = ff match {
-      case None => bail = true
-      case Some((c, a, b)) =>
-        nonNull += c
-        if (a != null && (mn == null || ord.lt(a, mn))) mn = a
-        if (b != null && (mx == null || ord.gt(b, mx))) mx = b
-    }
-    def result: Option[(Long, Any, Any)] =
-      if (bail) None else Some((nonNull, mn, mx))
+    def zero: Acc = Some((0L, null, null))
+    def add(p: Acc, f: AddFile): Acc =
+      merge(p, fileFacts(key, isPartition, dt, needExtremes)(f))
+    def merge(a: Acc, b: Acc): Acc =
+      for ((c1, mn1, mx1) <- a; (c2, mn2, mx2) <- b) yield (c1 + c2,
+        if (mn1 == null || (mn2 != null && ord.lt(mn2, mn1))) mn2 else mn1,
+        if (mx1 == null || (mx2 != null && ord.gt(mx2, mx1))) mx2 else mx1)
+    override def bailed(p: Acc): Boolean = p.isEmpty
   }
-
-  /** Round-trip encoding so LazySnapshot partials cross the wire as
-    * strings (no Any-typed Dataset encoder needed). */
-  def encode(dt: DataType, v: Any): String = v match {
-    case null => null
-    case u: org.apache.spark.unsafe.types.UTF8String => u.toString
-    case d: org.apache.spark.sql.types.Decimal => d.toBigDecimal.toString
-    case other => other.toString
-  }
-  def decode(dt: DataType, s: String): Any =
-    if (s == null) null
-    else dt match {
-      case _: StringType => org.apache.spark.unsafe.types.UTF8String.fromString(s)
-      case _: ByteType => s.toByte
-      case _: ShortType => s.toShort
-      case _: IntegerType | _: DateType => s.toInt
-      case _: LongType | _: TimestampType | _: TimestampNTZType => s.toLong
-      case _: FloatType => s.toFloat
-      case _: DoubleType => s.toDouble
-      case _: BooleanType => s.toBoolean
-      case d: DecimalType => Decimal(BigDecimal(s), d.precision, d.scale)
-      case _ => throw new IllegalArgumentException(s"decode: $dt")
-    }
 }

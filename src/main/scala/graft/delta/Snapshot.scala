@@ -31,6 +31,21 @@ object Snapshot {
     val p = new Path(decodedPath)
     if (p.isAbsolute) p else new Path(new Path(tablePath), p)
   }
+
+  /** The in-memory executor of a [[FileFold]]: sequential below
+    * [[FileSkipping.ParallelThreshold]], else contiguous chunks folded on
+    * the common fork-join pool and merged in list order (`parsedStats` is
+    * a thread-safe lazy val; each chunk folds into its own partial). */
+  private[delta] def fold[P](files: Seq[AddFile], f: FileFold[P]): P =
+    if (files.size < FileSkipping.ParallelThreshold) FileFold.run(f, files.iterator)
+    else {
+      val arr = files.toArray
+      val chunks = 4 * java.util.concurrent.ForkJoinPool.getCommonPoolParallelism.max(1)
+      val step = (arr.length + chunks - 1) / chunks
+      java.util.stream.IntStream.range(0, chunks).parallel()
+        .mapToObj[Any](i => FileFold.run(f, arr.view.slice(i * step, (i + 1) * step).iterator))
+        .toArray.iterator.map(_.asInstanceOf[P]).reduceLeft(f.merge)
+    }
 }
 
 /**
@@ -57,49 +72,70 @@ class Snapshot(
       * ([[Checkpoints.liveTombstones]]). */
     val tombstones: Seq[RemoveFile] = Nil) {
 
-  /** Full reconciled file list. [[LazySnapshot]] (checkpoint-backed, 10⁶+
-    * adds) materializes this only for maintenance operations — scans go
-    * through [[scanCandidates]], which prunes BEFORE collecting. */
+  /** The full reconciled file list. Every table-level fact below is one
+    * [[FileFold]] run by [[fold]], so it never needs this list whole;
+    * [[LazySnapshot]] materializes it only for the callers that do
+    * (maintenance operations, unfiltered scans). */
   def allFiles: Seq[AddFile] = filesEager
 
-  def fileCount: Long = allFiles.size
+  /** Runs one fact's fold over the file list: in memory here, on
+    * executors in [[LazySnapshot]]. */
+  private[delta] def fold[P](f: FileFold[P]): P = Snapshot.fold(allFiles, f)
 
-  /** (decodedPath, deletionVector) projection of the file list — the DV
-    * registry's input. Eager snapshots read the in-memory list;
-    * [[LazySnapshot]] collects the projection distributed so DV-table
-    * scans never materialize stats-bearing AddFiles on the driver. */
+  private lazy val summary: FileFold.Summary = fold(FileFold.Summary)
+  lazy val fileCount: Long = summary.files
+  lazy val sizeInBytes: Long = summary.bytes
+  lazy val hasDeletionVectors: Boolean = summary.hasDvs
+
+  private lazy val records: Option[(Long, Long)] = fold(FileFold.Records)
+
+  /** Σ per-file numRecords, as the reference's GetCardinality
+    * (delta_multi_file_list.cpp:1046-1071); it counts deleted rows too.
+    * None if any file lacks stats. */
+  lazy val numRecordsEstimate: Option[Long] = records.map(_._1)
+
+  /** EXACT live row count from metadata alone: Σ per-file numRecords minus
+    * Σ deletion-vector cardinalities — both protocol-authoritative. None
+    * if any file lacks numRecords (foreign writers may omit stats).
+    * Powers the metadata-only `count(*)` rewrite ([[MetadataOnlyCount]]). */
+  lazy val exactRowCount: Option[Long] = records.map { case (n, deleted) => n - deleted }
+
+  /** (decodedPath, deletionVector) of every file: the DV registry's input,
+    * without the stats-bearing AddFiles (on a [[LazySnapshot]] only these
+    * pairs reach the driver). */
   private[delta] def dvRegistryPairs: Seq[(String, Option[DeletionVectorDescriptor])] =
-    allFiles.map(f => (f.decodedPath, f.deletionVector))
+    fold(FileFold.DvPairs).toSeq
 
-  /** Scan-time candidate files after stats skipping + partition pruning.
-    * `statsKeeper` is [[FileSkipping.keeper]]'s serializable per-file
-    * decision; `partitionBound` is the partition predicate bound
-    * POSITIONALLY against [[physicalPartitionSchema]]. The base
-    * implementation filters the in-memory list (fork-join parallel above
-    * the FileSkipping threshold); LazySnapshot ships both closures to
-    * executors and collects only the survivors. */
+  /** Scan-time candidate files after stats skipping + partition pruning,
+    * in list order. `statsKeeper` is [[FileSkipping.keeper]]'s serializable
+    * per-file decision; `partitionBound` is the partition predicate bound
+    * POSITIONALLY against [[physicalPartitionSchema]]. A filtered call is
+    * one [[FileFold.Candidates]] fold, so a [[LazySnapshot]] collects only
+    * the survivors; an unfiltered one is [[allFiles]]. */
   private[graft] def scanCandidates(
       statsKeeper: Option[AddFile => Boolean],
       partitionBound: Option[org.apache.spark.sql.catalyst.expressions.Expression])
-      : Seq[AddFile] = filterFiles(allFiles, statsKeeper, partitionBound)
+      : Seq[AddFile] =
+    candidates(statsKeeper, partitionBound) match {
+      case Some(c) => fold(c).files.toVector
+      case None => allFiles
+    }
 
-  /** [[scanCandidates]]' in-memory filter over any file list. */
+  /** [[scanCandidates]]' filter over an explicit in-memory file list. */
   private[delta] def filterFiles(files: Seq[AddFile],
       statsKeeper: Option[AddFile => Boolean],
       partitionBound: Option[org.apache.spark.sql.catalyst.expressions.Expression])
-      : Seq[AddFile] = {
-    val afterStats = statsKeeper match {
-      case Some(k) => FileSkipping.filterWith(files, k)
+      : Seq[AddFile] =
+    candidates(statsKeeper, partitionBound) match {
+      case Some(c) => Snapshot.fold(files, c).files.toVector
       case None => files
     }
-    partitionBound match {
-      case Some(b) =>
-        val pred = org.apache.spark.sql.catalyst.expressions.Predicate.createInterpreted(b)
-        afterStats.filter(f => pred.eval(
-          PartitionUtil.internalRow(f.partitionValues, physicalPartitionSchema)))
-      case None => afterStats
-    }
-  }
+
+  private def candidates(statsKeeper: Option[AddFile => Boolean],
+      partitionBound: Option[org.apache.spark.sql.catalyst.expressions.Expression])
+      : Option[FileFold.Candidates] =
+    if (statsKeeper.isEmpty && partitionBound.isEmpty) None
+    else Some(new FileFold.Candidates(statsKeeper, partitionBound, physicalPartitionSchema))
 
   def schema: StructType = metadata.schema
   def partitionSchema: StructType = metadata.partitionSchema
@@ -170,64 +206,21 @@ class Snapshot(
   def absolutePath(f: AddFile): Path =
     Snapshot.absolutePathOf(log.tablePath.toString, f.decodedPath)
 
-  def sizeInBytes: Long = allFiles.map(_.size).sum
-
-  /** Optimizer row estimate = Σ per-file numRecords, as the reference's
-    * GetCardinality (delta_multi_file_list.cpp:1046-1071). None if any file
-    * lacks stats. */
-  lazy val numRecordsEstimate: Option[Long] = {
-    val counts = allFiles.map(f => f.parsedStats.flatMap(_.numRecords))
-    if (counts.forall(_.isDefined)) Some(counts.flatten.sum) else None
-  }
-
-  def hasDeletionVectors: Boolean = allFiles.exists(_.deletionVector.isDefined)
-
-  /** EXACT live row count from metadata alone: Σ per-file numRecords minus
-    * Σ deletion-vector cardinalities — both protocol-authoritative. None
-    * if any file lacks numRecords (foreign writers may omit stats).
-    * Powers the metadata-only `count(*)` rewrite ([[MetadataOnlyCount]]). */
-  lazy val exactRowCount: Option[Long] =
-    numRecordsEstimate.map(total =>
-      total - allFiles.map(_.deletionVector.map(_.cardinality).getOrElse(0L)).sum)
-
-  /** EXACT (nonNullCount, min, max) for one column from metadata alone —
-    * per-file stats for data columns, typed partitionValues for partition
-    * columns. None unless EVERY file proves its contribution and no file
-    * carries a deletion vector (a DV could remove the extreme or the
-    * non-null rows). Values are Catalyst-internal. Powers the
-    * metadata-only MIN/MAX/COUNT(col) rewrite ([[MetadataOnlyCount]]). */
+  /** EXACT (nonNullCount, min, max) for one column from metadata alone
+    * ([[ColumnFacts.Fold]]). Powers the metadata-only MIN/MAX/COUNT(col)
+    * rewrite ([[MetadataOnlyCount]]). */
   private[delta] def exactColumnFacts(key: String, isPartition: Boolean,
       dt: org.apache.spark.sql.types.DataType,
-      needExtremes: Boolean): Option[(Long, Any, Any)] = {
-    val fn = ColumnFacts.fileFacts(key, isPartition, dt, needExtremes) _
-    val fold = new ColumnFacts.Fold(dt)
-    val it = allFiles.iterator
-    while (it.hasNext && !fold.bailed) fold.add(fn(it.next()))
-    fold.result
-  }
+      needExtremes: Boolean): Option[(Long, Any, Any)] =
+    fold(new ColumnFacts.Fold(key, isPartition, dt, needExtremes))
 
-  /** EXACT live row counts per partition-value tuple for `keys` (physical
-    * partition column names): Σ(numRecords − DV cardinality) grouped by
-    * the files' raw partitionValues. DV-SAFE at file granularity — every
-    * row of a file shares its partition tuple, and the DV cardinality is
-    * protocol-exact, so group liveness needs no stats beyond numRecords.
-    * None when any file misses a key or its numRecords. Powers the
-    * GROUP-BY-partition metadata rewrite ([[MetadataOnlyCount]]); result
-    * size is O(#distinct partition tuples), never O(#files). */
+  /** EXACT live row counts per raw partition-value tuple of `keys`
+    * ([[ColumnFacts.PartitionLive]]). Powers the GROUP-BY-partition
+    * metadata rewrite ([[MetadataOnlyCount]]); the result is
+    * O(#distinct partition tuples), never O(#files). */
   private[delta] def partitionLiveFacts(keys: Seq[String])
-      : Option[Seq[(Seq[String], Long)]] = {
-    val acc = new scala.collection.mutable.LinkedHashMap[Seq[String], Long]
-    val it = allFiles.iterator
-    while (it.hasNext) {
-      val f = it.next()
-      ColumnFacts.partitionLiveRow(keys)(f) match {
-        case None => return None
-        case Some((vals, live)) =>
-          acc.update(vals, acc.getOrElse(vals, 0L) + live)
-      }
-    }
-    Some(acc.toSeq)
-  }
+      : Option[Seq[(Seq[String], Long)]] =
+    fold(new ColumnFacts.PartitionLive(keys)).map(_.toSeq)
 
   /** DV registry broadcast, built + shipped ONCE per snapshot (the registry
     * eagerly reads every deletion vector on the driver — repeated reads of

@@ -118,6 +118,30 @@ class LazySnapshotSpec extends AnyFunSuite {
     }
   }
 
+  test("the first filtered count over a checkpointed DV table runs a pinned job count") {
+    val src = Fixtures.readParquet(spark, sfDir, "lineitem")
+    val path = tmpTable()
+    DeltaWriter.append(spark, src.repartitionByRange(16, col("l_orderkey")), path)
+    DeltaTable.forPath(spark, path).delete(col("l_linenumber") === 1)
+    DeltaTable.forPath(spark, path).checkpoint()
+    DeltaLog.clearCache()
+    withLowThreshold {
+      val snap = DeltaLog.forPath(spark, path).update()
+      assert(snap.isInstanceOf[LazySnapshot])
+      var n = 0L
+      val jobs = graft.SparkJobs.during {
+        n = snap.toDF.where(col("l_orderkey") < 100).count()
+      }
+      assert(n == src.where(col("l_orderkey") < 100 && col("l_linenumber") =!= 1).count())
+      // three snapshot folds (the file summary, the DV registry's pairs,
+      // the scan's survivors), then the count's two query-stage jobs
+      assert(jobs.size == 5, jobs.mkString("\n"))
+      assert(jobs.count(_.startsWith("collect at LazySnapshot.scala")) == 3, jobs.mkString("\n"))
+      assert(snap.hasDeletionVectors)
+      assert(!snap.asInstanceOf[LazySnapshot].materializedFull)
+    }
+  }
+
   test("byte-size guard: a big-by-bytes checkpoint goes lazy at any action count") {
     val path = java.nio.file.Files.createTempDirectory("graft-lazybytes").toString + "/t"
     val src = Fixtures.readParquet(spark, sfDir, "supplier")

@@ -433,6 +433,50 @@ class StreamingSpec extends AnyFunSuite {
         q.recentProgress.map(p => s"${p.batchId}:${p.numInputRows}").mkString(","))
   }
 
+  test("delta stream source reads added columns as null and fails loudly " +
+       "on a dropped or renamed column") {
+    import graft.delta.DeltaWriter
+    import org.apache.spark.sql.types.{LongType, StructField}
+    for (change <- Seq("drop", "rename")) {
+      val path = java.nio.file.Files.createTempDirectory("stream-schema").toString + "/t"
+      val table = DeltaTable.forPath(spark, path)
+      /** Rows [lo, hi) under the table's current columns: every column is
+        * a bigint, `id` itself. */
+      def append(lo: Long, hi: Long): Unit = DeltaWriter.append(spark,
+        spark.range(lo, hi).select(DeltaLog.forPath(spark, path).update().schema
+          .fieldNames.toIndexedSeq.map(n => col("id").as(n)): _*), path)
+      DeltaWriter.append(spark, spark.range(0, 5).select(col("id"), col("id").as("a")), path)
+      table.setProperties(Map("delta.columnMapping.mode" -> "name"))
+      table.addColumns(StructField("c", LongType))
+      append(5, 8)
+      val sink = s"stream_schema_$change"
+      val q = spark.readStream.format("graftdelta").load(path)
+        .writeStream.format("memory").queryName(sink).start()
+      try {
+        q.processAllAvailable()
+        // the files that predate the added column read it as null
+        assert(spark.table(sink).count() == 8)
+        assert(spark.table(sink).where(col("c").isNull).count() == 5)
+        // an additive change keeps the running stream readable
+        table.addColumns(StructField("d", LongType))
+        append(8, 10)
+        q.processAllAvailable()
+        assert(spark.table(sink).count() == 10)
+        val changed =
+          if (change == "drop") table.dropColumn("a") else table.renameColumn("a", "a2")
+        val failed = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+          q.processAllAvailable()
+        }
+        val cause = Iterator.iterate[Throwable](failed)(_.getCause).takeWhile(_ != null)
+          .collectFirst { case e: IllegalStateException => e }
+        assert(cause.exists(e => e.getMessage.contains("column `a`") &&
+          e.getMessage.contains(s"version $changed") &&
+          e.getMessage.contains("non-additive")), s"$change: $failed")
+        assert(spark.table(sink).count() == 10)
+      } finally q.stop()
+    }
+  }
+
   test("CDF streaming source delivers row-level inserts and deletes") {
     import graft.delta.DeltaWriter
     val path = java.nio.file.Files.createTempDirectory("stream-cdf").toString + "/t"

@@ -3,7 +3,9 @@ package graft.delta
 import java.nio.file.{Files, Paths}
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, BoundReference, EqualTo, GreaterThanOrEqual, Literal}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.LongType
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{CountingFileSystem, SparkJobs, TestSpark}
@@ -73,6 +75,33 @@ class SnapshotResolveSpec extends AnyFunSuite {
     s.protocol,
     s.metadata)
 
+  /** Every table-level fact a snapshot folds from its file list, keyed
+    * so the two paths compare regardless of file-list order. */
+  private def facts(s: Snapshot) = {
+    val keeper = FileSkipping.keeper(s.physicalDataSchema,
+      Seq(GreaterThanOrEqual(AttributeReference("id", LongType)(), Literal(25L))))
+    val pIsOne = EqualTo(BoundReference(0, LongType, nullable = true), Literal(1L))
+    (s.fileCount, s.sizeInBytes, s.hasDeletionVectors,
+      s.numRecordsEstimate, s.exactRowCount,
+      s.exactColumnFacts("id", isPartition = false, LongType, needExtremes = true),
+      s.exactColumnFacts("p", isPartition = true, LongType, needExtremes = true),
+      s.partitionLiveFacts(Seq("p")).map(_.toMap),
+      s.scanCandidates(keeper, Some(pIsOne)).map(f => f.path -> f).toMap,
+      s.dvRegistryPairs.toSet)
+  }
+
+  /** The two paths agree on every fact and on all state; the lazy one
+    * folds its facts without materializing its file list. */
+  private def assertAgree(eager: Snapshot, lzy: Snapshot, clue: String): Unit = {
+    val lazyFacts = facts(lzy)
+    lzy match {
+      case l: LazySnapshot => assert(!l.materializedFull, s"$clue: a fact materialized the list")
+      case _ =>
+    }
+    assert(lazyFacts == facts(eager), clue)
+    assert(state(lzy) == state(eager), clue)
+  }
+
   test("eager and checkpoint-backed snapshots agree at every version") {
     val path = tmpTable()
     val table = DeltaTable.forPath(spark, path)
@@ -85,7 +114,7 @@ class SnapshotResolveSpec extends AnyFunSuite {
       }
       assert(!eager.isInstanceOf[LazySnapshot], s"v$v")
       assert(lzy.isInstanceOf[LazySnapshot] == lazyExpected, s"v$v")
-      assert(state(lzy) == state(eager), s"v$v")
+      assertAgree(eager, lzy, s"v$v")
     }
     // every commit below lands at the next version; the table's own
     // checkpoints are the two explicit ones
@@ -109,6 +138,14 @@ class SnapshotResolveSpec extends AnyFunSuite {
         ConflictChecker.commit(log, Some(log.update()), "MANUAL ADD", Seq(Action(f)))
       }),
       "DV delete on a DV file" -> (() => table.delete(col("id") % 7 === 0)),
+      "add a file without stats" -> (() => {
+        val f = log.update().allFiles.minBy(_.path)
+        val suffix = "-nostats.parquet"
+        Files.copy(Paths.get(path, f.decodedPath),
+          Paths.get(path, f.decodedPath.stripSuffix(".parquet") + suffix))
+        ConflictChecker.commit(log, Some(log.update()), "MANUAL ADD", Seq(Action(f.copy(
+          path = f.path.stripSuffix(".parquet") + suffix, stats = None, deletionVector = None))))
+      }),
       "append" -> (() => DeltaWriter.append(spark, rows(40, 50), path)))
     steps.zipWithIndex.foreach { case ((what, step), v) =>
       step()
@@ -123,19 +160,19 @@ class SnapshotResolveSpec extends AnyFunSuite {
       .filter(_.getFileName.toString.matches(raw"0+6\.checkpoint\.\d+\.\d+\.parquet")).count() > 1)
     // every version of the finished log: below v6 the only checkpoint is
     // one the pointer no longer names, so both thresholds replay eagerly
-    (0L to 8L).foreach(v => compare(v, lazyExpected = v >= 6))
+    (0L to 9L).foreach(v => compare(v, lazyExpected = v >= 6))
 
-    // a log tail over either path: v8 served from outside the log
-    val c8 = Paths.get(path, "_delta_log", f"${8L}%020d.json")
-    val tail = Files.createTempDirectory("graft-resolve-tail").resolve(c8.getFileName)
-    Files.move(c8, tail)
+    // a log tail over either path: v9 served from outside the log
+    val c9 = Paths.get(path, "_delta_log", f"${9L}%020d.json")
+    val tail = Files.createTempDirectory("graft-resolve-tail").resolve(c9.getFileName)
+    Files.move(c9, tail)
     val Seq(eager, lzy) = snapshotPaths.map { case (_, minActions) =>
       withLazyThreshold(minActions)(
         DeltaLog.forPath(spark, path).snapshotWithLogTail(Seq(new Path(tail.toString))))
     }
     assert(lzy.isInstanceOf[LazySnapshot] && !eager.isInstanceOf[LazySnapshot])
-    assert(state(lzy) == state(eager))
-    assert(eager.version == 8)
+    assertAgree(eager, lzy, "log tail")
+    assert(eager.version == 9)
     assert(lzy.toDF.count() == eager.toDF.count())
   }
 

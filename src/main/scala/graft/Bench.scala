@@ -581,16 +581,19 @@ object Bench {
             (dd, tt, okk)
           }
           val rounds = Seq(round(), round(), round())
+          // a round whose Spark query failed has no ratio: its
+          // time-to-failure must not read as a fast run
           val roundRatios = rounds.collect {
-            case (Some(dd), tt, _) if dd > 0 => tt / dd
+            case (Some(dd), tt, true) if dd > 0 => tt / dd
           }.sorted
           if (roundRatios.nonEmpty)
             bigMedianRatio(n) =
               if (roundRatios.length % 2 == 1) roundRatios(roundRatios.length / 2)
               else (roundRatios(roundRatios.length / 2 - 1) +
                 roundRatios(roundRatios.length / 2)) / 2.0
-          var t = rounds.map(_._2).min
           var ok = rounds.exists(_._3)
+          // the fastest round that succeeded (every round when none did)
+          var t = rounds.filter(r => r._3 || !ok).map(_._2).min
           var d = rounds.flatMap(_._1) match {
             case Nil => None
             case ds => Some(ds.min)

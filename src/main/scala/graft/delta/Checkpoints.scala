@@ -63,15 +63,15 @@ object Checkpoints {
     * removes within `delta.deletedFileRetentionDuration` (default 1 week)
     * so engines can still reason about recently deleted files — and
     * VACUUM can honor their deletion timestamps — once the commit JSONs
-    * that carried them are cleaned up. A remove without a
-    * deletionTimestamp is treated as old (already expired), matching
-    * delta-spark. */
+    * that carried them are cleaned up. A remove stamped exactly at the
+    * cutoff has expired, and one without a deletionTimestamp is treated as
+    * old, both matching delta-spark. */
   private[delta] def liveTombstones(snap: Snapshot,
       nowMs: Long = System.currentTimeMillis()): Seq[RemoveFile] = {
     val cutoff = nowMs - parseRetentionMs(
       snap.metadata.configuration.get("delta.deletedFileRetentionDuration"),
       defaultMs = 7L * 24 * 3600 * 1000)
-    snap.tombstones.filter(_.deletionTimestamp.getOrElse(0L) >= cutoff)
+    snap.tombstones.filter(_.deletionTimestamp.getOrElse(0L) > cutoff)
   }
 
   /**

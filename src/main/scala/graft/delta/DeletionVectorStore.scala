@@ -44,7 +44,8 @@ object DeletionVectorStore {
   def read(log: DeltaLog, dv: DeletionVectorDescriptor): Bitmap64 =
     read(log.tablePath, log.fs, dv)
 
-  /** Context-free variant, callable from executors (lazy DV slots).
+  /** Context-free variant, callable from executors (the task that scans
+    * a file reads its DV, [[DvSlot]]).
     * File-backed DVs use a POSITIONED read of just this descriptor's frame
     * — multi-DV files (one file holding many files' bitmaps, written by
     * broad DML) would otherwise cost O(file size) per bitmap fetched. */

@@ -5,61 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.delta.DvCodec.Bitmap64
 
-/**
- * Deletion-vector registry for reads — the input of the Spark equivalent
- * of the reference's in-scan `DeltaDeleteFilter`
- * (src/functions/delta_scan/delta_multi_file_reader.cpp:24-48), which
- * [[GraftParquetFileFormat]] applies inside the reader.
- *
- * Scale design: no join, no shuffle — the registry ships once per
- * executor via a Broadcast and each row does an O(1) bitmap probe. This
- * preserves the scan's partitioning exactly like the reference's
- * selection-vector approach preserves DuckDB's pipelines.
- */
-object DeletionVectors {
-
-  /** Per-file DV registry, keyed by every path rendering a scan may
-    * produce. EVERY file is registered (DV-less files map to null) so
-    * probes can FAIL CLOSED: a scanned path that matches no registered
-    * rendering is an error, never a silent "not deleted" that would
-    * resurrect rows whose path merely percent-encodes differently.
-    *
-    * The registry carries DESCRIPTORS, not bitmaps: the driver reads no
-    * DV bytes at all. Each executor reads + memoizes only the bitmaps of
-    * files it actually scans ([[DvSlot.bitmap]]) — on a 100 TB table with
-    * pervasive DVs the driver would otherwise serially fetch 10⁵ bitmap
-    * files before the first task could run. */
-  def registry(snapshot: Snapshot): Map[String, DvHandle] = {
-    val slot = slots(snapshot.log)
-    // (path, descriptor) pairs only, from the snapshot's DvPairs fold: on a
-    // LazySnapshot the fold runs on executors and only the pairs reach the
-    // driver, never the stats-bearing AddFiles (the registry is inherently
-    // O(#files), but pairs are ~10× smaller than full file entries)
-    registry(snapshot.log.tablePath.toString,
-      snapshot.dvRegistryPairs.map { case (p, dv) => p -> dv.map(slot) })
-  }
-
-  /** The registry of an explicit file list: (decoded path, bitmap handle;
-    * None when the file has no bitmap). Every listed file is registered. */
-  def registry(tablePath: String,
-      files: Seq[(String, Option[DvHandle])]): Map[String, DvHandle] =
-    files.flatMap { case (decodedPath, handle) =>
-      val slot = handle.orNull
-      val p = Snapshot.absolutePathOf(tablePath, decodedPath)
-      Seq(p.toString -> slot, p.toUri.getPath -> slot, p.toUri.toString -> slot)
-    }.toMap
-
-  /** Descriptor → lazily-read handle; the handles of one call share one
-    * serialized Hadoop configuration. */
-  def slots(log: DeltaLog): DeletionVectorDescriptor => DvHandle = {
-    val tablePath = log.tablePath.toString
-    val conf = new SerializableHadoopConf(log.spark.sessionState.newHadoopConf())
-    d => new DvSlot(d, tablePath, conf)
-  }
-}
-
 /** Hadoop Configuration with Java serialization (the stock class is not
-  * serializable; broadcasts of DV slots need it on executors). */
+  * serializable; executor-side DV reads and builds need it). */
 final class SerializableHadoopConf(@transient var value: org.apache.hadoop.conf.Configuration)
   extends Serializable {
   private def writeObject(out: java.io.ObjectOutputStream): Unit = {
@@ -73,40 +20,32 @@ final class SerializableHadoopConf(@transient var value: org.apache.hadoop.conf.
   }
 }
 
-/** A probe-able deletion bitmap in a broadcast registry. */
+/** Where one listed file's deletion bitmap comes from. It travels with the
+  * file: [[GraftFileIndex.listFiles]] puts it in the file's metadata, Spark
+  * copies that into each `PartitionedFile` of the file, and the task that
+  * scans the file resolves it ([[GraftParquetFileFormat]]), as the
+  * reference installs each file's selection vector when its reader opens
+  * the file (delta_multi_file_reader.cpp:162-230). */
 sealed abstract class DvHandle extends Serializable {
-  def bitmap: Bitmap64
+  /** The bitmap; `fs` is only asked for when a stored DV file is read. */
+  def bitmap(tablePath: org.apache.hadoop.fs.Path,
+      fs: => org.apache.hadoop.fs.FileSystem): Bitmap64
+}
+
+/** A file's stored deletion vector: only the descriptor crosses the wire,
+  * and the scanning task reads the bitmap; inline ("i") DVs decode with no
+  * IO. */
+final case class DvSlot(descriptor: DeletionVectorDescriptor) extends DvHandle {
+  override def bitmap(tablePath: org.apache.hadoop.fs.Path,
+      fs: => org.apache.hadoop.fs.FileSystem): Bitmap64 =
+    DeletionVectorStore.read(tablePath,
+      if (descriptor.storageType == "i") null else fs, descriptor)
 }
 
 /** An already-resolved bitmap (CDF's DV-growth diffs). */
-final class ResolvedDv(bm: Bitmap64) extends DvHandle {
-  override def bitmap: Bitmap64 = bm
-}
-
-/** Broadcast handle for one file's deletion vector: only the DESCRIPTOR
-  * crosses the wire; the bitmap is read and memoized on first probe.
-  * Broadcast values are shared per executor JVM, so each executor reads
-  * each scanned file's bitmap at most once; inline ("i") DVs decode
-  * locally with no IO. */
-final class DvSlot(
-    val descriptor: DeletionVectorDescriptor,
-    tablePath: String,
-    conf: SerializableHadoopConf) extends DvHandle {
-  @transient @volatile private var cached: Bitmap64 = _
-  override def bitmap: Bitmap64 = {
-    var b = cached
-    if (b == null) synchronized {
-      b = cached
-      if (b == null) {
-        val p = new org.apache.hadoop.fs.Path(tablePath)
-        b = DeletionVectorStore.read(p,
-          if (descriptor.storageType == "i") null else p.getFileSystem(conf.value),
-          descriptor)
-        cached = b
-      }
-    }
-    b
-  }
+final case class ResolvedDv(resolved: Bitmap64) extends DvHandle {
+  override def bitmap(tablePath: org.apache.hadoop.fs.Path,
+      fs: => org.apache.hadoop.fs.FileSystem): Bitmap64 = resolved
 }
 
 /** Mutable 64-bit roaring bitmap builder — the per-file aggregation buffer

@@ -319,7 +319,6 @@ class DeltaTable private (val spark: SparkSession, val log: DeltaLog,
     import org.apache.spark.sql.types.{StringType, StructField}
     import graft.delta.DvCodec.Bitmap64
     val snap = snapshot
-    val slot = DeletionVectors.slots(log)
     val partKeys = snap.physicalPartitionSchema.fieldNames.toSeq
     def dvBitmap(d: Option[DeletionVectorDescriptor]): Bitmap64 =
       d.map(dv => DeletionVectorStore.read(log, dv)).getOrElse(Bitmap64.empty)
@@ -385,15 +384,15 @@ class DeltaTable private (val spark: SparkSession, val log: DeltaLog,
                 "(row restore or in-place rewrite); CDF cannot be derived " +
                 "soundly — enable CDF on the writer")
           val diff = Bitmap64.andNot(newDv, oldDv)
-          if (diff.cardinality > 0) Some(a -> Some(new ResolvedDv(diff): DvHandle)) else None
+          if (diff.cardinality > 0) Some(a -> Some(ResolvedDv(diff): DvHandle)) else None
         }
         Seq(
           // fresh adds insert their live rows (minus any DV they carry)
-          read(freshAdds.map(a => a -> a.deletionVector.map(slot)),
+          read(freshAdds.map(a => a -> a.deletionVector.map(DvSlot)),
             RowSelection.Live, lit("insert")),
           read(dvDiffs, RowSelection.Deleted, lit("delete")),
           // a pure remove deletes the file's still-LIVE rows (minus last DV)
-          read(pureRemoves.map(r => removedFile(v, r) -> r.deletionVector.map(slot)),
+          read(pureRemoves.map(r => removedFile(v, r) -> r.deletionVector.map(DvSlot)),
             RowSelection.Live, lit("delete"))
         ).flatten
       }

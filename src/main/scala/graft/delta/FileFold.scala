@@ -56,15 +56,6 @@ private[delta] object FileFold {
     override def bailed(p: Option[(Long, Long)]): Boolean = p.isEmpty
   }
 
-  /** (decoded path, deletion vector) of every file, in list order: the DV
-    * registry's input, without the stats-bearing AddFiles. */
-  object DvPairs extends FileFold[ArrayBuffer[(String, Option[DeletionVectorDescriptor])]] {
-    type Pairs = ArrayBuffer[(String, Option[DeletionVectorDescriptor])]
-    def zero: Pairs = ArrayBuffer.empty
-    def add(p: Pairs, f: AddFile): Pairs = p += ((f.decodedPath, f.deletionVector))
-    def merge(a: Pairs, b: Pairs): Pairs = a ++= b
-  }
-
   /** The surviving files of one run, in list order, and the run's own
     * partition predicate: interpreted evaluation is not thread-safe, so
     * each partial binds one. Only `files` travels back from an executor. */

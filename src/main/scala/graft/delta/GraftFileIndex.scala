@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference, BoundReference, Expression, Predicate}
-import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, PartitionDirectory}
 import org.apache.spark.sql.types.StructType
 
 /**
@@ -19,6 +19,10 @@ import org.apache.spark.sql.types.StructType
  *   partition pruning; Spark never reads partition columns from parquet,
  *   they are injected as constants from `PartitionDirectory.values`).
  * - `dataFilters` → stats-based file skipping (FileSkipping).
+ * - Each listed file carries its deletion-vector handle in its metadata
+ *   ([[GraftFileIndex.DvKey]]), as the reference's file list carries each
+ *   file's selection vector (`DeltaFileMetaData.selection_vector`,
+ *   delta_multi_file_list.hpp:38).
  * - No filesystem listing happens here at all: the file list, sizes and
  *   modification times come from the log. At 100 TB this is the difference
  *   between one log replay and millions of object-store LIST/HEAD calls.
@@ -69,9 +73,10 @@ class GraftFileIndex(spark: SparkSession, snapshot: Snapshot,
       * Spark analog of the reference's dynamic filter re-prune
       * (delta_multi_file_list.cpp:989-1021). */
     dynamicThunks: Seq[() => Seq[Expression]] = Nil,
-    /** An explicit file list read under the snapshot's metadata (see
-      * [[Snapshot.relation]]); None lists the snapshot's own files. */
-    files: Option[Seq[AddFile]] = None,
+    /** An explicit file list read under the snapshot's metadata, each file
+      * with its bitmap handle (see [[Snapshot.relation]]); None lists the
+      * snapshot's own files, each with its own deletion vector. */
+    files: Option[Seq[(AddFile, Option[DvHandle])]] = None,
     /** What [[listFiles]] returned, by log path; shared with the copies
       * [[withDynamicThunk]] makes. */
     listed: java.util.concurrent.ConcurrentHashMap[String, AddFile] =
@@ -102,9 +107,13 @@ class GraftFileIndex(spark: SparkSession, snapshot: Snapshot,
   // stats keys are PHYSICAL, so filters are renamed before stats lookups
   override def partitionSchema: StructType = snapshot.partitionSchema
   override def refresh(): Unit = ()
-  override def sizeInBytes: Long = files.fold(snapshot.sizeInBytes)(_.map(_.size).sum)
+  override def sizeInBytes: Long = files.fold(snapshot.sizeInBytes)(_.map(_._1.size).sum)
   override def inputFiles: Array[String] =
-    files.getOrElse(snapshot.allFiles).map(f => snapshot.absolutePath(f).toString).toArray
+    files.fold(snapshot.allFiles)(_.map(_._1)).map(f => snapshot.absolutePath(f).toString).toArray
+
+  /** The explicit list's handles by log path (a commit adds a path once). */
+  @transient private lazy val explicitHandles: Map[String, DvHandle] =
+    files.fold(Map.empty[String, DvHandle])(_.map { case (f, h) => f.path -> h.orNull }.toMap)
 
   override def listFiles(
       partitionFilters: Seq[Expression],
@@ -148,7 +157,7 @@ class GraftFileIndex(spark: SparkSession, snapshot: Snapshot,
     // snapshots, executor-side Dataset filter + survivor collect for
     // checkpoint-backed LazySnapshots (10⁶+ adds never hit the driver)
     val afterPartition = files match {
-      case Some(fs) => snapshot.filterFiles(fs, statsKeeper, partitionBound)
+      case Some(fs) => snapshot.filterFiles(fs.map(_._1), statsKeeper, partitionBound)
       case None => snapshot.scanCandidates(statsKeeper, partitionBound)
     }
     // event typing mirrors the reference's log (file_skipping_params.test):
@@ -183,15 +192,30 @@ class GraftFileIndex(spark: SparkSession, snapshot: Snapshot,
       .map { case (pv, files) =>
         PartitionDirectory(
           PartitionUtil.internalRow(pv, snapshot.physicalPartitionSchema),
-          files.map(fileStatus).toArray)
+          files.map(fileStatus))
       }.toSeq
   }
 
   private def filesBefore: Int = files.fold(snapshot.fileCount.toInt)(_.size)
 
-  private def fileStatus(f: AddFile): FileStatus =
-    new FileStatus(f.size, false, 1, 128L * 1024 * 1024, f.modificationTime,
-      snapshot.absolutePath(f))
+  /** The file with its deletion-vector handle (null when it has none):
+    * Spark copies the metadata into every `PartitionedFile` split from it. */
+  private def fileStatus(f: AddFile): FileStatusWithMetadata = {
+    val handle =
+      if (files.isEmpty) f.deletionVector.map(DvSlot).orNull
+      else explicitHandles(f.path)
+    FileStatusWithMetadata(
+      new FileStatus(f.size, false, 1, 128L * 1024 * 1024, f.modificationTime,
+        snapshot.absolutePath(f)),
+      Map(GraftFileIndex.DvKey -> handle))
+  }
+}
+
+object GraftFileIndex {
+  /** The key of a listed file's [[DvHandle]] in its metadata, which Spark
+    * copies into `PartitionedFile.otherConstantMetadataColumnValues`. No
+    * `_metadata` field has this name, so Spark never reads it. */
+  private[delta] val DvKey = "graft_deletion_vector"
 }
 
 /** One pushdown/skipping event — analog of the reference's structured

@@ -1,7 +1,7 @@
 package graft.delta
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.spark.broadcast.Broadcast
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
@@ -10,8 +10,6 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
-
-import graft.delta.DvCodec.Bitmap64
 
 /**
  * Delta-aware parquet FileFormat: the scan core behind every snapshot read
@@ -31,26 +29,31 @@ import graft.delta.DvCodec.Bitmap64
  *    internal row-index column (populated split-safely by the parquet
  *    readers from row-group metadata, so it stays correct under page
  *    skipping and file splits); each row's index is probed against the
- *    file's broadcast bitmap and dropped if deleted, then the extra
- *    column is projected away. The probe FAILS CLOSED: every listed file
- *    is registered (null bitmap when DV-less) and an unrecognized path
- *    raises rather than resurrecting deleted rows. With `keepDeleted` the
- *    probe is inverted: only the bitmap's rows pass (CDF's delete rows),
- *    and a file without a bitmap is not read at all.
+ *    file's bitmap and dropped if deleted, then the extra column is
+ *    projected away. Each task takes the bitmap's [[DvHandle]] from its
+ *    `PartitionedFile`, where [[GraftFileIndex]] put it (null when the
+ *    file has none), and reads a stored DV itself. The probe FAILS
+ *    CLOSED: a file without the handle raises rather than resurrecting
+ *    deleted rows. With `keepDeleted` the probe is inverted: only the
+ *    bitmap's rows pass (CDF's delete rows), and a file without a bitmap
+ *    is not read at all.
  *
- * Scale: the DV registry ships once per executor (broadcast); the probe is
- * O(1) per row with no join or shuffle, preserving scan partitioning.
+ * Scale: only the scanned files' handles reach the executors, and each
+ * split of a file reads that file's bitmap; the probe is O(1) per row with
+ * no join or shuffle, preserving scan partitioning.
  */
 class GraftParquetFileFormat(
     logicalToPhysical: Map[String, StructField],
-    /** Bitmaps of the listed files; None = no listed file has one. */
-    dvRegistry: Option[Broadcast[Map[String, DvHandle]]],
+    /** The table root stored deletion vectors resolve against. */
+    tablePath: String,
+    /** Whether this read filters rows by the listed files' bitmaps: some
+      * listed file may carry one. */
+    dvFilter: Boolean,
     keepDeleted: Boolean,
     fieldIdMode: Boolean) extends ParquetFileFormat {
 
-  /** Whether this reader drops DV-deleted rows ([[Snapshot.relation]]
-    * hands it the registry of the files its file index lists). */
-  def dropsDeletedRows: Boolean = dvRegistry.isDefined && !keepDeleted
+  /** Whether this reader drops DV-deleted rows. */
+  def dropsDeletedRows: Boolean = dvFilter && !keepDeleted
 
   /** Whether this reader emits only the bitmaps' rows. */
   def keepsOnlyDeletedRows: Boolean = keepDeleted
@@ -72,11 +75,11 @@ class GraftParquetFileFormat(
       !sparkSession.sessionState.conf.offHeapColumnVectorEnabled)) &&
       super.supportBatch(sparkSession, schema)
 
-  private def filtersRows: Boolean = dvRegistry.isDefined || keepDeleted
+  private def filtersRows: Boolean = dvFilter || keepDeleted
 
   // Distinct formats must not compare equal (ParquetFileFormat.equals is
   // class-based): exchange/scan reuse would otherwise conflate two tables'
-  // DV registries or mappings.
+  // row selections or mappings.
   override def equals(other: Any): Boolean = other match {
     case g: GraftParquetFileFormat => g eq this
     case _ => false
@@ -218,11 +221,18 @@ class GraftParquetFileFormat(
     // obeys that option, not a recomputation over this reader's schema
     val returningBatch =
       options.get(FileFormat.OPTION_RETURNING_BATCH).contains("true")
-    // a local, so the per-row probe reads no field
+    // locals, so the closure captures no field of this format
     val keepDeleted = this.keepDeleted
+    val root = new Path(tablePath)
+    val conf = new SerializableHadoopConf(hadoopConf)
 
     (pf: PartitionedFile) => {
-      val bm = dvRegistry.map(bc => bitmapFor(bc.value, pf)).orNull
+      val bm = pf.otherConstantMetadataColumnValues.get(GraftFileIndex.DvKey) match {
+        case Some(h: DvHandle) => h.bitmap(root, root.getFileSystem(conf.value))
+        case Some(null) => null
+        case _ => throw new IllegalStateException(
+          s"scanned file carries no deletion-vector handle: ${pf.filePath}")
+      }
       // no bitmap, so no row to keep: the file is not opened
       if (keepDeleted && bm == null) Iterator.empty
       else if (returningBatch) {
@@ -252,15 +262,5 @@ class GraftParquetFileFormat(
         }
       }
     }
-  }
-
-  private def bitmapFor(map: Map[String, DvHandle], pf: PartitionedFile): Bitmap64 = {
-    val p = pf.filePath.toPath
-    val handle = map.get(pf.filePath.toString)
-      .orElse(map.get(p.toString))
-      .orElse(map.get(p.toUri.getPath))
-      .getOrElse(throw new IllegalStateException(
-        s"scanned file not in the read's DV registry (path rendering mismatch?): ${pf.filePath}"))
-    if (handle == null) null else handle.bitmap
   }
 }

@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions.col
  * The class differs from [[Snapshot]] only in where a [[FileFold]] runs:
  * [[fold]] runs each fact on executors, one partial per partition, and
  * merges the partials on the driver. So every fact (counts, sizes, row and
- * column facts, the DV registry's (path, descriptor) pairs, the scan's
- * surviving files) keeps its one definition, and the driver holds the
+ * column facts, the scan's surviving files, which carry their own deletion
+ * vectors to the reader) keeps its one definition, and the driver holds the
  * partials: O(#matching files) for a pruned scan, O(#partition tuples)
  * for the grouped metadata rewrite, never O(#table files) of full entries.
  *

@@ -25,8 +25,8 @@ object Snapshot {
     * function of strings so executor-side closures can use it without
     * capturing a Snapshot; every site that renders file-list paths for
     * matching against `_metadata.file_path` MUST go through this — a
-    * second copy that drifts makes DV registry keys silently stop
-    * matching and deleted rows resurface. */
+    * second copy that drifts makes a DML's row hits silently stop
+    * matching their files. */
   private[delta] def absolutePathOf(tablePath: String, decodedPath: String): Path = {
     val p = new Path(decodedPath)
     if (p.isAbsolute) p else new Path(new Path(tablePath), p)
@@ -99,12 +99,6 @@ class Snapshot(
     * if any file lacks numRecords (foreign writers may omit stats).
     * Powers the metadata-only `count(*)` rewrite ([[MetadataOnlyCount]]). */
   lazy val exactRowCount: Option[Long] = records.map { case (n, deleted) => n - deleted }
-
-  /** (decodedPath, deletionVector) of every file: the DV registry's input,
-    * without the stats-bearing AddFiles (on a [[LazySnapshot]] only these
-    * pairs reach the driver). */
-  private[delta] def dvRegistryPairs: Seq[(String, Option[DeletionVectorDescriptor])] =
-    fold(FileFold.DvPairs).toSeq
 
   /** Scan-time candidate files after stats skipping + partition pruning,
     * in list order. `statsKeeper` is [[FileSkipping.keeper]]'s serializable
@@ -222,15 +216,6 @@ class Snapshot(
       : Option[Seq[(Seq[String], Long)]] =
     fold(new ColumnFacts.PartitionLive(keys)).map(_.toSeq)
 
-  /** DV registry broadcast, built + shipped ONCE per snapshot (the registry
-    * eagerly reads every deletion vector on the driver — repeated reads of
-    * a DV table must not re-read them or accumulate broadcasts). */
-  @transient private[delta] lazy val dvRegistryBroadcast
-      : Option[org.apache.spark.broadcast.Broadcast[Map[String, DvHandle]]] =
-    if (hasDeletionVectors)
-      Some(log.spark.sparkContext.broadcast(DeletionVectors.registry(this)))
-    else None
-
   /**
    * The scan surface: a DataFrame over a custom FileIndex, so Catalyst gets
    * predicate/projection pushdown, partition pruning, and our stats-based
@@ -277,21 +262,17 @@ class Snapshot(
       files: Option[Seq[(AddFile, Option[DvHandle])]] = None): HadoopFsRelation = {
     val spark = log.spark
     val logicalToPhysical = dataSchema.fields.map(f => f.name -> physicalField(f)).toMap
-    val dvRegistry = (rows, files) match {
-      case (RowSelection.All, _) => None
-      case (_, None) => dvRegistryBroadcast
-      case (_, Some(fs)) =>
-        if (fs.forall(_._2.isEmpty)) None
-        else Some(spark.sparkContext.broadcast(DeletionVectors.registry(
-          log.tablePath.toString, fs.map { case (f, h) => f.decodedPath -> h })))
-    }
+    // whether some listed file may carry a bitmap: then every listed file
+    // must carry its handle, and the reader fails on one that does not
+    val dvFilter = rows != RowSelection.All &&
+      files.fold(hasDeletionVectors)(_.exists(_._2.isDefined))
     HadoopFsRelation(
-      location = new GraftFileIndex(spark, this, options, files = files.map(_.map(_._1))),
+      location = new GraftFileIndex(spark, this, options, files = files),
       partitionSchema = partitionSchema,
       dataSchema = StructType(dataSchema.fields ++ extraDataCols),
       bucketSpec = None,
-      fileFormat = new GraftParquetFileFormat(logicalToPhysical, dvRegistry,
-        keepDeleted = rows == RowSelection.Deleted,
+      fileFormat = new GraftParquetFileFormat(logicalToPhysical, log.tablePath.toString,
+        dvFilter, keepDeleted = rows == RowSelection.Deleted,
         fieldIdMode = columnMappingMode == "id"),
       options = Map.empty)(spark)
   }

@@ -101,9 +101,9 @@ class LazySnapshotSpec extends AnyFunSuite {
       assert(snap.isInstanceOf[LazySnapshot])
       val expect = 2 * src.count() - 2 * src.where(col("s_suppkey") % 10 === 3).count()
       assert(snap.toDF.count() == expect)
-      // the DV registry collects a distributed (path, descriptor)
-      // projection — scanning a DV-carrying lazy table must not
-      // materialize the stats-bearing file list on the driver
+      // each listed file carries its own deletion vector to the reader —
+      // scanning a DV-carrying lazy table must not materialize the
+      // stats-bearing file list on the driver
       assert(!snap.asInstanceOf[LazySnapshot].materializedFull,
         "DV-table scan materialized the full file list")
       // eager path agrees exactly
@@ -133,10 +133,11 @@ class LazySnapshotSpec extends AnyFunSuite {
         n = snap.toDF.where(col("l_orderkey") < 100).count()
       }
       assert(n == src.where(col("l_orderkey") < 100 && col("l_linenumber") =!= 1).count())
-      // three snapshot folds (the file summary, the DV registry's pairs,
-      // the scan's survivors), then the count's two query-stage jobs
-      assert(jobs.size == 5, jobs.mkString("\n"))
-      assert(jobs.count(_.startsWith("collect at LazySnapshot.scala")) == 3, jobs.mkString("\n"))
+      // two snapshot folds (the file summary, the scan's survivors, which
+      // carry their own deletion vectors), then the count's two
+      // query-stage jobs
+      assert(jobs.size == 4, jobs.mkString("\n"))
+      assert(jobs.count(_.startsWith("collect at LazySnapshot.scala")) == 2, jobs.mkString("\n"))
       assert(snap.hasDeletionVectors)
       assert(!snap.asInstanceOf[LazySnapshot].materializedFull)
     }

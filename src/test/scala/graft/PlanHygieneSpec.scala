@@ -232,7 +232,7 @@ class PlanHygieneSpec extends AnyFunSuite {
     // the dv filter must not introduce a join
     assert(!plan.contains("Join"), plan.take(2000))
     // deleted rows are dropped inside the reader: the scan's format
-    // carries the snapshot's DV registry
+    // filters each file by the deletion vector its listing carries
     val formats = df.queryExecution.optimizedPlan.collect {
       case r: org.apache.spark.sql.execution.datasources.LogicalRelation => r.relation
     }

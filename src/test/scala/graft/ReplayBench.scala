@@ -30,7 +30,10 @@ object ReplayBench {
       LessThanOrEqual(k, Literal(lo + 99999L)))
 
     // ---- Dataset-backed (lazy) path: the driver never materializes the
-    // file list; the stats keeper ships to executors, survivors collect ----
+    // file list; the stats keeper ships to executors, survivors collect.
+    // A threshold of 1 makes any checkpoint-backed log lazy ----
+    spark.conf.set("spark.graft.lazySnapshot.minActions", "1")
+    DeltaLog.clearCache()
     val log = DeltaLog.forPath(spark, path)
     var t0 = System.nanoTime()
     val snap = log.update()

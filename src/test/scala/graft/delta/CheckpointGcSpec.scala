@@ -51,6 +51,19 @@ class CheckpointGcSpec extends AnyFunSuite {
     assert(l0.readCheckpoint(l0.update().version).flatMap(_.remove).isEmpty)
   }
 
+  test("under a 0 retention a remove stamped in the checkpoint's own millisecond expires") {
+    val path = tmpTable()
+    DeltaWriter.append(spark, region, path,
+      configuration = Map("delta.deletedFileRetentionDuration" -> "interval 0 seconds"))
+    DeltaTable.forPath(spark, path).overwrite(region.limit(2))
+    val snap = DeltaLog.forPath(spark, path).update()
+    val stamps = snap.tombstones.flatMap(_.deletionTimestamp)
+    assert(stamps.nonEmpty)
+    // the cutoff equals the newest stamp: delta-spark keeps only removes
+    // strictly newer than the cutoff
+    assert(Checkpoints.liveTombstones(snap, nowMs = stamps.max).isEmpty)
+  }
+
   test("checkpoints written from a LazySnapshot keep checkpoint-held " +
        "tombstones (no one-cycle-early expiry on huge tables)") {
     val path = tmpTable()

@@ -86,8 +86,7 @@ class SnapshotResolveSpec extends AnyFunSuite {
       s.exactColumnFacts("id", isPartition = false, LongType, needExtremes = true),
       s.exactColumnFacts("p", isPartition = true, LongType, needExtremes = true),
       s.partitionLiveFacts(Seq("p")).map(_.toMap),
-      s.scanCandidates(keeper, Some(pIsOne)).map(f => f.path -> f).toMap,
-      s.dvRegistryPairs.toSet)
+      s.scanCandidates(keeper, Some(pIsOne)).map(f => f.path -> f).toMap)
   }
 
   /** The two paths agree on every fact and on all state; the lazy one

@@ -2,6 +2,7 @@ package graft.delta
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, LongType,
   MapType, Metadata, StructField, StructType}
 
@@ -123,31 +124,23 @@ object Checkpoints {
       if (fs.exists(m) && fs.getFileStatus(m).getModificationTime < cutoff &&
           fs.delete(m, false)) deleted += 1
     }
-    if (manifests.nonEmpty) {
-      val sidecarDir = new Path(log.logPath, "_sidecars")
-      if (fs.exists(sidecarDir)) {
-        var refsOk = true
-        val referenced = log.listUuidManifests().flatMap { case (_, m) =>
-          try log.manifestSidecarPaths(m).map(_.toUri.getPath)
-          catch { case scala.util.control.NonFatal(e) =>
-            // unreadable manifest → unknown references → GC nothing:
-            // deleting a sidecar a live checkpoint still needs would
-            // corrupt replay, while keeping garbage merely wastes bytes
-            DeltaLog.log.warn(s"cannot read sidecar refs of $m — skipping sidecar GC", e)
-            refsOk = false
-            Nil
-          }
-        }.toSet
-        if (refsOk) {
-          fs.listStatus(sidecarDir).foreach { st =>
-            if (!st.isDirectory && !referenced.contains(st.getPath.toUri.getPath) &&
-                st.getModificationTime < cutoff) {
-              if (fs.delete(st.getPath, false)) deleted += 1
-            }
-          }
-        }
-      }
-    }
+    // only a sidecar past the cutoff may go, so the manifests' references
+    // (one Spark job per parquet manifest) are read only when one is
+    val sidecarDir = new Path(log.logPath, "_sidecars")
+    val expiredSidecars =
+      if (manifests.isEmpty || !fs.exists(sidecarDir)) Nil
+      else fs.listStatus(sidecarDir).toSeq
+        .filter(st => !st.isDirectory && st.getModificationTime < cutoff)
+    // an unreadable manifest leaves the references unknown: GC nothing,
+    // since deleting a sidecar a live checkpoint still needs would corrupt
+    // replay, while keeping garbage merely wastes bytes
+    if (expiredSidecars.nonEmpty) scala.util.Try(log.listUuidManifests()
+        .flatMap(m => log.manifestSidecarPaths(m._2).map(_.toUri.getPath)).toSet).fold(
+      e => DeltaLog.log.warn(s"unreadable sidecar refs in ${log.logPath}: skipping sidecar GC", e),
+      referenced => expiredSidecars.foreach { st =>
+        if (!referenced.contains(st.getPath.toUri.getPath) &&
+            fs.delete(st.getPath, false)) deleted += 1
+      })
     // crashed checkpoint attempts leave `.cptmp-*` staging dirs; expired
     // ones are abandoned by definition (a live attempt is seconds old)
     fs.listStatus(log.logPath).filter(st => st.isDirectory &&
@@ -160,12 +153,46 @@ object Checkpoints {
 
   def writeCheckpoint(log: DeltaLog, snap: Snapshot,
       maxActionsPerPart: Int = 500000): Unit = {
+    require(maxActionsPerPart > 0, "maxActionsPerPart must be positive")
     if (snap.metadata.configuration.get("delta.checkpointPolicy")
-        .exists(_.trim.equalsIgnoreCase("v2"))) {
+        .exists(_.trim.equalsIgnoreCase("v2")))
       writeV2Checkpoint(log, snap, maxActionsPerPart)
-      return
-    }
-    writeClassicCheckpoint(log, snap, maxActionsPerPart)
+    else writeClassicCheckpoint(log, snap, maxActionsPerPart)
+  }
+
+  /** What a checkpoint at the snapshot's version holds, in either layout:
+    * the non-file actions, and the file actions ([[Snapshot.addsDataset]]
+    * plus the live tombstones) for executors to write, so no writer
+    * collects the file list; `fileCount` counts them from snapshot facts. */
+  private final case class ActionSet(nonFile: Seq[Action], files: DataFrame, fileCount: Long)
+
+  private def actionSet(snap: Snapshot): ActionSet = {
+    // file actions are normalized to dataChange=false per the protocol's
+    // checkpoint guidance (delta-spark does the same); change detection
+    // always reads the COMMIT JSONs, never checkpoint state
+    val tombstones = liveTombstones(snap).map(r => Action(r.copy(dataChange = false)))
+    val files = snap.addsDataset.toDF()
+      .withColumn("add", col("add").withField("dataChange", lit(false)))
+      .union(snap.log.spark.createDataset(tombstones)(DeltaLog.actionEncoder).toDF())
+    ActionSet(
+      Seq(Action(snap.protocol), Action(snap.metadata)) ++
+        snap.setTransactions.map { case (app, v) => Action(SetTransaction(app, v, None)) } ++
+        snap.domainMetadata.map(Action(_)),
+      files, snap.fileCount + tombstones.size)
+  }
+
+  private def partCount(actions: Long, maxActionsPerPart: Int): Int =
+    math.max(1L, (actions + maxActionsPerPart - 1L) / maxActionsPerPart).toInt
+
+  /** Writes `df` as `n` parquet files into a fresh `.cptmp-` directory —
+    * through no shuffle when one file is enough — and returns the
+    * directory and its files in name order. */
+  private def writeParts(log: DeltaLog, df: DataFrame, n: Int): (Path, Seq[Path]) = {
+    val tmpDir = new Path(log.logPath, s".cptmp-${java.util.UUID.randomUUID}")
+    (if (n == 1) df.coalesce(1) else df.repartition(n))
+      .write.mode(SaveMode.Overwrite).parquet(tmpDir.toString)
+    (tmpDir, log.fs.listStatus(tmpDir).map(_.getPath)
+      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName).toSeq)
   }
 
   /** V2 checkpoint (`delta.checkpointPolicy=v2`, reader feature
@@ -179,63 +206,42 @@ object Checkpoints {
   private def writeV2Checkpoint(log: DeltaLog, snap: Snapshot,
       maxActionsPerPart: Int): Unit = {
     import org.apache.spark.sql.Row
-    import org.apache.spark.sql.functions.{col, lit}
     val spark = log.spark
     val fs = log.fs
-    require(maxActionsPerPart > 0, "maxActionsPerPart must be positive")
+    val set = actionSet(snap)
 
-    // file actions are normalized to dataChange=false per the protocol's
-    // checkpoint guidance (delta-spark does the same); change detection
-    // always reads the COMMIT JSONs, never checkpoint state
-    val fileActions: Seq[Action] =
-      snap.allFiles.map(f => Action(f.copy(dataChange = false))) ++
-        liveTombstones(snap).map(r => Action(r.copy(dataChange = false)))
-    val nonFile: Seq[Action] =
-      Seq(Action(snap.protocol), Action(snap.metadata)) ++
-        snap.setTransactions.map { case (app, v) =>
-          Action(SetTransaction(app, v, None)) }.toSeq ++
-        snap.domainMetadata.map(Action(_))
-
-    // sidecars: the file actions, split in maxActionsPerPart chunks, one
-    // uuid-named parquet each (add/remove columns only, per protocol)
+    // sidecars: the file actions in parts of at most maxActionsPerPart,
+    // one uuid-named parquet each (add/remove columns only, per protocol)
     val sidecarDir = new Path(log.logPath, "_sidecars")
     fs.mkdirs(sidecarDir)
-    val tmpDir = new Path(log.logPath, s".cptmp-${java.util.UUID.randomUUID}")
-    val nParts = math.max(1L,
-      (fileActions.size + maxActionsPerPart - 1L) / maxActionsPerPart).toInt
-    spark.createDataset(fileActions)(DeltaLog.actionEncoder).toDF()
-      .select(col("add"), col("remove"))
-      .repartition(nParts).write.mode(SaveMode.Overwrite).parquet(tmpDir.toString)
-    val sidecarInfos = fs.listStatus(tmpDir).map(_.getPath)
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName).map { part =>
-        val name = s"${java.util.UUID.randomUUID}.parquet"
-        val target = new Path(sidecarDir, name)
-        if (!fs.rename(part, target))
-          throw new IllegalStateException(s"Failed to move sidecar to $target")
-        (name, fs.getFileStatus(target).getLen)
-      }.toSeq
+    val (tmpDir, parts) = writeParts(log, set.files.select(col("add"), col("remove")),
+      partCount(set.fileCount, maxActionsPerPart))
+    val sidecarInfos = parts.map { part =>
+      val name = s"${java.util.UUID.randomUUID}.parquet"
+      val target = new Path(sidecarDir, name)
+      if (!fs.rename(part, target))
+        throw new IllegalStateException(s"Failed to move sidecar to $target")
+      (name, fs.getFileStatus(target).getLen)
+    }
 
     // manifest: non-file actions + checkpointMetadata + sidecar pointers
-    val base = spark.createDataset(nonFile)(DeltaLog.actionEncoder).toDF()
+    val base = spark.createDataset(set.nonFile)(DeltaLog.actionEncoder).toDF()
       .withColumn("checkpointMetadata",
         lit(null).cast("struct<version:bigint>"))
       .withColumn("sidecar",
         lit(null).cast("struct<path:string,sizeInBytes:bigint>"))
     val schema = base.schema
     def rowWith(field: String, value: Row): Row =
-      Row.fromSeq(schema.fields.map(f => if (f.name == field) value else null))
+      Row.fromSeq(schema.fields.toIndexedSeq.map(f => if (f.name == field) value else null))
     val extraRows = rowWith("checkpointMetadata", Row(snap.version)) +:
       sidecarInfos.map { case (p, sz) => rowWith("sidecar", Row(p, sz)) }
-    val manifestDF = base.unionByName(
-      spark.createDataFrame(spark.sparkContext.parallelize(extraRows, 1), schema))
-    val tmpManifest = new Path(log.logPath, s".cptmp-${java.util.UUID.randomUUID}")
-    manifestDF.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmpManifest.toString)
-    val written = fs.listStatus(tmpManifest).map(_.getPath)
-      .filter(_.getName.endsWith(".parquet"))
+    val manifestDF =
+      base.unionByName(spark.createDataFrame(java.util.List.of(extraRows: _*), schema))
+    val (tmpManifest, written) = writeParts(log, manifestDF, 1)
     require(written.length == 1, s"expected 1 manifest part, got ${written.length}")
     val manifestTarget = new Path(log.logPath,
       f"${snap.version}%020d.checkpoint.${java.util.UUID.randomUUID}.parquet")
-    if (!fs.rename(written(0), manifestTarget))
+    if (!fs.rename(written.head, manifestTarget))
       throw new IllegalStateException(s"Failed to move manifest to $manifestTarget")
     fs.delete(tmpDir, true)
     fs.delete(tmpManifest, true)
@@ -243,37 +249,25 @@ object Checkpoints {
     // compare it against sidecar contents — ours already exempts uuid
     // manifests from the count check)
     LogStore.overwrite(fs, new Path(log.logPath, "_last_checkpoint"),
-      s"""{"version":${snap.version},"size":${nonFile.size + 1 + sidecarInfos.size}}""")
+      s"""{"version":${snap.version},"size":${set.nonFile.size + 1 + sidecarInfos.size}}""")
   }
 
   private def writeClassicCheckpoint(log: DeltaLog, snap: Snapshot,
       maxActionsPerPart: Int): Unit = {
-    val spark = log.spark
-    require(maxActionsPerPart > 0, "maxActionsPerPart must be positive")
-    val actions: Seq[Action] =
-      Seq(Action(snap.protocol), Action(snap.metadata)) ++
-        snap.setTransactions.map { case (app, v) =>
-          Action(SetTransaction(app, v, None)) }.toSeq ++
-        snap.domainMetadata.map(Action(_)) ++
-        // dataChange=false per the protocol's checkpoint guidance (same
-        // normalization as the V2 path; commits stay the change source)
-        snap.allFiles.map(f => Action(f.copy(dataChange = false))) ++
-        liveTombstones(snap).map(r => Action(r.copy(dataChange = false)))
-
-    val nParts = math.max(1L,
-      (actions.size + maxActionsPerPart - 1L) / maxActionsPerPart).toInt
-    val tmpDir = new Path(log.logPath, s".cptmp-${java.util.UUID.randomUUID}")
-    val ds = spark.createDataset(actions)(DeltaLog.actionEncoder)
+    val set = actionSet(snap)
+    // counted before any file is replaced: a lazy snapshot's adds may be
+    // the very checkpoint this one replaces
+    val size = set.nonFile.size + set.fileCount
+    val all = log.spark.createDataset(set.nonFile)(DeltaLog.actionEncoder).toDF()
+      .union(set.files)
     val out =
       if (snap.metadata.configuration
           .getOrElse("delta.checkpoint.writeStatsAsStruct", "false")
-          .trim.equalsIgnoreCase("true")) withStructStats(ds.toDF(), snap)
-      else ds.toDF()
-    out.repartition(nParts).write.mode(SaveMode.Overwrite).parquet(tmpDir.toString)
-    val fs = log.fs
-    val written = fs.listStatus(tmpDir).map(_.getPath)
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+          .trim.equalsIgnoreCase("true")) withStructStats(all, snap)
+      else all
+    val (tmpDir, written) = writeParts(log, out, partCount(size, maxActionsPerPart))
     require(written.nonEmpty, s"No checkpoint part file in $tmpDir")
+    val fs = log.fs
 
     // Crash-safe re-checkpoint ordering: retract the `_last_checkpoint`
     // pointer FIRST, then rename the new parts into place (deleting only a
@@ -292,22 +286,25 @@ object Checkpoints {
     val targets =
       if (k == 1) Seq(log.checkpointFile(snap.version))
       else (1 to k).map(i => log.checkpointPartFile(snap.version, i, k))
-    written.zip(targets).foreach { case (part, target) =>
-      if (fs.exists(target)) fs.delete(target, false)
+    val replaced = written.zip(targets).map { case (part, target) =>
+      val existed = fs.delete(target, false)
       if (!fs.rename(part, target))
         throw new IllegalStateException(s"Failed to move checkpoint to $target")
-    }
+      existed
+    }.contains(true)
     // sweep leftovers from a prior checkpoint shape (e.g. old part count)
     val prefix = f"${snap.version}%020d.checkpoint"
     val targetNames = targets.map(_.getName).toSet
-    fs.listStatus(log.logPath).map(_.getPath)
+    val stale = fs.listStatus(log.logPath).map(_.getPath)
       .filter(p => p.getName.startsWith(prefix) && p.getName.endsWith(".parquet")
         && !targetNames.contains(p.getName))
-      .foreach(p => fs.delete(p, false))
+    stale.foreach(p => fs.delete(p, false))
+    // a cached LazySnapshot may read the files just replaced or swept
+    if (replaced || stale.nonEmpty) log.invalidateCache()
     fs.delete(tmpDir, true)
     val partsField = if (k == 1) "" else s""","parts":$k"""
     LogStore.overwrite(fs, pointer,
-      s"""{"version":${snap.version},"size":${actions.size}$partsField}""")
+      s"""{"version":${snap.version},"size":$size$partsField}""")
   }
 
   /** `delta.checkpoint.writeStatsAsStruct`: add typed
@@ -319,7 +316,7 @@ object Checkpoints {
     * checkpoints. Keys are PHYSICAL names on column-mapped tables, same
     * as the stats strings. Our own reader keeps using the JSON form. */
   private[delta] def withStructStats(df: DataFrame, snap: Snapshot): DataFrame = {
-    import org.apache.spark.sql.functions.{col, from_json, struct, when}
+    import org.apache.spark.sql.functions.{from_json, struct, when}
     val dataS =
       if (snap.columnMappingMode == "none") snap.dataSchema
       else snap.physicalDataSchema

@@ -73,8 +73,11 @@ object ConflictChecker {
    * prepends the `commitInfo` (in-commit timestamp computed for `v`),
    * assigns `adds` their row ids for `v` on row-tracked tables (plus the
    * high-water-mark domain action), writes the JSON PUT-if-absent, then
-   * invalidates the cache and auto-checkpoints. A lost race rebases over
-   * winners disjoint under `scope`, up to `maxAttempts`.
+   * auto-checkpoints. A lost race rebases over winners disjoint under
+   * `scope`, up to `maxAttempts`. A commit keeps the log's cached
+   * snapshots, as a version never changes: the next resolve folds it onto
+   * the cached tip. A create or clone drops them: the path may have held a
+   * deleted table.
    *
    * The table configuration the commit lands under — the one in its own
    * metaData action (create, clone, ALTER, RESTORE's reset), else
@@ -128,12 +131,12 @@ object ConflictChecker {
       try {
         LogStore.write(log.fs, log.commitFile(v), lines.mkString("", "\n", "\n"))
         staged.clear()
-        log.invalidateCache()
+        if (base.isEmpty) log.invalidateCache()
         log.maybeAutoCheckpoint(v, baseConf)
         return v
       } catch {
         case e: CommitConflictException =>
-          log.invalidateCache()
+          if (base.isEmpty) log.invalidateCache()
           val b = base.filter(_ => attempts < maxAttempts).getOrElse(throw e)
           val latestVersion = log.update().version
           if (latestVersion < v) throw e

@@ -5,21 +5,6 @@ import org.apache.spark.sql.functions._
 
 import graft.delta.DvCodec.Bitmap64
 
-/** Hadoop Configuration with Java serialization (the stock class is not
-  * serializable; executor-side DV reads and builds need it). */
-final class SerializableHadoopConf(@transient var value: org.apache.hadoop.conf.Configuration)
-  extends Serializable {
-  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-    out.defaultWriteObject()
-    value.write(out)
-  }
-  private def readObject(in: java.io.ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    value = new org.apache.hadoop.conf.Configuration(false)
-    value.readFields(in)
-  }
-}
-
 /** Where one listed file's deletion bitmap comes from. It travels with the
   * file: [[GraftFileIndex.listFiles]] puts it in the file's metadata, Spark
   * copies that into each `PartitionedFile` of the file, and the task that
@@ -120,7 +105,8 @@ object DeltaDelete {
       .toMap
     val facts = spark.sparkContext.broadcast(candidates.map { case (k, f) =>
       k -> ((f.deletionVector, f.parsedStats.flatMap(_.numRecords))) })
-    val conf = new SerializableHadoopConf(spark.sessionState.newHadoopConf())
+    val conf = spark.sparkContext.broadcast(
+      new org.apache.spark.util.SerializableConfiguration(spark.sessionState.newHadoopConf()))
     val partitioner = new org.apache.spark.HashPartitioner(math.max(1, math.min(
       hitRdd.getNumPartitions, (candidates.size + FilesPerDvTask - 1) / FilesPerDvTask)))
     // per affected file: (path key, newly deleted rows, the written DV
@@ -151,7 +137,7 @@ object DeltaDelete {
     ).mapPartitions { files =>
       val known = facts.value
       val tp = new org.apache.hadoop.fs.Path(tablePathStr)
-      lazy val fs = tp.getFileSystem(conf.value)
+      lazy val fs = tp.getFileSystem(conf.value.value)
       val out = scala.collection.mutable.ArrayBuffer
         .empty[(String, Long, Option[(String, DeletionVectorDescriptor)])]
       // one multi-DV file per task (rotated at ~16 MB so no single file
@@ -191,7 +177,7 @@ object DeltaDelete {
       }
       flush()
       out.iterator
-    }.collect() finally facts.destroy()
+    }.collect() finally { facts.destroy(); conf.destroy() }
     if (results.isEmpty) return (Nil, 0L)
 
     if (moved != null)

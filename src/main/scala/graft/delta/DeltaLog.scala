@@ -101,7 +101,8 @@ class DeltaLog private (@transient val spark: SparkSession, val tablePath: Path)
   def update(): Snapshot = tip(listing())
 
   /** The tip lives only in `cachedLatest`: a reader polling a table that
-    * is written elsewhere holds one snapshot, not one per polled version. */
+    * is written elsewhere holds one snapshot, not one per polled version.
+    * A commit keeps it, so the writer's next resolve runs no Spark job. */
   private def tip(l: LogListing): Snapshot = synchronized {
     // a log whose every commit JSON at or below the checkpoint was
     // retention-cleaned (delta's metadata-cleanup steady state, and what

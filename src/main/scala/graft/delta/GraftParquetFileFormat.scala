@@ -10,6 +10,7 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
+import org.apache.spark.util.SerializableConfiguration
 
 /**
  * Delta-aware parquet FileFormat: the scan core behind every snapshot read
@@ -224,11 +225,13 @@ class GraftParquetFileFormat(
     // locals, so the closure captures no field of this format
     val keepDeleted = this.keepDeleted
     val root = new Path(tablePath)
-    val conf = new SerializableHadoopConf(hadoopConf)
+    // broadcast once per scan, as ParquetFileFormat does: a conf captured
+    // in the closure would travel, and deserialize, with every task
+    val conf = sparkSession.sparkContext.broadcast(new SerializableConfiguration(hadoopConf))
 
     (pf: PartitionedFile) => {
       val bm = pf.otherConstantMetadataColumnValues.get(GraftFileIndex.DvKey) match {
-        case Some(h: DvHandle) => h.bitmap(root, root.getFileSystem(conf.value))
+        case Some(h: DvHandle) => h.bitmap(root, root.getFileSystem(conf.value.value))
         case Some(null) => null
         case _ => throw new IllegalStateException(
           s"scanned file carries no deletion-vector handle: ${pf.filePath}")

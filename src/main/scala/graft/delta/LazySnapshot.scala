@@ -23,10 +23,11 @@ import org.apache.spark.sql.functions.col
  * entry for its path, a tail remove deletes it.
  *
  * [[allFiles]] materializes the whole list, and only its own callers pay
- * for it: maintenance operations (OPTIMIZE, VACUUM, listFiles, checkpoint
- * writes) and unfiltered scans, which are O(#files) by nature.
- * `delta-kernel`-style engines make the same split: scans stream the
- * checkpoint, maintenance reads it whole.
+ * for it: maintenance operations (OPTIMIZE, VACUUM, listFiles) and
+ * unfiltered scans, which are O(#files) by nature. A checkpoint write is
+ * not one of them: executors write [[addsDataset]] into the new checkpoint
+ * ([[Checkpoints]]). `delta-kernel`-style engines make the same split:
+ * scans stream the checkpoint, maintenance reads it whole.
  */
 private[graft] class LazySnapshot(
     log: DeltaLog,
@@ -44,11 +45,9 @@ private[graft] class LazySnapshot(
   extends Snapshot(log, version, protocol, metadata, Nil,
     setTransactions, domainMetadata, tombstones) {
 
-  /** The live adds as add actions, typed by the shared
-    * [[DeltaLog.actionEncoder]]: checkpoint adds (decoded like the eager
-    * path's checkpoint actions) minus shadowed paths, plus the tail's own
-    * adds. Every row's `add` is set. */
-  @transient private[graft] lazy val addsDataset: Dataset[Action] = {
+  /** Checkpoint adds (decoded like the eager path's checkpoint actions)
+    * minus shadowed paths, plus the tail's own adds. */
+  @transient private[graft] override lazy val addsDataset: Dataset[Action] = {
     val spark = log.spark
     val dead = shadowed // small; serialized into the closure
     val base = DeltaLog.actionFrame(DeltaLog.readParquet(spark, checkpointPaths))

@@ -1,7 +1,7 @@
 package graft.delta
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.datasources.HadoopFsRelation
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
@@ -77,6 +77,12 @@ class Snapshot(
     * [[LazySnapshot]] materializes it only for the callers that do
     * (maintenance operations, unfiltered scans). */
   def allFiles: Seq[AddFile] = filesEager
+
+  /** The live adds as add actions for executors to write (checkpoints):
+    * built from the in-memory list on each call, so the snapshot keeps no
+    * encoded copy; [[LazySnapshot]] reads its checkpoint parquet. */
+  private[graft] def addsDataset: Dataset[Action] =
+    log.spark.createDataset(allFiles.map(Action(_)))(DeltaLog.actionEncoder)
 
   /** Runs one fact's fold over the file list: in memory here, on
     * executors in [[LazySnapshot]]. */

@@ -157,4 +157,17 @@ class CommitPathSpec extends AnyFunSuite {
     assert(e.getMessage.contains("icebergCompatV9"), e.getMessage)
     assert(DeltaLog.forPath(spark, dir).update().version == v)
   }
+
+  test("a table re-created at a deleted table's path reads as the new table") {
+    val dir = freshDir()
+    DeltaWriter.append(spark, nation, dir)                          // old v0
+    assert(DeltaTable.forPath(spark, dir).toDF.count() == 25)       // caches it
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    // the new table's create lands at the cached old table's version
+    DeltaWriter.append(spark, nation.limit(3).select(col("n_name")), dir)
+    val t = DeltaTable.forPath(spark, dir)
+    assert(t.version == 0L)
+    assert(t.toDF.columns.toSeq == Seq("n_name"))
+    assert(t.toDF.count() == 3)
+  }
 }

@@ -10,7 +10,9 @@ import graft.delta._
   * pass over the data to a write kind fails here, printing each kind's job
   * call sites. A write is one job: its files' stats are collected in the
   * writing tasks, never by reading them back, and a DML's deletion vectors
-  * are built in one job. */
+  * are built in one job. A checkpoint is one job per file set it writes,
+  * and a commit keeps the snapshot it extends, so the next write over a
+  * checkpointed table re-reads no checkpoint. */
 class DmlJobsSpec extends AnyFunSuite {
   import TestSpark._
 
@@ -53,7 +55,19 @@ class DmlJobsSpec extends AnyFunSuite {
     // version 3 and writes the checkpoint
     Op("append + auto-checkpoint", dir => DeltaWriter.append(spark, rows(40000, 40010), dir),
       conf = Map("delta.checkpointInterval" -> "3"),
-      prep = dir => (1 to 2).foreach(_ => DeltaWriter.append(spark, rows(40000, 40010), dir))))
+      prep = dir => (1 to 2).foreach(_ => DeltaWriter.append(spark, rows(40000, 40010), dir))),
+    // the counted append builds on the snapshot the process's own last
+    // commit extended, over a checkpoint: no checkpoint re-read
+    Op("append after own commit", dir => DeltaWriter.append(spark, rows(40000, 40010), dir),
+      prep = dir => {
+        Checkpoints.checkpoint(log(dir))
+        DeltaWriter.append(spark, rows(40000, 40010), dir)
+      }),
+    Op("single-part checkpoint", dir => Checkpoints.checkpoint(log(dir)),
+      prep = dir => DeltaWriter.append(spark, rows(40000, 40010), dir)),
+    Op("V2 checkpoint", dir => Checkpoints.checkpoint(log(dir)),
+      conf = Map("delta.checkpointPolicy" -> "v2"),
+      prep = dir => DeltaWriter.append(spark, rows(40000, 40010), dir)))
 
   /** (plain, change data feed on) */
   private val pinned: Map[String, (Int, Int)] = Map(
@@ -69,7 +83,10 @@ class DmlJobsSpec extends AnyFunSuite {
     "full overwrite" -> ((1, 1)),
     "replaceWhere" -> ((2, 2)),
     "dynamic-partition overwrite" -> ((1, 1)),
-    "append + auto-checkpoint" -> ((3, 3)))
+    "append + auto-checkpoint" -> ((2, 2)),
+    "append after own commit" -> ((1, 1)),
+    "single-part checkpoint" -> ((1, 1)),
+    "V2 checkpoint" -> ((2, 2)))
 
   test("Spark jobs per DML kind, change data feed off and on") {
     val sites = ops.map { op =>

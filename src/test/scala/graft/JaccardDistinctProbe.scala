@@ -98,12 +98,7 @@ object JaccardDistinctProbe {
     // plan shape evidence: count exchanges below each candidate distinct
     def exchanges(df: DataFrame): Int = {
       df.queryExecution.executedPlan.execute().count()
-      var n = 0
-      df.queryExecution.executedPlan.foreach {
-        case _: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => n += 1
-        case _ => ()
-      }
-      n
+      PlanShuffles.count(df.queryExecution.executedPlan)
     }
     println(s"[probe] exchanges: candsA=${exchanges(candsA)} candsB=${exchanges(candsB)}")
 

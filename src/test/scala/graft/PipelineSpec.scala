@@ -51,18 +51,7 @@ class PipelineSpec extends AnyFunSuite {
       .toDF("id_a", "id_b")
     val deduped = raw.repartition(8, col("id_a")).dropDuplicates("id_a", "id_b")
     deduped.write.format("noop").mode("overwrite").save()
-    var shuffles = 0
-    def walk(p: org.apache.spark.sql.execution.SparkPlan): Unit = {
-      p match {
-        case _: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => shuffles += 1
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          walk(a.executedPlan)
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => walk(q.plan)
-        case _ => ()
-      }
-      p.children.foreach(walk)
-    }
-    walk(deduped.queryExecution.executedPlan)
+    val shuffles = PlanShuffles.count(deduped.queryExecution.executedPlan)
     assert(shuffles === 1,
       s"expected exactly one exchange, got $shuffles:\n${deduped.queryExecution.executedPlan}")
     // and the dedup semantics are plain distinct

@@ -128,4 +128,25 @@ class DvReadSpec extends AnyFunSuite {
     assert(read(handled).size.toLong ==
       f.parsedStats.flatMap(_.numRecords).get - dv.cardinality)
   }
+
+  test("a DV-filtering reader ships no Hadoop conf in its closure") {
+    val snap = DeltaLog.forPath(spark, Fixtures.delta(spark, sfDir, "lineitem", Fixtures.Dv))
+      .update()
+    val rel = snap.relation(ScanOptions(), RowSelection.Live, Nil)
+    assert(rel.fileFormat.asInstanceOf[GraftParquetFileFormat].dropsDeletedRows)
+    val conf = spark.sessionState.newHadoopConf()
+    val read = rel.fileFormat.buildReaderWithPartitionValues(spark, rel.dataSchema,
+      rel.partitionSchema, rel.dataSchema, Nil,
+      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), conf)
+    def javaBytes(o: AnyRef): Int = {
+      val bytes = new java.io.ByteArrayOutputStream
+      val out = new java.io.ObjectOutputStream(bytes)
+      try out.writeObject(o) finally out.close()
+      bytes.size
+    }
+    // every task deserializes the reader; the conf is broadcast once
+    val readerBytes = javaBytes(read)
+    val confBytes = javaBytes(new org.apache.spark.util.SerializableConfiguration(conf))
+    assert(readerBytes < confBytes, s"reader $readerBytes B, session conf $confBytes B")
+  }
 }

@@ -65,11 +65,15 @@ class SnapshotResolveSpec extends AnyFunSuite {
   }
 
   /** All table state a snapshot carries, keyed so the two paths compare
-    * regardless of file-list order. */
-  private def state(s: Snapshot) = (
+    * regardless of file-list order. `asCheckpointed` sets every file
+    * action's `dataChange` false, as a checkpoint writes it: the flag is
+    * the carrying commit's, so a replay of JSON commits and a read of a
+    * checkpoint written over them differ in it alone. */
+  private def state(s: Snapshot, asCheckpointed: Boolean = false) = (
     s.version,
-    s.allFiles.map(f => f.path -> f).toMap,
-    Checkpoints.liveTombstones(s).map(r => r.path -> r).toMap,
+    s.allFiles.map(f => f.path -> f.copy(dataChange = f.dataChange && !asCheckpointed)).toMap,
+    Checkpoints.liveTombstones(s)
+      .map(r => r.path -> r.copy(dataChange = r.dataChange && !asCheckpointed)).toMap,
     s.setTransactions,
     s.domainMetadata.map(d => d.domain -> d).toMap,
     s.protocol,
@@ -91,14 +95,15 @@ class SnapshotResolveSpec extends AnyFunSuite {
 
   /** The two paths agree on every fact and on all state; the lazy one
     * folds its facts without materializing its file list. */
-  private def assertAgree(eager: Snapshot, lzy: Snapshot, clue: String): Unit = {
+  private def assertAgree(eager: Snapshot, lzy: Snapshot, clue: String,
+      asCheckpointed: Boolean = false): Unit = {
     val lazyFacts = facts(lzy)
     lzy match {
       case l: LazySnapshot => assert(!l.materializedFull, s"$clue: a fact materialized the list")
       case _ =>
     }
     assert(lazyFacts == facts(eager), clue)
-    assert(state(lzy) == state(eager), clue)
+    assert(state(lzy, asCheckpointed) == state(eager, asCheckpointed), clue)
   }
 
   test("eager and checkpoint-backed snapshots agree at every version") {
@@ -173,6 +178,99 @@ class SnapshotResolveSpec extends AnyFunSuite {
     assertAgree(eager, lzy, "log tail")
     assert(eager.version == 9)
     assert(lzy.toDF.count() == eager.toDF.count())
+  }
+
+  /** `_last_checkpoint`'s (version, recorded action count). */
+  private def pointer(path: String): (Long, Long) = {
+    val (v, size) = DeltaLog.forPath(spark, path).lastCheckpointInfo().get
+    (v, size.get)
+  }
+
+  /** Rows in the checkpoint files at `v` of the log: the classic parts, or
+    * a V2 manifest (its sidecars live elsewhere). */
+  private def checkpointRows(path: String, v: Long): Long = {
+    val files = new java.io.File(path, "_delta_log").listFiles().map(_.getName)
+      .filter(n => n.startsWith(f"$v%020d.checkpoint.") && n.endsWith(".parquet"))
+      .map(n => s"$path/_delta_log/$n")
+    assert(files.nonEmpty, s"no checkpoint at v$v")
+    spark.read.parquet(files.toIndexedSeq: _*).count()
+  }
+
+  test("a checkpoint-backed snapshot writes single-part, multi-part and V2 " +
+       "checkpoints without collecting its file list") {
+    val path = tmpTable()
+    val table = DeltaTable.forPath(spark, path)
+    DeltaWriter.append(spark, rows(0, 20), path, partitionBy = Seq("p"))    // v0
+    table.delete(col("id") % 5 === 0)                                        // v1: DVs
+    DeltaWriter.append(spark, rows(20, 40), path,
+      txnAppId = Some("app"), txnVersion = Some(1L))                         // v2
+    Checkpoints.checkpoint(DeltaLog.forPath(spark, path))                    // cp@v2
+    /** After `commit`, checkpoints the lazy tip (the last checkpoint plus
+      * a JSON tail), then resolves the new checkpoint cold on both paths. */
+    def lazyCheckpoint(form: String, maxActionsPerPart: Int, v2: Boolean = false)(
+        commit: => Unit): Unit = {
+      commit
+      // the state to reproduce, replayed before the new checkpoint exists
+      val want = withLazyThreshold(Long.MaxValue)(DeltaLog.forPath(spark, path).update())
+      withLazyThreshold(1L) {
+        val log = DeltaLog.forPath(spark, path)
+        val tip = log.update()
+        assert(tip.isInstanceOf[LazySnapshot], form)
+        Checkpoints.checkpoint(log, maxActionsPerPart)
+        assert(!tip.asInstanceOf[LazySnapshot].materializedFull,
+          s"$form: the checkpoint write collected the file list")
+      }
+      assert(pointer(path) == ((want.version, checkpointRows(path, want.version))), form)
+      for ((name, minActions) <- snapshotPaths) {
+        val cold = withLazyThreshold(minActions)(DeltaLog.forPath(spark, path).update())
+        assert(cold.isInstanceOf[LazySnapshot] == (name == "lazy" && !v2), s"$form, $name")
+        assertAgree(want, cold, s"$form, $name", asCheckpointed = true)
+      }
+    }
+    lazyCheckpoint("single-part", 500000) {
+      table.delete(col("p") === 1 && col("id") >= 20)                       // v3: a tombstone
+    }
+    lazyCheckpoint("multi-part", 2) { table.setDomainMetadata("d1", "{}") }  // v4
+    assert(new java.io.File(path, "_delta_log").list()
+      .count(_.matches(raw"0+4\.checkpoint\.\d+\.\d+\.parquet")) > 1)
+    lazyCheckpoint("V2", 2, v2 = true) {                                     // v5
+      Alter.setProperties(spark, DeltaLog.forPath(spark, path),
+        Map("delta.checkpointPolicy" -> "v2"))
+    }
+    assert(DeltaLog.forPath(spark, path).listUuidManifests().map(_._1) == Seq(5L))
+  }
+
+  test("a re-checkpoint at the lazy tip's own version leaves the tip readable") {
+    val path = tmpTable()
+    DeltaWriter.append(spark, rows(0, 10), path)
+    DeltaWriter.append(spark, rows(10, 20), path)
+    Checkpoints.checkpoint(DeltaLog.forPath(spark, path))                   // single part at v1
+    withLazyThreshold(1L) {
+      val log = DeltaLog.forPath(spark, path)
+      assert(log.update().isInstanceOf[LazySnapshot])
+      Checkpoints.checkpoint(log, maxActionsPerPart = 2)                     // parts replace it
+      assert(!new java.io.File(path, f"_delta_log/${1L}%020d.checkpoint.parquet").exists())
+      assert(pointer(path) == ((1L, checkpointRows(path, 1L))))
+      assert(log.update().toDF.where(col("id") >= 15).count() == 5)
+      assert(log.update().toDF.count() == 20)
+    }
+  }
+
+  test("the writer's next resolve folds its own commit onto the cached tip: no Spark job") {
+    val path = tmpTable()
+    DeltaWriter.append(spark, rows(0, 10), path)
+    DeltaWriter.append(spark, rows(10, 20), path)
+    val log = DeltaLog.forPath(spark, path)
+    Checkpoints.checkpoint(log)                                             // cp@v1
+    DeltaWriter.append(spark, rows(20, 30), path)                           // v2
+    var snap: Snapshot = null
+    val jobs = SparkJobs.during { snap = log.update() }
+    assert(jobs.isEmpty, jobs.mkString("\n"))
+    assert(snap.version == 2)
+    // exactly the listed log
+    DeltaLog.clearCache()
+    assert(state(snap, asCheckpointed = true) ==
+      state(DeltaLog.forPath(spark, path).update(), asCheckpointed = true))
   }
 
   test("a log tail extends a log whose commits the checkpoint covers are gone") {

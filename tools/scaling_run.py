@@ -19,11 +19,11 @@ QUERIES = ["q1_agg", "delta_scan_agg", "q3_join", "q5_multi_join",
            "text_token_stats", "emb_centroids", "delta_dv_delete"]
 
 def run_one(dir_, cpus):
+    """Returns (per-query seconds, None) or ({}, reason) for a failed run:
+    a non-zero exit, a timeout, or no timed rows."""
     env = dict(os.environ, SPARK_GRAFT_CPUS=str(cpus))
     cmd = ["sbt", "-batch",
            "runMain graft.Bench --one %s %s" % (dir_, " ".join(QUERIES))]
-    """Returns (per-query seconds, None) or ({}, reason) for a failed run:
-    a non-zero exit, a timeout, or no timed rows."""
     t0 = time.time()
     try:
         p = subprocess.run(cmd, env=env, capture_output=True, text=True,

@@ -1,39 +1,56 @@
 package graft
 
 import java.lang.management.ManagementFactory
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
 
+import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.JsonNodeFactory
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
+
+import graft.delta.{ActionJson, DeltaLog, DeltaTable}
 
 /**
- * Benchmark main (driver contract): runs the headline queries on
- * SPARK_GRAFT_SF_DIR, prints ONE JSON line
- * {"metric":...,"value":N,"unit":"sec","queries":{...},"sf":...}.
+ * Benchmark main. Every pass runs one protocol,
+ * [[measure]]: a fixed number of interleaved (reference, Spark) rounds per
+ * row, reported as the median, min and IQR of the Spark seconds and of
+ * the per-round ratios, with failed rounds excluded and counted.
  *
- * Fixture construction (delta copies of the parquet tables) happens
- * before timing — the measured time is query execution, matching how the
- * reference benchmarks delta_scan queries over pre-built tables
- * (benchmark/tpch/sf1/local/delta).
+ *  - headline: the headline queries on SPARK_GRAFT_SF_DIR, Spark only.
+ *  - x30 (SPARK_GRAFT_SCALE, default 30; 0 or 1 skips it and the samples):
+ *    the rows of `graft/x30-rows.txt` over synthetic N× data. Each Spark
+ *    round follows the same query's DuckDB run over the same data
+ *    (tools/duckdb_paired.py, at Spark's core count), so both ends of a
+ *    ratio come from one host window.
+ *  - x100_sample / x300_sample: the same pairing over 100× and 300× dirs in
+ *    which only the named fact tables replicate.
+ *  - snapshot90: the 90-commit log-replay micro, Spark only.
  *
- * Self-diagnosing (VERDICT r3): a full bench runs ~35 distinct
- * whole-stage-codegen'd plans in one JVM; if the JIT code cache fills, the
- * compiler disables itself and everything after runs interpreted at
- * 30-300×. We sample the CodeHeap memory pools per query and emit a
- * `jvm_health` block, plus a `suspect` list (timed >3× its own warm pass)
- * so a degraded run is flagged by the harness, not by a judge.
+ * Fixtures are built before timing, and each row runs once on each side,
+ * untimed, before its rounds. Stdout is three JSON lines: `total`,
+ * `headline`, then the small `headline_core` last, so a bounded tail
+ * capture keeps it whole. The same lines land in bench-rounds/latest.json
+ * and the last one in bench-headline.json, under SPARK_GRAFT_BENCH_OUT
+ * (default: the working directory).
  *
- * Noise-immune comparison (VERDICT r4): this host's throughput swings
- * 30-40× over minutes, so a Spark timing and a DuckDB baseline measured in
- * different windows produce a meaningless ratio. The scale pass spawns a
- * persistent DuckDB side-runner (tools/duckdb_paired.py) over the SAME
- * data and asks it for each query's timing immediately before the Spark
- * run — each ratio is computed inside one noise window and emitted as
- * `x<N>_paired` (N = SPARK_GRAFT_SCALE, default 30).
+ * Other modes:
+ *  - `--one <dir> <query>…` prints `[one] <query> <median sec> …` per query.
+ *  - `--ab <conf.key>:<a>,<b> <dir> <query>…` runs the rounds with the two
+ *    values of one session conf as the two sides, alternating which side
+ *    runs first, and prints each side's median and IQR and the wins.
  */
 object Bench {
+  /** Rounds per row in every pass: fixed in advance, never widened by what
+    * the rounds read. */
+  val Rounds = 5
+
   /** Headline set: delta scan + heavy relational + pipeline operators. */
-  private val headline = Seq(
+  private val headlineRows = Seq(
     "q1_agg", "delta_scan_agg", "delta_dv_scan", "delta_partition_prune",
     "q3_join", "q5_multi_join", "q_window_rank", "q_events_hourly",
     "q_sessionize", "q_correlated_subquery", "dedup_exact", "dedup_jaccard_pairs",
@@ -42,186 +59,151 @@ object Bench {
     "q_variant_json", "q9_profit_by_nation", "q18_large_orders",
     "q6_selective_filter", "delta_dv_delete")
 
-  /** Scan/join/agg-heavy subset for the synthetic N× scale pass (dedup
-    * pair queries excluded: replicated docs are near-dups BY CONSTRUCTION,
-    * so pair output explodes artificially). `delta_dv_delete` is the DML
-    * row: restore + DV DELETE + survivor aggregate per invocation, paired
-    * with a MATERIALIZED anti-join on the DuckDB side. */
-  private val scaleHeadline = Seq(
-    "q1_agg", "delta_scan_agg", "q3_join", "q5_multi_join",
-    "q9_profit_by_nation", "q18_large_orders", "q6_selective_filter",
-    "q_window_rank", "q_events_hourly", "q_sessionize", "dedup_exact",
-    "text_token_stats", "emb_centroids", "delta_dv_delete")
+  /** The x30 paired rows, read from the resource the tools read too. The
+    * dedup pair queries are not among them: replicated docs are near-dups
+    * by construction, so pair output explodes artificially.
+    * `delta_dv_delete` is the DML row (restore + DV DELETE + survivor
+    * aggregate), paired with a materialized anti-join on the DuckDB side. */
+  private val scaleRows: Seq[String] = {
+    val src = scala.io.Source.fromResource("graft/x30-rows.txt")
+    try src.getLines().map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#")).toList
+    finally src.close()
+  }
 
-  private def loadavg1m(): Double =
-    try scala.io.Source.fromFile("/proc/loadavg").mkString.split(" ")(0).toDouble
-    catch { case _: Exception => -1.0 }
+  /** A sampled scale point: `rows` over a `factor`× dir in which only
+    * `tables` replicate (every other table stays at base size). */
+  private final case class Sample(factor: Int, rows: Seq[String], tables: Set[String])
+  private val x100 = Sample(100, Seq("dedup_exact", "emb_centroids", "q_events_hourly",
+    "q1_agg", "q18_large_orders", "q_sessionize", "q3_join", "delta_scan_agg"),
+    Set("documents", "embeddings", "events", "lineitem", "orders", "customer"))
+  private val x300 = Sample(300, Seq("q1_agg", "q_sessionize"), Set("lineitem", "events"))
 
-  /** Fixed CPU+shuffle probe (~1s on a healthy box): timed at bench start
-    * and end so the artifact itself records whether the environment was
-    * sane — this box's effective throughput has been observed to swing
-    * 30-40× over tens of minutes with zero local load (host-level noise
-    * invisible to loadavg/steal). */
-  private def calibrate(spark: SparkSession): Double = {
-    import org.apache.spark.sql.functions.{expr, xxhash64, col}
+  /** Spark's core count: SPARK_GRAFT_CPUS, else every available core. The
+    * paired DuckDB side runs at the same count. */
+  private val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  // ---------------------------------------------------------------------
+  // The protocol
+
+  /** One round of one row: the reference side's seconds (DuckDB's in the
+    * paired passes, side A's in an A/B; None when it has no timing) and
+    * Spark's (None when the run threw). */
+  final case class Round(ref: Option[Double], spark: Option[Double])
+
+  final case class Stats(median: Double, min: Double, iqr: Double)
+
+  object Stats {
+    /** Quartiles interpolate linearly between ranks, so the median of an
+      * even count is the mean of the middle two. */
+    def of(xs: Seq[Double]): Option[Stats] =
+      if (xs.isEmpty) None
+      else {
+        val s = xs.sorted.toIndexedSeq
+        def q(p: Double): Double = {
+          val pos = p * (s.size - 1)
+          val lo = pos.toInt
+          s(lo) + (s(math.min(lo + 1, s.size - 1)) - s(lo)) * (pos - lo)
+        }
+        Some(Stats(q(0.5), s.head, q(0.75) - q(0.25)))
+      }
+  }
+
+  /** A row's statistics over its successful rounds only: a failed Spark
+    * round's time-to-failure must not read as a fast run. */
+  final case class RowResult(spark: Option[Stats], ref: Option[Stats],
+      ratio: Option[Stats], failedRounds: Int, rounds: Seq[Round]) {
+    def failed: Boolean = spark.isEmpty
+  }
+
+  object RowResult {
+    def of(rounds: Seq[Round]): RowResult = {
+      val ok = rounds.filter(_.spark.isDefined)
+      RowResult(Stats.of(ok.flatMap(_.spark)), Stats.of(ok.flatMap(_.ref)),
+        Stats.of(ok.collect { case Round(Some(d), Some(t)) if d > 0 => t / d }),
+        rounds.size - ok.size, rounds)
+    }
+  }
+
+  /** A pass's rows in run order, and the totals the output reports. */
+  final case class Pass(rows: ListMap[String, RowResult]) {
+    /** Each row's Spark median; rows without a successful round are left
+      * out (they are `failed`). */
+    def medians: ListMap[String, Double] =
+      rows.collect { case (n, RowResult(Some(t), _, _, _, _)) => n -> t.median }
+    def failed: Seq[String] = rows.collect { case (n, r) if r.failed => n }.toSeq
+    def total: Double = medians.values.sum
+
+    /** Paired rows whose DuckDB median disagrees with the idle baseline
+      * (bench-baselines/xN_duckdb.json) by more than 3×: a burst that slows
+      * only the side-runner would flatter the ratio. */
+    def suspect(idle: Map[String, Double]): Seq[String] = rows.collect {
+      case (n, RowResult(Some(_), Some(d), _, _, _)) if idle.get(n).exists(b =>
+        d.median / math.max(b, 1e-9) > 3.0 || b / math.max(d.median, 1e-9) > 3.0) => n
+    }.toSeq
+
+    /** Spark over DuckDB, median sums over the paired rows not suspect. */
+    def pairedRatio(idle: Map[String, Double]): Option[Double] = {
+      val sus = suspect(idle).toSet
+      val paired = rows.toSeq.collect {
+        case (n, RowResult(Some(t), Some(d), _, _, _)) if !sus(n) => (t.median, d.median)
+      }
+      if (paired.isEmpty) None
+      else Some(paired.map(_._1).sum / math.max(paired.map(_._2).sum, 1e-9))
+    }
+
+    /** Spark's medians over the idle baseline, on the rows both cover. */
+    def vsIdleRatio(idle: Map[String, Double]): Option[Double] = {
+      val covered = medians.toSeq.filter { case (n, _) => idle.contains(n) }
+      if (covered.isEmpty) None
+      else Some(covered.map(_._2).sum / math.max(covered.map(c => idle(c._1)).sum, 1e-9))
+    }
+  }
+
+  /** The one bench protocol. Per row: one untimed run of each side, then
+    * [[Rounds]] rounds of (ref, spark); with `alternate`, every second round
+    * runs Spark first. [[Rounds]] is the only loop bound: nothing a round
+    * reads decides how many rounds run. A side that throws is a missing
+    * timing. */
+  def measure(rows: Seq[String], ref: String => Option[Double],
+      spark: String => Double, alternate: Boolean = false): Pass =
+    Pass(rows.map { name =>
+      def side[A](what: String)(run: => Option[A]): Option[A] =
+        try run catch { case NonFatal(e) =>
+          System.err.println(s"[bench] $name ($what) failed: ${e.getMessage}")
+          None
+        }
+      def refSide() = side("reference")(ref(name))
+      def sparkSide() = side("spark")(Some(spark(name)))
+      refSide(); sparkSide()
+      name -> RowResult.of((0 until Rounds).map { i =>
+        if (alternate && i % 2 == 1) { val t = sparkSide(); Round(refSide(), t) }
+        else { val d = refSide(); Round(d, sparkSide()) }
+      })
+    }.to(ListMap))
+
+  private def seconds(body: => Unit): Double = {
     val t0 = System.nanoTime()
-    spark.range(0, 50000000L, 1, 32)
-      .select((col("id") % 1024).as("k"), xxhash64(col("id")).as("h"))
-      .groupBy("k").agg(expr("bit_xor(h)")) // xor: overflow-free under ANSI
-      .write.format("noop").mode("overwrite").save()
+    body
     (System.nanoTime() - t0) / 1e9
   }
 
-  /** (usedBytes, maxBytes) summed over the segmented CodeHeap pools. */
-  private def codeCache(): (Long, Long) = {
-    val pools = ManagementFactory.getMemoryPoolMXBeans.asScala
-      .filter(p => p.getName.startsWith("CodeHeap") || p.getName == "Code Cache")
-    val used = pools.map(_.getUsage.getUsed).sum
-    val max = pools.map(p => math.max(p.getUsage.getMax, 0L)).sum
-    (used, max)
-  }
-
-  /** Degraded-window waits observed across the whole run — surfaced in
-    * the output JSON so a turbulent run is visible in the artifact itself
-    * (end-of-run calibration probes can look healthy even when the middle
-    * of the run sat in a noise storm). */
-  private val degradedWaits = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** Calibration-probe SERIES: (where-in-the-run, probe seconds), sampled
-    * between query groups and every few big-scale rows. The r8/r9 verdicts
-    * could not tell a degraded host window from a regression because the
-    * artifact carried only start/end/at-scale probes — the series makes
-    * each row's surrounding window part of the evidence. */
-  private val calibSeries =
-    scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-  /** Bandwidth twin of [[calibSeries]], sampled at the same labels — the
-    * artifact carries BOTH dimensions of host state per waypoint. */
-  private val bwSeries =
-    scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-  private def probeCalib(spark: SparkSession, at: String): Double = {
-    val c = calibrate(spark)
-    calibSeries += ((at, c))
-    bwSeries += ((at, memBwQuickGiBs()))
-    c
-  }
-  private def calibSeriesJson: String = {
-    val cal =
-      if (calibSeries.isEmpty) ""
-      else calibSeries.map { case (at, c) => f"""{"at":"$at","sec":$c%.3f}""" }
-        .mkString(""","calib_series":[""", ",", "]")
-    val bw =
-      if (bwSeries.isEmpty) ""
-      else bwSeries.map { case (at, v) => f"""{"at":"$at","gibs":$v%.2f}""" }
-        .mkString(""","mem_bw_series":[""", ",", "]")
-    cal + bw
-  }
-
-  /** Before re-measuring suspects, wait (bounded) until the calibration
-    * probe reports a sane window — retrying inside the same host-noise
-    * window that produced the outlier recovers nothing. Healthy probe is
-    * ~0.6s on this box; 1.5s is well outside normal jitter. */
-  private def waitForHealthyWindow(spark: SparkSession): Unit = {
-    var tries = 0
-    while (calibrate(spark) > 1.5 && tries < 20) {
-      System.err.println("[bench] degraded window (calibration probe slow) — waiting 15s")
-      degradedWaits.incrementAndGet()
-      Thread.sleep(15000); tries += 1
-    }
-  }
-
-  /** Healthy calibration on this host when it's quiet (fixed 50M-row
-    * CPU-bound job): ~0.33s. The host's Spark throughput oscillates on
-    * ~10-minute scales (r8: calib drifted 0.33→0.50 while DuckDB times
-    * held EXACTLY at baseline — a JVM-side-only degradation that would
-    * read as a 2× code regression). Before the scale pass, wait — bounded
-    * — for a window near reference, and always RECORD the at-scale calib
-    * so a still-degraded run is diagnosable instead of misleading. */
-  private val ReferenceCalibSec = 0.33
-
-  /** Single-thread memory bandwidth (GiB/s), min-of-3 256 MiB copies.
-    * The r8 diagnosis lever: the host's bandwidth oscillates (observed
-    * 1.3 GiB/s in windows where a healthy x86 does 5-15) — cache-resident
-    * CPU probes and DuckDB barely notice, while Spark's shuffle/scan rows
-    * degrade 2-3×. Recording it makes a degraded-window artifact
-    * self-explaining. */
-  private def memBandwidthGiBs(): Double = {
-    val n = 256 * 1024 * 1024
-    val a = new Array[Byte](n)
-    val b = new Array[Byte](n)
-    java.util.Arrays.fill(a, 1.toByte)
-    (1 to 3).map { _ =>
-      val t0 = System.nanoTime()
-      System.arraycopy(a, 0, b, 0, n)
-      val dt = (System.nanoTime() - t0) / 1e9
-      (n.toDouble / dt) / (1024 * 1024 * 1024)
-    }.max
-  }
-
-  /** Quick DRAM-copy probe (~0.1s healthy): MEDIAN of 3 reps of a 64 MiB
-    * copy. Measured on this host (2026-08, 12 samples 4s apart): 0.19,
-    * 6.9, 0.7, 0.2, 0.4, 0.4, 0.7, 1.3, then 7.2–7.3 steady — bandwidth
-    * flips between ~7 GiB/s and sub-1 GiB/s on a SECONDS scale while the
-    * cache-resident CPU probe reads near-reference throughout. Spark's
-    * memory-bound phases (shuffle, row buffers, parquet decode) are what
-    * degrade, so in-window evidence must gate on BANDWIDTH too, and must
-    * bracket the measurement on both sides — a pre-wait alone vouches for
-    * an instant, not for the seconds the row actually runs in.
-    *
-    * Floor calibration: the JVM's own arraycopy probe ceilings at ~4.2
-    * GiB/s on this host even when a simultaneous numpy copy reads 7.3
-    * (measured side-by-side) — page-touch/THP differences, not host
-    * state. Healthy JVM probes read 3.6–4.75; degraded windows read
-    * 0.2–3. The floor sits between the two bands; 4.5 (the first guess,
-    * from the numpy numbers) sat ON the healthy ceiling and spun the
-    * window wait while the host was fine. */
-  private val MemBwFloorGiBs = 3.5
-  // the probe buffers are allocated ONCE: this probe fires dozens of times
-  // per run, and per-call 64 MiB (humongous-region) allocations would
-  // themselves feed the concurrent G1 work the probe exists to detect
-  private lazy val bwProbeSrc = {
-    val a = new Array[Byte](64 * 1024 * 1024)
-    java.util.Arrays.fill(a, 1.toByte)
-    a
-  }
-  private lazy val bwProbeDst = new Array[Byte](64 * 1024 * 1024)
-  private def memBwQuickGiBs(): Double = {
-    val n = bwProbeSrc.length
-    val xs = (1 to 3).map { _ =>
-      val t0 = System.nanoTime()
-      System.arraycopy(bwProbeSrc, 0, bwProbeDst, 0, n)
-      (n.toDouble / ((System.nanoTime() - t0) / 1e9)) / (1024 * 1024 * 1024)
-    }.sorted
-    xs(1)
-  }
-  private def waitForNearReferenceWindow(spark: SparkSession): Double = {
-    var tries = 0
-    var c = calibrate(spark)
-    var bw = memBwQuickGiBs()
-    while ((c > ReferenceCalibSec * 1.25 || bw < MemBwFloorGiBs) && tries < 20) {
-      System.err.println(
-        f"[bench] calib $c%.3fs (ref $ReferenceCalibSec%.2fs) / " +
-          f"bw $bw%.1f GiB/s (floor $MemBwFloorGiBs%.1f) — waiting 15s")
-      degradedWaits.incrementAndGet()
-      Thread.sleep(15000); tries += 1
-      c = calibrate(spark)
-      bw = memBwQuickGiBs()
-    }
-    c
-  }
+  /** The Spark side: one noop-sink execution of query `name` over `dir`. */
+  private def query(spark: SparkSession, dir: String)(name: String): Double =
+    seconds(SparkEntry.queries(name)(spark, dir).write.format("noop").mode("overwrite").save())
 
   // ---------------------------------------------------------------------
-  // Paired DuckDB side-runner (dev oracle over the same data, spawned as a
-  // subprocess; absence — no python/duckdb on the host — degrades to an
-  // unpaired bench, never an error).
+  // Paired DuckDB side-runner (the dev oracle over the same data, spawned
+  // as a subprocess; without python or duckdb the rounds run unpaired).
 
-  private final class DuckRunner(dataDir: String, sqlPath: String) {
+  private final class DuckRunner(dataDir: String, sqlPath: String, threads: Int) {
     private var proc: Process = _
     private var toDuck: java.io.PrintWriter = _
     private var fromDuck: java.io.BufferedReader = _
     val available: Boolean =
       try {
         val pb = new ProcessBuilder(
-          "python3", "tools/duckdb_paired.py", dataDir, sqlPath)
+          "python3", "tools/duckdb_paired.py", dataDir, sqlPath, threads.toString)
         pb.redirectError(ProcessBuilder.Redirect.INHERIT)
         proc = pb.start()
         toDuck = new java.io.PrintWriter(proc.getOutputStream, true)
@@ -237,8 +219,8 @@ object Bench {
       if (fromDuck.ready()) Option(fromDuck.readLine()) else None
     }
 
-    /** Timed seconds for `name`'s oracle SQL, run NOW (warm+timed inside
-      * the runner; the timed number is returned). */
+    /** Timed seconds for `name`'s oracle SQL, run now (the runner warms
+      * and then times it; the timed number is returned). */
     def time(name: String): Option[Double] =
       if (!available || !proc.isAlive) None
       else try {
@@ -255,89 +237,56 @@ object Bench {
       catch { case _: Exception => () }
   }
 
-  // ---------------------------------------------------------------------
+  /** The oracle SQL map (the one Verify dumps), for the side-runner. */
+  private lazy val oracleSqlFile: String = {
+    val path = Files.createTempFile("graft-oracle", ".json")
+    path.toFile.deleteOnExit()
+    val node = ActionJson.mapper.createObjectNode()
+    SparkEntry.oracleSql.foreach { case (k, v) => node.put(k, v) }
+    Files.writeString(path, ActionJson.mapper.writeValueAsString(node))
+    path.toString
+  }
 
-  /** One noop-sink execution of `name`; returns (seconds, succeeded). */
-  private def runOne(spark: SparkSession, name: String, dir: String,
-      tag: String, ccFrac: Double): (Double, Boolean, Double) = {
-    val t0 = System.nanoTime()
-    var ok = true
-    try SparkEntry.queries(name)(spark, dir).write.format("noop").mode("overwrite").save()
-    catch { case e: Throwable =>
-      ok = false
-      System.err.println(s"[bench] $tag$name failed: ${e.getMessage}")
+  /** The rows over `dir`, each Spark round paired with DuckDB's. */
+  private def pairedPass(spark: SparkSession, dir: String, rows: Seq[String]): Pass = {
+    RelationalQueries.ensureViews(spark, dir)
+    val duck = new DuckRunner(dir, oracleSqlFile, cpus)
+    if (!duck.available)
+      System.err.println(s"[bench] duckdb side-runner unavailable over $dir: rounds unpaired")
+    try measure(rows.filter(SparkEntry.queries.contains), duck.time, query(spark, dir))
+    finally duck.close()
+  }
+
+  /** The 90-commit snapshot-replay micro, the overhead the reference itself
+    * micro-benchmarks (benchmark/micro/snapshot_performance over
+    * tpch_sf1_90commits/lineitem), over the checkpoint-free 90-JSON
+    * lineitem log: `no_pin` pays a full log replay inside each timing,
+    * `pin` resolves the snapshot once and reuses it, and the `_filter`
+    * forms add the reference's IS NOT NULL predicate. */
+  private def snapshot90(spark: SparkSession, sfDir: String): Pass = {
+    val p = Fixtures.delta(spark, sfDir, "lineitem", Fixtures.Many90)
+    val log = DeltaLog.forPath(spark, p)
+    val pinned = DeltaTable.forPath(spark, p).pin()
+    def count(name: String): Double = seconds {
+      val df =
+        if (name.startsWith("pin")) pinned.toDF
+        else { log.invalidateCache(); DeltaTable.forPath(spark, p).toDF }
+      val rows =
+        if (name.endsWith("_filter")) df.filter(col("l_orderkey").isNotNull).count()
+        else df.count()
+      require(rows > 0, "snapshot90 count must be positive")
     }
-    val (u, m) = codeCache()
-    val cc = if (m > 0) math.max(ccFrac, u.toDouble / m) else ccFrac
-    ((System.nanoTime() - t0) / 1e9, ok, cc)
+    measure(Seq("no_pin", "no_pin_filter", "pin", "pin_filter"), _ => None, count)
   }
 
-  /** Retry a suspect once; the retry's time only REPLACES (via min) the
-    * original when the retry actually completed — a fast crash must not
-    * masquerade as a fast query (ADVICE r4). */
-  private def retryMin(spark: SparkSession, name: String, dir: String,
-      t: Double): (Double, Boolean) = {
-    val t1 = System.nanoTime()
-    try {
-      SparkEntry.queries(name)(spark, dir).write.format("noop").mode("overwrite").save()
-      (math.min(t, (System.nanoTime() - t1) / 1e9), true)
-    } catch { case _: Throwable => (t, false) }
-  }
+  // ---------------------------------------------------------------------
+  // Session and host facts
 
-  /** Per-query timings from a pre-measured idle DuckDB baseline blob
-    * (written by tools/x10_baseline.py). Empty when absent/unparseable. */
-  private def idleBaseline(scaleFactor: Int): Map[String, Double] = {
-    val f = new java.io.File(s"bench-baselines/x${scaleFactor}_duckdb.json")
-    if (!f.exists()) Map.empty
-    else try {
-      val root = graft.delta.ActionJson.mapper.readTree(
-        new String(java.nio.file.Files.readAllBytes(f.toPath),
-          java.nio.charset.StandardCharsets.UTF_8))
-      val q = root.get("queries")
-      if (q == null) Map.empty
-      else {
-        val it = q.fields()
-        val b = Map.newBuilder[String, Double]
-        while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue.asDouble() }
-        b.result()
-      }
-    } catch { case _: Exception => Map.empty }
-  }
-
-  /** Per-row self-evidence from the scale pass. A re-measure only counts
-    * as in-window when the BANDWIDTH probe was healthy on BOTH sides of
-    * the row (`windowHeld`) — this host's DRAM throughput flips on a
-    * seconds scale, so an unbracketed "clean window" claim vouches for an
-    * instant, not for the seconds the row ran in. `persistent=true`
-    * (still over threshold inside a HELD bracket) is plan debt by
-    * construction; `windowHeld=false` after all attempts means the host
-    * never offered a provable window — reported as `window_lost`, neither
-    * plan debt nor proof of noise. */
-  private case class RowEv(windowCalib: Double, persistent: Boolean,
-      windowHeld: Boolean, bwPre: Double, bwPost: Double, attempts: Int,
-      freshSec: Option[Double] = None)
-  @volatile private var rowEvidence: Map[String, RowEv] = Map.empty
-  private def evidenceJson: String =
-    if (rowEvidence.isEmpty) ""
-    else rowEvidence.toSeq.sortBy(_._1).map { case (n, e) =>
-      val lost = if (e.windowHeld) "" else ""","window_lost":true"""
-      val fresh = e.freshSec.map(f => f""","fresh_jvm_sec":$f%.3f""").getOrElse("")
-      f""""$n":{"window_calib":${e.windowCalib}%.3f,"bw_pre":${e.bwPre}%.2f,"bw_post":${e.bwPost}%.2f,"attempts":${e.attempts}%d$fresh,"persistent":${e.persistent}$lost}"""
-    }.mkString(""","row_evidence":{""", ",", "}")
-
-  private def jsonTimings(ts: Seq[(String, Double)]): String =
-    ts.map { case (k, v) => "\"" + k + f"\":$v%.3f" }.mkString("{", ",", "}")
-
-  private def jsonArr(ss: Seq[String]): String =
-    ss.map("\"" + _ + "\"").mkString("[", ",", "]")
-
-  /** The bench's session, identically configured for the main run and the
-    * fresh-JVM `--one` re-measure forks (a config drift between the two
-    * would invalidate the comparison). */
-  private def buildSession(cpus: String): SparkSession =
-    SparkSession.builder()
+  /** The one session factory of the bench and the dev mains. */
+  def buildSession(): SparkSession = {
+    val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.adaptive.enabled", "true")
       // dims and dim-scale intermediates (a pruned 300k-row customer, the
       // customer⋈orders key set) broadcast instead of shuffling the fact
@@ -356,7 +305,7 @@ object Bench {
       // IO: the default 64 MB coalesced the x10 lineitem⋈orders SMJ input
       // (119 MB) onto 2 of 32 cores. 1 MB keeps ~all cores busy once a
       // shuffle carries real volume while still collapsing the few-KB
-      // ones; interleaved A/B (BenchOne GRAFT_AB_CONF, 4MB vs 1MB at x10):
+      // ones; interleaved A/B (4MB vs 1MB at x10, 32 cores):
       // q18 1.01→0.84s, q3 1.15→0.55s, q9 0.65→0.54s, q1/q_window/events
       // unchanged, q5 0.66→0.72s (the one small regression). Cluster
       // equivalent: advisory ≈ stage input / total cores.
@@ -373,809 +322,213 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .withExtensions(new GraftExtensions)
       .getOrCreate()
-
-  /** Fresh-JVM re-measure server (`--one <dir> <query>…`): same session
-    * config, warm + 2 hot per query, prints `[one] <name> <minSec>` on
-    * stdout. The evidence pass forks this because an AGED bench JVM
-    * measures rows far over what a fresh JVM reads on the same host in
-    * the same minute (measured: x100 q_sessionize 12.2s aged vs 3.6s
-    * fresh; x30 q1_agg 1.07 vs 0.68) — code-cache/JIT/GC history, not
-    * host state. Fresh-JVM numbers are the apples-to-apples comparator
-    * against the idle DuckDB baseline, which is itself a per-query
-    * best-case min. */
-  private def oneMode(dir: String, qs: Seq[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = buildSession(cpus)
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  private def loadavg1m(): Double =
+    try scala.io.Source.fromFile("/proc/loadavg").mkString.split(" ")(0).toDouble
+    catch { case _: Exception => -1.0 }
+
+  private final case class JvmHealth(codeCacheUsedMb: Long, codeCacheMaxMb: Long,
+      codeCachePeakFrac: Double, jitCompileMs: Long)
+
+  /** The code cache over the segmented CodeHeap pools: when it fills, the
+    * JIT disables itself and every later plan runs interpreted. */
+  private def jvmHealth(): JvmHealth = {
+    val pools = ManagementFactory.getMemoryPoolMXBeans.asScala
+      .filter(p => p.getName.startsWith("CodeHeap") || p.getName == "Code Cache")
+    val max = pools.map(p => math.max(p.getUsage.getMax, 0L)).sum
+    JvmHealth(pools.map(_.getUsage.getUsed).sum >> 20, max >> 20,
+      if (max > 0) pools.map(_.getPeakUsage.getUsed).sum.toDouble / max else 0.0,
+      Option(ManagementFactory.getCompilationMXBean).map(_.getTotalCompilationTime).getOrElse(-1L))
+  }
+
+  /** The idle DuckDB baseline for the same scale data (written by
+    * tools/x10_baseline.py): the DuckDB thread count it ran at and its
+    * per-query seconds. */
+  private[graft] final case class IdleBaseline(threads: Int, queries: Map[String, Double]) {
+    /** The seconds a paired run at `t` DuckDB threads is compared against:
+      * none when the baseline ran at another count, as `suspect` and
+      * `vs_idle_ratio` would then compare unequal parallelism. */
+    def at(t: Int): Map[String, Double] = if (t == threads) queries else Map.empty
+  }
+
+  /** None when the baseline file is absent or unreadable; a file without a
+    * `threads` field compares against no thread count. */
+  private def idleBaseline(factor: Int): Option[IdleBaseline] =
+    try {
+      val root = ActionJson.mapper.readTree(
+        new java.io.File(s"bench-baselines/x${factor}_duckdb.json"))
+      val q = root.get("queries")
+      Some(IdleBaseline(root.path("threads").asInt(-1),
+        q.fieldNames.asScala.map(k => k -> q.get(k).asDouble).toMap))
+    } catch { case NonFatal(_) => None }
+
+  // ---------------------------------------------------------------------
+  // Output
+
+  /** The `total` line: the base-sf pass, snapshot90 and host facts. */
+  private final case class TotalLine(metric: String = "total", value: Double, unit: String = "sec",
+      queries: ListMap[String, Double], failed: Seq[String], sf: String, cpus: Int,
+      rounds: Int, loadavgStart: Double, loadavgEnd: Double, jvmHealth: JvmHealth,
+      rows: ListMap[String, RowResult], snapshot90: Option[ListMap[String, RowResult]],
+      snapshot90ReplayOverheadSec: Option[Double], duckdbBaseline: Option[IdleBaseline])
+
+  /** The `headline` line; its scalars alone are the `headline_core` line.
+    * `x30Total` is the scale pass's total at `scaleFactor`× (30 unless
+    * SPARK_GRAFT_SCALE sets another factor); `queries` are its rows'
+    * medians. `suspect` is empty and `vsIdleRatio` absent when
+    * `idleBaselineThreads` differs from `duckdbThreads`. */
+  private final case class HeadlineLine(metric: String, scaleFactor: Int, x30Total: Double,
+      pairedRatio: Option[Double], vsIdleRatio: Option[Double], duckdbThreads: Int,
+      idleBaselineThreads: Option[Int], suspect: Seq[String], failed: Seq[String],
+      queries: Option[ListMap[String, Double]] = None,
+      rows: Option[ListMap[String, RowResult]] = None,
+      x100Sample: Option[ListMap[String, RowResult]] = None,
+      x300Sample: Option[ListMap[String, RowResult]] = None) {
+    def core: HeadlineLine = HeadlineLine("headline_core", scaleFactor, x30Total,
+      pairedRatio, vsIdleRatio, duckdbThreads, idleBaselineThreads, suspect, failed)
+  }
+
+  private val nodes = JsonNodeFactory.instance
+
+  /** A result value as JSON: a case class becomes an object of its fields
+    * (snake_case names, None fields left out), a map an object, a sequence
+    * an array, a double rounded to the millisecond. */
+  private[graft] def json(v: Any): JsonNode = v match {
+    case Some(x) => json(x)
+    case None => nodes.nullNode()
+    case d: Double =>
+      if (d.isNaN || d.isInfinite) nodes.nullNode() else nodes.numberNode(math.round(d * 1000) / 1000.0)
+    case i: Int => nodes.numberNode(i)
+    case l: Long => nodes.numberNode(l)
+    case b: Boolean => nodes.booleanNode(b)
+    case s: String => nodes.textNode(s)
+    case m: collection.Map[_, _] => fields(m.iterator.map { case (k, x) => k.toString -> x })
+    case xs: Iterable[_] =>
+      val a = nodes.arrayNode()
+      xs.foreach(x => a.add(json(x)))
+      a
+    case p: Product =>
+      fields(p.productElementNames.map(_.replaceAll("([A-Z])", "_$1").toLowerCase)
+        .zip(p.productIterator))
+  }
+
+  private def fields(kvs: Iterator[(String, Any)]): JsonNode = {
+    val o = nodes.objectNode()
+    kvs.foreach { case (k, x) => if (x != None) o.set[JsonNode](k, json(x)) }
+    o
+  }
+
+  // ---------------------------------------------------------------------
+  // Modes
+
+  private def oneMode(dir: String, qs: Seq[String]): Unit = {
+    val spark = buildSession()
     RelationalQueries.ensureViews(spark, dir)
-    qs.distinct.filter(SparkEntry.queries.contains).foreach { n =>
-      runOne(spark, n, dir, "one-warm ", 0.0)
-      // min over SUCCESSFUL runs only: a fast crash must not masquerade
-      // as a fast query (the retryMin invariant, ADVICE r4)
-      val ok = Seq(runOne(spark, n, dir, "one ", 0.0),
-        runOne(spark, n, dir, "one ", 0.0)).filter(_._2).map(_._1)
-      if (ok.nonEmpty) println(f"[one] $n ${ok.min}%.3f")
-    }
+    measure(qs.distinct.filter(SparkEntry.queries.contains), _ => None, query(spark, dir))
+      .rows.foreach {
+        case (n, RowResult(Some(s), _, _, failedRounds, _)) =>
+          println(f"[one] $n ${s.median}%.3f min ${s.min}%.3f iqr ${s.iqr}%.3f failed_rounds $failedRounds")
+        case (n, _) => println(s"[one] $n failed")
+      }
     spark.stop()
   }
 
-  /** Fork this program in `--one` mode with the same JVM flags and
-    * classpath; returns the child's per-query minima (empty on any
-    * failure — fresh-JVM evidence degrades to absent, never to an error). */
-  private def freshJvmTimes(dir: String, qs: Seq[String]): Map[String, Double] = {
-    if (qs.isEmpty) return Map.empty
-    try {
-      val javaBin = System.getProperty("java.home") + "/bin/java"
-      val jvmArgs = ManagementFactory.getRuntimeMXBean.getInputArguments.asScala
-        .filter(a => a.startsWith("--add-opens") || a.startsWith("--add-exports") ||
-          a.startsWith("--enable-native-access") || a.startsWith("-Xm") ||
-          a.startsWith("-XX"))
-      val cmd = (Seq(javaBin) ++ jvmArgs ++
-        Seq("-cp", System.getProperty("java.class.path"), "graft.Bench",
-          "--one", dir) ++ qs).toList
-      val pb = new ProcessBuilder(cmd: _*)
-      pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-      // collect the parent's garbage BEFORE the child runs: a ~full 48g
-      // heap otherwise schedules concurrent G1 work during the child's
-      // measurement, and that background marking is a DRAM-bandwidth hog
-      // (measured: in-bench forks read 3-4x over the same fork standalone;
-      // one gc() halved the x30 fork times). The pause lets G1's trailing
-      // concurrent phases drain before the child starts.
-      System.gc()
-      Thread.sleep(1500)
-      val p = pb.start()
-      // stdout is only the few [one] lines (Spark logs go to the inherited
-      // stderr), so the pipe can't fill — safe to wait before draining
-      if (!p.waitFor(600, java.util.concurrent.TimeUnit.SECONDS)) {
-        p.destroyForcibly()
-        return Map.empty
-      }
-      val out = new String(p.getInputStream.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8)
-      val one = raw"\[one\] (\S+) ([0-9.]+)".r
-      one.findAllMatchIn(out).map(m => m.group(1) -> m.group(2).toDouble).toMap
-    } catch {
-      case e: Exception =>
-        System.err.println(s"[bench] fresh-JVM re-measure failed: ${e.getMessage}")
-        Map.empty
+  private val AbSpec = raw"([^:]+):([^,]*),(.*)".r
+
+  private def abMode(spec: String, dir: String, qs: Seq[String]): Unit = {
+    val (key, a, b) = spec match {
+      case AbSpec(k, x, y) => (k, x, y)
+      case _ => sys.error(s"--ab wants <conf.key>:<a>,<b>, got $spec")
     }
+    val spark = buildSession()
+    RelationalQueries.ensureViews(spark, dir)
+    def under(v: String)(n: String): Double = { spark.conf.set(key, v); query(spark, dir)(n) }
+    measure(qs.distinct.filter(SparkEntry.queries.contains),
+      n => Some(under(a)(n)), under(b), alternate = true).rows.foreach { case (n, r) =>
+        println(abLine(n, s"$key=$a", s"$key=$b", r.rounds))
+      }
+    spark.stop()
   }
 
-  def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("--one")) {
-      oneMode(args(1), args.drop(2).toSeq)
-      return
-    }
+  /** One `--ab` result line. The two sides are symmetric: each side's
+    * statistics are over every round in which it succeeded, whatever the
+    * other side did; wins count the rounds in which both succeeded. */
+  private[graft] def abLine(name: String, a: String, b: String, rounds: Seq[Round]): String = {
+    def show(xs: Seq[Option[Double]]) =
+      Stats.of(xs.flatten).fold("failed")(x => f"median ${x.median}%.3f iqr ${x.iqr}%.3f")
+    def wins(faster: (Double, Double) => Boolean) =
+      rounds.count { case Round(Some(x), Some(y)) => faster(x, y); case _ => false }
+    s"[ab] $name A($a) ${show(rounds.map(_.ref))} | B($b) ${show(rounds.map(_.spark))} | " +
+      s"wins A ${wins(_ < _)} B ${wins(_ > _)} | " +
+      s"failed rounds A ${rounds.count(_.ref.isEmpty)} B ${rounds.count(_.spark.isEmpty)}"
+  }
+
+  def main(args: Array[String]): Unit = args.toList match {
+    case "--one" :: dir :: qs => oneMode(dir, qs)
+    case "--ab" :: spec :: dir :: qs => abMode(spec, dir, qs)
+    case Nil => run()
+    case _ => sys.error(
+      "usage: Bench | Bench --one <dir> <query>… | Bench --ab <conf.key>:<a>,<b> <dir> <query>…")
+  }
+
+  private def run(): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-
-    // Measurement-validity guard (VERDICT r2: the committed bench was taken
-    // on a contended machine and was 7× off): wait for the 1-min loadavg to
-    // settle before timing; annotate the JSON with what we saw either way.
-    val loadLimit = math.max(2.0, cpus.toDouble / 2)
+    val scaleFactor = sys.env.get("SPARK_GRAFT_SCALE").flatMap(_.toIntOption).getOrElse(30)
     val loadStart = loadavg1m()
-    var waitedSec = 0
-    while (loadavg1m() > loadLimit && waitedSec < 180) {
-      Thread.sleep(15000); waitedSec += 15
-    }
-    val loadAtRun = loadavg1m()
-    val spark = buildSession(cpus)
-    spark.sparkContext.setLogLevel("WARN")
-
-    val torun = headline.filter(SparkEntry.queries.contains)
+    val spark = buildSession()
     RelationalQueries.ensureViews(spark, sfDir)
-    // don't START timing inside a degraded window either — the observed
-    // host noise lasts minutes, and a poisoned first pass wastes the whole
-    // artifact even with per-query retries
-    var calibStart = calibrate(spark)
-    if (calibStart > 1.5) {
-      waitForHealthyWindow(spark)
-      calibStart = calibrate(spark)
-    }
-    calibSeries += (("start", calibStart))
-    var ccFracMax = 0.0
-    val warm = torun.map { n =>
-      val (t, _, cc) = runOne(spark, n, sfDir, "", ccFracMax)
-      ccFracMax = cc
-      n -> t
-    }.toMap
-    var failed = List.empty[String]
-    val timed0 = torun.map { n =>
-      val (t, ok, cc) = runOne(spark, n, sfDir, "", ccFracMax)
-      ccFracMax = cc
-      if (!ok) failed ::= n
-      n -> t
-    }
-    failed = failed.reverse
-    // timed >3× its own warm pass (warm includes codegen compile, so timed
-    // should never exceed it at steady state unless the run degraded).
-    // Degraded queries are re-run once and the MIN of the COMPLETED runs is
-    // kept: a transient host-noise window must not masquerade as engine
-    // slowness, while a genuinely slow query stays slow on retry.
-    def suspectsOf(ts: Seq[(String, Double)]) = ts.collect {
-      case (n, t) if t > 1.0 && warm.get(n).exists(w => w > 0 && t > 3 * w) => n
-    }
-    val firstSuspects = suspectsOf(timed0)
-    if (firstSuspects.nonEmpty) waitForHealthyWindow(spark)
-    val results = timed0.map { case (n, t) =>
-      if (!firstSuspects.contains(n)) n -> t
-      else n -> retryMin(spark, n, sfDir, t)._1
-    }
-    val qs = jsonTimings(results)
-    val total = results.map(_._2).sum
-    val suspect = suspectsOf(results)
-    val retried = firstSuspects
-    probeCalib(spark, "headline_done")
+    val base = measure(headlineRows.filter(SparkEntry.queries.contains), _ => None,
+      query(spark, sfDir))
 
-    // synthetic N× pass (SPARK_GRAFT_SCALE=N, default 30; 0/1 disables):
-    // per-query work must dominate the JVM floor for the ratio to measure
-    // the engine. 30× specifically because Spark's cost decomposes as
-    // ~1.5s fixed + variable while DuckDB's is ~all variable: at 10× the
-    // fixed share still mislabels launch overhead as engine slowness
-    // (both engines page-cached: 4.95s/2.16s = 2.3 at 10×); at 30× the
-    // fixed share amortizes to ~10% — and keeps shrinking toward the
-    // 100 TB regime this library targets. Each query's DuckDB twin runs
-    // immediately before it via the side-runner, so the per-query ratio
-    // is host-noise-immune even when absolute numbers are not.
-    val scaleFactor =
-      sys.env.getOrElse("SPARK_GRAFT_SCALE", "30").toIntOption.getOrElse(30)
-    // compact headline pieces, re-emitted as the LAST stdout line: the
-    // driver's tail capture truncated BENCH_r07 mid-line, losing x30_total
-    // and two paired rows — the final line is small enough to always survive
-    var hlCore = ""
-    // tiny trailer (≤300 chars) re-emitted as the very LAST stdout line:
-    // the rich headline line outgrew the driver's 2,000-char tail window in
-    // r10 (row evidence + calib series pushed the leading x30_total past the
-    // cut), leaving BENCH_r10.json with parsed:null — core scalars only here
-    var hlTiny = ""
-    var calibAtScale = -1.0
-    var memBwAtScale = -1.0
-    val scaleJson =
-      if (scaleFactor <= 1) ""
-      else try {
-        val bigDir = SyntheticScale.ensure(spark, sfDir, scaleFactor)
-        val big = scaleHeadline.filter(SparkEntry.queries.contains)
-        RelationalQueries.ensureViews(spark, bigDir)
-        // bounded wait for a near-reference host window; the measured
-        // calib + memory bandwidth are recorded either way (headline +
-        // artifact)
-        calibAtScale = waitForNearReferenceWindow(spark)
-        calibSeries += ((s"x${scaleFactor}_start", calibAtScale))
-        memBwAtScale = memBandwidthGiBs()
-        // dump the oracle SQL for the side-runner (same map Verify dumps)
-        val sqlPath = java.nio.file.Files.createTempFile("graft-oracle", ".json")
-        val node = graft.delta.ActionJson.mapper.createObjectNode()
-        SparkEntry.oracleSql.foreach { case (k, v) => node.put(k, v) }
-        java.nio.file.Files.writeString(sqlPath,
-          graft.delta.ActionJson.mapper.writeValueAsString(node))
-        val duck = new DuckRunner(bigDir, sqlPath.toString)
-        if (!duck.available)
-          System.err.println(s"[bench] duckdb side-runner unavailable — x$scaleFactor pass unpaired")
-
-        val bigWarm = big.map { n =>
-          val (t, _, cc) = runOne(spark, n, bigDir, s"x$scaleFactor warm ", ccFracMax)
-          ccFracMax = cc
-          n -> t
-        }.toMap
-        var bigFailed = List.empty[String]
-        var bigIdx = 0
-        // r20 (VERDICT r19 #8): stopping-rule-free per-row statistic for
-        // the x30 headline too — the median of the per-ROUND paired ratios
-        // from the fixed three interleaved rounds (later min-replacement
-        // passes deliberately do not touch it; it records what the fixed
-        // sample saw). Additive field; picked statistics unchanged.
-        val bigMedianRatio = scala.collection.mutable.Map.empty[String, Double]
-        val bigRows: Seq[(String, Double, Option[Double])] = big.map { n =>
-          // three interleaved (duckdb, spark) rounds, min per engine: a
-          // noise burst must now span every round of both engines to
-          // reach the artifact (observed bursts poisoned single timed
-          // passes in BOTH directions — r4 spark rows, r5 a 4.6s duckdb
-          // q_window_rank and a 12.2x q3 that re-measured at 3.3x on an
-          // idle host)
-          def round(): (Option[Double], Double, Boolean) = {
-            val dd = duck.time(n)
-            val (tt, okk, cc) = runOne(spark, n, bigDir, s"x$scaleFactor ", ccFracMax)
-            ccFracMax = cc
-            (dd, tt, okk)
-          }
-          val rounds = Seq(round(), round(), round())
-          // a round whose Spark query failed has no ratio: its
-          // time-to-failure must not read as a fast run
-          val roundRatios = rounds.collect {
-            case (Some(dd), tt, true) if dd > 0 => tt / dd
-          }.sorted
-          if (roundRatios.nonEmpty)
-            bigMedianRatio(n) =
-              if (roundRatios.length % 2 == 1) roundRatios(roundRatios.length / 2)
-              else (roundRatios(roundRatios.length / 2 - 1) +
-                roundRatios(roundRatios.length / 2)) / 2.0
-          var ok = rounds.exists(_._3)
-          // the fastest round that succeeded (every round when none did)
-          var t = rounds.filter(r => r._3 || !ok).map(_._2).min
-          var d = rounds.flatMap(_._1) match {
-            case Nil => None
-            case ds => Some(ds.min)
-          }
-          if (t > 1.0 && bigWarm.get(n).exists(w => w > 0 && t > 3 * w)) {
-            waitForHealthyWindow(spark)
-            val d1 = duck.time(n)
-            val (t1, ok1) = retryMin(spark, n, bigDir, t)
-            t = t1; ok = ok || ok1
-            d = (d, d1) match {
-              case (Some(a), Some(b)) => Some(math.min(a, b))
-              case _ => d.orElse(d1)
-            }
-          }
-          if (!ok) bigFailed ::= n
-          // probe between query groups so each row's surrounding host
-          // window is recorded in the artifact, not inferred after the fact
-          bigIdx += 1
-          if (bigIdx % 4 == 0) probeCalib(spark, s"x$scaleFactor:after_$n")
-          (n, t, d)
-        }
-        bigFailed = bigFailed.reverse
-        probeCalib(spark, s"x${scaleFactor}_rounds_done")
-
-        // x10 pass BEFORE result assembly (hot JVM, short queries): powers
-        // both the scaling exponents and the noise-retry below.
-        val smallFactor = 10
-        val smallTimes: Map[String, Double] =
-          if (scaleFactor <= smallFactor) Map.empty
-          else try {
-            val smallDir = SyntheticScale.ensure(spark, sfDir, smallFactor)
-            RelationalQueries.ensureViews(spark, smallDir)
-            big.map { n =>
-              runOne(spark, n, smallDir, s"x$smallFactor warm ", ccFracMax)
-              val t1 = runOne(spark, n, smallDir, s"x$smallFactor ", ccFracMax)._1
-              val t2 = runOne(spark, n, smallDir, s"x$smallFactor ", ccFracMax)._1
-              n -> math.min(t1, t2)
-            }.toMap
-          } catch { case e: Throwable =>
-            System.err.println(s"[bench] x$smallFactor pass failed: ${e.getMessage}")
-            Map.empty
-          }
-        if (smallTimes.nonEmpty) probeCalib(spark, s"x${smallFactor}_done")
-        val lnRatio = math.log(scaleFactor.toDouble / smallFactor)
-        def exponent(n: String, tBig: Double): Option[Double] =
-          smallTimes.get(n).collect {
-            case tS if tS > 0 && tBig > 0 => math.log(tBig / tS) / lnRatio
-          }
-
-        // EVIDENCE PASS (r10; replaces the r7 exponent-only retry): every
-        // row whose x30 time exceeds its x10-extrapolated prediction by
-        // >1.5× (linear extrapolation — these plans are all sublinear to
-        // linear), OR that sits >2× over the idle DuckDB baseline, is
-        // re-measured ONCE inside a VERIFIED near-reference window
-        // (bounded wait on the calibration probe), min-replaced — Spark
-        // and DuckDB both — and annotated with that window's calibration.
-        // A row still over threshold after the in-window re-measure is
-        // flagged `persistent`: plan debt, not measurement debt, and the
-        // artifact itself carries the proof either way.
-        val idle = idleBaseline(scaleFactor)
-        def predicted(n: String): Option[Double] =
-          smallTimes.get(n).map(_ * (scaleFactor.toDouble / smallFactor))
-        def overPrediction(n: String, t: Double): Boolean =
-          predicted(n).exists(p => p > 0 && t > 1.5 * p)
-        // The DML row is a WRITE (restore + DV build + two commits +
-        // survivor scan) paired against a read-only DuckDB materialized
-        // anti-join — the idle ratio compares different workloads by
-        // construction and would brand the row `persistent` every run,
-        // diluting the flag. It keeps the self-relative x10-extrapolation
-        // guard, which is the check that actually catches a DV-path
-        // regression; the artifact marks it "dml" so the asymmetry is
-        // visible rather than silently exempted.
-        val dmlRows = Set("delta_dv_delete")
-        def overIdle(n: String, t: Double): Boolean =
-          !dmlRows(n) && idle.get(n).exists(b => b > 0 && t > 2.0 * b)
-        var rows = bigRows
-        val renoised = rows.collect {
-          case (n, t, _) if !bigFailed.contains(n) &&
-            (overPrediction(n, t) || overIdle(n, t)) => n
-        }
-        if (renoised.nonEmpty) {
-          System.err.println(
-            s"[bench] over prediction/idle bar, re-measuring in-window: ${renoised.mkString(", ")}")
-          val windowCalib = waitForNearReferenceWindow(spark)
-          calibSeries += (("evidence_window", windowCalib))
-          bwSeries += (("evidence_window", memBwQuickGiBs()))
-          RelationalQueries.ensureViews(spark, bigDir)
-          rows = rows.map { case r @ (n, t, d) =>
-            if (!renoised.contains(n)) r
-            else {
-              val d1 = duck.time(n)
-              // bracketed re-measure: an attempt is evidence only when the
-              // bandwidth probe holds on BOTH sides of the row — retry
-              // (bounded) otherwise; every attempt still min-replaces
-              var best = t
-              var held = false
-              var pre = 0.0; var post = 0.0; var att = 0
-              while (att < 3 && !held) {
-                att += 1
-                pre = memBwQuickGiBs()
-                if (pre < MemBwFloorGiBs) Thread.sleep(5000)
-                else {
-                  val (t1, _) = retryMin(spark, n, bigDir, best)
-                  post = memBwQuickGiBs()
-                  best = t1
-                  if (post >= MemBwFloorGiBs) held = true
-                }
-              }
-              rowEvidence += n -> RowEv(windowCalib,
-                persistent = held && (overPrediction(n, best) || overIdle(n, best)),
-                windowHeld = held, bwPre = pre, bwPost = post, attempts = att)
-              (n, best, (d, d1) match {
-                case (Some(a), Some(b)) => Some(math.min(a, b))
-                case _ => d.orElse(d1)
-              })
-            }
-          }
-          // FRESH-JVM pass: rows still over their bar get one forked
-          // best-case-JVM reading. The aged bench JVM (code cache, GC
-          // history after 40+ plans) measures rows far over what a fresh
-          // JVM reads on the same host in the same minute — and the idle
-          // DuckDB baseline is itself a best-case min, so fresh-JVM is
-          // the apples-to-apples Spark number. persistent is decided on
-          // the post-fork best.
-          val stillOver = rows.collect {
-            case (n, t, _) if renoised.contains(n) &&
-              (overPrediction(n, t) || overIdle(n, t)) => n
-          }
-          if (stillOver.nonEmpty) {
-            System.err.println(
-              s"[bench] fresh-JVM re-measure: ${stillOver.mkString(", ")}")
-            val bwPreF = memBwQuickGiBs()
-            val fresh = freshJvmTimes(bigDir, stillOver)
-            val bwPostF = memBwQuickGiBs()
-            val heldF = bwPreF >= MemBwFloorGiBs && bwPostF >= MemBwFloorGiBs
-            rows = rows.map { case r @ (n, t, d) =>
-              fresh.get(n) match {
-                case Some(f) =>
-                  val best = math.min(t, f)
-                  rowEvidence.get(n).foreach { e =>
-                    rowEvidence += n -> e.copy(
-                      freshSec = Some(f),
-                      windowHeld = e.windowHeld || heldF,
-                      persistent = (e.windowHeld || heldF) &&
-                        (overPrediction(n, best) || overIdle(n, best)))
-                  }
-                  (n, best, d)
-                case None => r
-              }
-            }
-          }
-        }
-        duck.close()
-        val bigRowsFinal = rows
-        val bigResults = bigRowsFinal.map { case (n, t, _) => n -> t }
-        val ok = bigResults.filterNot { case (n, _) => bigFailed.contains(n) }
-        val paired = bigRowsFinal.collect { case (n, t, Some(d)) if !bigFailed.contains(n) =>
-          (n, t, d)
-        }
-        // Cross-check each paired DuckDB min-of-3 against the pre-measured
-        // IDLE baseline for the same scale data: the two engines share the
-        // host, and a burst that degrades only the side-runner flatters the
-        // ratio in OUR favor (r6: paired q5 14.78s vs idle 2.22s turned a
-        // real 3.6x total into a reported 1.2x). A row whose two DuckDB
-        // measurements disagree >3x is marked suspect and EXCLUDED from the
-        // headline paired ratio; both totals are emitted so the artifact
-        // carries the disagreement instead of hiding it.
-        val pairedChecked = paired.map { case (n, t, d) =>
-          val susp = idle.get(n).exists(b =>
-            d / math.max(b, 1e-9) > 3.0 || b / math.max(d, 1e-9) > 3.0)
-          (n, t, d, susp)
-        }
-        var pairedRatioOpt: Option[Double] = None
-        var suspectsList: Seq[String] = Nil
-        val pairedJson =
-          if (paired.isEmpty) ""
-          else {
-            val entries = pairedChecked.map { case (n, t, d, susp) =>
-              val flag = (if (susp) ""","suspect":true""" else "") +
-                (if (dmlRows(n)) ""","dml":true""" else "") +
-                bigMedianRatio.get(n)
-                  .map(m => f""","ratio_median":$m%.2f""").getOrElse("")
-              // inline self-evidence: this row's number was confirmed (or
-              // not) inside a named calibration window — the judge-facing
-              // proof that >2×-vs-idle is host state, not a regression
-              val ev = rowEvidence.get(n).map { e =>
-                val lost = if (e.windowHeld) "" else ""","window_lost":true"""
-                f""","remeasured_in_window":${e.windowHeld},"window_calib":${e.windowCalib}%.3f,"bw_pre":${e.bwPre}%.2f,"bw_post":${e.bwPost}%.2f,"persistent":${e.persistent}$lost"""
-              }.getOrElse("")
-              f""""$n":{"spark":$t%.3f,"duckdb":$d%.3f,"ratio":${t / math.max(d, 1e-9)}%.1f$flag$ev}"""
-            }.mkString("{", ",", "}")
-            val trusted = pairedChecked.filterNot(_._4)
-            val sSum = trusted.map(_._2).sum
-            val dSum = trusted.map(_._3).sum
-            val suspects = pairedChecked.collect { case (n, _, _, true) => n }
-            pairedRatioOpt = Some(sSum / math.max(dSum, 1e-9))
-            suspectsList = suspects
-            f""","x${scaleFactor}%d_paired":$entries,"x${scaleFactor}%d_paired_total_ratio":${sSum / math.max(dSum, 1e-9)}%.1f,"x${scaleFactor}%d_paired_suspect":${jsonArr(suspects)}"""
-          }
-        // Spark total vs the idle baseline over the queries both cover —
-        // the comparator a judge would compute by hand; noise-asymmetry
-        // shows up as paired-vs-idle disagreement, not as a hidden bias.
-        var idleRatioOpt: Option[Double] = None
-        val vsIdleJson = {
-          val covered = ok.filter { case (n, _) => idle.contains(n) }
-          if (covered.isEmpty) ""
-          else {
-            val sSum = covered.map(_._2).sum
-            val dSum = covered.map { case (n, _) => idle(n) }.sum
-            idleRatioOpt = Some(sSum / math.max(dSum, 1e-9))
-            f""","x${scaleFactor}%d_vs_idle_baseline_ratio":${sSum / math.max(dSum, 1e-9)}%.1f"""
-          }
-        }
-        // Per-query scaling exponents e = ln(tN/t10)/ln(N/10) from the x10
-        // point measured above (post-noise-retry values). A linear operator
-        // sits near 1.0; the r6 regressions (text_token_stats 17.9x time on
-        // 3x rows) self-flag here — and since r7, implausible rows have
-        // already been re-measured once before reaching this report.
-        val expJson =
-          if (smallTimes.isEmpty) ""
-          else {
-            val exps = bigResults.collect {
-              case (n, tBig) if !bigFailed.contains(n) && exponent(n, tBig).isDefined =>
-                n -> exponent(n, tBig).get
-            }
-            // flag only rows with real work at the big scale: a 0.2s row's
-            // exponent is JVM-floor noise, not a plan property
-            val superlinear = exps.collect {
-              case (n, e) if e > 1.3 && bigResults.toMap.getOrElse(n, 0.0) > 0.5 => n
-            }
-            f""","x${smallFactor}%d_queries":${jsonTimings(smallTimes.toSeq.sortBy(_._1))},"scaling_exponents":${jsonTimings(exps)},"superlinear":${jsonArr(superlinear)},"renoised":${jsonArr(renoised)}"""
-          }
-        hlCore = {
-          val pr = pairedRatioOpt.map(r => f""","paired_ratio":$r%.2f""").getOrElse("")
-          val ir = idleRatioOpt.map(r => f""","vs_idle_ratio":$r%.2f""").getOrElse("")
-          f""""scale_factor":$scaleFactor%d,"x${scaleFactor}%d_total":${ok.map(_._2).sum}%.3f$pr$ir,"calib_at_scale_sec":$calibAtScale%.3f,"calib_reference_sec":$ReferenceCalibSec%.2f,"mem_bw_gibs":$memBwAtScale%.2f,"queries":${jsonTimings(bigResults)},"suspect":${jsonArr(suspectsList)},"failed":${jsonArr(bigFailed)}"""
-        }
-        hlTiny = {
-          val pr = pairedRatioOpt.map(r => f""","paired_ratio":$r%.2f""").getOrElse("")
-          val ir = idleRatioOpt.map(r => f""","vs_idle_ratio":$r%.2f""").getOrElse("")
-          f""""scale_factor":$scaleFactor%d,"x${scaleFactor}%d_total":${ok.map(_._2).sum}%.3f$pr$ir,"calib_at_scale_sec":$calibAtScale%.3f,"mem_bw_gibs":$memBwAtScale%.2f,"suspect":${jsonArr(suspectsList)},"failed":${jsonArr(bigFailed)}"""
-        }
-        f""","scale_factor":$scaleFactor%d,"x${scaleFactor}%d_total":${ok.map(_._2).sum}%.3f,"x${scaleFactor}%d_queries":${jsonTimings(bigResults)},"x${scaleFactor}%d_failed":${jsonArr(bigFailed)}$pairedJson$vsIdleJson$expJson$evidenceJson"""
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] x$scaleFactor pass failed: ${e.getMessage}"); ""
+    def attempt(what: String)(pass: => Pass): Option[Pass] =
+      try Some(pass) catch { case NonFatal(e) =>
+        System.err.println(s"[bench] $what pass failed: ${e.getMessage}")
+        None
       }
+    val scaled =
+      if (scaleFactor <= 1) None
+      else attempt(s"x$scaleFactor")(
+        pairedPass(spark, SyntheticScale.ensure(spark, sfDir, scaleFactor), scaleRows))
+    def sample(s: Sample): Option[ListMap[String, RowResult]] =
+      if (scaleFactor <= 1 || s.factor <= scaleFactor) None
+      else attempt(s"x${s.factor}")(pairedPass(spark,
+        SyntheticScale.ensure(spark, sfDir, s.factor, replicateOnly = Some(s.tables)), s.rows))
+        .map(_.rows)
+    val (x100Sample, x300Sample) = (sample(x100), sample(x300))
+    val snap = attempt("snapshot90")(snapshot90(spark, sfDir))
+    val baseline = idleBaseline(scaleFactor)
+    val idle = baseline.fold(Map.empty[String, Double])(_.at(cpus))
 
-    // x100 micro-sample: every row whose x30 ratio is constant-dominated
-    // (sublinear exponent, sub-linear share of real work at x30). Since
-    // r10 this includes the three persistent >2×-vs-idle relational rows
-    // (q1_agg exp 0.41, q18 exp 0.48, q_sessionize exp 0.50): their x30
-    // overage is fixed cost by measurement, so the x100 point is the
-    // evidence that it amortizes — or the proof of plan debt if it
-    // doesn't. Only the needed fact tables replicate to x100.
-    val microFactor = sys.env
-      .getOrElse("SPARK_GRAFT_MICRO_SCALE", "100").toIntOption.getOrElse(100)
-    // r13 additions: q3_join (two rounds of >2× fresh-JVM evidence but
-    // excluded from every closure mechanism until now) and delta_scan_agg
-    // (same row-based-agg constant family as q1_agg) — their x100 points
-    // are the close-or-convict evidence; both queries' tables were already
-    // in the micro dir's replication set, so the cached dir is reused
-    val microQueries = Seq("dedup_exact", "emb_centroids", "q_events_hourly",
-      "q1_agg", "q18_large_orders", "q_sessionize", "q3_join", "delta_scan_agg")
-    var microHeadline = ""
+    val total = TotalLine(value = base.total, queries = base.medians, failed = base.failed,
+      sf = sfDir, cpus = cpus, rounds = Rounds, loadavgStart = loadStart,
+      loadavgEnd = loadavg1m(), jvmHealth = jvmHealth(), rows = base.rows,
+      snapshot90 = snap.map(_.rows),
+      snapshot90ReplayOverheadSec = snap.map(s =>
+        s.medians.getOrElse("no_pin", Double.NaN) - s.medians.getOrElse("pin", Double.NaN)),
+      duckdbBaseline = baseline)
+    val headline = scaled.map(s => HeadlineLine("headline", scaleFactor, s.total,
+      s.pairedRatio(idle), s.vsIdleRatio(idle), cpus, baseline.map(_.threads),
+      s.suspect(idle), s.failed,
+      Some(s.medians), Some(s.rows), x100Sample, x300Sample))
+    val lines = (Seq(total) ++ headline ++ headline.map(_.core))
+      .map(l => ActionJson.mapper.writeValueAsString(json(l)))
 
-    /** One amortization-evidence pass at `factor`× with only `tables`
-      * replicated: paired bracketed rounds per query, fresh-JVM re-measure
-      * of unclosed rows. Returns the `,"xN_sample":{...}` JSON piece. */
-    def microPass(factor: Int, queries: Seq[String], tables: Set[String]): String =
-      try {
-        val microDir = SyntheticScale.ensure(spark, sfDir, factor,
-          replicateOnly = Some(tables))
-        RelationalQueries.ensureViews(spark, microDir)
-        val sqlPath = java.nio.file.Files.createTempFile("graft-oracle-micro", ".json")
-        val node = graft.delta.ActionJson.mapper.createObjectNode()
-        SparkEntry.oracleSql.foreach { case (k, v) => node.put(k, v) }
-        java.nio.file.Files.writeString(sqlPath,
-          graft.delta.ActionJson.mapper.writeValueAsString(node))
-        val duck = new DuckRunner(microDir, sqlPath.toString)
-        val rows0 = queries.filter(SparkEntry.queries.contains).map { n =>
-          runOne(spark, n, microDir, s"x$factor warm ", ccFracMax)
-          // each round is BRACKETED on BOTH host dimensions (r15 verdict,
-          // third carry): the bandwidth copy probe catches DRAM collapse,
-          // and the fixed-Spark-work calibration probe catches the
-          // JVM-side throughput oscillation bandwidth alone misses (r8:
-          // calib 0.33→0.50 while DuckDB held exactly at baseline). The
-          // micro point is the weak-row closure evidence, so a round that
-          // ran through either kind of degradation must not stand in for
-          // the host's real throughput — rounds continue (bounded) until
-          // one full bracket holds, and every entry records the calib of
-          // the round its reading came from.
-          def round(): (Option[Double], Double, Boolean, Double) = {
-            val pre = memBwQuickGiBs()
-            val cPre = calibrate(spark)
-            val d = duck.time(n)
-            val (t, _, cc) = runOne(spark, n, microDir, s"x$factor ", ccFracMax)
-            ccFracMax = cc
-            val cPost = calibrate(spark)
-            val post = memBwQuickGiBs()
-            val cal = math.max(cPre, cPost)
-            // SAME bracket as the scale pass (1.25×): a 1.4×-degraded
-            // window must not pass as weak-row closure evidence (r16
-            // verdict: the looser 1.5× bracket let an unreproducible
-            // closure stand)
-            val held = pre >= MemBwFloorGiBs && post >= MemBwFloorGiBs &&
-              cal <= ReferenceCalibSec * 1.25
-            (d, t, held, cal)
-          }
-          // r20 deflake (VERDICT r19 #3, disclosed in OPTIMIZATION_r20.md):
-          // the base sample is now a FIXED four rounds (was two), so
-          // ratio_median rests on a stopping-rule-free sample — r19's
-          // delta_scan_agg read median 5.81 vs best 1.1 off a 2-round base
-          // where one polluted round owned the median. The bracket-validity
-          // retries below are not ratio-conditioned (no stopping bias).
-          var rs = Seq(round(), round(), round(), round())
-          var extra = 0
-          while (!rs.exists(_._3) && extra < 3) {
-            extra += 1
-            Thread.sleep(5000)
-            rs = rs :+ round()
-          }
-          // r17 deflake: the record must not flip on ONE reading. Both ends
-          // of a ratio must come from the SAME round (the whole point of the
-          // paired runner — min-spark from one window over min-duck from
-          // another manufactures a pairing no window ever produced), and
-          // while the best held paired ratio still reads over the 2× bar,
-          // keep sampling (bounded) the way row_evidence rows get attempts —
-          // one unlucky pairing can't stand as the artifact-of-record.
-          def bestHeldRatio: Option[Double] =
-            rs.collect { case (Some(dd), t, true, _) if dd > 0 => t / dd } match {
-              case Seq() => None
-              case xs => Some(xs.min)
-            }
-          while (bestHeldRatio.exists(_ > 2.0) && rs.length < 9) {
-            Thread.sleep(3000)
-            rs = rs :+ round()
-          }
-          // the evidence reading is the held round with the best PAIRED
-          // ratio when one exists; else the fastest held round; with no
-          // held round at all the fastest overall stands, marked lost.
-          // ADVICE r19: the resample loop above stops when a favorable
-          // reading appears (optional stopping), so the best held ratio
-          // is biased low — the MEDIAN of all held paired ratios is
-          // recorded alongside it as the stopping-rule-free statistic.
-          val heldRounds = rs.filter(_._3)
-          val candidates = if (heldRounds.nonEmpty) heldRounds else rs
-          val pairedRounds = candidates.filter(_._1.exists(_ > 0))
-          val pick =
-            if (pairedRounds.nonEmpty)
-              pairedRounds.minBy(r => r._2 / math.max(r._1.get, 1e-9))
-            else candidates.minBy(_._2)
-          val d = pick._1.orElse(
-            rs.flatMap(_._1) match { case Seq() => None; case ds => Some(ds.min) })
-          val medianRatio = {
-            val ratios = heldRounds.collect {
-              case (Some(dd), t, _, _) if dd > 0 => t / dd
-            }.sorted
-            if (ratios.isEmpty) None
-            else if (ratios.length % 2 == 1) Some(ratios(ratios.length / 2))
-            else Some((ratios(ratios.length / 2 - 1) + ratios(ratios.length / 2)) / 2.0)
-          }
-          (n, pick._2, d, heldRounds.nonEmpty, pick._4, rs.length, medianRatio)
-        }
-        duck.close()
-        // fresh-JVM pass for micro rows still far over DuckDB (or never
-        // bracketed): the micro point is the weak-row closure evidence and
-        // JVM aging hits it hardest (measured: q_sessionize 12.2s aged vs
-        // 3.6s fresh on the same host minute). r20: a row whose MEDIAN is
-        // over the bar also forks even when its best reading is under —
-        // aged-JVM pollution that hits most-but-not-all rounds is exactly
-        // what the fork exists to adjudicate (r19 delta_scan_agg).
-        val microOver = rows0.collect {
-          case (n, t, d, held, _, _, med)
-            if d.exists(dd => t > 2.0 * dd) || !held ||
-              med.exists(_ > 2.0) => n
-        }
-        // the fork itself is bracketed like everything else (both probe
-        // dimensions): an unbracketed fresh reading must not stand in as
-        // clean closure evidence
-        var microForkHeld = false
-        var microForkCalib = -1.0
-        val microFresh =
-          if (microOver.isEmpty) Map.empty[String, Double]
-          else {
-            System.err.println(
-              s"[bench] x$factor fresh-JVM re-measure: ${microOver.mkString(", ")}")
-            val pre = memBwQuickGiBs()
-            val cPre = calibrate(spark)
-            val m = freshJvmTimes(microDir, microOver)
-            val cPost = calibrate(spark)
-            val post = memBwQuickGiBs()
-            microForkCalib = math.max(cPre, cPost)
-            microForkHeld = pre >= MemBwFloorGiBs && post >= MemBwFloorGiBs &&
-              microForkCalib <= ReferenceCalibSec * 1.25
-            m
-          }
-        // when the fresh fork's reading wins, the entry's bracket is the
-        // FORK's bracket (that is the window the reading ran in)
-        val rows = rows0.map { case (n, t, d, held, cal, att, med) =>
-          microFresh.get(n) match {
-            case Some(f) if f < t =>
-              (n, f, d, microForkHeld, Some(f), microForkCalib, att, med)
-            case Some(f) => (n, t, d, held, Some(f), cal, att, med)
-            case None => (n, t, d, held, None: Option[Double], cal, att, med)
-          }
-        }
-        val entries = rows.map { case (n, t, d, held, fresh, cal, att, med) =>
-          val dj = d.map(dd =>
-            f""","duckdb":$dd%.3f,"ratio":${t / math.max(dd, 1e-9)}%.2f""").getOrElse("")
-          val mj = med.map(m => f""","ratio_median":$m%.2f""").getOrElse("")
-          val fj = fresh.map(f => f""","fresh_jvm_sec":$f%.3f""").getOrElse("")
-          val lost = if (held) "" else ""","window_lost":true"""
-          f""""$n":{"spark":$t%.3f$dj$mj$fj,"window_calib":$cal%.3f,"attempts":$att%d$lost}"""
-        }.mkString("{", ",", "}")
-        val piece = f""","x${factor}%d_sample":$entries"""
-        microHeadline += piece
-        piece
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] x$factor micro pass failed: ${e.getMessage}")
-        ""
-      }
-
-    val microJson =
-      if (scaleFactor <= 1 || microFactor <= scaleFactor) ""
-      else microPass(microFactor, microQueries,
-        Set("documents", "embeddings", "events", "lineitem", "orders", "customer"))
-    // deeper point for the LAST two weak rows (r10: q_sessionize 2.23×,
-    // q1_agg 2.04× at x100, exponents ≤0.5): an x300 bracketed sample is
-    // the measured continuation of the amortization curve — only the two
-    // fact tables those queries touch replicate
-    val micro2Factor = sys.env
-      .getOrElse("SPARK_GRAFT_MICRO2_SCALE", "300").toIntOption.getOrElse(300)
-    val micro2Json =
-      if (scaleFactor <= 1 || micro2Factor <= microFactor ||
-          micro2Factor <= scaleFactor) ""
-      else microPass(micro2Factor, Seq("q1_agg", "q_sessionize"),
-        Set("lineitem", "events"))
-
-    // 90-commit snapshot-replay micro (the one overhead the reference
-    // itself micro-benchmarks: benchmark/micro/snapshot_performance/
-    // *.benchmark over tpch_sf1_90commits/lineitem): four variants over
-    // the checkpoint-free 90-JSON lineitem log — no_pin pays a full log
-    // replay inside every timing, pin resolves the snapshot once and
-    // reuses it, the _filter forms add the reference's IS NOT NULL
-    // predicate. Spark-only timings; the signal is pin-vs-no_pin (the
-    // replay overhead the micro exists to watch), tracked round-over-
-    // round through bench-rounds/latest.json.
-    val snapshot90Json = try {
-      val p = Fixtures.delta(spark, sfDir, "lineitem", Fixtures.Many90)
-      val log = graft.delta.DeltaLog.forPath(spark, p)
-      def timeCount(f: => Long): Double = {
-        val t0 = System.nanoTime()
-        require(f > 0, "snapshot90 count must be positive")
-        (System.nanoTime() - t0) / 1e9
-      }
-      import org.apache.spark.sql.functions.col
-      def noPin(filtered: Boolean): Double = timeCount {
-        log.invalidateCache() // the replay cost is INSIDE the timing
-        val df = graft.delta.DeltaTable.forPath(spark, p).toDF
-        (if (filtered) df.filter(col("l_orderkey").isNotNull) else df).count()
-      }
-      val pinned = graft.delta.DeltaTable.forPath(spark, p).pin()
-      def pinRun(filtered: Boolean): Double = timeCount {
-        val df = pinned.toDF
-        (if (filtered) df.filter(col("l_orderkey").isNotNull) else df).count()
-      }
-      def best(f: => Double): Double = { f; (1 to 3).map(_ => f).min }
-      val np = best(noPin(false))
-      val npf = best(noPin(true))
-      val pn = best(pinRun(false))
-      val pf = best(pinRun(true))
-      f""","snapshot90":{"no_pin":$np%.3f,"no_pin_filter":$npf%.3f,"pin":$pn%.3f,"pin_filter":$pf%.3f,"replay_overhead_sec":${np - pn}%.3f}"""
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] snapshot90 micro failed: ${e.getMessage}")
-      ""
-    }
-
-    // pre-measured DuckDB numbers for the same scale data (written by
-    // tools/x10_baseline.py with the scale dir; provenance inside the
-    // blob) so bench-vs-baseline is comparable where per-query work
-    // dominates the JVM floor.
-    // Parsed before splicing: a truncated baseline must not make the whole
-    // artifact unparseable (ADVICE r4).
-    val baselineJson = {
-      val f = new java.io.File(s"bench-baselines/x${scaleFactor}_duckdb.json")
-      if (!f.exists()) ""
-      else try {
-        val txt = new String(
-          java.nio.file.Files.readAllBytes(f.toPath),
-          java.nio.charset.StandardCharsets.UTF_8)
-        val parsed = graft.delta.ActionJson.mapper.readTree(txt)
-        s""","x${scaleFactor}_duckdb_baseline":${graft.delta.ActionJson.mapper.writeValueAsString(parsed)}"""
-      } catch { case _: Exception =>
-        System.err.println("[bench] duckdb baseline blob unparseable — dropped")
-        ""
-      }
-    }
-
-    // Fixed per-query JVM floor: a minimal 2-stage job (1-row shuffle →
-    // noop commit) — pure scheduling/AQE/commit overhead, zero data work.
-    // The floor-bound paired rows (events_hourly, dedup_exact, centroids:
-    // ~0.2s absolute at any plan quality) are launch-dominated; reporting
-    // the floor lets the artifact separate engine cost from JVM cost —
-    // on a real cluster this overhead amortizes across a session, it does
-    // not scale with data.
-    val jobFloor = {
-      import org.apache.spark.sql.functions.{col, count, lit}
-      (1 to 5).map { _ =>
-        val t0 = System.nanoTime()
-        spark.range(0, 32, 1, 4).groupBy((col("id") % 2).as("k"))
-          .agg(count(lit(1)))
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }.min
-    }
-
-    val calibEnd = probeCalib(spark, "end")
-    val (ccUsed, ccMax) = codeCache()
-    val jitMs = Option(ManagementFactory.getCompilationMXBean)
-      .map(_.getTotalCompilationTime).getOrElse(-1L)
-    val health = f""""jvm_health":{"code_cache_used_mb":${ccUsed / 1048576},"code_cache_max_mb":${ccMax / 1048576},"code_cache_peak_frac":$ccFracMax%.3f,"code_cache_exhausted":${ccFracMax > 0.95},"jit_compile_ms":$jitMs},"calib_start_sec":$calibStart%.3f,"calib_end_sec":$calibEnd%.3f,"calib_at_scale_sec":$calibAtScale%.3f,"calib_reference_sec":$ReferenceCalibSec%.2f,"mem_bw_gibs":$memBwAtScale%.2f,"jvm_job_floor_sec":$jobFloor%.3f,"degraded_waits":${degradedWaits.get}$calibSeriesJson"""
-
-    val totalLine = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"failed":${jsonArr(failed)},"suspect":${jsonArr(suspect)},"retried":${jsonArr(retried)},"sf":"$sfDir","loadavg_start":$loadStart%.2f,"loadavg_at_run":$loadAtRun%.2f,"load_waited_sec":$waitedSec,$health$scaleJson$microJson$micro2Json$snapshot90Json$baselineJson}"""
-    val headlineLine =
-      if (hlCore.isEmpty) ""
-      else s"""{"metric":"headline",$hlCore$microHeadline$evidenceJson$calibSeriesJson}"""
-    val coreLine =
-      if (hlTiny.isEmpty) ""
-      else s"""{"metric":"headline_core",$hlTiny}"""
-    // ALSO land the artifact on disk: two rounds of stdout-tail captures
-    // proved fragile (sbt log prefixes, 2000-char truncation), so every
-    // run drops bench-rounds/latest.json (full artifact, one object per
-    // line) + bench-headline.json (the compact core) where a reader can
-    // always parse them regardless of how stdout was captured. The output
-    // directory is overridable (SPARK_GRAFT_BENCH_OUT) because CWD is
-    // wherever the launcher happened to be — a spark-submit from / would
-    // otherwise scatter or silently drop the artifacts — and both the
-    // success and failure messages carry the ABSOLUTE path so a reader
-    // never has to guess where they landed.
-    val artifactBase = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", ".")).toAbsolutePath
+    val out = Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", ".")).toAbsolutePath
     try {
-      val dir = artifactBase.resolve("bench-rounds")
-      java.nio.file.Files.createDirectories(dir)
-      java.nio.file.Files.write(dir.resolve("latest.json"),
-        Seq(totalLine, headlineLine, coreLine).filter(_.nonEmpty)
-          .mkString("", "\n", "\n")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      if (coreLine.nonEmpty)
-        java.nio.file.Files.write(artifactBase.resolve("bench-headline.json"),
-          (coreLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      // Named snapshots carry the FULL artifact, never just the trailer:
-      // r16's claimed weak-row closure rested on a hand-saved 175-byte
-      // core line whose x100 evidence was unrecoverable. Setting
-      // SPARK_GRAFT_BENCH_SNAPSHOT=<name> persists this run's complete
-      // three-line artifact as bench-rounds/<name>.json, so a named
-      // evidence file is the same rich object as latest.json by
-      // construction.
-      sys.env.get("SPARK_GRAFT_BENCH_SNAPSHOT").filter(_.nonEmpty).foreach { name =>
-        val snap = dir.resolve(s"$name.json")
-        java.nio.file.Files.write(snap,
-          Seq(totalLine, headlineLine, coreLine).filter(_.nonEmpty)
-            .mkString("", "\n", "\n")
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        System.err.println(s"[bench] snapshot: $snap")
-      }
-      System.err.println(
-        s"[bench] artifacts: ${dir.resolve("latest.json")}" +
-          (if (coreLine.nonEmpty) s" + ${artifactBase.resolve("bench-headline.json")}" else ""))
-    } catch { case e: Exception =>
-      System.err.println(
-        s"[bench] artifact file write under $artifactBase failed: ${e.getMessage}")
+      Files.createDirectories(out.resolve("bench-rounds"))
+      Files.write(out.resolve("bench-rounds/latest.json"),
+        lines.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
+      if (headline.isDefined)
+        Files.write(out.resolve("bench-headline.json"),
+          (lines.last + "\n").getBytes(StandardCharsets.UTF_8))
+      System.err.println(s"[bench] artifacts under $out")
+    } catch { case NonFatal(e) =>
+      System.err.println(s"[bench] artifact write under $out failed: ${e.getMessage}")
     }
-    println(totalLine)
-    // LAST line: compact headline that survives any tail truncation —
-    // since r10 it also carries the per-row evidence and the calibration
-    // series, the two artifacts the judge needs to adjudicate slow rows
-    if (headlineLine.nonEmpty) println(headlineLine)
-    // the ≤300-char core line goes LAST so the driver's bounded tail capture
-    // always retains a parseable x30_total / ratios / suspect / failed set
-    // (and, with run/outputStrategy := StdoutOutput, UNPREFIXED)
-    if (coreLine.nonEmpty) println(coreLine)
+    lines.foreach(println)
     spark.stop()
   }
 }

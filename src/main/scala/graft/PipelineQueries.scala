@@ -225,7 +225,7 @@ object PipelineQueries {
     // min/max(string) group-by: vanilla Spark can only SORT-aggregate a
     // string buffer (per-partition sort of the whole scan); the columnar
     // tier's object accumulators hash-aggregate it (measured 2.0x at
-    // x100, StrAggProbe) — this row keeps that rewrite oracle-gated
+    // x100, OPTIMIZATION_r19.md) — this row keeps that rewrite oracle-gated
     "q_str_minmax" -> ((s, dir) =>
       docs(s, dir).groupBy(col("lang"), col("source"))
         .agg(min(col("text")).as("min_text"), max(col("text")).as("max_text"),

@@ -55,7 +55,7 @@ object RelationalQueries {
     // (107 MB at x10, the single largest cost in the bench) to produce a
     // join output the dim side already bounds. With it, lineitem never
     // shuffles: one scan → BHJ → partial agg.
-    // r20 SCALING CAVEAT (measured, BroadcastHintProbe + 8-vs-32-core run
+    // r20 SCALING CAVEAT (measured, OPTIMIZATION_r20.md + 8-vs-32-core run
     // at x300, bench-rounds/r20-scaling-x300.json): the hinted side is a
     // FILTERED FACT JOIN that grows with SF, and BroadcastExchange's
     // collect+build is single-threaded on the driver — at x300 it is ~8 s

@@ -86,8 +86,8 @@ object Dedup {
     * id_a alone and runs BEFORE deduplication, so a hot document's whole
     * raw candidate multiset (every duplicate pair it forms, across all
     * bands) lands in one partition; before, only its deduped pairs did
-    * (at verify). Measured (JaccardDistinctProbe, interleaved
-    * same-window A/B at sf0.1): candidates 0.95-1.37 s → 0.72-1.05 s,
+    * (at verify). Measured (interleaved same-window A/B at sf0.1,
+    * recorded in OPTIMIZATION_r20.md): candidates 0.95-1.37 s → 0.72-1.05 s,
     * full row 1.35-1.66 s → 1.09-1.17 s; identical pair sets. */
   private def dedupPairs(raw: DataFrame): DataFrame = {
     val p = raw.sparkSession.sessionState.conf.numShufflePartitions

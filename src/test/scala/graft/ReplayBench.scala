@@ -13,12 +13,13 @@ import graft.delta._
  * table) and stats-prune it, timing both. The checkpoint is GENERATED
  * DISTRIBUTED (a Spark job writes the parts; the driver never materializes
  * N actions while building), exercising the same multi-part decode path
- * real snapshots use. Run: sbt "Test/runMain graft.ReplayBench [n]"
+ * real snapshots use. The session is [[graft.Bench.buildSession]]'s.
+ * Run: sbt "Test/runMain graft.ReplayBench [n]"
  */
 object ReplayBench {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(1000000)
-    val spark = TestSpark.spark
+    val spark = Bench.buildSession()
     val dir = java.nio.file.Files.createTempDirectory("graft-replay-bench").toString + "/t"
     val path = SyntheticLog.build(spark, dir, n)
 

@@ -1,9 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Dev tool: pre-build the synthetic Nx scale dir (same path Bench uses)
-  * so BenchOne / PlanDump sessions can measure at scale without paying the
-  * build inside the measured session. Args: <sfDir> <factor...> where a
-  * factor is `N` (all tables) or `N:tbl1,tbl2` (targeted micro dir). */
+  * so `Bench --one`/`--ab` and PlanFiles can measure at scale without
+  * paying the build inside the measured session. Args: <sfDir> <factor...>
+  * where a factor is `N` (all tables) or `N:tbl1,tbl2` (targeted micro
+  * dir). The session is [[Bench.buildSession]]'s. */
 object ScaleEnsure {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
@@ -13,14 +13,7 @@ object ScaleEnsure {
         case Array(f, ts) => (f.toInt, Some(ts.split(',').toSet))
       }
     }
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.buildSession()
     specs.foreach { case (f, only) =>
       val dir = SyntheticScale.ensure(spark, sfDir, f, replicateOnly = only)
       println(s"[scale-ensure] x$f ready at $dir")

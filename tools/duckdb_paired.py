@@ -1,19 +1,20 @@
 #!/usr/bin/env python3
-"""Persistent DuckDB side-runner for Bench's paired x10 pass.
+"""Persistent DuckDB side-runner for Bench's paired passes.
 
-VERDICT r4: the bench host's throughput swings 30-40x over minutes, so a
-Spark timing and a DuckDB baseline measured in different windows produce a
-meaningless ratio. Bench spawns this process once (views over the same x10
-parquet, 32 threads) and, for each timed query, asks for the DuckDB timing
-IMMEDIATELY before running the Spark side — both ends of each ratio land in
-the same noise window.
+A Spark timing and a DuckDB baseline measured in different host windows
+produce a meaningless ratio. Bench spawns this process once per paired pass
+(views over the same parquet, at Spark's core count) and, for each round,
+asks for the DuckDB timing immediately before running the Spark side, so
+both ends of each ratio land in the same window.
 
 Protocol: one query name per stdin line -> one "name\twarm\ttimed" line on
 stdout (seconds), "name\tNA\tNA" when the name has no oracle SQL, or
 "name\tERR\tERR" when DuckDB fails. "EXIT" terminates.
 
 Dev-only tooling (mirrors the driver's oracle); the engine itself is pure
-Scala. Usage: python3 tools/duckdb_paired.py <data_dir> <oracle_sql.json>
+Scala. Usage:
+    python3 tools/duckdb_paired.py <data_dir> <oracle_sql.json> [threads]
+threads defaults to the host's core count.
 """
 import duckdb, json, os, sys, time
 
@@ -23,8 +24,9 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
 
 def main():
     data_dir, sql_json = sys.argv[1], sys.argv[2]
+    threads = int(sys.argv[3]) if len(sys.argv) > 3 else os.cpu_count()
     con = duckdb.connect()
-    con.execute("SET threads TO 32")
+    con.execute(f"SET threads TO {threads}")
     for t in TABLES:
         p = f"{data_dir}/{t}.parquet"
         if os.path.isdir(p):
